@@ -10,6 +10,8 @@ ANSI SQL for each; column names/types are aligned on both sides.
 
 from __future__ import annotations
 
+import functools
+import types
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,89 +30,12 @@ from graph_loom_spark.ops import simsearch as ops_sim
 from graph_loom_spark.ops import text as ops_text
 from graph_loom_spark.ops import warc as ops_warc
 
+#: lazy graph handle per sf_dir — holds no checkpoint, so it is not a memo
 _GRAPH_CACHE: dict[str, object] = {}
-_LPA_CACHE: dict[str, DataFrame] = {}
-_COMP_CACHE: dict[str, DataFrame] = {}
-_JACCARD_CACHE: dict[str, DataFrame] = {}
-_WINNOW_CACHE: dict[str, DataFrame] = {}
-# maximal exact duplicate spans (X128) — deterministic gram islands,
-# shared by docs_exact_spans + docs_span_coverage
-_SPANS_CACHE: dict[str, DataFrame] = {}
-# (assigned frame, centroid matrix) per sf_dir — the IVF quantizer fit
-# is deterministic, so re-fitting per invocation only re-pays 5 Lloyd
-# iterations for an identical result
-_IVF_CACHE: dict[str, tuple] = {}
-# (codes frame, residual codebooks) per sf_dir — the IVFADC residual
-# PQ fit over the _IVF_CACHE coarse quantizer (X121); deterministic
-# like the flat PQ fit
-_IVFPQ_CACHE: dict[str, tuple] = {}
-# part co-purchase edge set (l_orderkey % 4 == 0 quarter) — built
-# identically by graph_triangles, graph_bfs and graph_kcore; the
-# construction is a distinct + self-join over lineitem, worth sharing
-_COOC_CACHE: dict[str, DataFrame] = {}
-# per-node triangle counts on the cooc graph — the wedge join is the
-# expensive stage and graph_triangles / graph_clustering both need it
-_TRI_CACHE: dict[str, DataFrame] = {}
-# link-prediction scores (X130) on the cooc graph — one wedge join
-# feeds BOTH the Jaccard and Resource-Allocation top-k entries
-_LINKPRED_CACHE: dict[str, DataFrame] = {}
-# near-dup cluster assignment (doc_id, cluster_id, is_canonical) over
-# the memoized Jaccard pairs — cluster ONCE, consumed by
-# docs_dedup_clusters / docs_leakage_split / docs_dedup_keep_best
-# (the components contraction is the expensive stage all three paid)
-_CLUSTERS_CACHE: dict[str, DataFrame] = {}
-# (codes frame, codebook list) per sf_dir — the PQ index fit is
-# deterministic (m fixed-point subspace k-means), same memo rule as IVF
-_PQ_CACHE: dict[str, tuple] = {}
-# k=8/iters=10 full-embedding k-means assignment per sf_dir — the
-# identical fit emb_kmeans and emb_semdedup each ran; deterministic
-# (fixed-point integer Lloyd's), so sharing it is bit-exact
-_KM8_CACHE: dict[str, tuple] = {}  # sf_dir -> (assigned frame, int64 centroid matrix)
-# exact cosine-≥0.4 near-dup pair frame per sf_dir — built identically
-# by emb_near_dup (the pair report) and emb_dup_components (the
-# transitive closure); the blocked join is the expensive part, so share
-# the checkpointed pairs
-_EMB_NEARDUP_CACHE: dict[str, DataFrame] = {}
-# checkpointed RP-LSH bucketed index (dim=64, bits=8) per sf_dir —
-# shared by emb_ann_lsh and emb_ann_eval; the hyperplanes are literal
-# constants so the index is deterministic. Without this memo, ann_topk
-# localCheckpoints the FULL index per call and emb_ann_eval rebuilds it
-# a second time (the r6 bench regression: 1.76 s → 5.48 s).
-_LSH_CACHE: dict[str, DataFrame] = {}
-# checkpointed binary-quantization signature frame (X119) per sf_dir —
-# shared by emb_bq_topk / emb_bq_rerank / emb_bq_eval
-_BQ_CACHE: dict[str, DataFrame] = {}
-# checkpointed parsed link records of the absolute-URL web pages
-# (X159) per sf_dir — the host-graph edge feed is read three times by
-# web_host_rank (pagerank's edge materialization reads it via two
-# branches, the in-link rollup once); without the checkpoint each scan
-# re-runs the mapInPandas HTML parse
-_WEB_LINKS_CACHE: dict[str, DataFrame] = {}
-# checkpointed parsed WARC response docs (X160) per sf_dir — the
-# extract pass and the envelope-metadata join both read it; one
-# per-process container dir (the export-tempdir rule, ADVICE r11 #1)
-_WARC_CACHE: dict[str, DataFrame] = {}
-_WARC_DIRS: dict[str, str] = {}
-# checkpointed trained NB weight frame (X161, ≤4096 rows + prior) per
-# sf_dir — train once, consumed by docs_classifier_trained AND its AUC
-# grade (the production train-once/score-many shape)
-_NB_CACHE: dict[str, DataFrame] = {}
-# checkpointed exact cosine top-10 of probe 7 (a 10-row frame) per
-# sf_dir — the ground truth every ANN recall eval (lsh/ivf/pq/ivfpq/bq/
-# index_eval) and the RRF dense leg compare against; without the memo
-# each of those ~8 consumers re-ran the full corpus-scan exact pass
-# (r13-opt)
-_COS_CACHE: dict[str, DataFrame] = {}
-# checkpointed TOPOLOGY-only projection frames per sf_dir (r13-opt):
-# nodes(id) and edges(src, dst). The degree/pagerank/ppr/hits/
-# components/density/modularity family reads only these columns, but
-# each query (and modularity/components several times WITHIN one
-# query) re-derived them from the 7-table parquet union + lpad/concat
-# string-id construction. LPA and the export entry keep the full lazy
-# property graph (_graph) — caching the MapType nodes is the measured
-# anti-pattern _graph's comment documents.
-_GT_NODES_CACHE: dict[str, DataFrame] = {}
-_GT_EDGES_CACHE: dict[str, DataFrame] = {}
+#: builder name -> {sf_dir: value}, one store per ``@_memo`` builder.
+#: Pinning, reset, warm checks and the query -> memo map all derive from
+#: it, so a new shared frame needs nothing beyond the decorator.
+_MEMOS: dict[str, dict] = {}
 
 
 def _graph(spark: SparkSession, sf_dir: str):
@@ -123,27 +48,6 @@ def _graph(spark: SparkSession, sf_dir: str):
     if sf_dir not in _GRAPH_CACHE:
         _GRAPH_CACHE[sf_dir] = build_graph(spark, sf_dir, cache=False)
     return _GRAPH_CACHE[sf_dir]
-
-
-def _gtopo(spark: SparkSession, sf_dir: str):
-    """Topology-only view of the tpch projection — ``nodes(id)`` +
-    ``edges(src, dst)`` as eager per-session checkpoints, wrapped in a
-    PropertyGraph. Identical values to ``_graph(...)``'s frames (same
-    projection, two narrow selects), so every consumer's result is
-    byte-identical; the saving is not re-deriving the 7-table union +
-    string-id construction once per consumer (and 3-4x inside
-    modularity/components, which branch from the edge frame)."""
-    from graph_loom_spark.graph import PropertyGraph
-
-    n = _GT_NODES_CACHE.get(sf_dir)
-    e = _GT_EDGES_CACHE.get(sf_dir)
-    if n is None or e is None or not (_checkpoint_alive(n) and _checkpoint_alive(e)):
-        g = _graph(spark, sf_dir)
-        n = g.nodes.select("id").localCheckpoint(eager=True)
-        e = g.edges.select("src", "dst").localCheckpoint(eager=True)
-        _GT_NODES_CACHE[sf_dir] = n
-        _GT_EDGES_CACHE[sf_dir] = e
-    return PropertyGraph(spark, nodes=n, edges=e)
 
 
 def _ckpt_rdd(df: DataFrame):
@@ -163,66 +67,82 @@ def _checkpoint_alive(df: DataFrame) -> bool:
         return False
 
 
+def _frames(value) -> list[DataFrame]:
+    """The frames a memo value holds: the value itself, or the frame
+    members of a tuple such as ``(codes, books)``."""
+    items = value if isinstance(value, tuple) else (value,)
+    return [v for v in items if isinstance(v, DataFrame)]
+
+
+def _memo(build):
+    """Share ``build(spark, sf_dir)``'s deterministic result per sf_dir
+    within the session. The value is rebuilt once any frame in it is no
+    longer persisted; a value holding no frame is never rebuilt."""
+    store = _MEMOS[build.__name__] = {}
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str):
+        value = store.get(sf_dir)
+        if sf_dir not in store or not all(map(_checkpoint_alive, _frames(value))):
+            value = store[sf_dir] = build(spark, sf_dir)
+        return value
+
+    return get
+
+
+@_memo
+def _gtopo_frames(spark: SparkSession, sf_dir: str) -> tuple:
+    # r13-opt: the degree/pagerank/ppr/hits/components/density/modularity
+    # family reads only these columns (see _gtopo). LPA and the export
+    # entry keep the full lazy property graph (_graph) — caching the
+    # MapType nodes is the measured anti-pattern _graph's comment
+    # documents.
+    g = _graph(spark, sf_dir)
+    return (
+        g.nodes.select("id").localCheckpoint(eager=True),
+        g.edges.select("src", "dst").localCheckpoint(eager=True),
+    )
+
+
+def _gtopo(spark: SparkSession, sf_dir: str):
+    """Topology-only view of the tpch projection — ``nodes(id)`` +
+    ``edges(src, dst)`` as eager per-session checkpoints, wrapped in a
+    PropertyGraph. Identical values to ``_graph(...)``'s frames (same
+    projection, two narrow selects), so every consumer's result is
+    byte-identical; the saving is not re-deriving the 7-table union +
+    string-id construction once per consumer (and 3-4x inside
+    modularity/components, which branch from the edge frame)."""
+    from graph_loom_spark.graph import PropertyGraph
+
+    n, e = _gtopo_frames(spark, sf_dir)
+    return PropertyGraph(spark, nodes=n, edges=e)
+
+
 def pinned_rdd_ids() -> set:
     """RDD ids backing memoized frames: a block-sweeping harness (see
     bench.py:_drop_persisted_blocks) must skip these."""
-    ids = set()
-    for cache in (_LPA_CACHE, _COMP_CACHE, _JACCARD_CACHE, _WINNOW_CACHE, _SPANS_CACHE, _COOC_CACHE, _TRI_CACHE, _LINKPRED_CACHE, _CLUSTERS_CACHE, _MINHASH_CACHE, _MINHASH_SIG_CACHE, _LSH_CACHE, _EMB_NEARDUP_CACHE, _WEB_LINKS_CACHE, _WARC_CACHE, _NB_CACHE, _COS_CACHE, _GT_NODES_CACHE, _GT_EDGES_CACHE):
-        for df in cache.values():
-            try:
-                ids.add(_ckpt_rdd(df).id())
-            except Exception:
-                pass
-    for cache in (_IVF_CACHE, _IVFPQ_CACHE, _PQ_CACHE, _KM8_CACHE):
-        for frame, _aux in cache.values():
-            try:
-                ids.add(_ckpt_rdd(frame).id())
-            except Exception:
-                pass
+    frames = [f for s in _MEMOS.values() for v in s.values() for f in _frames(v)]
     # library-internal eager checkpoints (rfm_segments' per-user frame):
     # the returned frame still reads these blocks, so a sweep between
     # call and forcing must skip them (ADVICE r10 #3)
-    for frame in ops_events._INTERNAL_CKPTS.values():
+    frames += ops_events._INTERNAL_CKPTS.values()
+    ids = set()
+    for df in frames:
         try:
-            ids.add(_ckpt_rdd(frame).id())
+            ids.add(_ckpt_rdd(df).id())
         except Exception:
             pass
     return ids
 
 
 def reset_caches() -> None:
-    """Drop every memoized frame (graph projection, LPA communities,
-    jaccard pairs, winnow fingerprints). A harness that restarts the
-    SparkSession mid-run MUST call this: the cached DataFrames belong to
-    the old context and are unusable in the new one."""
-    for cache in (
-        _GRAPH_CACHE,
-        _LPA_CACHE,
-        _COMP_CACHE,
-        _JACCARD_CACHE,
-        _WINNOW_CACHE,
-        _SPANS_CACHE,
-        _IVF_CACHE,
-        _IVFPQ_CACHE,
-        _COOC_CACHE,
-        _PQ_CACHE,
-        _MINHASH_CACHE,
-        _MINHASH_SIG_CACHE,
-        _KM8_CACHE,
-        _LSH_CACHE,
-        _BQ_CACHE,
-        _EMB_NEARDUP_CACHE,
-        _TRI_CACHE,
-        _LINKPRED_CACHE,
-        _CLUSTERS_CACHE,
-        _WEB_LINKS_CACHE,
-        _WARC_CACHE,
-        _NB_CACHE,
-        _COS_CACHE,
-        _GT_NODES_CACHE,
-        _GT_EDGES_CACHE,
-    ):
-        cache.clear()
+    """Drop the graph handles and every memoized value. A harness that
+    restarts the SparkSession mid-run MUST call this: the cached
+    DataFrames belong to the old context and are unusable in the new
+    one."""
+    _GRAPH_CACHE.clear()
+    for store in _MEMOS.values():
+        store.clear()
 
 
 def reset_memo(name: str) -> None:
@@ -244,106 +164,53 @@ def memo_warm(name: str, sf_dir: str) -> bool:
     return any(sf_dir in cache for cache in _memo_map().get(name, []))
 
 
-def _memo_map() -> dict:
-    # built lazily: some cache dicts are defined further down the module
-    return {
-        "graph_lpa": [_LPA_CACHE],
-        # rfm's eager internal checkpoint lives in the library registry;
-        # clearing it here unpins the blocks so the next sweep frees them
-        "events_rfm": [ops_events._INTERNAL_CKPTS],
-        # community_density consumes the LPA memo, density_components the
-        # components memo — resetting the consumer must drop the producer
-        # frame too, or a per-query-invalidation harness keeps timing a
-        # cache hit
-        "graph_community_density": [_LPA_CACHE, _GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_modularity": [_LPA_CACHE, _GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_components": [_COMP_CACHE, _GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_density_components": [_COMP_CACHE, _GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_degrees": [_GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_pagerank": [_GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_ppr": [_GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_hits": [_GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "web_host_rank": [_WEB_LINKS_CACHE],
-        "docs_warc_extract": [_WARC_CACHE],
-        "docs_classifier_trained": [_NB_CACHE],
-        "docs_classifier_trained_auc": [_NB_CACHE],
-        "docs_minhash_pairs": [_MINHASH_CACHE, _MINHASH_SIG_CACHE],
-        "docs_minhash_clusters": [_MINHASH_CACHE, _MINHASH_SIG_CACHE],
-        "docs_minhash_rescored": [_MINHASH_CACHE, _MINHASH_SIG_CACHE],
-        "docs_pipeline_funnel": [_MINHASH_SIG_CACHE],
-        "docs_ngram_jaccard": [_JACCARD_CACHE],
-        "docs_dedup_keep_best": [_JACCARD_CACHE, _CLUSTERS_CACHE],
-        "docs_dedup_eval": [_MINHASH_CACHE, _MINHASH_SIG_CACHE, _JACCARD_CACHE],
-        "docs_dedup_clusters": [_JACCARD_CACHE, _CLUSTERS_CACHE],
-        "docs_dedup_report": [_JACCARD_CACHE, _CLUSTERS_CACHE],
-        "docs_leakage_split": [_JACCARD_CACHE, _CLUSTERS_CACHE],
-        "emb_near_dup": [_EMB_NEARDUP_CACHE],
-        "emb_dup_components": [_EMB_NEARDUP_CACHE],
-        "emb_dup_keep_best": [_EMB_NEARDUP_CACHE],
-        "docs_bpe_encode": [_BPE_MERGES_CACHE],
-        "docs_winnow": [_WINNOW_CACHE],
-        "docs_exact_spans": [_SPANS_CACHE],
-        "docs_span_coverage": [_SPANS_CACHE],
-        "docs_winnow_pairs": [_WINNOW_CACHE],
-        "emb_ivf_topk": [_IVF_CACHE],
-        "emb_ivf_eval": [_IVF_CACHE, _COS_CACHE],
-        "emb_ivfpq_topk": [_IVF_CACHE, _IVFPQ_CACHE],
-        "emb_ivfpq_eval": [_IVF_CACHE, _IVFPQ_CACHE, _COS_CACHE],
-        "emb_index_eval": [
-            _IVF_CACHE,
-            _PQ_CACHE,
-            _LSH_CACHE,
-            _IVFPQ_CACHE,
-            _BQ_CACHE,
-            _COS_CACHE,
-        ],
-        "emb_pq_topk": [_PQ_CACHE],
-        "emb_pq_rerank": [_PQ_CACHE],
-        "emb_pq_eval": [_PQ_CACHE, _COS_CACHE],
-        "emb_cosine_topk": [_COS_CACHE],
-        "docs_rrf_fusion": [_COS_CACHE],
-        "docs_minhash_report": [_MINHASH_CACHE, _MINHASH_SIG_CACHE],
-        "emb_cluster_quality": [_KM8_CACHE],
-        "emb_ann_lsh": [_LSH_CACHE],
-        "emb_ann_eval": [_LSH_CACHE, _COS_CACHE],
-        "emb_dup_components_lsh": [_LSH_CACHE],
-        "emb_dup_keep_best_lsh": [_LSH_CACHE],
-        "emb_hubness": [_LSH_CACHE],
-        "emb_hubness_skew": [_LSH_CACHE],
-        "emb_bq_topk": [_BQ_CACHE],
-        "emb_bq_rerank": [_BQ_CACHE],
-        "emb_bq_eval": [_BQ_CACHE, _COS_CACHE],
-        "emb_kmeans": [_KM8_CACHE],
-        "emb_semdedup": [_KM8_CACHE],
-        "emb_cluster_sample": [_KM8_CACHE],
-        "emb_outliers": [_KM8_CACHE],
-        "graph_triangles": [_COOC_CACHE, _TRI_CACHE],
-        "graph_clustering": [_COOC_CACHE, _TRI_CACHE],
-        "graph_link_jaccard": [_COOC_CACHE, _LINKPRED_CACHE],
-        "graph_link_ra": [_COOC_CACHE, _LINKPRED_CACHE],
-        "graph_link_capped": [_COOC_CACHE],
-        "graph_assortativity": [_COOC_CACHE],
-        "graph_knn_degree": [_COOC_CACHE],
-        # like its siblings graph_components/graph_density_components:
-        # resetting the consumer must drop the producer topology frames
-        # its rebuild rides too (ADVICE r13 #3)
-        "graph_cc_sizes": [_COMP_CACHE, _GT_NODES_CACHE, _GT_EDGES_CACHE],
-        "graph_bfs": [_COOC_CACHE],
-        "graph_sssp": [_COOC_CACHE],
-        "graph_kcore": [_COOC_CACHE],
-    }
+def _reached(code, seen: set) -> None:
+    """Add to ``seen`` every function of this module that ``code``
+    reaches: through its global names, its nested code objects (lambdas,
+    inner functions) and, for memo getters, the builder behind them."""
+    for const in code.co_consts:
+        if isinstance(const, types.CodeType):
+            _reached(const, seen)
+    for name in code.co_names:
+        fn = globals().get(name)
+        if (
+            isinstance(fn, types.FunctionType)
+            and fn.__globals__ is globals()
+            and name not in seen
+        ):
+            seen.add(name)
+            _reached(getattr(fn, "__wrapped__", fn).__code__, seen)
 
 
+@functools.cache
+def _memo_map() -> dict[str, list[dict]]:
+    """Query name -> the memo stores it reads, derived from the code. A
+    consumer lists its producers' stores too (graph_community_density
+    reads the LPA memo): resetting the consumer must drop the producer
+    frame, or a per-query-invalidation harness keeps timing a cache
+    hit. Queries reading no memo are absent."""
+    out = {}
+    for name, fn in queries().items():
+        seen: set = set()
+        _reached(fn.__code__, seen)
+        stores = [s for b, s in _MEMOS.items() if b in seen]
+        if stores:
+            out[name] = stores
+    # rfm's eager internal checkpoint lives in the library registry, out
+    # of the walk's sight; clearing it here unpins the blocks so the
+    # next sweep frees them
+    out.setdefault("events_rfm", []).append(ops_events._INTERNAL_CKPTS)
+    return out
+
+
+@_memo
 def _lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The communities frame is deterministic (fixed tie-break) and comes
     # back as an eager localCheckpoint, so it is safe to share across
     # queries in one session. Without the memo, graph_community_density
     # re-ran the full 8-round LPA that graph_lpa had just computed —
     # double-paying the most expensive iterative job per bench run.
-    cached = _LPA_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _LPA_CACHE[sf_dir] = analytics.weighted_label_propagation(_graph(spark, sf_dir))
-    return _LPA_CACHE[sf_dir]
+    return analytics.weighted_label_propagation(_graph(spark, sf_dir))
 
 
 def _cypher(spark: SparkSession, sf_dir: str, q: str) -> DataFrame:
@@ -732,14 +599,12 @@ def _q_docs_repetition(spark, sf_dir):
     return ops_text.repetition_stats(_t(spark, sf_dir, "documents"))
 
 
+@_memo
 def _winnow_fps(spark, sf_dir) -> DataFrame:
     # deterministic → memo-safe; shared by docs_winnow + docs_winnow_pairs
-    cached = _WINNOW_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _WINNOW_CACHE[sf_dir] = ops_text.winnow_fingerprints(
-            _t(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-    return _WINNOW_CACHE[sf_dir]
+    return ops_text.winnow_fingerprints(
+        _t(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=True)
 
 
 def _q_docs_winnow(spark, sf_dir):
@@ -760,17 +625,14 @@ def _q_docs_winnow_pairs(spark, sf_dir):
     )
 
 
+@_memo
 def _exact_spans(spark, sf_dir) -> DataFrame:
-    # deterministic → memo-safe; shared by docs_exact_spans +
-    # docs_span_coverage (same rule as _winnow_fps)
-    cached = _SPANS_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        # the op returns an eager checkpoint since r14 (ownership
-        # contract) — memoize it directly, no second materialization
-        _SPANS_CACHE[sf_dir] = ops_dedup.exact_dup_spans(
-            _t(spark, sf_dir, "documents"), min_len=40
-        )
-    return _SPANS_CACHE[sf_dir]
+    # maximal exact duplicate spans (X128) — deterministic gram islands
+    # → memo-safe; shared by docs_exact_spans + docs_span_coverage (same
+    # rule as _winnow_fps). The op returns an eager checkpoint since r14
+    # (ownership contract) — memoize it directly, no second
+    # materialization
+    return ops_dedup.exact_dup_spans(_t(spark, sf_dir, "documents"), min_len=40)
 
 
 def _q_docs_exact_spans(spark, sf_dir):
@@ -944,24 +806,18 @@ def _q_docs_bpe_train(spark, sf_dir):
     )
 
 
-# learned merge lists per sf_dir (plain Python tuples — no Spark frames,
-# so no checkpoint-liveness concerns); the trainer is deterministic, so
-# sharing the 20-merge list between the X124 encode entry's runs only
-# skips an identical re-train
-_BPE_MERGES_CACHE: dict[str, list] = {}
-
-
+@_memo
 def _bpe_merges(spark, sf_dir) -> list:
-    if sf_dir not in _BPE_MERGES_CACHE:
-        rows = (
-            ops_bpe.bpe_train(
-                _t(spark, sf_dir, "documents"), num_merges=20, batch_size=8
-            )
-            .orderBy("rank")
-            .collect()
-        )
-        _BPE_MERGES_CACHE[sf_dir] = [(r["left"], r["right"]) for r in rows]
-    return _BPE_MERGES_CACHE[sf_dir]
+    # learned merge list (plain Python tuples — no Spark frames, so never
+    # rebuilt); the trainer is deterministic, so sharing the 20-merge
+    # list between the X124 encode entry's runs only skips an identical
+    # re-train
+    rows = (
+        ops_bpe.bpe_train(_t(spark, sf_dir, "documents"), num_merges=20, batch_size=8)
+        .orderBy("rank")
+        .collect()
+    )
+    return [(r["left"], r["right"]) for r in rows]
 
 
 def _q_docs_bpe_encode(spark, sf_dir):
@@ -997,17 +853,13 @@ def _q_docs_pii(spark, sf_dir):
     return ops_text.pii_scrub(_t(spark, sf_dir, "documents"))
 
 
+@_memo
 def _km8_fit(spark, sf_dir):
-    # shared k=8/iters=10 fit (assignment frame + the quantized int64
-    # centroid matrix it was computed with) for emb_kmeans,
-    # emb_semdedup, emb_cluster_sample and emb_outliers
-    cached = _KM8_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached[0]):
-        assigned, cents = ops_sim.kmeans_fit(
-            _t(spark, sf_dir, "embeddings"), k=8, iters=10
-        )
-        _KM8_CACHE[sf_dir] = (assigned, cents)  # assigned is checkpointed
-    return _KM8_CACHE[sf_dir]
+    # shared k=8/iters=10 fit (checkpointed assignment frame + the
+    # quantized int64 centroid matrix it was computed with) for
+    # emb_kmeans, emb_semdedup, emb_cluster_sample and emb_outliers;
+    # deterministic (fixed-point integer Lloyd's), so sharing is bit-exact
+    return ops_sim.kmeans_fit(_t(spark, sf_dir, "embeddings"), k=8, iters=10)
 
 
 def _km8(spark, sf_dir) -> DataFrame:
@@ -1088,20 +940,18 @@ def _q_emb_outliers(spark, sf_dir):
     )
 
 
+@_memo
 def _dedup_clusters_memo(spark, sf_dir) -> DataFrame:
     # deterministic (min-id components over exact pairs) — the
     # components contraction is the expensive stage that
     # docs_dedup_clusters / docs_leakage_split / docs_dedup_keep_best
     # all consume: cluster ONCE (same memo rule as _jaccard_pairs)
-    cached = _CLUSTERS_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _CLUSTERS_CACHE[sf_dir] = ops_dedup.dedup_clusters(
-            _t(spark, sf_dir, "documents"),
-            n=3,
-            threshold=0.5,
-            pairs=_jaccard_pairs(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-    return _CLUSTERS_CACHE[sf_dir]
+    return ops_dedup.dedup_clusters(
+        _t(spark, sf_dir, "documents"),
+        n=3,
+        threshold=0.5,
+        pairs=_jaccard_pairs(spark, sf_dir),
+    ).localCheckpoint(eager=True)
 
 
 def _q_docs_dedup_clusters(spark, sf_dir):
@@ -1273,17 +1123,16 @@ def _q_emb_norm_stats(spark, sf_dir):
     return ops_sim.norm_stats(_t(spark, sf_dir, "embeddings"))
 
 
+@_memo
 def _cosine_exact(spark, sf_dir) -> DataFrame:
     # exact cosine top-10 of probe 7 — deterministic (rounded scores,
     # (cosine desc, vec_id) order) and 10 rows, so memo-safe; the
-    # ground-truth frame every ANN recall eval joins against (r13-opt:
-    # previously each eval re-ran the full exact scan)
-    cached = _COS_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _COS_CACHE[sf_dir] = ops_sim.cosine_topk(
-            _t(spark, sf_dir, "embeddings"), probe_id=7, k=10
-        ).localCheckpoint(eager=True)
-    return _COS_CACHE[sf_dir]
+    # ground truth every ANN recall eval (lsh/ivf/pq/ivfpq/bq/index_eval)
+    # and the RRF dense leg compare against (r13-opt: previously each of
+    # those ~8 consumers re-ran the full corpus-scan exact pass)
+    return ops_sim.cosine_topk(
+        _t(spark, sf_dir, "embeddings"), probe_id=7, k=10
+    ).localCheckpoint(eager=True)
 
 
 def _q_emb_cosine_topk(spark, sf_dir):
@@ -1363,17 +1212,16 @@ def _q_docs_classifier_calibration(spark, sf_dir):
     return ops_text.classifier_calibration(_t(spark, sf_dir, "documents"))
 
 
+@_memo
 def _nb_model(spark, sf_dir) -> DataFrame:
-    # trained NB weight frame (bucket counts + micro-nat LLRs + prior),
-    # ≤4096 rows, checkpointed — docs_classifier_trained and its AUC
-    # grade share ONE training pass (the memo rule: producer directly
+    # trained NB weight frame (X161: bucket counts + micro-nat LLRs +
+    # prior), ≤4096 rows, checkpointed — docs_classifier_trained and its
+    # AUC grade share ONE training pass, the production
+    # train-once/score-many shape (the memo rule: producer directly
     # before its consumer in the registry)
-    cached = _NB_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _NB_CACHE[sf_dir] = ops_text.nb_weights(
-            _t(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-    return _NB_CACHE[sf_dir]
+    return ops_text.nb_weights(_t(spark, sf_dir, "documents")).localCheckpoint(
+        eager=True
+    )
 
 
 def _q_docs_classifier_trained(spark, sf_dir):
@@ -1725,14 +1573,13 @@ def _q_emb_dup_components_lsh(spark, sf_dir):
     return ops_sim.embedding_dup_components(emb, threshold=0.4, pairs=pairs)
 
 
+@_memo
 def _bq_sigs(spark, sf_dir) -> DataFrame:
-    # checkpointed sign-signature frame shared by the X119 entries
-    cached = _BQ_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _BQ_CACHE[sf_dir] = ops_sim.bq_signatures(
-            _t(spark, sf_dir, "embeddings"), dim=64
-        ).localCheckpoint(eager=True)
-    return _BQ_CACHE[sf_dir]
+    # checkpointed binary-quantization sign-signature frame shared by the
+    # X119 entries emb_bq_topk / emb_bq_rerank / emb_bq_eval
+    return ops_sim.bq_signatures(
+        _t(spark, sf_dir, "embeddings"), dim=64
+    ).localCheckpoint(eager=True)
 
 
 def _q_emb_bq_topk(spark, sf_dir):
@@ -1823,32 +1670,24 @@ def _q_emb_sq_topk(spark, sf_dir):
     return ops_sim.sq_topk(_t(spark, sf_dir, "embeddings"), probe_id=7, k=10)
 
 
-_MINHASH_CACHE: dict[str, DataFrame] = {}
-# full-corpus md5 MinHash signatures per sf_dir: a doc's signature
-# depends only on its own text, so any subset pipeline (the funnel's
-# post-dedup near-dedup stage) can semi-join these instead of re-paying
-# the md5-per-shingle scan — the dominant minhash cost
-_MINHASH_SIG_CACHE: dict[str, DataFrame] = {}
-
-
+@_memo
 def _minhash_sigs(spark, sf_dir) -> DataFrame:
-    cached = _MINHASH_SIG_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _MINHASH_SIG_CACHE[sf_dir] = ops_dedup.minhash_signatures_md5(
-            _t(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-    return _MINHASH_SIG_CACHE[sf_dir]
+    # full-corpus md5 MinHash signatures: a doc's signature depends only
+    # on its own text, so any subset pipeline (the funnel's post-dedup
+    # near-dedup stage) can semi-join these instead of re-paying the
+    # md5-per-shingle scan — the dominant minhash cost
+    return ops_dedup.minhash_signatures_md5(
+        _t(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=True)
 
 
+@_memo
 def _minhash_pairs(spark, sf_dir) -> DataFrame:
     # deterministic (md5 mode) and reused by docs_minhash_clusters —
     # same memo rule as _jaccard_pairs
-    cached = _MINHASH_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _MINHASH_CACHE[sf_dir] = ops_dedup.minhash_lsh_pairs(
-            _minhash_sigs(spark, sf_dir), threshold=0.3, band_hash="md5"
-        ).localCheckpoint(eager=True)
-    return _MINHASH_CACHE[sf_dir]
+    return ops_dedup.minhash_lsh_pairs(
+        _minhash_sigs(spark, sf_dir), threshold=0.3, band_hash="md5"
+    ).localCheckpoint(eager=True)
 
 
 def _q_docs_minhash_pairs(spark, sf_dir):
@@ -1915,15 +1754,16 @@ def _q_docs_simhash_pairs(spark, sf_dir):
     return ops_dedup.simhash_near_pairs(sim, max_hamming=3, bits=60)
 
 
+@_memo
 def _lsh_index(spark, sf_dir) -> DataFrame:
     # Deterministic (literal hyperplanes) → safe to share the pinned
-    # bucketed frame across emb_ann_lsh and emb_ann_eval in one session.
-    cached = _LSH_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _LSH_CACHE[sf_dir] = ops_sim.rp_lsh_buckets(
-            _t(spark, sf_dir, "embeddings"), dim=64, bits=8
-        ).localCheckpoint(eager=True)
-    return _LSH_CACHE[sf_dir]
+    # RP-LSH bucketed frame (dim=64, bits=8) across emb_ann_lsh and
+    # emb_ann_eval in one session. Without this memo, ann_topk
+    # localCheckpoints the FULL index per call and emb_ann_eval rebuilds
+    # it a second time (the r6 bench regression: 1.76 s → 5.48 s).
+    return ops_sim.rp_lsh_buckets(
+        _t(spark, sf_dir, "embeddings"), dim=64, bits=8
+    ).localCheckpoint(eager=True)
 
 
 def _q_emb_ann_lsh(spark, sf_dir):
@@ -2175,27 +2015,25 @@ def _q_emb_ivf_topk(spark, sf_dir):
     return ops_sim.ivf_flat_topk(emb, assigned, C, probe_id=7, k=10, nprobe=4)
 
 
+@_memo
 def _ivf_quantizer(spark, sf_dir) -> tuple:
     # memoized deterministic coarse quantizer (k=16, 5 fixed-point Lloyd
     # iterations) — shared by IVF-flat, the index scoreboard, and the
-    # IVFADC residual fit
-    emb = _t(spark, sf_dir, "embeddings")
-    cached = _IVF_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached[0]):
-        assigned, C = ops_sim.kmeans_fit(emb, k=16, iters=5)
-        _IVF_CACHE[sf_dir] = (assigned.localCheckpoint(eager=True), C)
-    return _IVF_CACHE[sf_dir]
+    # IVFADC residual fit; re-fitting per invocation would only re-pay
+    # the Lloyd iterations for an identical (assigned, centroids) result
+    assigned, C = ops_sim.kmeans_fit(_t(spark, sf_dir, "embeddings"), k=16, iters=5)
+    return (assigned.localCheckpoint(eager=True), C)
 
 
+@_memo
 def _ivfpq_index(spark, sf_dir) -> tuple:
-    emb = _t(spark, sf_dir, "embeddings")
-    cached = _IVFPQ_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached[0]):
-        assigned, C = _ivf_quantizer(spark, sf_dir)
-        _IVFPQ_CACHE[sf_dir] = ops_sim.ivfpq_fit(
-            emb, assigned, C, m=4, k=16, iters=4
-        )
-    return _IVFPQ_CACHE[sf_dir]
+    # (codes frame, residual codebooks) — the IVFADC residual PQ fit
+    # over the _ivf_quantizer coarse quantizer (X121); deterministic like
+    # the flat PQ fit
+    assigned, C = _ivf_quantizer(spark, sf_dir)
+    return ops_sim.ivfpq_fit(
+        _t(spark, sf_dir, "embeddings"), assigned, C, m=4, k=16, iters=4
+    )
 
 
 def _q_emb_ivfpq_topk(spark, sf_dir):
@@ -2337,43 +2175,43 @@ _PQ_EXPECTED_MD5 = {
 _PQ_FIT_STATUS: dict = {}
 
 
+@_memo
 def _pq_index(spark, sf_dir):
+    # (codes frame, codebook list) — the PQ index fit is deterministic
+    # (m fixed-point subspace k-means), same memo rule as _ivf_quantizer
     import os
     import sys
 
     emb = _t(spark, sf_dir, "embeddings")
-    cached = _PQ_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached[0]):
+    codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
+    expected = _PQ_EXPECTED_MD5.get(os.path.basename(sf_dir.rstrip("/")))
+    got = ops_sim.pq_codebooks_md5(books)
+    refits = 0
+    if expected is not None and got != expected:
+        refits = 1
+        print(
+            f"[pq_index] DIGEST MISMATCH sf={sf_dir} expected={expected} "
+            f"got={got} — refitting once",
+            file=sys.stderr,
+        )
+        try:  # free the diverged fit's checkpoint blocks
+            codes.unpersist()
+        except Exception:
+            pass
         codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
-        expected = _PQ_EXPECTED_MD5.get(os.path.basename(sf_dir.rstrip("/")))
         got = ops_sim.pq_codebooks_md5(books)
-        refits = 0
-        if expected is not None and got != expected:
-            refits = 1
-            print(
-                f"[pq_index] DIGEST MISMATCH sf={sf_dir} expected={expected} "
-                f"got={got} — refitting once",
-                file=sys.stderr,
-            )
-            try:  # free the diverged fit's checkpoint blocks
-                codes.unpersist()
-            except Exception:
-                pass
-            codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
-            got = ops_sim.pq_codebooks_md5(books)
-            print(
-                f"[pq_index] refit digest={got} "
-                f"({'MATCH' if got == expected else 'STILL DIVERGED'})",
-                file=sys.stderr,
-            )
-        _PQ_FIT_STATUS[sf_dir] = {
-            "expected": expected,
-            "got": got,
-            "refits": refits,
-            "diverged": expected is not None and got != expected,
-        }
-        _PQ_CACHE[sf_dir] = (codes, books)
-    return _PQ_CACHE[sf_dir]
+        print(
+            f"[pq_index] refit digest={got} "
+            f"({'MATCH' if got == expected else 'STILL DIVERGED'})",
+            file=sys.stderr,
+        )
+    _PQ_FIT_STATUS[sf_dir] = {
+        "expected": expected,
+        "got": got,
+        "refits": refits,
+        "diverged": expected is not None and got != expected,
+    }
+    return (codes, books)
 
 
 def _q_emb_ivf_eval(spark, sf_dir):
@@ -2661,17 +2499,13 @@ def _web_docs(spark, sf_dir) -> DataFrame:
     return j.select("doc_id", host.alias("host"), html.alias("html"))
 
 
+@_memo
 def _web_links(spark, sf_dir) -> DataFrame:
-    # parsed link records of the absolute-URL pages, checkpointed —
-    # web_host_rank's pagerank materialization reads the edge frame via
+    # parsed link records of the absolute-URL pages (X159), checkpointed
+    # — web_host_rank's pagerank materialization reads the edge frame via
     # two branches and the in-link rollup via a third; the memo bounds
-    # that to ONE mapInPandas parse (same memo rule as _jaccard_pairs)
-    cached = _WEB_LINKS_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _WEB_LINKS_CACHE[sf_dir] = ops_html.html_links(
-            _web_docs(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _WEB_LINKS_CACHE[sf_dir]
+    # that to ONE mapInPandas HTML parse (same memo rule as _jaccard_pairs)
+    return ops_html.html_links(_web_docs(spark, sf_dir)).localCheckpoint(eager=True)
 
 
 def _host_map(spark, sf_dir) -> DataFrame:
@@ -2773,6 +2607,12 @@ def _q_web_host_rank(spark, sf_dir):
     )
 
 
+# one WARC container dir per process per sf_dir (the export-tempdir
+# rule, ADVICE r11 #1) — kept across memo rebuilds
+_WARC_DIRS: dict[str, str] = {}
+
+
+@_memo
 def _warc_docs(spark, sf_dir) -> DataFrame:
     """X160 — the WARC leg of the ingest story: write the generated
     absolute-URL pages (the _web_docs harness) as real WARC containers
@@ -2785,39 +2625,36 @@ def _warc_docs(spark, sf_dir) -> DataFrame:
     sf_dir (mkdtemp — the ADVICE r11 export rule); the parsed response
     frame is localCheckpoint-memoized so the extract pass and the
     metadata join share one binaryFile scan + one Python split."""
-    cached = _WARC_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        import tempfile
+    import tempfile
 
-        path = _WARC_DIRS.get(sf_dir)
-        if path is None:
-            path = _WARC_DIRS[sf_dir] = tempfile.mkdtemp(prefix="gls_warc_")
-        pages = _web_docs(spark, sf_dir)
-        ops_warc.write_warc(
-            pages.select(
-                "doc_id",
-                F.concat(
-                    F.lit("https://"),
-                    F.col("host"),
-                    F.lit("/d/"),
-                    F.col("doc_id").cast("string"),
-                ).alias("url"),
-                "html",
-            ),
-            path,
-        )
-        recs = ops_warc.warc_records(
-            spark.read.format("binaryFile").load(path)
-        ).filter(F.col("warc_type") == "response")
-        _WARC_CACHE[sf_dir] = recs.select(
-            F.regexp_extract(F.col("record_id"), "urn:gls:(\\d+)", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            "target_uri",
-            "http_status",
-            F.col("payload").cast("string").alias("html"),
-        ).localCheckpoint(eager=True)
-    return _WARC_CACHE[sf_dir]
+    path = _WARC_DIRS.get(sf_dir)
+    if path is None:
+        path = _WARC_DIRS[sf_dir] = tempfile.mkdtemp(prefix="gls_warc_")
+    pages = _web_docs(spark, sf_dir)
+    ops_warc.write_warc(
+        pages.select(
+            "doc_id",
+            F.concat(
+                F.lit("https://"),
+                F.col("host"),
+                F.lit("/d/"),
+                F.col("doc_id").cast("string"),
+            ).alias("url"),
+            "html",
+        ),
+        path,
+    )
+    recs = ops_warc.warc_records(
+        spark.read.format("binaryFile").load(path)
+    ).filter(F.col("warc_type") == "response")
+    return recs.select(
+        F.regexp_extract(F.col("record_id"), "urn:gls:(\\d+)", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        "target_uri",
+        "http_status",
+        F.col("payload").cast("string").alias("html"),
+    ).localCheckpoint(eager=True)
 
 
 def _q_docs_warc_extract(spark, sf_dir):
@@ -2863,17 +2700,13 @@ def _q_emb_cluster_quality(spark, sf_dir):
     )
 
 
+@_memo
 def _jaccard_pairs(spark, sf_dir) -> DataFrame:
     # deterministic (exact Jaccard, no engine hashes in the OUTPUT) and
-    # reused by docs_dedup_clusters — same memo rule as _lpa_communities
-    cached = _JACCARD_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        # the op returns an eager checkpoint since r14 (ownership
-        # contract) — memoize it directly, no second materialization
-        _JACCARD_CACHE[sf_dir] = ops_dedup.ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), threshold=0.5
-        )
-    return _JACCARD_CACHE[sf_dir]
+    # reused by docs_dedup_clusters — same memo rule as _lpa_communities.
+    # The op returns an eager checkpoint since r14 (ownership contract)
+    # — memoize it directly, no second materialization
+    return ops_dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 def _q_docs_ngram_jaccard(spark, sf_dir):
@@ -2905,15 +2738,14 @@ def _q_emb_near_dup(spark, sf_dir):
     return _emb_near_pairs(spark, sf_dir)
 
 
+@_memo
 def _emb_near_pairs(spark, sf_dir) -> DataFrame:
-    # deterministic exact pair set — shared by emb_near_dup and
-    # emb_dup_components (same memo rule as _jaccard_pairs)
-    cached = _EMB_NEARDUP_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _EMB_NEARDUP_CACHE[sf_dir] = ops_sim.cosine_near_pairs_blocked(
-            _t(spark, sf_dir, "embeddings"), threshold=0.4
-        ).localCheckpoint(eager=True)
-    return _EMB_NEARDUP_CACHE[sf_dir]
+    # deterministic exact cosine-≥0.4 pair set — shared by emb_near_dup
+    # and emb_dup_components (same memo rule as _jaccard_pairs); the
+    # blocked join is the expensive part
+    return ops_sim.cosine_near_pairs_blocked(
+        _t(spark, sf_dir, "embeddings"), threshold=0.4
+    ).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -2930,15 +2762,13 @@ def _q_graph_triangles(spark, sf_dir):
     return _tri_counts(spark, sf_dir)
 
 
+@_memo
 def _tri_counts(spark, sf_dir) -> DataFrame:
     # deterministic exact counts — shared by graph_triangles and
     # graph_clustering (the wedge join is the expensive stage)
-    cached = _TRI_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _TRI_CACHE[sf_dir] = analytics.triangle_counts(
-            _cooc_edges(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _TRI_CACHE[sf_dir]
+    return analytics.triangle_counts(_cooc_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
 
 
 def _q_graph_clustering(spark, sf_dir):
@@ -2952,31 +2782,29 @@ def _q_graph_clustering(spark, sf_dir):
     )
 
 
+@_memo
 def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # part co-purchase edge set (l_orderkey % 4 == 0 quarter) —
     # deterministic (distinct pairs, no hashes in the output) and built
-    # identically by graph_triangles / graph_bfs / graph_kcore — same
-    # memo rule as _lpa_communities; orders hold ≤ ~7 items, far under
-    # the hot-group cap, so the capped operator and the cap-free oracle
-    # SQL build the identical edge set
-    cached = _COOC_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
-        _COOC_CACHE[sf_dir] = ops_dedup.co_occurrence_edges(
-            li, "l_orderkey", "l_partkey"
-        ).localCheckpoint(eager=True)
-    return _COOC_CACHE[sf_dir]
+    # identically by graph_triangles / graph_bfs / graph_kcore; the
+    # distinct + self-join over lineitem is worth sharing (same memo
+    # rule as _lpa_communities). Orders hold ≤ ~7 items, far under the
+    # hot-group cap, so the capped operator and the cap-free oracle SQL
+    # build the identical edge set
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
+    return ops_dedup.co_occurrence_edges(li, "l_orderkey", "l_partkey").localCheckpoint(
+        eager=True
+    )
 
 
+@_memo
 def _link_scores(spark, sf_dir) -> DataFrame:
-    # deterministic (exact integer scores) full candidate frame —
-    # shared by graph_link_jaccard + graph_link_ra (one wedge join,
-    # both scores in the same groupBy pass)
-    cached = _LINKPRED_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _LINKPRED_CACHE[sf_dir] = analytics.link_prediction_scores(
-            _cooc_edges(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _LINKPRED_CACHE[sf_dir]
+    # deterministic (exact integer scores) link-prediction candidate
+    # frame (X130) — shared by graph_link_jaccard + graph_link_ra (one
+    # wedge join, both scores in the same groupBy pass)
+    return analytics.link_prediction_scores(_cooc_edges(spark, sf_dir)).localCheckpoint(
+        eager=True
+    )
 
 
 def _q_graph_link_jaccard(spark, sf_dir):
@@ -3085,14 +2913,12 @@ def _q_graph_degrees(spark, sf_dir):  # A2/G3
     return analytics.degrees(_gtopo(spark, sf_dir))
 
 
+@_memo
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic (min-id representatives), eagerly checkpointed —
     # shared by graph_components and graph_density_components (same memo
     # rule as _lpa_communities)
-    cached = _COMP_CACHE.get(sf_dir)
-    if cached is None or not _checkpoint_alive(cached):
-        _COMP_CACHE[sf_dir] = analytics.connected_components(_gtopo(spark, sf_dir))
-    return _COMP_CACHE[sf_dir]
+    return analytics.connected_components(_gtopo(spark, sf_dir))
 
 
 def _q_graph_components(spark, sf_dir):  # G4 — oracle-checked (see oracle_sql)
@@ -3243,41 +3069,20 @@ def _q_graph_export_roundtrip(spark, sf_dir):
 #: driver delivers the prior round's CORRECTNESS file). Enforced by
 #: ``tests/test_registry_rotation.py::test_window_slack_holds_stalest_greens``.
 #: Hand adjustment after every --apply (ADVICE r13 #4): keep
-#: ``emb_cosine_topk`` AHEAD of every other _COS_CACHE consumer
+#: ``emb_cosine_topk`` AHEAD of every other _cosine_exact consumer
 #: (emb_ann_eval and the other recall evals), so the exact-cosine
 #: ground-truth scan lands on the line that declares that computation.
 _WINDOW_ORDER = [
-    "docs_pipeline_funnel",
-    "docs_minhash_report",
-    "docs_minhash_clusters",
-    "docs_dedup_report",
-    "docs_leakage_split",
-    "docs_minhash_rescored",
-    "docs_dedup_eval",
-    "docs_simhash_pairs",
-    "docs_dedup_clusters",
-    "docs_minhash_pairs",
-    "docs_ngram_jaccard",
-    "docs_shuffle",
+    "docs_winnow",
+    "docs_winnow_pairs",
+    "emb_dim_eval",
+    "emb_near_dup",
+    "emb_dup_components",
+    "emb_knn_label",
+    "emb_pca",
     "emb_ann_lsh",
     "emb_cosine_topk",
     "emb_ann_eval",
-    "emb_hard_negatives",
-    "emb_near_dup",
-    "emb_norm_stats",
-    "emb_sq_topk",
-    "docs_apply_mixture",
-    "docs_bpe_fertility",
-    "docs_bpe_tokens",
-    "docs_chunk_bm25",
-    "docs_merge_upsert",
-    "docs_pack_efficiency",
-    "docs_source_cap",
-    "docs_split",
-    "emb_kmeans",
-    "emb_cluster_quality",
-    "emb_semdedup",
-    "emb_cluster_sample",
     "emb_dup_keep_best_lsh",
     "emb_hubness",
     "emb_hubness_skew",
@@ -3285,18 +3090,39 @@ _WINDOW_ORDER = [
     "emb_bq_eval",
     "emb_bq_topk",
     "emb_bq_rerank",
-    "emb_ivf_topk",
-    "emb_ivf_eval",
-    "emb_index_eval",
-    "emb_outliers",
-    "events_attribution",
-    "media_png_features",
-    "media_video_frames",
-    "docs_chunk_dedup",
-    "docs_chunks",
-    "docs_dedup_incremental",
-    "docs_rrf_fusion",
-    "docs_winnow",
+    "emb_ivfpq_eval",
+    "emb_ivfpq_topk",
+    "emb_pq_eval",
+    "emb_pq_topk",
+    "emb_pq_rerank",
+    "graph_clustering",
+    "docs_bpe_encode",
+    "docs_bpe_train",
+    "docs_classifier_auc",
+    "docs_classifier_calibration",
+    "docs_dedup_keep_best",
+    "docs_distinct_ngrams",
+    "docs_exact_spans",
+    "docs_exact_spans_capped",
+    "docs_jsd_drift",
+    "docs_novelty",
+    "docs_source_drift",
+    "docs_source_entropy",
+    "docs_span_coverage",
+    "docs_textrank",
+    "docs_zipf_fit",
+    "emb_anisotropy",
+    "emb_dim_stats",
+    "emb_drift",
+    "emb_dup_keep_best",
+    "emb_maxsim_topk",
+    "emb_pca_power",
+    "emb_retrieval_mrr",
+    "emb_retrieval_ndcg",
+    "events_active_users",
+    "events_burstiness",
+    "events_cohort_ltv",
+    "events_gini",
 ]
 
 
@@ -3400,7 +3226,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_winnow": _q_docs_winnow,
         "docs_winnow_pairs": _q_docs_winnow_pairs,
         # -- ANN index mega-family: one LSH index, one exact-cosine
-        # -- ground-truth memo (_COS_CACHE), one fit per structure per
+        # -- ground-truth memo (_cosine_exact), one fit per structure per
         # -- run; each eval leads its fit trio so adjacent entries share
         # -- a cache and the restart guard keeps the block in one session
         "emb_ann_lsh": _q_emb_ann_lsh,

@@ -122,11 +122,11 @@ def _drop_persisted_blocks(spark, extra_keep=None) -> None:
 # the individual line.
 _BENCH_LAST = [
     "graph_triangles",
-    "graph_clustering",  # immediately after triangles: shares _TRI_CACHE
-    # r13-opt: every other _COOC_CACHE consumer runs in the same fresh
+    "graph_clustering",  # immediately after triangles: shares _tri_counts
+    # r13-opt: every other _cooc_edges consumer runs in the same fresh
     # graph session — previously link_*/assortativity/knn/sssp sat in
     # earlier blocks and the co-occurrence edge build (plus the
-    # _LINKPRED_CACHE scored frame) was re-paid up to 3x per bench run
+    # _link_scores scored frame) was re-paid up to 3x per bench run
     # after block restarts swept the memo.
     "graph_link_jaccard",
     "graph_link_ra",
@@ -142,7 +142,7 @@ _BENCH_LAST = [
     "graph_hits",
     "graph_components",
     "graph_density_components",
-    "graph_cc_sizes",  # immediately after: third _COMP_CACHE consumer
+    "graph_cc_sizes",  # immediately after: third _components consumer
     "graph_lpa",
     "graph_community_density",
     "graph_modularity",  # immediately after: shares the LPA memo too
@@ -170,7 +170,7 @@ _RESTART_BEFORE = {"graph_triangles", "graph_pagerank", "graph_lpa"}
 # FULL LPA (~30-70 s) that graph_lpa's own A/B already measures — the
 # density aggregation itself is the 0.7 s warm number. docs_vocab: r6
 # 0.58->0.93 s with no impl change (r6 ask #8). emb_ann_lsh: r6 weak
-# line, fixed r7 via _LSH_CACHE — track. graph_ppr +
+# line, fixed r7 via _lsh_index — track. graph_ppr +
 # media_png_features: r7 verdict asks #3/#4 — unexplained drift with
 # unchanged code; min-of-3 separates plan cost from noise.
 # docs_rrf_fusion: r8 final-run outlier (5.5 s vs 2.1-2.5 s typical,

@@ -165,7 +165,7 @@ def ann_topk(
     # hyperplane projections per row. At cluster scale the index is a
     # written table and this is a no-op read. ``pinned=True`` means the
     # caller already holds a checkpointed/memoized index (e.g. the
-    # per-sf_dir _LSH_CACHE in the entry registry) — don't re-pin it
+    # per-sf_dir _lsh_index memo in the entry registry) — don't re-pin it
     # per call, that double-materializes the whole index.
     if not pinned:
         bucketed = bucketed.localCheckpoint(eager=True)
@@ -595,84 +595,86 @@ def kmeans_fit(
 
     spark = embeddings.sparkSession
     tracked: list = []
-    # prequantized: the caller already lives on the int64 grid (e.g.
-    # ivfpq_fit's exact residuals) — quantizing again would floor a
-    # float round-trip of values the grid already owns
-    q = (
-        F.col(vec_col)
-        if prequantized
-        else F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                x.cast("double") * F.lit(float(scale)) + F.lit(0.5)
-            ).cast("long"),
-        )
-    )
-    X = _tracked_checkpoint(
-        spread(embeddings.select(id_col, q.alias("__q"))), tracked
-    )
-    init_rows = X.orderBy(id_col).limit(k).collect()
-    if len(init_rows) < k:
-        raise ValueError(f"k={k} exceeds row count {len(init_rows)}")
-    C = np.asarray([r[1] for r in init_rows], dtype=np.int64)
-    dim = C.shape[1]
-    # Size the update-aggregate's shuffle from the data: the posexplode
-    # stream is n·dim longs and the reduce side is k·dim rows, so on
-    # small inputs the session default (e.g. 32) means iters×32 near-empty
-    # reduce tasks whose scheduling dominates the whole fit (measured
-    # ~10.8 s → ~5 s at sf0.1, 2k×64). Same save/restore lever as LPA;
-    # at cluster scale the n·dim term takes over and sizes it up.
-    # ``parts`` provided → the CALLER owns the session-conf set/restore
-    # (pq_fit sets it once outside its fit threads so no thread ever
-    # mutates shared session state) and this function is conf-read-only.
-    manage_conf = parts is None
-    if manage_conf:
-        n_rows = X.count()
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        parts = int(max(8, (n_rows * dim) // 2_000_000))
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-
-    def _assign(centroids: np.ndarray):
-        cn = (centroids.astype(np.int64) ** 2).sum(axis=1)
-
-        def _cell(v):
-            M = np.asarray(v.tolist(), dtype=np.int64)
-            if M.size == 0:
-                return pd.Series([], dtype="int32")
-            # exact int64 distance algebra: |x|^2 - 2 x·c + |c|^2
-            d2 = (M**2).sum(axis=1)[:, None] - 2 * (M @ centroids.T) + cn[None, :]
-            return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
-        _cell.__annotations__ = {"v": pd.Series, "return": pd.Series}
-        return F.pandas_udf(_cell, "int")
-
-    assigned = None
-    C_assign = C
-    for _ in range(iters):
-        C_assign = C  # the centroids the returned assignment was made with
-        assigned = X.select(
-            F.col(id_col), F.col("__q"), _assign(C)(F.col("__q")).alias("cluster")
-        )
-        upd = (
-            assigned.select(
-                "cluster", F.posexplode(F.col("__q")).alias("pos", "val")
+    manage_conf = parts is None  # else the caller owns the conf (below)
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        # prequantized: the caller already lives on the int64 grid (e.g.
+        # ivfpq_fit's exact residuals) — quantizing again would floor a
+        # float round-trip of values the grid already owns
+        q = (
+            F.col(vec_col)
+            if prequantized
+            else F.transform(
+                F.col(vec_col),
+                lambda x: F.floor(
+                    x.cast("double") * F.lit(float(scale)) + F.lit(0.5)
+                ).cast("long"),
             )
-            .groupBy("cluster", "pos")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
         )
-        nxt = C.copy()  # empty clusters keep their previous centroid
-        for row in upd:
-            # Python floor division — the SQL oracle mirrors it with
-            # floor(s/n) (exact: |s| < 2^53)
-            nxt[row["cluster"], row["pos"]] = int(row["s"]) // int(row["n"])
-        if np.array_equal(nxt, C):
-            break
-        C = nxt
-    result = assigned.select(id_col, "cluster").localCheckpoint(eager=True)
-    if manage_conf:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    _free_intermediates(spark, tracked)
+        X = _tracked_checkpoint(
+            spread(embeddings.select(id_col, q.alias("__q"))), tracked
+        )
+        init_rows = X.orderBy(id_col).limit(k).collect()
+        if len(init_rows) < k:
+            raise ValueError(f"k={k} exceeds row count {len(init_rows)}")
+        C = np.asarray([r[1] for r in init_rows], dtype=np.int64)
+        dim = C.shape[1]
+        # Size the update-aggregate's shuffle from the data: the posexplode
+        # stream is n·dim longs and the reduce side is k·dim rows, so on
+        # small inputs the session default (e.g. 32) means iters×32 near-empty
+        # reduce tasks whose scheduling dominates the whole fit (measured
+        # ~10.8 s → ~5 s at sf0.1, 2k×64). Same save/restore lever as LPA;
+        # at cluster scale the n·dim term takes over and sizes it up.
+        # ``parts`` provided → the CALLER owns the session-conf set/restore
+        # (pq_fit sets it once outside its fit threads so no thread ever
+        # mutates shared session state) and this function is conf-read-only.
+        if manage_conf:
+            n_rows = X.count()
+            parts = int(max(8, (n_rows * dim) // 2_000_000))
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+
+        def _assign(centroids: np.ndarray):
+            cn = (centroids.astype(np.int64) ** 2).sum(axis=1)
+
+            def _cell(v):
+                M = np.asarray(v.tolist(), dtype=np.int64)
+                if M.size == 0:
+                    return pd.Series([], dtype="int32")
+                # exact int64 distance algebra: |x|^2 - 2 x·c + |c|^2
+                d2 = (M**2).sum(axis=1)[:, None] - 2 * (M @ centroids.T) + cn[None, :]
+                return pd.Series(np.argmin(d2, axis=1).astype("int32"))
+
+            _cell.__annotations__ = {"v": pd.Series, "return": pd.Series}
+            return F.pandas_udf(_cell, "int")
+
+        assigned = None
+        C_assign = C
+        for _ in range(iters):
+            C_assign = C  # the centroids the returned assignment was made with
+            assigned = X.select(
+                F.col(id_col), F.col("__q"), _assign(C)(F.col("__q")).alias("cluster")
+            )
+            upd = (
+                assigned.select(
+                    "cluster", F.posexplode(F.col("__q")).alias("pos", "val")
+                )
+                .groupBy("cluster", "pos")
+                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            nxt = C.copy()  # empty clusters keep their previous centroid
+            for row in upd:
+                # Python floor division — the SQL oracle mirrors it with
+                # floor(s/n) (exact: |s| < 2^53)
+                nxt[row["cluster"], row["pos"]] = int(row["s"]) // int(row["n"])
+            if np.array_equal(nxt, C):
+                break
+            C = nxt
+        result = assigned.select(id_col, "cluster").localCheckpoint(eager=True)
+    finally:  # a failing fit leaks neither the conf nor the pinned projection
+        if manage_conf:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        _free_intermediates(spark, tracked)
     return result, C_assign
 
 

@@ -33,7 +33,7 @@ def test_pq_fit_matches_pinned_digest(spark, entry):
 
 
 def test_pq_digest_mismatch_refits_once_and_proceeds(spark, entry, capsys):
-    entry._PQ_CACHE.clear()
+    entry.reset_memo("emb_pq_topk")
     real = entry._PQ_EXPECTED_MD5["sf0.001"]
     entry._PQ_EXPECTED_MD5["sf0.001"] = "0" * 32  # force the mismatch path
     try:
@@ -45,7 +45,7 @@ def test_pq_digest_mismatch_refits_once_and_proceeds(spark, entry, capsys):
         assert err.count("[pq_fit] codebooks md5=") == 2
     finally:
         entry._PQ_EXPECTED_MD5["sf0.001"] = real
-        entry._PQ_CACHE.clear()
+        entry.reset_memo("emb_pq_topk")
 
 
 def test_pq_topk_writes_value_level_diag(spark, entry):
