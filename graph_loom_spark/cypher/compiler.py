@@ -134,6 +134,7 @@ class CypherExecutor:
         params = params or {}
         clauses = parse(statement)
         b = _Binding.unit(self.spark)
+        prev = None
         for cl in clauses:
             if isinstance(cl, ast.Match):
                 self._exec_match(b, cl, params)
@@ -148,11 +149,17 @@ class CypherExecutor:
             elif isinstance(cl, ast.Delete):
                 self._exec_delete(b, cl)
             elif isinstance(cl, ast.SetClause):
-                self._exec_set(b, cl)
+                # MATCH .. SET without RETURN parses into two identical
+                # SetClauses (reference quirk, kept in the parser); the
+                # binding is unchanged between them and constant
+                # assignments are idempotent, so the repeat is skipped
+                if not (isinstance(prev, ast.SetClause) and prev.items == cl.items):
+                    self._exec_set(b, cl)
             elif isinstance(cl, ast.RemoveClause):
                 self._exec_remove(b, cl)
             elif isinstance(cl, ast.Return):
                 return self._exec_return(b, cl)
+            prev = cl
         return self._dump_bindings(b)
 
     def _empty_result(self) -> DataFrame:
@@ -373,13 +380,13 @@ class CypherExecutor:
 
         # pin only the final (start, node) pairs and free the ~2/hop BFS
         # checkpoints (frontier/seen/adjacency) they were built from —
-        # the binding table below stays lazy over this one small frame
-        pairs = (
+        # the binding table below stays lazy over this one small frame,
+        # which the graph frees with the statement
+        pairs = self.graph.pin(
             all_reached.filter((F.col("__depth") >= min_hops) & (F.col("__depth") <= max_hops))
             .join(eh, "__node")
             .join(sh, "__start")
             .select(F.col("__start_s").alias("__start"), F.col("__node_s").alias("__node"))
-            .localCheckpoint(eager=True)
         )
         _free_intermediates(spark, tracked)
 
@@ -740,7 +747,7 @@ class CypherExecutor:
         props = {k: resolve_param(v, params) for k, v in p.rel.props.items()}
         # distributed id mint: no single-partition window (ids.py), ids
         # pinned (checkpoint) before the double use below
-        df, n = assign_uuid7_ids(b.df, "__eid")
+        df, n = assign_uuid7_ids(b.df, "__eid", pin=self.graph.pin)
         if n == 0:
             return
         new_edges = df.select(
@@ -782,7 +789,7 @@ class CypherExecutor:
 
         pairs = b.df.select(_c(_vcol(lv)).alias("src"), _c(_vcol(rv)).alias("dst")).distinct()
         to_create = pairs.join(existing_min, ["src", "dst"], "left_anti")
-        created, n_new = assign_uuid7_ids(to_create, "id")
+        created, n_new = assign_uuid7_ids(to_create, "id", pin=self.graph.pin)
         if n_new == 0:
             created = None
         if n_new > 0:
@@ -842,15 +849,17 @@ class CypherExecutor:
                         f"Cannot DELETE node {offender} with existing relationships; "
                         "use DETACH DELETE"
                     )
-            node_ids = node_ids.localCheckpoint(eager=True)
+            node_ids = self.graph.pin(node_ids)
         if rel_vars:
-            rel_ids = reduce(
-                lambda x, y: x.unionByName(y),
-                [b.df.select(_c(_vcol(v)).alias("id")) for v in rel_vars],
-            ).distinct().localCheckpoint(eager=True)
-            self.graph.delete_edges_by_ids(rel_ids)
+            rel_ids = self.graph.pin(
+                reduce(
+                    lambda x, y: x.unionByName(y),
+                    [b.df.select(_c(_vcol(v)).alias("id")) for v in rel_vars],
+                ).distinct()
+            )
+            self.graph._delete_edges(rel_ids)
         if node_ids is not None:
-            self.graph.delete_nodes_by_ids(node_ids, detach=True)
+            self.graph._delete_nodes(node_ids)
 
     def _exec_set(self, b: _Binding, cl: ast.SetClause) -> None:
         """SET var.prop = literal | var:NewLabel (cypher_spec.rs:1251-1297).
@@ -868,7 +877,7 @@ class CypherExecutor:
                 if kind is None:
                     continue
                 ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
-                self.graph.set_label(kind, ids, label)
+                self.graph._set_label(kind, ids, label)
                 b.labels[var] = label  # hint follows the label replacement
                 continue
             if "=" in s:
@@ -887,7 +896,7 @@ class CypherExecutor:
                 if kind is None:
                     continue
                 ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
-                self.graph.upsert_property(kind, ids, prop, value)
+                self.graph._upsert_property(kind, ids, prop, value)
 
     def _exec_remove(self, b: _Binding, cl: ast.RemoveClause) -> None:
         for raw in cl.items:
@@ -900,7 +909,7 @@ class CypherExecutor:
             if kind is None:
                 continue
             ids = b.df.select(_c(_vcol(var)).alias("id")).distinct()
-            self.graph.remove_property(kind, ids, prop)
+            self.graph._remove_property(kind, ids, prop)
 
 
 def compare_cols(lhs: Column, rhs: Column, op: str) -> Column:

@@ -28,7 +28,7 @@ import os
 import time
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,6 +53,14 @@ EDGE_SCHEMA = T.StructType(
 )
 
 DEFAULT_LABEL = "_"  # reference: label defaults to "_" (cypher_spec.rs:1322)
+
+
+_FRAME = {"node": "nodes", "rel": "edges"}  # entity kind -> PropertyGraph frame
+
+
+def _id_set(ids_df: DataFrame) -> DataFrame:
+    """The distinct ids in the first column of ``ids_df``, as column ``id``."""
+    return ids_df.select(F.col(ids_df.columns[0]).alias("id")).distinct()
 
 
 class GraphConsistencyError(ValueError):
@@ -91,7 +99,9 @@ def _free_intermediates(spark, tracked_ids) -> None:
     intermediates, keeping only the eagerly checkpointed result it
     returns."""
     try:
-        persistent = dict(spark.sparkContext._jsc.getPersistentRDDs())
+        # one lookup per id: copying the whole map costs a gateway round
+        # trip per persisted RDD, on every statement of a served session
+        persistent = spark.sparkContext._jsc.getPersistentRDDs()
         for rid in tracked_ids:
             rdd = persistent.get(rid)
             if rdd is not None:
@@ -104,9 +114,12 @@ class PropertyGraph:
     """A property graph backed by two DataFrames.
 
     The object is a mutable *handle*; the DataFrames themselves are
-    immutable — every mutation swaps in new DataFrames. Long mutation
-    chains should call :meth:`materialize` (or :meth:`cache`) to cut
-    lineage; the Cypher session does this automatically.
+    immutable — every mutation swaps in a new, eagerly pinned *version*
+    of the frame it changed (:meth:`_swap`). A superseded version is not
+    freed at once, since the statement that replaced it may still read
+    it: :meth:`release` frees it with the statement's scratch pins
+    (:meth:`pin`), and ``CypherSession.execute`` calls that once a
+    statement's rows are collected.
     """
 
     def __init__(self, spark: SparkSession, nodes: DataFrame | None = None, edges: DataFrame | None = None):
@@ -115,7 +128,8 @@ class PropertyGraph:
         self._edge_sources: dict[str, DataFrame] = {}
         self.nodes = nodes if nodes is not None else spark.createDataFrame([], NODE_SCHEMA)
         self.edges = edges if edges is not None else spark.createDataFrame([], EDGE_SCHEMA)
-        self._mutations_since_materialize = 0
+        self._version: dict[str, int] = {}  # frame name -> RDD id of its pinned version
+        self._retired: list[int] = []  # pins the running statement may still read
 
     # ------------------------------------------------------------------
     # label-sliced sources (query fixed-overhead optimization)
@@ -208,13 +222,11 @@ class PropertyGraph:
             [(i, lbl or DEFAULT_LABEL, dict(props or {})) for i, (lbl, props) in zip(ids, rows)],
             NODE_SCHEMA,
         )
-        self.nodes = self.nodes.unionByName(df)
-        self._bump()
+        self.add_nodes_df(df)
         return ids
 
     def add_nodes_df(self, df: DataFrame) -> None:
-        self.nodes = self.nodes.unionByName(df.select(*NODE_SCHEMA.fieldNames()))
-        self._bump()
+        self._swap(nodes=self.nodes.unionByName(df.select(*NODE_SCHEMA.fieldNames())))
 
     def add_edges(
         self,
@@ -252,55 +264,57 @@ class PropertyGraph:
                 raise GraphConsistencyError(
                     f"add_edges: {n - ok} edge(s) reference nonexistent endpoint node(s)"
                 )
-        self.edges = self.edges.unionByName(df)
-        self._bump()
+        self._swap(edges=self.edges.unionByName(df))
 
     # ------------------------------------------------------------------
-    # deletes
+    # deletes and property / label mutations (reference graph.rs:68-162)
     # ------------------------------------------------------------------
+    # Each public method is its count-free core (the same name with a
+    # leading underscore, which the Cypher compiler calls: its replies
+    # carry no counts) plus the count it returns, taken on the pinned
+    # versions.
     def delete_edges_by_ids(self, ids_df: DataFrame) -> int:
         """Anti-join delete; returns number of edges removed."""
-        ids_df = ids_df.select(F.col(ids_df.columns[0]).alias("id")).distinct()
         before = self.edges.count()
-        self.edges = self.edges.join(ids_df, "id", "left_anti")
-        self._bump()
+        self._delete_edges(ids_df)
         return before - self.edges.count()
+
+    def _delete_edges(self, ids_df: DataFrame) -> None:
+        self._swap(edges=self.edges.join(_id_set(ids_df), "id", "left_anti"))
 
     def delete_nodes_by_ids(self, ids_df: DataFrame, detach: bool = False) -> tuple[int, int]:
         """Delete nodes; returns (nodes_removed, edges_removed).
 
         With ``detach=False`` raises if any target has incident edges
-        (reference M4). With ``detach=True`` cascades to incident edges
-        via an anti-join on (src OR dst) ∈ deleted set.
+        (reference M4). With ``detach=True`` cascades to incident edges.
         """
-        ids_df = ids_df.select(F.col(ids_df.columns[0]).alias("id")).distinct()
-        incident = self.edges.join(
-            ids_df.withColumnRenamed("id", "_del"),
-            (F.col("src") == F.col("_del")) | (F.col("dst") == F.col("_del")),
-            "left_semi",
-        )
-        n_incident = incident.count()
-        if n_incident and not detach:
-            raise GraphConsistencyError(
-                "cannot delete node(s) with relationships; use DETACH DELETE"
+        if not detach:
+            incident = self.edges.join(
+                _id_set(ids_df).withColumnRenamed("id", "_del"),
+                (F.col("src") == F.col("_del")) | (F.col("dst") == F.col("_del")),
+                "left_semi",
             )
-        nodes_before = self.nodes.count()
-        self.nodes = self.nodes.join(ids_df, "id", "left_anti")
-        removed_nodes = nodes_before - self.nodes.count()
-        removed_edges = 0
-        if n_incident:
-            edges_before = self.edges.count()
-            self.edges = (
-                self.edges.join(ids_df.withColumnRenamed("id", "src"), "src", "left_anti")
-                .join(ids_df.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            )
-            removed_edges = edges_before - self.edges.count()
-        self._bump()
-        return removed_nodes, removed_edges
+            if not incident.isEmpty():
+                raise GraphConsistencyError(
+                    "cannot delete node(s) with relationships; use DETACH DELETE"
+                )
+        nodes_before, edges_before = self.nodes.count(), self.edges.count()
+        self._delete_nodes(ids_df)
+        return nodes_before - self.nodes.count(), edges_before - self.edges.count()
 
-    # ------------------------------------------------------------------
-    # property / label mutations (reference graph.rs:68-138)
-    # ------------------------------------------------------------------
+    def _delete_nodes(self, ids_df: DataFrame) -> None:
+        """Remove the nodes and, cascading, every edge with an endpoint
+        among them (graph.rs:145-162): anti-joins on src and on dst (the
+        join keys move to the front, so the schema order is restored)."""
+        ids_df = _id_set(ids_df)
+        edges = self.edges.join(ids_df.withColumnRenamed("id", "src"), "src", "left_anti").join(
+            ids_df.withColumnRenamed("id", "dst"), "dst", "left_anti"
+        )
+        self._swap(
+            nodes=self.nodes.join(ids_df, "id", "left_anti"),
+            edges=edges.select(*EDGE_SCHEMA.fieldNames()),
+        )
+
     def upsert_property(self, kind: str, ids_df: DataFrame, key: str, value: str) -> int:
         """SET var.prop = value on all ids in ``ids_df``; returns touched count.
 
@@ -310,69 +324,92 @@ class PropertyGraph:
         would throw on a plain map_concat when the key already exists,
         and PropertyGraph accepts any caller-built SparkSession).
         """
-        df, setter = self._target(kind)
-        ids_df = ids_df.select(F.col(ids_df.columns[0]).alias("id")).distinct()
-        marked = df.join(ids_df.withColumn("_hit", F.lit(True)), "id", "left")
+        return self._touched(kind, self._upsert_property(kind, ids_df, key, value))
+
+    def _upsert_property(self, kind: str, ids_df: DataFrame, key: str, value: str) -> DataFrame:
         upserted = F.map_concat(
             F.map_filter("properties", lambda k, _: k != F.lit(key)),
             F.create_map(F.lit(key), F.lit(value)),
         )
-        updated = marked.withColumn(
-            "properties",
-            F.when(F.col("_hit"), upserted).otherwise(F.col("properties")),
-        ).drop("_hit")
-        setter(updated)
-        self._bump()
-        return ids_df.join(df, "id", "left_semi").count()
+        return self._mark(kind, ids_df, "properties", upserted)
 
     def remove_property(self, kind: str, ids_df: DataFrame, key: str) -> int:
-        df, setter = self._target(kind)
-        ids_df = ids_df.select(F.col(ids_df.columns[0]).alias("id")).distinct()
-        marked = df.join(ids_df.withColumn("_hit", F.lit(True)), "id", "left")
-        updated = marked.withColumn(
-            "properties",
-            F.when(
-                F.col("_hit"), F.map_filter("properties", lambda k, _: k != F.lit(key))
-            ).otherwise(F.col("properties")),
-        ).drop("_hit")
-        setter(updated)
-        self._bump()
-        return ids_df.join(df, "id", "left_semi").count()
+        return self._touched(kind, self._remove_property(kind, ids_df, key))
+
+    def _remove_property(self, kind: str, ids_df: DataFrame, key: str) -> DataFrame:
+        dropped = F.map_filter("properties", lambda k, _: k != F.lit(key))
+        return self._mark(kind, ids_df, "properties", dropped)
 
     def set_label(self, kind: str, ids_df: DataFrame, label: str) -> int:
         """SET n:NewLabel — *replaces* the single label (graph.rs:68-75)."""
-        df, setter = self._target(kind)
-        ids_df = ids_df.select(F.col(ids_df.columns[0]).alias("id")).distinct()
-        marked = df.join(ids_df.withColumn("_hit", F.lit(True)), "id", "left")
-        updated = marked.withColumn(
-            "label", F.when(F.col("_hit"), F.lit(label)).otherwise(F.col("label"))
-        ).drop("_hit")
-        setter(updated)
-        self._bump()
-        return ids_df.join(df, "id", "left_semi").count()
+        return self._touched(kind, self._set_label(kind, ids_df, label))
 
-    def _target(self, kind: str):
-        if kind == "node":
-            return self.nodes, lambda d: setattr(self, "nodes", d)
-        if kind == "rel":
-            return self.edges, lambda d: setattr(self, "edges", d)
-        raise ValueError(f"unknown entity kind: {kind}")
+    def _set_label(self, kind: str, ids_df: DataFrame, label: str) -> DataFrame:
+        return self._mark(kind, ids_df, "label", F.lit(label))
+
+    def _mark(self, kind: str, ids_df: DataFrame, col: str, value: Column) -> DataFrame:
+        """Set ``col`` to ``value`` on the rows of ``kind`` whose id is in
+        ``ids_df``; returns the id set."""
+        name = _FRAME.get(kind)
+        if name is None:
+            raise ValueError(f"unknown entity kind: {kind}")
+        ids_df = _id_set(ids_df)
+        marked = getattr(self, name).join(ids_df.withColumn("_hit", F.lit(True)), "id", "left")
+        self._swap(
+            **{name: marked.withColumn(col, F.when(F.col("_hit"), value).otherwise(F.col(col))).drop("_hit")}
+        )
+        return ids_df
+
+    def _touched(self, kind: str, ids_df: DataFrame) -> int:
+        return ids_df.join(getattr(self, _FRAME[kind]), "id", "left_semi").count()
 
     # ------------------------------------------------------------------
     # lineage control
     # ------------------------------------------------------------------
-    def _bump(self) -> None:
-        self._mutations_since_materialize += 1
-        # localCheckpoint truncates the logical plan; without it a long
-        # mutation script compiles an ever-deeper tree and planning time
-        # dominates. Threshold is a trade: each checkpoint is an action.
-        if self._mutations_since_materialize >= 8:
-            self.cache_checkpoint()
+    def _swap(self, **frames: DataFrame) -> None:
+        """Swap in new versions of ``nodes`` and/or ``edges``, each pinned
+        with one eager ``localCheckpoint`` and its RDD id recorded; the
+        superseded version is retired for :meth:`release`. Unpinned, every
+        read and later write would re-run the mutation chain — twice per
+        SET, whose id set comes from the binding table over the previous
+        version — so plans and job counts grew with every write."""
+        for name, df in frames.items():
+            tracked: list = []
+            pinned = _tracked_checkpoint(df, tracked)
+            old = self._version.pop(name, None)
+            if old is not None:
+                self._retired.append(old)
+            if tracked:
+                self._version[name] = tracked[0]
+            setattr(self, name, pinned)
 
     def cache_checkpoint(self) -> None:
-        self.nodes = self.nodes.localCheckpoint(eager=True)
-        self.edges = self.edges.localCheckpoint(eager=True)
-        self._mutations_since_materialize = 0
+        """Pin the current ``nodes`` and ``edges`` as the graph's versions
+        (e.g. after a bulk load, so the first statements read a one-node
+        plan)."""
+        self._swap(nodes=self.nodes, edges=self.edges)
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Eagerly pin a frame the running statement reads (an id set, a
+        traversal's pairs); :meth:`release` frees it with the retired
+        versions."""
+        return _tracked_checkpoint(df, self._retired)
+
+    def release(self) -> None:
+        """Free the retired versions and the statement pins. Call it once
+        nothing reads them any more: after a statement's rows are
+        collected (``CypherSession.execute`` does). A frame taken from
+        ``nodes``/``edges`` before a write is one of them."""
+        _free_intermediates(self.spark, self._retired)
+        self._retired = []
+
+    def forget_pins(self) -> None:
+        """Stop tracking the current versions and the retired pins without
+        freeing any: a lazy frame that outlives its statement reads them
+        (``CypherSession.execute_df``), so they stay pinned for the
+        session's life."""
+        self._version = {}
+        self._retired = []
 
     # ------------------------------------------------------------------
     # persistence (reference S5/S6: snapshot load/save, versioned)

@@ -64,18 +64,24 @@ def uuid7_batch(n: int) -> list[str]:
     return [_format_uuid7(start + i) for i in range(n)]
 
 
-def assign_uuid7_ids(df, id_col: str):
+def _local_checkpoint(df):
+    return df.localCheckpoint(eager=True)
+
+
+def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
     """Mint one monotonic UUIDv7 per row, fully distributed.
 
     Returns ``(df_with_id_col, row_count)``; the result is eagerly
-    localCheckpointed so the ids are pinned (stable across re-evaluation).
+    pinned so the ids are stable across re-evaluation. ``pin`` makes
+    both of its checkpoints (input and result); pass a graph's
+    :meth:`PropertyGraph.pin` to free them with the statement.
 
     Replaces the round-1 ``row_number() OVER (ORDER BY lit(1))`` shape,
     whose unpartitioned window funnels every row through ONE task — fine
     for reference-sized mutations, a wall when a MATCH..MERGE binds
     millions of pairs. Here every partition numbers itself:
 
-    1. ``localCheckpoint`` the input — pins partition contents/order so
+    1. checkpoint the input with ``pin`` — fixes partition contents/order so
        ``spark_partition_id`` is stable across the two passes;
     2. collect per-partition counts (one tiny row per partition) and
        cumulative-sum them on the driver into per-partition offsets;
@@ -90,7 +96,7 @@ def assign_uuid7_ids(df, id_col: str):
     """
     from pyspark.sql import Window  # local import: avoid cycle at module load
 
-    pinned = df.localCheckpoint(eager=True)
+    pinned = pin(df)
     counts = pinned.groupBy(F.spark_partition_id().alias("__pid")).count().collect()
     n = int(sum(r["count"] for r in counts))
     if n == 0:
@@ -108,12 +114,11 @@ def assign_uuid7_ids(df, id_col: str):
         F.monotonically_increasing_id().alias("__mid"),
     )
     w = Window.partitionBy("__pid").orderBy("__mid")
-    out = (
+    out = pin(
         tagged.withColumn("__rn", F.row_number().over(w).cast("long") - 1)
         .join(F.broadcast(off_df), "__pid")
         .withColumn(id_col, uuid7_expr(F.col("__off") + F.col("__rn"), start_slot))
         .drop("__pid", "__mid", "__rn", "__off")
-        .localCheckpoint(eager=True)
     )
     return out, n
 

@@ -107,7 +107,12 @@ class CypherSession:
             stmt = stmt.strip()
             if not stmt:
                 continue
-            rows, n_cnt, r_cnt, mutated = self._route(stmt, params)
+            try:
+                rows, n_cnt, r_cnt, mutated = self._route(stmt, params)
+            finally:
+                # the rows are collected: free the graph versions this
+                # statement superseded and its scratch pins
+                self.graph.release()
             outcome.rows.extend(rows)
             outcome.affected_nodes += n_cnt
             outcome.affected_relationships += r_cnt
@@ -132,7 +137,9 @@ class CypherSession:
     def execute_df(self, query: str, params: dict[str, str] | None = None) -> DataFrame:
         """Run all statements; return the LAST statement's result as an
         uncollected DataFrame (RESULT_SCHEMA). The last statement must
-        route to the Cypher engine."""
+        route to the Cypher engine. Releases nothing: the frame reads the
+        graph's current versions and the statement's pins, so they stay
+        pinned for the session's life (``PropertyGraph.forget_pins``)."""
         trimmed = query.strip()
         stmts = [s.strip() for s in trimmed.split(";") if s.strip()]
         if not stmts:
@@ -142,7 +149,9 @@ class CypherSession:
         last = stmts[-1]
         if not _is_cypher(last, last.upper()):
             raise CypherError("execute_df requires a Cypher final statement")
-        return CypherExecutor(self.graph).execute(last, params)
+        df = CypherExecutor(self.graph).execute(last, params)
+        self.graph.forget_pins()
+        return df
 
     # -------------------------------------------------------------- router
     def _route(

@@ -432,7 +432,7 @@ def exec_cypher_match_merge(graph: PropertyGraph, stmt: str) -> LegacyResult:
     cand = sel.distinct()
     existing = graph.edges.filter(F.col("label") == rel_type).select("src", "dst")
     new = cand.join(existing, ["src", "dst"], "left_anti")
-    created, n_new = assign_uuid7_ids(new, "id")  # distributed mint (ids.py)
+    created, n_new = assign_uuid7_ids(new, "id", pin=graph.pin)  # distributed mint (ids.py)
     rows: list[ResultRow] = []
     if n_new:
         from graph_loom_spark.cypher.compiler import props_map_lit

@@ -1,0 +1,90 @@
+"""Graph versions: every write swaps in an eagerly pinned frame, and the
+session frees the versions it superseded once a statement's rows are
+collected — so the lineage of ``nodes``/``edges`` stays one node deep
+and a long-lived session holds a fixed number of pinned blocks."""
+
+from __future__ import annotations
+
+from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph, _free_intermediates
+from graph_loom_spark.interface import CypherSession
+
+PEOPLE = ["a", "b", "c", "d"]
+KNOWS = [("a", "b"), ("b", "c"), ("c", "d")]
+
+
+def _cycle(i: int) -> list[str]:
+    n = f"n{i}"
+    return [
+        f'CREATE (x:Person {{name:"{n}"}})',
+        f'MATCH (a:Person {{name:"a"}}), (x:Person {{name:"{n}"}}) CREATE (a)-[:KNOWS]->(x)',
+        f'MATCH (p:Person {{name:"b"}}) SET p.seen = "{i}"',
+        'MATCH (s:Person {name:"a"})-[:KNOWS*1..2]->(t:Person) RETURN t.name',
+        f'MATCH (x:Person {{name:"{n}"}}) DETACH DELETE x',
+    ]
+
+
+def _graph(spark, nodes, edges) -> PropertyGraph:
+    g = PropertyGraph.from_dataframes(
+        spark.createDataFrame(nodes, NODE_SCHEMA), spark.createDataFrame(edges, EDGE_SCHEMA)
+    )
+    g.cache_checkpoint()
+    return g
+
+
+def _flat(df) -> bool:
+    """The frame's analyzed plan is one pinned ``LogicalRDD`` leaf."""
+    plan = df._jdf.queryExecution().analyzed()
+    text = plan.toString()
+    return (
+        plan.nodeName() == "LogicalRDD"
+        and plan.children().size() == 0
+        and "Join" not in text
+        and "Union" not in text
+    )
+
+
+def _reply(outcome) -> list[tuple]:
+    """Reply rows without ids (a fresh graph mints its own)."""
+    return sorted(
+        (r.kind, r.label or "", tuple(sorted((r.properties or {}).items())), r.info or "")
+        for r in outcome.rows
+    )
+
+
+def _persisted(spark) -> set:
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+
+
+def test_write_cycles_keep_lineage_flat_and_pins_bounded(spark):
+    ids = {p: f"00000000-0000-7000-8000-00000000000{i}" for i, p in enumerate(PEOPLE)}
+    nodes = [(ids[p], "Person", {"name": p}) for p in PEOPLE]
+    edges = [(f"e{i}", ids[s], ids[d], "KNOWS", {}) for i, (s, d) in enumerate(KNOWS)]
+    sess = CypherSession(_graph(spark, nodes, edges))
+    before = _persisted(spark)
+    held = []
+    for i in range(3):
+        for stmt in _cycle(i):
+            g = sess.graph
+            # the same statement on a fresh graph loaded with the current
+            # rows; its pins are freed before the session's statement runs
+            ours = _persisted(spark)
+            fresh = CypherSession(
+                _graph(spark, [tuple(r) for r in g.nodes.collect()], [tuple(r) for r in g.edges.collect()])
+            )
+            want = fresh.execute(stmt)
+            _free_intermediates(spark, _persisted(spark) - ours)
+            got = sess.execute(stmt)
+            assert (_reply(got), got.mutated) == (_reply(want), want.mutated), stmt
+            assert _flat(g.nodes) and _flat(g.edges), stmt
+        held.append(len(_persisted(spark) - before))
+        reached = sess.execute(_cycle(i)[3]).rows
+        assert sorted(r.info for r in reached) == ["b", "c"]  # n{i} was deleted
+    assert held[2] == held[0], held
+    assert sess.graph.nodes.count() == 4 and sess.graph.edges.count() == 3
+    seen = sess.execute('MATCH (p:Person {name:"b"}) RETURN p.seen').rows
+    assert [r.info for r in seen] == ["2"]
+    # execute_df releases nothing: its lazy frame (over the BFS pairs pin
+    # and the current node version) still evaluates after a later write
+    lazy = sess.execute_df(_cycle(0)[3])
+    sess.execute('MATCH (p:Person {name:"d"}) SET p.seen = "x"')
+    assert sorted(r["info"] for r in lazy.collect()) == ["b", "c"]

@@ -138,9 +138,10 @@ def test_where_before_set_without_return_becomes_set_items(session):
 def test_match_set_without_return_double_applies(session):
     """Reference parse quirk (cypher_spec.rs:431-441): MATCH .. SET ..
     with no RETURN records the SET both as deferred items AND leaves the
-    tail starting at SET, so the items execute twice — idempotent for
-    plain assignments, observable only as doubled work. Mirrored: the
-    parse emits two identical SetClause entries."""
+    tail starting at SET, so the reference executes the items twice —
+    idempotent for plain assignments, observable only as doubled work.
+    Mirrored in the parse: it emits two identical SetClause entries (the
+    executor then skips the repeat, see the next test)."""
     from graph_loom_spark.cypher import parser
 
     clauses = parser.parse('MATCH (a:P) SET a.t = "1"')
@@ -150,6 +151,32 @@ def test_match_set_without_return_double_applies(session):
     session.execute('MATCH (a:P) SET a.t = "1"')
     rows = session.execute("MATCH (a:P) RETURN a").rows
     assert rows[0].properties.get("t") == "1"
+
+
+def test_match_set_without_return_upserts_once(session, monkeypatch):
+    """The doubled SetClause above is not applied twice: between the two
+    the binding is unchanged and constant assignments are idempotent, so
+    one statement makes one upsert, through the count-free core (the
+    Cypher reply carries no touched-count)."""
+    from graph_loom_spark.graph import PropertyGraph
+
+    calls = {"core": 0, "public": 0}
+    core, public = PropertyGraph._upsert_property, PropertyGraph.upsert_property
+
+    def counted_core(self, *a, **k):
+        calls["core"] += 1
+        return core(self, *a, **k)
+
+    def counted_public(self, *a, **k):
+        calls["public"] += 1
+        return public(self, *a, **k)
+
+    session.execute('CREATE (a:P {name:"a"})')
+    monkeypatch.setattr(PropertyGraph, "_upsert_property", counted_core)
+    monkeypatch.setattr(PropertyGraph, "upsert_property", counted_public)
+    session.execute('MATCH (a:P) SET a.t = "1"')
+    assert calls == {"core": 1, "public": 0}
+    assert session.execute("MATCH (a:P) RETURN a.t").rows[0].info == "1"
 
 
 def test_undirected_match_both_orientations(session):
