@@ -203,6 +203,29 @@ def _memo_map() -> dict[str, list[dict]]:
     return out
 
 
+def _memo_families(memo_map: dict | None = None) -> list[list[str]]:
+    """Queries sharing a memo store, transitively: the connected
+    components of ``memo_map`` (default :func:`_memo_map`) over shared
+    stores, each a list of names in map order. The bench totals time per
+    family; the rotation planner pulls a family's producer in with it."""
+    mm = _memo_map() if memo_map is None else memo_map
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for name, stores in mm.items():
+        for store in stores:
+            parent[find(("n", name))] = find(("s", id(store)))
+    families: dict = {}
+    for name in mm:
+        families.setdefault(find(("n", name)), []).append(name)
+    return list(families.values())
+
+
 @_memo
 def _lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The communities frame is deterministic (fixed tie-break) and comes
@@ -4224,7 +4247,7 @@ def _kmeans_sql_parts(
     slices the fit to coordinates off+1..off+dim (a PQ subspace).
     ``src`` names a CTE already holding PRE-QUANTIZED int64 vectors
     ``(vec_id, v)`` — the fit then slices that instead of quantizing
-    the embeddings table (mirrors kmeans_fit(prequantized=True), used
+    the embeddings table (mirrors pq_fit(prequantized=True), used
     by the IVFADC residual sub-fits)."""
     if src is not None:
         qexpr = f"v[{off + 1}:{off + dim}]"

@@ -371,9 +371,9 @@ def restart_jvm_session(old, app_name: str, master: str, shuffle_partitions=None
 
 def family_totals(entry_mod, timings: dict[str, float]) -> dict[str, float]:
     """Per memo-family total seconds (VERDICT r13 ask #5): queries
-    sharing any memo cache form a family (connected components over
-    ``_memo_map``'s shared cache dicts — the same grouping the restart
-    deferral and rotation planner use), and since r13's colocation the
+    sharing any memo cache form a family (``_memo_families`` in
+    ``__spark_entry__.py`` — the grouping the rotation planner uses too),
+    and since r13's colocation the
     line a family's one-time build lands on is schedule-dependent, so
     round-over-round adjudication must compare FAMILY totals, not member
     lines. Family key = alphabetically-first member (stable while
@@ -382,22 +382,10 @@ def family_totals(entry_mod, timings: dict[str, float]) -> dict[str, float]:
         mm = entry_mod._memo_map()
     except Exception:
         return {}
-    parent: dict = {}
+    from __spark_entry__ import _memo_families
 
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for name, caches in mm.items():
-        for c in caches:
-            parent[find(("n", name))] = find(("c", id(c)))
-    members: dict = {}
-    for name in mm:
-        members.setdefault(find(("n", name)), []).append(name)
     out: dict[str, float] = {}
-    for names in members.values():
+    for names in _memo_families(mm):
         timed = [n for n in names if timings.get(n, -1) >= 0]
         if len(timed) < 2:
             continue

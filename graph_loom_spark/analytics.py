@@ -33,7 +33,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_loom_spark.graph import PropertyGraph, _free_intermediates, _tracked_checkpoint
+from graph_loom_spark.graph import PropertyGraph, scratch, shuffle_partitions
 
 
 def degrees(graph: PropertyGraph) -> DataFrame:
@@ -170,7 +170,6 @@ def weighted_label_propagation(
     # frames (same lever as connected_components — the setup exchanges
     # and the partitioning baked into the checkpoints must match the
     # data, not the session); weights ≈ 2×edges rows
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # floor at defaultParallelism: LPA's per-round work is a few LARGE
     # shuffles (unlike components' many tiny levels), so undersized
     # partitions idle most cores (measured at sf0.1: 9 partitions on 32
@@ -183,13 +182,8 @@ def weighted_label_propagation(
             (n_nodes_total + 2 * graph.edges.count()) // 500_000,
         )
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    tracked: list = []
-    weights_cached = None
-    try:
-        idmap = _tracked_checkpoint(
-            graph.nodes.select("id", F.xxhash64("id").alias("iid")), tracked
-        )
+    with shuffle_partitions(spark, parts), scratch(spark) as s:
+        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
         if n_nodes_total <= broadcast_nodes_max:
             # broadcast path: comm ships to the join as a broadcast, so
             # partitioning weights on the join key v buys NOTHING — but
@@ -200,28 +194,23 @@ def weighted_label_propagation(
             # exchanges per round (plan-asserted). persist — NOT
             # localCheckpoint — because a checkpoint's LogicalRDD drops
             # outputPartitioning and the aggs would shuffle again.
-            weights = _hashed_weights(graph).repartition(parts, "u").persist()
-            weights.count()  # materialize outside the round loop
-            weights_cached = weights
+            weights = s.persist(_hashed_weights(graph).repartition(parts, "u"))
         else:
             # cluster-scale fallback: comm co-shuffles on v, so weights
             # pre-partitioned on v co-locates the join
-            weights = _tracked_checkpoint(
-                _hashed_weights(graph).repartition(parts, "v"), tracked
-            )
+            weights = s.pin(_hashed_weights(graph).repartition(parts, "v"))
         # comm carries the community label's ORIGINAL STRING id (cstr)
         # alongside the surrogate: the tie-break needs it at argmax
         # time, and riding it through the frame (functionally dependent
         # on community, ~20 B/row) eliminates the per-round cdim join +
         # its |V|-row broadcast build that previous versions paid —
         # joins/aggregates still key on 8-byte surrogates only.
-        comm = _tracked_checkpoint(
+        comm = s.pin(
             idmap.select(
                 F.col("iid").alias("id"),
                 F.col("iid").alias("community"),
                 F.col("id").alias("cstr"),
-            ),
-            tracked,
+            )
         )
         # The (iid, community) frame is 16 bytes/node. While it fits an
         # executor broadcast (≤ broadcast_nodes_max nodes ≈ 80 MB), hint
@@ -246,13 +235,12 @@ def weighted_label_propagation(
         # the distinct reuses the persisted weights' u-partitioning
         # (exchange-free) and its result broadcasts into the anti-join,
         # so the iso build adds no new shuffle
-        iso = _tracked_checkpoint(
+        iso = s.pin(
             comm.join(
                 bcast(weights.select(F.col("u").alias("id")).distinct()),
                 "id",
                 "left_anti",
-            ),
-            tracked,
+            )
         )
         for it in range(max_iter):
             # (u, c, score) via one shuffle; cstr rides along (first()
@@ -295,7 +283,7 @@ def weighted_label_propagation(
                 )
             )
             prev = comm
-            comm = _tracked_checkpoint(best.unionByName(iso), tracked)
+            comm = s.pin(best.unionByName(iso))
             # Convergence probe every 2nd round only (and never on the
             # last, where the loop ends anyway): rounds past the fixpoint
             # are no-ops, so the worst case is one wasted round. The
@@ -314,26 +302,15 @@ def weighted_label_propagation(
                 ).filter(F.col("community") != F.col("__old"))
                 if changed.isEmpty():
                     break
-        # surrogate → string id, for both the node and its community
-        # label (every community label is some node's surrogate); pin the
-        # result, then free every intermediate checkpoint (weights, the
-        # per-round comm chain, idmap) — see _free_intermediates
-        # the community's string id is already in the frame (cstr); only
+        # surrogate → string id, pinned; the scope then frees every
+        # intermediate (weights, the per-round comm chain, idmap). The
+        # community's string id is already in the frame (cstr); only
         # the node's own surrogate needs mapping back
-        result = (
+        return (
             comm.join(idmap.select(F.col("iid").alias("id"), F.col("id").alias("__sid")), "id")
             .select(F.col("__sid").alias("id"), F.col("cstr").alias("community"))
             .localCheckpoint(eager=True)
         )
-        _free_intermediates(spark, tracked)
-        return result
-    finally:
-        if weights_cached is not None:
-            try:
-                weights_cached.unpersist()
-            except Exception:
-                pass  # cleanup must never fail the query
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def community_density(graph: PropertyGraph, communities: DataFrame) -> DataFrame:
@@ -469,7 +446,6 @@ def force_layout(
     force parity is the contract, not pixel equality.
     """
     spark = graph.nodes.sparkSession
-    tracked: list = []
     pos = graph.nodes.select(
         "id",
         (
@@ -493,44 +469,42 @@ def force_layout(
         F.lit(0.0).alias("vx"),
         F.lit(0.0).alias("vy"),
     )
-    pos = _tracked_checkpoint(pos, tracked)
+    with scratch(spark) as s:
+        pos = s.pin(pos)
 
-    deg = (
-        graph.edges.select(F.col("src").alias("id"))
-        .unionAll(graph.edges.select(F.col("dst").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    )
-    # log-degree hub scale (frontend.rs:3167-3169), precomputed once
-    hub = _tracked_checkpoint(
-        graph.nodes.select("id").join(deg, "id", "left").select(
-            "id",
-            (1.0 + hub_repulsion_scale * F.log(F.coalesce("deg", F.lit(0.0)) + 1.0)).alias("hub"),
-        ),
-        tracked,
-    )
-
-    epairs = _tracked_checkpoint(graph.edges.select("src", "dst"), tracked)
-
-    for _ in range(iters):
-        pos = _layout_step(
-            pos,
-            epairs,
-            hub,
-            target_dist=target_dist,
-            spring_k=spring_k,
-            damping=damping,
-            min_sep=min_sep,
-            repulse_k=repulse_k,
-            max_speed=max_speed,
-            max_step=max_step,
-            gravity_k=gravity_k,
-            dt=dt,
+        deg = (
+            graph.edges.select(F.col("src").alias("id"))
+            .unionAll(graph.edges.select(F.col("dst").alias("id")))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).cast("double").alias("deg"))
         )
-        pos = _tracked_checkpoint(pos, tracked)
-    result = pos.select("id", "x", "y").localCheckpoint(eager=True)
-    _free_intermediates(spark, tracked)
-    return result
+        # log-degree hub scale (frontend.rs:3167-3169), precomputed once
+        hub = s.pin(
+            graph.nodes.select("id").join(deg, "id", "left").select(
+                "id",
+                (1.0 + hub_repulsion_scale * F.log(F.coalesce("deg", F.lit(0.0)) + 1.0)).alias("hub"),
+            )
+        )
+
+        epairs = s.pin(graph.edges.select("src", "dst"))
+
+        for _ in range(iters):
+            pos = _layout_step(
+                pos,
+                epairs,
+                hub,
+                target_dist=target_dist,
+                spring_k=spring_k,
+                damping=damping,
+                min_sep=min_sep,
+                repulse_k=repulse_k,
+                max_speed=max_speed,
+                max_step=max_step,
+                gravity_k=gravity_k,
+                dt=dt,
+            )
+            pos = s.pin(pos)
+        return pos.select("id", "x", "y").localCheckpoint(eager=True)
 
 
 def _layout_step(
@@ -695,12 +669,8 @@ def connected_components(
     # which every later level inherits) match the data, not the session
     n_edges = 2 * graph.edges.count()
     n_nodes = graph.nodes.count()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     parts = int(max(8, (n_nodes + n_edges) // 500_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    tracked: list = []
-    adj_cached = None
-    try:
+    with shuffle_partitions(spark, parts), scratch(spark) as s:
         sadj = _directed_adjacency(graph.edges)
         adj_hashed = sadj.select(
             F.xxhash64("u").alias("u"), F.xxhash64("v").alias("v")
@@ -711,14 +681,10 @@ def connected_components(
             # biggest shuffle of the whole contraction, 2|E| rows —
             # reuses the u partitioning and plans no exchange (same
             # lever as the LPA weights frame)
-            adj_cached = adj_hashed.persist()
-            adj_cached.count()  # materialize before the timed levels
-            adj = adj_cached
+            adj = s.persist(adj_hashed)
         else:
-            adj = _tracked_checkpoint(adj_hashed, tracked)
-        idmap = _tracked_checkpoint(
-            graph.nodes.select("id", F.xxhash64("id").alias("iid")), tracked
-        )
+            adj = s.pin(adj_hashed)
+        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
         levels = []  # per-level u → m maps (only nodes with edges at that level)
         cur = adj
         # The per-level m map is ≤ |nodes-at-level| (u, m) long pairs and
@@ -728,25 +694,23 @@ def connected_components(
         # cluster scale the plain co-shuffled joins remain.
         bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
         for _ in range(max_iter):
-            m = _tracked_checkpoint(
+            m = s.pin(
                 cur.groupBy("u")
                 .agg(F.min("v").alias("__mv"))
-                .select("u", F.least("u", "__mv").alias("m")),
-                tracked,
+                .select("u", F.least("u", "__mv").alias("m"))
             )
             levels.append(m)
             # repartition BEFORE distinct: HashPartitioning(u) satisfies
             # distinct's ClusteredDistribution(u, v), so the dedup
             # reuses the exchange instead of adding a second (u,v)
             # shuffle per level; the materialized blocks stay u-keyed
-            contracted = _tracked_checkpoint(
+            contracted = s.pin(
                 cur.join(bcast(m.select("u", F.col("m").alias("__mu"))), "u")
                 .join(bcast(m.select(F.col("u").alias("v"), F.col("m").alias("__mv2"))), "v")
                 .select(F.col("__mu").alias("u"), F.col("__mv2").alias("v"))
                 .filter(F.col("u") != F.col("v"))
                 .repartition("u")
-                .distinct(),
-                tracked,
+                .distinct()
             )
             cur = contracted
             if contracted.isEmpty():
@@ -779,22 +743,9 @@ def connected_components(
             )
         # map hash-components back to min string ids inside the sized-
         # partition window, pinned so the caller's action is a pure scan;
-        # then free the per-level maps/adjacency (see _free_intermediates)
+        # the scope then frees the per-level maps/adjacency
         rep = comp.groupBy("__hc").agg(F.min("id").alias("component"))
-        result = (
-            comp.join(rep, "__hc")
-            .select("id", "component")
-            .localCheckpoint(eager=True)
-        )
-        _free_intermediates(spark, tracked)
-        return result
-    finally:
-        if adj_cached is not None:
-            try:
-                adj_cached.unpersist()
-            except Exception:
-                pass  # cleanup must never fail the query
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        return comp.join(rep, "__hc").select("id", "component").localCheckpoint(eager=True)
 
 
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -1207,93 +1158,83 @@ def bfs_distances(
     deterministic and (bounded-depth) expressible as a recursive-CTE
     SQL oracle. Walks vs paths make no difference to min-distance.
     """
-    spark = edges_df.sparkSession
-    tracked: list = []
-    # materialize the input edge list once: idmap, the symmetric
-    # adjacency, and the default-source min each scan it, and an
-    # upstream edge CONSTRUCTION (e.g. a co-occurrence self-join) would
-    # otherwise re-execute per derivation
-    edges_df = _tracked_checkpoint(edges_df.select(src, dst), tracked)
-    sc_ = F.col(src).cast("string")
-    dc_ = F.col(dst).cast("string")
-    idmap = _tracked_checkpoint(
-        edges_df.select(F.col(src).alias("id"))
-        .unionAll(edges_df.select(F.col(dst).alias("id")))
-        .distinct()
-        .select("id", F.xxhash64(F.col("id").cast("string")).alias("n")),
-        tracked,
-    )
-    e0 = edges_df.select(F.xxhash64(sc_).alias("a"), F.xxhash64(dc_).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    adj = _tracked_checkpoint(
-        e0.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(e0.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .distinct()
-        .repartition("u"),
-        tracked,
-    )
-    if source is None:
-        source = edges_df.select(
-            F.least(F.col(src), F.col(dst)).alias("i")
-        ).agg(F.min("i")).collect()[0][0]
-        if source is None:  # empty edge list — nothing to traverse
-            _free_intermediates(spark, tracked)
-            raise ValueError("bfs_distances: empty edge list, no default source")
-    src_h = (
-        idmap.filter(F.col("id") == source).select("n").limit(1)
-    )
-    if src_h.count() == 0:
-        # an absent source would otherwise return a silently-empty frame
-        # (and diverge from a SQL oracle that seeds the CTE with the id)
-        _free_intermediates(spark, tracked)
-        raise ValueError(f"bfs_distances: source {source!r} not in the edge list")
-    visited = _tracked_checkpoint(
-        src_h.select("n", F.lit(0).cast("int").alias("d")), tracked
-    )
-    frontier = visited.select("n")
-    n_frontier = frontier.count()
-    n_visited = n_frontier
-    depth = 0
-    while n_frontier > 0 and depth < max_depth:
-        depth += 1
-        bcast = (
-            F.broadcast if n_frontier <= broadcast_frontier_max else (lambda df: df)
-        )
-        # the visited set is bounded by |V|; while it fits the same
-        # broadcast budget, hint it so the dedup anti-join is map-side
-        # too — otherwise every level pays an O(|visited|) shuffle that
-        # grows toward O(|V|) at the deep levels (AQE can't see the
-        # size of a union of checkpoints). Past the budget both sides
-        # fall back to the co-shuffled anti-join.
-        vcast = (
-            F.broadcast if n_visited <= broadcast_frontier_max else (lambda df: df)
-        )
-        new = _tracked_checkpoint(
-            adj.join(bcast(frontier.select(F.col("n").alias("u"))), "u")
-            .select(F.col("v").alias("n"))
+    with scratch(edges_df.sparkSession) as s:
+        # materialize the input edge list once: idmap, the symmetric
+        # adjacency, and the default-source min each scan it, and an
+        # upstream edge CONSTRUCTION (e.g. a co-occurrence self-join) would
+        # otherwise re-execute per derivation
+        edges_df = s.pin(edges_df.select(src, dst))
+        sc_ = F.col(src).cast("string")
+        dc_ = F.col(dst).cast("string")
+        idmap = s.pin(
+            edges_df.select(F.col(src).alias("id"))
+            .unionAll(edges_df.select(F.col(dst).alias("id")))
             .distinct()
-            .join(vcast(visited.select("n")), "n", "left_anti")
-            .select("n", F.lit(depth).cast("int").alias("d")),
-            tracked,
+            .select("id", F.xxhash64(F.col("id").cast("string")).alias("n"))
         )
-        n_frontier = new.count()
-        if n_frontier == 0:
-            break
-        # visited stays a plain union of the per-level CHECKPOINTED
-        # frontiers — leaves are materialized, so lineage depth is just
-        # the level count and no extra job is paid per level re-pinning
-        # the union itself
-        visited = visited.unionAll(new)
-        n_visited += n_frontier
-        frontier = new.select("n")
-    result = (
-        visited.join(idmap, "n")
-        .select("id", F.col("d").cast("bigint").alias("distance"))
-        .localCheckpoint(eager=True)
-    )
-    _free_intermediates(spark, tracked)
-    return result
+        e0 = edges_df.select(F.xxhash64(sc_).alias("a"), F.xxhash64(dc_).alias("b")).filter(
+            F.col("a") != F.col("b")
+        )
+        adj = s.pin(
+            e0.select(F.col("a").alias("u"), F.col("b").alias("v"))
+            .unionAll(e0.select(F.col("b").alias("u"), F.col("a").alias("v")))
+            .distinct()
+            .repartition("u")
+        )
+        if source is None:
+            source = edges_df.select(
+                F.least(F.col(src), F.col(dst)).alias("i")
+            ).agg(F.min("i")).collect()[0][0]
+            if source is None:  # empty edge list — nothing to traverse
+                raise ValueError("bfs_distances: empty edge list, no default source")
+        src_h = (
+            idmap.filter(F.col("id") == source).select("n").limit(1)
+        )
+        if src_h.count() == 0:
+            # an absent source would otherwise return a silently-empty frame
+            # (and diverge from a SQL oracle that seeds the CTE with the id)
+            raise ValueError(f"bfs_distances: source {source!r} not in the edge list")
+        visited = s.pin(src_h.select("n", F.lit(0).cast("int").alias("d")))
+        frontier = visited.select("n")
+        n_frontier = frontier.count()
+        n_visited = n_frontier
+        depth = 0
+        while n_frontier > 0 and depth < max_depth:
+            depth += 1
+            bcast = (
+                F.broadcast if n_frontier <= broadcast_frontier_max else (lambda df: df)
+            )
+            # the visited set is bounded by |V|; while it fits the same
+            # broadcast budget, hint it so the dedup anti-join is map-side
+            # too — otherwise every level pays an O(|visited|) shuffle that
+            # grows toward O(|V|) at the deep levels (AQE can't see the
+            # size of a union of checkpoints). Past the budget both sides
+            # fall back to the co-shuffled anti-join.
+            vcast = (
+                F.broadcast if n_visited <= broadcast_frontier_max else (lambda df: df)
+            )
+            new = s.pin(
+                adj.join(bcast(frontier.select(F.col("n").alias("u"))), "u")
+                .select(F.col("v").alias("n"))
+                .distinct()
+                .join(vcast(visited.select("n")), "n", "left_anti")
+                .select("n", F.lit(depth).cast("int").alias("d"))
+            )
+            n_frontier = new.count()
+            if n_frontier == 0:
+                break
+            # visited stays a plain union of the per-level CHECKPOINTED
+            # frontiers — leaves are materialized, so lineage depth is just
+            # the level count and no extra job is paid per level re-pinning
+            # the union itself
+            visited = visited.unionAll(new)
+            n_visited += n_frontier
+            frontier = new.select("n")
+        return (
+            visited.join(idmap, "n")
+            .select("id", F.col("d").cast("bigint").alias("distance"))
+            .localCheckpoint(eager=True)
+        )
 
 
 def pagerank(
@@ -1331,7 +1272,6 @@ def pagerank(
     back once at the end).
     """
     spark = graph.nodes.sparkSession
-    tracked: list = []
     dn = int(round(damping * 100))  # damping at 2-decimal precision
     # r14-opt: size the iterative shuffle partitions from the DATA, not
     # the session (the connected_components lever, VERDICT r13 ask #1):
@@ -1342,163 +1282,141 @@ def pagerank(
     # (~500k rows each, floor 8) cut the per-iteration task count at
     # small relative scale while growing with |V|+|E| on a cluster. Set
     # BEFORE building the pinned edge frame so the partitioning baked
-    # into it matches the data; restored in the finally.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    idmap = _tracked_checkpoint(
-        graph.nodes.select("id", F.xxhash64("id").alias("iid")), tracked
-    )
-    n_nodes = idmap.count()
-    n_edges = graph.edges.count()
-    parts = int(max(8, (n_nodes + n_edges) // 500_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    edges_h = graph.edges.select(
-        F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
-    )
-    # r13-opt: on a MULTIGRAPH (the web host graph: corpus-sized link
-    # records over a small host×host pair set) collapsing parallel
-    # edges to (u, v, multiplicity) BEFORE the loop means the one
-    # corpus-sized pass is the partial-agg groupBy and every iteration
-    # joins only the distinct pair set. Bit-exact: each parallel edge
-    # contributes the identical integer ``r div od``, so k of them sum
-    # to ``k * (r div od)``, and od = Σ multiplicities is the same
-    # count. Opt-in because on a simple graph (the tpch projection:
-    # 100% unique pairs) the extra aggregation buys nothing.
-    # The rank frame is 16 bytes/node — while it fits an executor
-    # broadcast, hint it on the contrib join against the big pinned
-    # edge frame. Same lever and threshold as
-    # weighted_label_propagation: AQE would convert it eventually but
-    # only after paying the exchange stages on the data-sized side
-    # every iteration.
-    bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-    ed_cached = None
-    try:
-        if pre_aggregate_edges:
-            # checkpoint the collapsed pair set: outdeg below and the
-            # ed build would otherwise each re-run the corpus-sized
-            # multiplicity groupBy (r14-opt, guide §1.2)
-            ew = _tracked_checkpoint(
-                edges_h.groupBy("u", "v").agg(F.count(F.lit(1)).alias("__k")),
-                tracked,
+    # into it matches the data.
+    with scratch(spark) as s:
+        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
+        n_nodes = idmap.count()
+        n_edges = graph.edges.count()
+        parts = int(max(8, (n_nodes + n_edges) // 500_000))
+        with shuffle_partitions(spark, parts):
+            edges_h = graph.edges.select(
+                F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
             )
-            outdeg = ew.groupBy("u").agg(F.sum("__k").alias("od"))
-            contrib_c = F.expr("__k * (r div od)").alias("c")
-        else:
-            ew = edges_h
-            outdeg = edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od"))
-            contrib_c = F.expr("r div od").alias("c")
-        # r14-opt: checkpoint the out-degree frame (≤ |V| slim rows) —
-        # it feeds THREE setup consumers (the ed join, the ed dangling
-        # flag probe, the ranks flag probe), which each re-executed the
-        # |E|-row degree aggregate when it was left lazy
-        outdeg = _tracked_checkpoint(outdeg, tracked)
-        # persist (NOT localCheckpoint — that drops outputPartitioning)
-        # partitioned by the CONTRIBUTION-AGG key v: the rank side of the
-        # per-iteration join is broadcast, so join-key partitioning buys
-        # nothing, while HashPartitioning(v) lets every iteration's
-        # groupBy(v) reuse the layout — zero exchanges per contrib pass
-        # (same lever as weighted_label_propagation's weights frame).
-        # r14-opt: the destination's DANGLING flag (v has no out-edges)
-        # rides the pinned frame — one size-gated join at build time —
-        # exactly like PPR's seed flag, so each iteration's dangling-mass
-        # aggregate scans the previous rank checkpoint directly instead
-        # of joining it against a fresh broadcast of the dangling set
-        # (one fewer broadcast build + |V|-row probe per iteration).
-        ed_cached = (
-            ew.join(outdeg, "u")
-            .join(
-                bcast(outdeg.select(F.col("u").alias("v"), F.lit(0).alias("__dv0"))),
-                "v",
-                "left",
+            # r13-opt: on a MULTIGRAPH (the web host graph: corpus-sized link
+            # records over a small host×host pair set) collapsing parallel
+            # edges to (u, v, multiplicity) BEFORE the loop means the one
+            # corpus-sized pass is the partial-agg groupBy and every iteration
+            # joins only the distinct pair set. Bit-exact: each parallel edge
+            # contributes the identical integer ``r div od``, so k of them sum
+            # to ``k * (r div od)``, and od = Σ multiplicities is the same
+            # count. Opt-in because on a simple graph (the tpch projection:
+            # 100% unique pairs) the extra aggregation buys nothing.
+            # The rank frame is 16 bytes/node — while it fits an executor
+            # broadcast, hint it on the contrib join against the big pinned
+            # edge frame. Same lever and threshold as
+            # weighted_label_propagation: AQE would convert it eventually but
+            # only after paying the exchange stages on the data-sized side
+            # every iteration.
+            bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
+            if pre_aggregate_edges:
+                # checkpoint the collapsed pair set: outdeg below and the
+                # ed build would otherwise each re-run the corpus-sized
+                # multiplicity groupBy (r14-opt, guide §1.2)
+                ew = s.pin(edges_h.groupBy("u", "v").agg(F.count(F.lit(1)).alias("__k")))
+                outdeg = ew.groupBy("u").agg(F.sum("__k").alias("od"))
+                contrib_c = F.expr("__k * (r div od)").alias("c")
+            else:
+                ew = edges_h
+                outdeg = edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od"))
+                contrib_c = F.expr("r div od").alias("c")
+            # r14-opt: checkpoint the out-degree frame (≤ |V| slim rows) —
+            # it feeds THREE setup consumers (the ed join, the ed dangling
+            # flag probe, the ranks flag probe), which each re-executed the
+            # |E|-row degree aggregate when it was left lazy
+            outdeg = s.pin(outdeg)
+            # persist (NOT localCheckpoint — that drops outputPartitioning)
+            # partitioned by the CONTRIBUTION-AGG key v: the rank side of the
+            # per-iteration join is broadcast, so join-key partitioning buys
+            # nothing, while HashPartitioning(v) lets every iteration's
+            # groupBy(v) reuse the layout — zero exchanges per contrib pass
+            # (same lever as weighted_label_propagation's weights frame).
+            # r14-opt: the destination's DANGLING flag (v has no out-edges)
+            # rides the pinned frame — one size-gated join at build time —
+            # exactly like PPR's seed flag, so each iteration's dangling-mass
+            # aggregate scans the previous rank checkpoint directly instead
+            # of joining it against a fresh broadcast of the dangling set
+            # (one fewer broadcast build + |V|-row probe per iteration).
+            ed = s.persist(
+                ew.join(outdeg, "u")
+                .join(
+                    bcast(outdeg.select(F.col("u").alias("v"), F.lit(0).alias("__dv0"))),
+                    "v",
+                    "left",
+                )
+                .withColumn("__dv", F.coalesce(F.col("__dv0"), F.lit(1)))
+                .drop("__dv0")
+                .repartition(F.col("v"))
             )
-            .withColumn("__dv", F.coalesce(F.col("__dv0"), F.lit(1)))
-            .drop("__dv0")
-            .repartition(F.col("v"))
-            .persist()
-        )
-        ed_cached.count()  # materialize outside the iteration loop
-        ed = ed_cached
-        # ranks carries the node's own dangling flag (__d, functionally
-        # dependent on nid): the per-iteration dangling mass becomes a
-        # single partial aggregate over this checkpointed frame
-        ranks = _tracked_checkpoint(
-            idmap.select(
-                F.col("iid").alias("nid"),
-                F.lit(scale // n_nodes).cast("long").alias("r"),
+            # ranks carries the node's own dangling flag (__d, functionally
+            # dependent on nid): the per-iteration dangling mass becomes a
+            # single partial aggregate over this checkpointed frame
+            ranks = s.pin(
+                idmap.select(
+                    F.col("iid").alias("nid"),
+                    F.lit(scale // n_nodes).cast("long").alias("r"),
+                )
+                .join(
+                    bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))),
+                    "nid",
+                    "left",
+                )
+                .select("nid", "r", F.coalesce(F.col("__o"), F.lit(1)).alias("__d"))
             )
-            .join(
-                bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))),
-                "nid",
-                "left",
+            # Nodes with NO in-edges never receive contributions, so their
+            # update is the closed form base + d·(dm/N) every iteration.
+            # Computing that static set ONCE (distinct v reuses the persisted
+            # edge frame's v-partitioning — exchange-free) lets each iteration
+            # build the next rank frame as contrib ∪ noin instead of
+            # left-joining the full previous frame against a |V|-row broadcast
+            # of contrib — one fewer |V|-row broadcast build and one fewer
+            # |V|-row join scan per iteration (same measured lever as the LPA
+            # round restructure: 8 LPA rounds 15.0 s → 12.5 s at sf0.1).
+            noin = s.pin(
+                ranks.select("nid", "__d").join(
+                    bcast(ed.select(F.col("v").alias("nid")).distinct()),
+                    "nid",
+                    "left_anti",
+                )
             )
-            .select("nid", "r", F.coalesce(F.col("__o"), F.lit(1)).alias("__d")),
-            tracked,
-        )
-        # Nodes with NO in-edges never receive contributions, so their
-        # update is the closed form base + d·(dm/N) every iteration.
-        # Computing that static set ONCE (distinct v reuses the persisted
-        # edge frame's v-partitioning — exchange-free) lets each iteration
-        # build the next rank frame as contrib ∪ noin instead of
-        # left-joining the full previous frame against a |V|-row broadcast
-        # of contrib — one fewer |V|-row broadcast build and one fewer
-        # |V|-row join scan per iteration (same measured lever as the LPA
-        # round restructure: 8 LPA rounds 15.0 s → 12.5 s at sf0.1).
-        noin = _tracked_checkpoint(
-            ranks.select("nid", "__d").join(
-                bcast(ed.select(F.col("v").alias("nid")).distinct()),
-                "nid",
-                "left_anti",
-            ),
-            tracked,
-        )
-        base = ((100 - dn) * scale) // (100 * n_nodes)
-        update_expr = F.expr(
-            f"cast({base} as bigint) + "
-            f"({dn} * (coalesce(__in, cast(0 as bigint)) + __dm div {n_nodes}))"
-            " div 100"
-        ).alias("r")
-        for _ in range(iters):
-            contrib = (
-                ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
-                .select(F.col("v").alias("nid"), contrib_c, "__dv")
-                .groupBy("nid")
-                # first() is safe: __dv is functionally dependent on nid
-                .agg(F.sum("c").alias("__in"), F.first("__dv").alias("__d"))
-            )
-            # dangling mass folded into the plan as a broadcast 1-row
-            # aggregate (same pattern as the layout COM broadcast) — a
-            # driver-side collect here cost an extra action + job per
-            # iteration for a single long; the __d flag riding the rank
-            # frame makes it join-free (r14-opt).
-            dmass_df = ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("__d") == 1, F.col("r"))),
-                    F.lit(0).cast("long"),
-                ).alias("__dm")
-            )
-            ranks = _tracked_checkpoint(
-                contrib.crossJoin(F.broadcast(dmass_df))
-                .select("nid", update_expr, "__d")
-                .unionByName(
-                    noin.withColumn("__in", F.lit(None).cast("long"))
-                    .crossJoin(F.broadcast(dmass_df))
+            base = ((100 - dn) * scale) // (100 * n_nodes)
+            update_expr = F.expr(
+                f"cast({base} as bigint) + "
+                f"({dn} * (coalesce(__in, cast(0 as bigint)) + __dm div {n_nodes}))"
+                " div 100"
+            ).alias("r")
+            for _ in range(iters):
+                contrib = (
+                    ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
+                    .select(F.col("v").alias("nid"), contrib_c, "__dv")
+                    .groupBy("nid")
+                    # first() is safe: __dv is functionally dependent on nid
+                    .agg(F.sum("c").alias("__in"), F.first("__dv").alias("__d"))
+                )
+                # dangling mass folded into the plan as a broadcast 1-row
+                # aggregate (same pattern as the layout COM broadcast) — a
+                # driver-side collect here cost an extra action + job per
+                # iteration for a single long; the __d flag riding the rank
+                # frame makes it join-free (r14-opt).
+                dmass_df = ranks.agg(
+                    F.coalesce(
+                        F.sum(F.when(F.col("__d") == 1, F.col("r"))),
+                        F.lit(0).cast("long"),
+                    ).alias("__dm")
+                )
+                ranks = s.pin(
+                    contrib.crossJoin(F.broadcast(dmass_df))
                     .select("nid", update_expr, "__d")
-                ),
-                tracked,
+                    .unionByName(
+                        noin.withColumn("__in", F.lit(None).cast("long"))
+                        .crossJoin(F.broadcast(dmass_df))
+                        .select("nid", update_expr, "__d")
+                    )
+                )
+            return (
+                ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
+                .select("id", (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"))
+                .localCheckpoint(eager=True)
             )
-        result = (
-            ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
-            .select("id", (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"))
-            .localCheckpoint(eager=True)
-        )
-        _free_intermediates(spark, tracked)
-        return result
-    finally:
-        if ed_cached is not None:
-            try:
-                ed_cached.unpersist()
-            except Exception:
-                pass  # cleanup must never fail the query
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def personalized_pagerank(
@@ -1527,151 +1445,127 @@ def personalized_pagerank(
     iteration costs exactly what the uniform variant's does.
     """
     spark = graph.nodes.sparkSession
-    tracked: list = []
     dn = int(round(damping * 100))
     # r14-opt: data-sized iterative shuffle partitions, set before the
-    # pinned frames are built and restored in the finally — see
-    # :func:`pagerank` for the measured anti-scaling rationale.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    idmap = _tracked_checkpoint(
-        graph.nodes.select("id", F.xxhash64("id").alias("iid")), tracked
-    )
-    n_nodes = idmap.count()
-    n_edges = graph.edges.count()
-    parts = int(max(8, (n_nodes + n_edges) // 500_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    ed_cached = None
-    try:
-        src = _tracked_checkpoint(
-            graph.nodes.join(sources.select("id"), "id", "left_semi").select(
-                F.xxhash64("id").alias("nid")
-            ),
-            tracked,
-        )
-        n_src = src.count()
-        if n_src == 0:
-            raise ValueError("personalized_pagerank: empty source set")
-        edges_h = graph.edges.select(
-            F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
-        )
-        # r14-opt: checkpointed — feeds the stat flag probe AND the ed
-        # join, which each re-executed the |E|-row aggregate when lazy
-        outdeg = _tracked_checkpoint(
-            edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od")), tracked
-        )
-        bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-        # static per-node seed flag + dangling flag + teleport base; all
-        # mass starts on S. __d (no out-edges) rides the frames exactly
-        # like __s, so the per-iteration dangling-mass aggregate scans
-        # the previous rank checkpoint join-free (r14-opt — the same
-        # lever as pagerank's).
-        base = ((100 - dn) * scale) // (100 * n_src)
-        stat = _tracked_checkpoint(
-            idmap.select(F.col("iid").alias("nid"))
-            .join(bcast(src.withColumn("__s", F.lit(1))), "nid", "left")
-            .join(
-                bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))),
-                "nid",
-                "left",
+    # pinned frames are built — see :func:`pagerank` for the measured
+    # anti-scaling rationale.
+    with scratch(spark) as s:
+        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
+        n_nodes = idmap.count()
+        n_edges = graph.edges.count()
+        parts = int(max(8, (n_nodes + n_edges) // 500_000))
+        with shuffle_partitions(spark, parts):
+            src = s.pin(
+                graph.nodes.join(sources.select("id"), "id", "left_semi").select(
+                    F.xxhash64("id").alias("nid")
+                )
             )
-            .select(
-                "nid",
-                F.coalesce("__s", F.lit(0)).alias("__s"),
-                F.coalesce("__o", F.lit(1)).alias("__d"),
-            ),
-            tracked,
-        )
-        # r13-opt: the destination's seed flag is functionally dependent
-        # on v, so it rides the pinned edge frame (one size-gated join at
-        # build time) instead of a per-iteration |V|-row broadcast join
-        # against the aggregated contribs — one fewer broadcast build +
-        # |V|-row probe scan per iteration (the LPA cstr lever; measured
-        # the same way: the stat broadcast was the only per-round cost
-        # PPR paid over uniform pagerank). r14-opt: __dv rides the same
-        # build join.
-        ed_cached = (
-            edges_h.join(outdeg, "u")
-            .join(
-                bcast(
-                    stat.select(
-                        F.col("nid").alias("v"),
-                        F.col("__s").alias("__sv"),
-                        F.col("__d").alias("__dv"),
-                    )
-                ),
-                "v",
+            n_src = src.count()
+            if n_src == 0:
+                raise ValueError("personalized_pagerank: empty source set")
+            edges_h = graph.edges.select(
+                F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
             )
-            .repartition(F.col("v"))
-            .persist()
-        )
-        ed_cached.count()
-        ed = ed_cached
-        ranks = _tracked_checkpoint(
-            stat.select(
-                "nid",
-                (F.col("__s") * F.lit(scale // n_src)).cast("long").alias("r"),
-                "__d",
-            ),
-            tracked,
-        )
-        noin = _tracked_checkpoint(
-            stat.join(
-                bcast(ed.select(F.col("v").alias("nid")).distinct()), "nid", "left_anti"
-            ),
-            tracked,
-        )
-        update_expr = F.expr(
-            f"__s * cast({base} as bigint) + "
-            f"({dn} * (coalesce(__in, cast(0 as bigint)) + __s * (__dm div {n_src})))"
-            " div 100"
-        ).alias("r")
-        for _ in range(iters):
-            contrib = (
-                ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
+            # r14-opt: checkpointed — feeds the stat flag probe AND the ed
+            # join, which each re-executed the |E|-row aggregate when lazy
+            outdeg = s.pin(edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od")))
+            bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
+            # static per-node seed flag + dangling flag + teleport base; all
+            # mass starts on S. __d (no out-edges) rides the frames exactly
+            # like __s, so the per-iteration dangling-mass aggregate scans
+            # the previous rank checkpoint join-free (r14-opt — the same
+            # lever as pagerank's).
+            base = ((100 - dn) * scale) // (100 * n_src)
+            stat = s.pin(
+                idmap.select(F.col("iid").alias("nid"))
+                .join(bcast(src.withColumn("__s", F.lit(1))), "nid", "left")
+                .join(
+                    bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))),
+                    "nid",
+                    "left",
+                )
                 .select(
-                    F.col("v").alias("nid"),
-                    F.expr("r div od").alias("c"),
-                    F.col("__sv"),
-                    F.col("__dv"),
-                )
-                .groupBy("nid")
-                # first() is safe: __sv/__dv are functionally dependent on nid
-                .agg(
-                    F.sum("c").alias("__in"),
-                    F.first("__sv").alias("__s"),
-                    F.first("__dv").alias("__d"),
+                    "nid",
+                    F.coalesce("__s", F.lit(0)).alias("__s"),
+                    F.coalesce("__o", F.lit(1)).alias("__d"),
                 )
             )
-            dmass_df = ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("__d") == 1, F.col("r"))),
-                    F.lit(0).cast("long"),
-                ).alias("__dm")
+            # r13-opt: the destination's seed flag is functionally dependent
+            # on v, so it rides the pinned edge frame (one size-gated join at
+            # build time) instead of a per-iteration |V|-row broadcast join
+            # against the aggregated contribs — one fewer broadcast build +
+            # |V|-row probe scan per iteration (the LPA cstr lever; measured
+            # the same way: the stat broadcast was the only per-round cost
+            # PPR paid over uniform pagerank). r14-opt: __dv rides the same
+            # build join.
+            ed = s.persist(
+                edges_h.join(outdeg, "u")
+                .join(
+                    bcast(
+                        stat.select(
+                            F.col("nid").alias("v"),
+                            F.col("__s").alias("__sv"),
+                            F.col("__d").alias("__dv"),
+                        )
+                    ),
+                    "v",
+                )
+                .repartition(F.col("v"))
             )
-            ranks = _tracked_checkpoint(
-                contrib.crossJoin(F.broadcast(dmass_df))
-                .select("nid", update_expr, "__d")
-                .unionByName(
-                    noin.withColumn("__in", F.lit(None).cast("long"))
-                    .crossJoin(F.broadcast(dmass_df))
+            ranks = s.pin(
+                stat.select(
+                    "nid",
+                    (F.col("__s") * F.lit(scale // n_src)).cast("long").alias("r"),
+                    "__d",
+                )
+            )
+            noin = s.pin(
+                stat.join(
+                    bcast(ed.select(F.col("v").alias("nid")).distinct()), "nid", "left_anti"
+                )
+            )
+            update_expr = F.expr(
+                f"__s * cast({base} as bigint) + "
+                f"({dn} * (coalesce(__in, cast(0 as bigint)) + __s * (__dm div {n_src})))"
+                " div 100"
+            ).alias("r")
+            for _ in range(iters):
+                contrib = (
+                    ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
+                    .select(
+                        F.col("v").alias("nid"),
+                        F.expr("r div od").alias("c"),
+                        F.col("__sv"),
+                        F.col("__dv"),
+                    )
+                    .groupBy("nid")
+                    # first() is safe: __sv/__dv are functionally dependent on nid
+                    .agg(
+                        F.sum("c").alias("__in"),
+                        F.first("__sv").alias("__s"),
+                        F.first("__dv").alias("__d"),
+                    )
+                )
+                dmass_df = ranks.agg(
+                    F.coalesce(
+                        F.sum(F.when(F.col("__d") == 1, F.col("r"))),
+                        F.lit(0).cast("long"),
+                    ).alias("__dm")
+                )
+                ranks = s.pin(
+                    contrib.crossJoin(F.broadcast(dmass_df))
                     .select("nid", update_expr, "__d")
-                ),
-                tracked,
+                    .unionByName(
+                        noin.withColumn("__in", F.lit(None).cast("long"))
+                        .crossJoin(F.broadcast(dmass_df))
+                        .select("nid", update_expr, "__d")
+                    )
+                )
+            return (
+                ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
+                .select("id", (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"))
+                .localCheckpoint(eager=True)
             )
-        result = (
-            ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
-            .select("id", (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"))
-            .localCheckpoint(eager=True)
-        )
-        _free_intermediates(spark, tracked)
-        return result
-    finally:
-        if ed_cached is not None:
-            try:
-                ed_cached.unpersist()
-            except Exception:
-                pass  # cleanup must never fail the query
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def hits(
@@ -1709,87 +1603,68 @@ def hits(
     back once at the end.
     """
     spark = graph.nodes.sparkSession
-    tracked: list = []
     # r14-opt: data-sized iterative shuffle partitions (see pagerank)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    idmap = _tracked_checkpoint(
-        graph.nodes.select("id", F.xxhash64("id").alias("iid")), tracked
-    )
-    n_nodes = idmap.count()
-    n_edges = graph.edges.count()
-    parts = int(max(8, (n_nodes + n_edges) // 500_000))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    ed_v = ed_u = None
-    try:
-        edges_h = graph.edges.select(
-            F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
-        )
-        ed_v = edges_h.repartition(F.col("v")).persist()
-        ed_u = edges_h.repartition(F.col("u")).persist()
-        ed_v.count()  # materialize outside the iteration loop
-        ed_u.count()
-        bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-        h = _tracked_checkpoint(
-            idmap.select(F.col("iid").alias("nid"), F.lit(scale).cast("long").alias("r")),
-            tracked,
-        )
-        a = None
+    with scratch(spark) as s:
+        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
+        n_nodes = idmap.count()
+        n_edges = graph.edges.count()
+        parts = int(max(8, (n_nodes + n_edges) // 500_000))
+        with shuffle_partitions(spark, parts):
+            edges_h = graph.edges.select(
+                F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
+            )
+            ed_v = s.persist(edges_h.repartition(F.col("v")))
+            ed_u = s.persist(edges_h.repartition(F.col("u")))
+            bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
+            h = s.pin(
+                idmap.select(F.col("iid").alias("nid"), F.lit(scale).cast("long").alias("r"))
+            )
+            a = None
 
-        def _norm_pass(ed, score, join_key, group_key):
-            # r14-opt: checkpoint the RAW sums, not the normalized frame.
-            # The normalizer ``mx`` is an aggregate OVER ``raw``, so with
-            # the checkpoint on the normalized side the join+groupBy
-            # subtree executed TWICE per pass — once building the mx
-            # broadcast, once for the checkpoint materialization (the
-            # plans are not identical subtrees, so ReuseExchange cannot
-            # dedupe them). Pinning raw makes mx and the normalized
-            # projection two cheap scans of the same in-memory frame;
-            # the projection stays lazy (its only consumer per pass is
-            # the next pass's broadcast build / the final result join).
-            raw = _tracked_checkpoint(
-                ed.join(
-                    bcast(score.select(F.col("nid").alias(join_key), "r")), join_key
+            def _norm_pass(ed, score, join_key, group_key):
+                # r14-opt: checkpoint the RAW sums, not the normalized frame.
+                # The normalizer ``mx`` is an aggregate OVER ``raw``, so with
+                # the checkpoint on the normalized side the join+groupBy
+                # subtree executed TWICE per pass — once building the mx
+                # broadcast, once for the checkpoint materialization (the
+                # plans are not identical subtrees, so ReuseExchange cannot
+                # dedupe them). Pinning raw makes mx and the normalized
+                # projection two cheap scans of the same in-memory frame;
+                # the projection stays lazy (its only consumer per pass is
+                # the next pass's broadcast build / the final result join).
+                raw = s.pin(
+                    ed.join(
+                        bcast(score.select(F.col("nid").alias(join_key), "r")), join_key
+                    )
+                    .groupBy(group_key)
+                    .agg(F.sum("r").alias("s"))
                 )
-                .groupBy(group_key)
-                .agg(F.sum("r").alias("s")),
-                tracked,
-            )
-            # integer `div`, not `/`: past 2^53 the double quotient can
-            # truncate to a different normalizer than the oracle's `//`
-            mx = raw.agg(
-                F.expr(
-                    f"greatest(coalesce(max(s), 0L) div {scale}L, 1L)"
-                ).alias("__mx")
-            )
-            return raw.crossJoin(F.broadcast(mx)).select(
-                F.col(group_key).alias("nid"), F.expr("s div __mx").alias("r")
-            )
+                # integer `div`, not `/`: past 2^53 the double quotient can
+                # truncate to a different normalizer than the oracle's `//`
+                mx = raw.agg(
+                    F.expr(
+                        f"greatest(coalesce(max(s), 0L) div {scale}L, 1L)"
+                    ).alias("__mx")
+                )
+                return raw.crossJoin(F.broadcast(mx)).select(
+                    F.col(group_key).alias("nid"), F.expr("s div __mx").alias("r")
+                )
 
-        for _ in range(iters):
-            # authority pass: contributions flow along u→v, grouped on v
-            a = _norm_pass(ed_v, h, "u", "v")
-            # hub pass: contributions flow back v→u, grouped on u
-            h = _norm_pass(ed_u, a, "v", "u")
-        result = (
-            idmap.join(h.select(F.col("nid").alias("iid"), F.col("r").alias("__h")), "iid", "left")
-            .join(a.select(F.col("nid").alias("iid"), F.col("r").alias("__a")), "iid", "left")
-            .select(
-                "id",
-                (F.coalesce("__h", F.lit(0)).cast("double") / F.lit(float(scale))).alias("hub"),
-                (F.coalesce("__a", F.lit(0)).cast("double") / F.lit(float(scale))).alias("authority"),
+            for _ in range(iters):
+                # authority pass: contributions flow along u→v, grouped on v
+                a = _norm_pass(ed_v, h, "u", "v")
+                # hub pass: contributions flow back v→u, grouped on u
+                h = _norm_pass(ed_u, a, "v", "u")
+            return (
+                idmap.join(h.select(F.col("nid").alias("iid"), F.col("r").alias("__h")), "iid", "left")
+                .join(a.select(F.col("nid").alias("iid"), F.col("r").alias("__a")), "iid", "left")
+                .select(
+                    "id",
+                    (F.coalesce("__h", F.lit(0)).cast("double") / F.lit(float(scale))).alias("hub"),
+                    (F.coalesce("__a", F.lit(0)).cast("double") / F.lit(float(scale))).alias("authority"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        _free_intermediates(spark, tracked)
-        return result
-    finally:
-        for cached in (ed_v, ed_u):
-            if cached is not None:
-                try:
-                    cached.unpersist()
-                except Exception:
-                    pass  # cleanup must never fail the query
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def weighted_sssp(
@@ -1830,92 +1705,80 @@ def weighted_sssp(
     distributed formulation — ``rounds`` caps work exactly like
     Pregel-style SSSP supersteps.
     """
-    spark = edges_df.sparkSession
-    tracked: list = []
     cols = [src, dst] + ([weight_col] if weight_col is not None else [])
-    ed = _tracked_checkpoint(edges_df.select(*cols), tracked)
-    if weight_col is None:
-        lo = F.least(F.col(src), F.col(dst)).cast("string")
-        hi = F.greatest(F.col(src), F.col(dst)).cast("string")
-        lane = F.conv(
-            F.substring(F.md5(F.concat_ws("|", lo, hi)), 1, 8), 16, 10
-        ).cast("long")
-        w = (lane % F.lit(weight_mod)) + F.lit(1)
-    else:
-        w = F.col(weight_col).cast("long")
-    half = ed.select(F.col(src).alias("u"), F.col(dst).alias("v"), w.alias("w"))
-    adj = (
-        half.unionByName(
-            half.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
+    with scratch(edges_df.sparkSession) as s:
+        ed = s.pin(edges_df.select(*cols))
+        if weight_col is None:
+            lo = F.least(F.col(src), F.col(dst)).cast("string")
+            hi = F.greatest(F.col(src), F.col(dst)).cast("string")
+            lane = F.conv(
+                F.substring(F.md5(F.concat_ws("|", lo, hi)), 1, 8), 16, 10
+            ).cast("long")
+            w = (lane % F.lit(weight_mod)) + F.lit(1)
+        else:
+            w = F.col(weight_col).cast("long")
+        half = ed.select(F.col(src).alias("u"), F.col(dst).alias("v"), w.alias("w"))
+        adj = s.persist(
+            half.unionByName(
+                half.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
+            ).repartition(F.col("u"))
         )
-        .repartition(F.col("u"))
-        .persist()
-    )
-    adj.count()  # materialize outside the loop
-    if source is None:
-        source = ed.select(F.least(F.min(src), F.min(dst)).alias("s")).collect()[0][
-            "s"
-        ]
-    # broadcast gate on the (already materialized) symmetric edge count:
-    # |dist| ≤ |nodes| ≤ |adj| rows, so this bounds every broadcast below
-    # without paying a distinct-count pass over the adjacency
-    n_bound = adj.count()
-    bcast = F.broadcast if n_bound <= broadcast_edge_max else (lambda df: df)
-    dist = _tracked_checkpoint(
-        adj.sparkSession.createDataFrame(
-            [(source, 0)], f"n {'string' if isinstance(source, str) else 'long'}, d long"
-        ),
-        tracked,
-    )
-    # Delta relaxation (the standard distributed-SSSP refinement): only
-    # nodes whose distance IMPROVED last round can improve a neighbor
-    # this round, so the per-round join probes the adjacency with the
-    # delta frontier, not the full distance frame — identical results
-    # (re-relaxing settled nodes re-yields candidates that lose the
-    # min), and per-round work decays with the frontier instead of
-    # staying O(|E|) for all `rounds` (measured at the 10× 20M-edge
-    # graph: 122.8 s full-frame → delta frontier cuts the tail rounds
-    # to frontier-sized joins). Empty delta == fixpoint == early exit.
-    delta = dist
-    for it in range(rounds):
-        cand = adj.join(bcast(delta.select(F.col("n").alias("u"), "d")), "u").select(
-            F.col("v").alias("n"), (F.col("d") + F.col("w")).alias("d")
+        if source is None:
+            source = ed.select(F.least(F.min(src), F.min(dst)).alias("s")).collect()[0][
+                "s"
+            ]
+        # broadcast gate on the (already materialized) symmetric edge count:
+        # |dist| ≤ |nodes| ≤ |adj| rows, so this bounds every broadcast below
+        # without paying a distinct-count pass over the adjacency
+        n_bound = adj.count()
+        bcast = F.broadcast if n_bound <= broadcast_edge_max else (lambda df: df)
+        dist = s.pin(
+            adj.sparkSession.createDataFrame(
+                [(source, 0)], f"n {'string' if isinstance(source, str) else 'long'}, d long"
+            )
         )
-        best = cand.groupBy("n").agg(F.min("d").alias("d"))
-        # r14-opt: fold the delta detection INTO the min aggregate — a
-        # source flag rides the union, so one partial-agg groupBy yields
-        # BOTH the new minimum and the node's previous distance (min over
-        # the dist side, unique per n). Before, each round paid a second
-        # checkpoint + a broadcast(dist) build + a |dist|-row join just
-        # to compare new vs old; now delta is a lazy filter over the one
-        # checkpointed frame (its two consumers — the next round's
-        # broadcast build and the isEmpty probe — are cheap scans).
-        # Bit-identical: integer mins, and __old is exactly dist's d.
-        nxt = _tracked_checkpoint(
-            dist.withColumn("__o", F.lit(1))
-            .unionByName(best.withColumn("__o", F.lit(0)))
-            .groupBy("n")
-            .agg(
-                F.min("d").alias("d"),
-                F.min(F.when(F.col("__o") == 1, F.col("d"))).alias("__old"),
-            ),
-            tracked,
+        # Delta relaxation (the standard distributed-SSSP refinement): only
+        # nodes whose distance IMPROVED last round can improve a neighbor
+        # this round, so the per-round join probes the adjacency with the
+        # delta frontier, not the full distance frame — identical results
+        # (re-relaxing settled nodes re-yields candidates that lose the
+        # min), and per-round work decays with the frontier instead of
+        # staying O(|E|) for all `rounds` (measured at the 10× 20M-edge
+        # graph: 122.8 s full-frame → delta frontier cuts the tail rounds
+        # to frontier-sized joins). Empty delta == fixpoint == early exit.
+        delta = dist
+        for it in range(rounds):
+            cand = adj.join(bcast(delta.select(F.col("n").alias("u"), "d")), "u").select(
+                F.col("v").alias("n"), (F.col("d") + F.col("w")).alias("d")
+            )
+            best = cand.groupBy("n").agg(F.min("d").alias("d"))
+            # r14-opt: fold the delta detection INTO the min aggregate — a
+            # source flag rides the union, so one partial-agg groupBy yields
+            # BOTH the new minimum and the node's previous distance (min over
+            # the dist side, unique per n). Before, each round paid a second
+            # checkpoint + a broadcast(dist) build + a |dist|-row join just
+            # to compare new vs old; now delta is a lazy filter over the one
+            # checkpointed frame (its two consumers — the next round's
+            # broadcast build and the isEmpty probe — are cheap scans).
+            # Bit-identical: integer mins, and __old is exactly dist's d.
+            nxt = s.pin(
+                dist.withColumn("__o", F.lit(1))
+                .unionByName(best.withColumn("__o", F.lit(0)))
+                .groupBy("n")
+                .agg(
+                    F.min("d").alias("d"),
+                    F.min(F.when(F.col("__o") == 1, F.col("d"))).alias("__old"),
+                )
+            )
+            delta = nxt.filter(
+                F.col("__old").isNull() | (F.col("d") < F.col("__old"))
+            ).select("n", "d")
+            dist = nxt.select("n", "d")
+            if delta.isEmpty():
+                break
+        return dist.select(F.col("n").alias("id"), F.col("d").alias("dist")).localCheckpoint(
+            eager=True
         )
-        delta = nxt.filter(
-            F.col("__old").isNull() | (F.col("d") < F.col("__old"))
-        ).select("n", "d")
-        dist = nxt.select("n", "d")
-        if delta.isEmpty():
-            break
-    result = dist.select(F.col("n").alias("id"), F.col("d").alias("dist")).localCheckpoint(
-        eager=True
-    )
-    try:
-        adj.unpersist()
-    except Exception:
-        pass  # cleanup must never fail the query
-    _free_intermediates(spark, tracked)
-    return result
 
 
 def kcore(
@@ -1941,64 +1804,59 @@ def kcore(
     anyway). Deterministic: peeling is order-independent (the k-core is
     unique).
     """
-    spark = edges_df.sparkSession
-    tracked: list = []
     sc = F.col(src).cast("string")
     dc = F.col(dst).cast("string")
-    # surrogates hash the STRING form so int and string id columns get
-    # the same treatment; the output keeps the original id type
-    idmap0 = _tracked_checkpoint(
-        edges_df.select(F.col(src).alias("id"))
-        .unionAll(edges_df.select(F.col(dst).alias("id")))
-        .distinct()
-        .select("id", F.xxhash64(F.col("id").cast("string")).alias("n")),
-        tracked,
-    )
-    e = (
-        edges_df.select(
-            F.xxhash64(sc).alias("a"), F.xxhash64(dc).alias("b")
+    with scratch(edges_df.sparkSession) as s:
+        # surrogates hash the STRING form so int and string id columns get
+        # the same treatment; the output keeps the original id type
+        idmap0 = s.pin(
+            edges_df.select(F.col(src).alias("id"))
+            .unionAll(edges_df.select(F.col(dst).alias("id")))
+            .distinct()
+            .select("id", F.xxhash64(F.col("id").cast("string")).alias("n"))
         )
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-    )
-    edges = _tracked_checkpoint(e, tracked)
-    # Peel by ANTI-joining the REMOVED set, not semi-joining the keep
-    # set: after round 1 the removed frame is the small side (the few
-    # nodes that just dropped below k), so both per-round prunes run as
-    # broadcast anti-joins that preserve the edge frame's partitioning —
-    # no shuffle of the (large) surviving edge set per round. The keep
-    # formulation shuffled the whole edge set twice per round; measured
-    # on the 20M-edge 10× probe graph: 96.8 s → see SCALE.md. Size-gated:
-    # a huge first-round removal falls back to the shuffled anti-join.
-    for _ in range(max_iter):
-        deg = (
+        e = (
+            edges_df.select(
+                F.xxhash64(sc).alias("a"), F.xxhash64(dc).alias("b")
+            )
+            .filter(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
+            .distinct()
+        )
+        edges = s.pin(e)
+        # Peel by ANTI-joining the REMOVED set, not semi-joining the keep
+        # set: after round 1 the removed frame is the small side (the few
+        # nodes that just dropped below k), so both per-round prunes run as
+        # broadcast anti-joins that preserve the edge frame's partitioning —
+        # no shuffle of the (large) surviving edge set per round. The keep
+        # formulation shuffled the whole edge set twice per round; measured
+        # on the 20M-edge 10× probe graph: 96.8 s → see SCALE.md. Size-gated:
+        # a huge first-round removal falls back to the shuffled anti-join.
+        for _ in range(max_iter):
+            deg = (
+                edges.select(F.col("u").alias("n"))
+                .unionAll(edges.select(F.col("v").alias("n")))
+                .groupBy("n")
+                .agg(F.count(F.lit(1)).alias("d"))
+            )
+            removed = deg.filter(F.col("d") < k).select("n")
+            n_removed = removed.count()
+            if n_removed == 0:
+                break
+            rm = F.broadcast if n_removed <= 5_000_000 else (lambda df: df)
+            edges = s.pin(
+                edges.join(rm(removed.select(F.col("n").alias("u"))), "u", "left_anti")
+                .join(rm(removed.select(F.col("n").alias("v"))), "v", "left_anti")
+            )
+        core_deg = (
             edges.select(F.col("u").alias("n"))
             .unionAll(edges.select(F.col("v").alias("n")))
             .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
+            .agg(F.count(F.lit(1)).alias("core_degree"))
+            .filter(F.col("core_degree") >= k)
         )
-        removed = deg.filter(F.col("d") < k).select("n")
-        n_removed = removed.count()
-        if n_removed == 0:
-            break
-        rm = F.broadcast if n_removed <= 5_000_000 else (lambda df: df)
-        edges = _tracked_checkpoint(
-            edges.join(rm(removed.select(F.col("n").alias("u"))), "u", "left_anti")
-            .join(rm(removed.select(F.col("n").alias("v"))), "v", "left_anti"),
-            tracked,
+        return (
+            core_deg.join(idmap0, "n")
+            .select("id", F.col("core_degree").cast("bigint").alias("core_degree"))
+            .localCheckpoint(eager=True)
         )
-    core_deg = (
-        edges.select(F.col("u").alias("n"))
-        .unionAll(edges.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .filter(F.col("core_degree") >= k)
-    )
-    result = (
-        core_deg.join(idmap0, "n")
-        .select("id", F.col("core_degree").cast("bigint").alias("core_degree"))
-        .localCheckpoint(eager=True)
-    )
-    _free_intermediates(spark, tracked)
-    return result

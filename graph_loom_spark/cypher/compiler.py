@@ -42,12 +42,7 @@ from graph_loom_spark.cypher import ast
 from graph_loom_spark.cypher.ast import CypherError
 from graph_loom_spark.cypher.coerce import compare_expr, numeric_first_sort_cols
 from graph_loom_spark.cypher.parser import parse, resolve_param, trim_quotes
-from graph_loom_spark.graph import (
-    DEFAULT_LABEL,
-    PropertyGraph,
-    _free_intermediates,
-    _tracked_checkpoint,
-)
+from graph_loom_spark.graph import DEFAULT_LABEL, PropertyGraph, scratch, shuffle_partitions
 from graph_loom_spark.ids import assign_uuid7_ids
 
 RESULT_SCHEMA = T.StructType(
@@ -302,93 +297,85 @@ class CypherExecutor:
         eh = ends.select(F.col("__node").alias("__node_s"), F.xxhash64("__node").alias("__node"))
         adj = adj.select(F.xxhash64("__u").alias("__u"), F.xxhash64("__v").alias("__v"))
         spark = self.graph.nodes.sparkSession
-        tracked: list = []
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if max_hops <= 2:
-            # Short walks: one fused declarative plan instead of the hop
-            # loop. The loop shape costs 4 driver actions for a 2-hop
-            # walk (per-hop checkpoint + count, plus the final pin); here
-            # hop-1 = starts⋈adj, hop-2 = hop-1⋈adj, and the per-node
-            # BFS depth falls out of groupBy(start, node).min(depth) over
-            # the depth-tagged union — min over all ≤2-walks IS the
-            # first-reached depth, so the distinct→anti-join frontier
-            # bookkeeping is unnecessary. Single action (the result pin);
-            # Catalyst reuses the hop-1 exchange for the hop-2 probe and
-            # AQE picks broadcast sides at runtime.
-            seed = sh.select(
-                "__start", F.col("__start").alias("__node"), F.lit(0).alias("__depth")
-            )
-            h1 = (
-                sh.select("__start", F.col("__start").alias("__node"))
-                .join(adj, F.col("__node") == adj["__u"])
-                .select("__start", F.col("__v").alias("__node"))
-                .distinct()
-            )
-            frames = [seed, h1.withColumn("__depth", F.lit(1))]
-            if max_hops == 2:
-                h2 = (
-                    h1.join(adj, h1["__node"] == adj["__u"])
+        with scratch(spark) as s:
+            if max_hops <= 2:
+                # Short walks: one fused declarative plan instead of the hop
+                # loop. The loop shape costs 4 driver actions for a 2-hop
+                # walk (per-hop checkpoint + count, plus the final pin); here
+                # hop-1 = starts⋈adj, hop-2 = hop-1⋈adj, and the per-node
+                # BFS depth falls out of groupBy(start, node).min(depth) over
+                # the depth-tagged union — min over all ≤2-walks IS the
+                # first-reached depth, so the distinct→anti-join frontier
+                # bookkeeping is unnecessary. Single action (the result pin);
+                # Catalyst reuses the hop-1 exchange for the hop-2 probe and
+                # AQE picks broadcast sides at runtime.
+                seed = sh.select(
+                    "__start", F.col("__start").alias("__node"), F.lit(0).alias("__depth")
+                )
+                h1 = (
+                    sh.select("__start", F.col("__start").alias("__node"))
+                    .join(adj, F.col("__node") == adj["__u"])
                     .select("__start", F.col("__v").alias("__node"))
                     .distinct()
                 )
-                frames.append(h2.withColumn("__depth", F.lit(2)))
-            all_reached = (
-                reduce(lambda x, y: x.unionByName(y), frames)
-                .groupBy("__start", "__node")
-                .agg(F.min("__depth").alias("__depth"))
-            )
-        else:
-            # 3+ passes over the edge list: materialize the (src,dst)
-            # pairs once — re-deriving them per hop repeats the upstream
-            # scans — and run the classic frontier loop (the fused-plan
-            # trick is quadratic in plan size past a couple of hops).
-            adj = _tracked_checkpoint(adj, tracked)
-            # hop loop = several shuffle stages per hop on modest frames;
-            # size partitions from the data so task scheduling doesn't
-            # dominate (same lever as connected_components)
-            parts = int(max(8, adj.count() // 500_000))
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            try:
-                frontier = _tracked_checkpoint(
-                    sh.select("__start", F.col("__start").alias("__node")), tracked
-                )
-                n_frontier = frontier.count()
-                seen = frontier
-                reached = [frontier.withColumn("__depth", F.lit(0))]
-                for d in range(1, max_hops + 1):
-                    # a small frontier broadcast against the edge list
-                    # means the hop never shuffles the adjacency; big
-                    # frontiers (dense traversals) fall back to a
-                    # shuffled join
-                    fr = F.broadcast(frontier) if n_frontier <= 300_000 else frontier
-                    nxt = _tracked_checkpoint(  # cut 8-deep iterative lineage
-                        fr.join(adj, fr["__node"] == adj["__u"])
+                frames = [seed, h1.withColumn("__depth", F.lit(1))]
+                if max_hops == 2:
+                    h2 = (
+                        h1.join(adj, h1["__node"] == adj["__u"])
                         .select("__start", F.col("__v").alias("__node"))
                         .distinct()
-                        .join(seen, ["__start", "__node"], "left_anti"),
-                        tracked,
                     )
-                    n_frontier = nxt.count()
-                    if n_frontier == 0:
-                        break
-                    reached.append(nxt.withColumn("__depth", F.lit(d)))
-                    seen = _tracked_checkpoint(seen.unionByName(nxt), tracked)
-                    frontier = nxt
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-            all_reached = reduce(lambda x, y: x.unionByName(y), reached)
+                    frames.append(h2.withColumn("__depth", F.lit(2)))
+                all_reached = (
+                    reduce(lambda x, y: x.unionByName(y), frames)
+                    .groupBy("__start", "__node")
+                    .agg(F.min("__depth").alias("__depth"))
+                )
+            else:
+                # 3+ passes over the edge list: materialize the (src,dst)
+                # pairs once — re-deriving them per hop repeats the upstream
+                # scans — and run the classic frontier loop (the fused-plan
+                # trick is quadratic in plan size past a couple of hops).
+                adj = s.pin(adj)
+                # hop loop = several shuffle stages per hop on modest frames;
+                # size partitions from the data so task scheduling doesn't
+                # dominate (same lever as connected_components)
+                parts = int(max(8, adj.count() // 500_000))
+                with shuffle_partitions(spark, parts):
+                    frontier = s.pin(sh.select("__start", F.col("__start").alias("__node")))
+                    n_frontier = frontier.count()
+                    seen = frontier
+                    reached = [frontier.withColumn("__depth", F.lit(0))]
+                    for d in range(1, max_hops + 1):
+                        # a small frontier broadcast against the edge list
+                        # means the hop never shuffles the adjacency; big
+                        # frontiers (dense traversals) fall back to a
+                        # shuffled join
+                        fr = F.broadcast(frontier) if n_frontier <= 300_000 else frontier
+                        nxt = s.pin(  # cut 8-deep iterative lineage
+                            fr.join(adj, fr["__node"] == adj["__u"])
+                            .select("__start", F.col("__v").alias("__node"))
+                            .distinct()
+                            .join(seen, ["__start", "__node"], "left_anti")
+                        )
+                        n_frontier = nxt.count()
+                        if n_frontier == 0:
+                            break
+                        reached.append(nxt.withColumn("__depth", F.lit(d)))
+                        seen = s.pin(seen.unionByName(nxt))
+                        frontier = nxt
+                all_reached = reduce(lambda x, y: x.unionByName(y), reached)
 
-        # pin only the final (start, node) pairs and free the ~2/hop BFS
-        # checkpoints (frontier/seen/adjacency) they were built from —
-        # the binding table below stays lazy over this one small frame,
-        # which the graph frees with the statement
-        pairs = self.graph.pin(
-            all_reached.filter((F.col("__depth") >= min_hops) & (F.col("__depth") <= max_hops))
-            .join(eh, "__node")
-            .join(sh, "__start")
-            .select(F.col("__start_s").alias("__start"), F.col("__node_s").alias("__node"))
-        )
-        _free_intermediates(spark, tracked)
+            # pin only the final (start, node) pairs; the scope frees the
+            # ~2/hop BFS checkpoints (frontier/seen/adjacency) they were
+            # built from — the binding table below stays lazy over this one
+            # small frame, which the graph frees with the statement
+            pairs = self.graph.pin(
+                all_reached.filter((F.col("__depth") >= min_hops) & (F.col("__depth") <= max_hops))
+                .join(eh, "__node")
+                .join(sh, "__start")
+                .select(F.col("__start_s").alias("__start"), F.col("__node_s").alias("__node"))
+            )
 
         lv, rv = p.left.var, p.right.var
         conds: list[Column] = []

@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Iterable
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +55,8 @@ EDGE_SCHEMA = T.StructType(
 
 DEFAULT_LABEL = "_"  # reference: label defaults to "_" (cypher_spec.rs:1322)
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 
 _FRAME = {"node": "nodes", "rel": "edges"}  # entity kind -> PropertyGraph frame
 
@@ -67,47 +70,111 @@ class GraphConsistencyError(ValueError):
     """Raised on FK violations / illegal deletes, mirroring reference errors."""
 
 
-def _tracked_checkpoint(df: DataFrame, tracked: list) -> DataFrame:
-    """``localCheckpoint(eager=True)`` and record the pinned block's exact
-    RDD id in ``tracked``.
-
-    The checkpointed Dataset's analyzed plan is a ``LogicalRDD`` whose
-    ``rdd`` field IS the persisted RDD, so its id keys
-    ``getPersistentRDDs`` directly. Tracking exact ids (rather than
-    diffing the global persistent-RDD set around the operator) keeps a
-    concurrent query's checkpoints safe: in a multi-query service the
-    set-difference approach could free blocks some other in-flight
-    operator had just pinned — local checkpoints are non-recomputable,
-    so that's a hard job failure, not a cache miss."""
-    out = df.localCheckpoint(eager=True)
-    try:
-        tracked.append(out._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:
-        pass  # tracking is best-effort; worst case the block stays pinned
-    return out
-
-
-def _free_intermediates(spark, tracked_ids) -> None:
-    """Unpersist exactly the RDD ids recorded by :func:`_tracked_checkpoint`.
-
-    Iterative operators (LPA, components, layout, var-length BFS)
-    ``localCheckpoint`` per round; those blocks otherwise stay pinned
-    until the session ends, so a long-lived service (or a 47-query bench
-    session) accumulates gigabytes of dead checkpoint state and every
-    later query pays eviction + GC churn (measured: the same LPA run
-    38 s early-session vs 192 s late). Each operator frees its own
-    intermediates, keeping only the eagerly checkpointed result it
-    returns."""
+def _free_intermediates(spark, rdd_ids) -> None:
+    """Unpersist exactly the RDD ids in ``rdd_ids`` (those a
+    :class:`Scratch` pinned); cleanup never fails the caller."""
     try:
         # one lookup per id: copying the whole map costs a gateway round
         # trip per persisted RDD, on every statement of a served session
         persistent = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in tracked_ids:
+        for rid in rdd_ids:
             rdd = persistent.get(rid)
             if rdd is not None:
                 rdd.unpersist()
     except Exception:
         pass  # cleanup must never fail the query
+
+
+class Scratch:
+    """The intermediates one op (or one statement) pins, freed together
+    by :meth:`release`.
+
+    Iterative operators (LPA, components, ranks, var-length BFS)
+    ``localCheckpoint`` per round and persist their partitioned edge
+    frames; those blocks otherwise stay pinned until the session ends,
+    so a long-lived service (or a 47-query bench session) accumulates
+    gigabytes of dead checkpoint state and every later query pays
+    eviction + GC churn (measured: the same LPA run 38 s early-session
+    vs 192 s late). An op keeps only the eagerly checkpointed result it
+    returns; :func:`scratch` releases the rest on every exit path.
+
+    Exact RDD ids are tracked rather than a diff of the global
+    persistent-RDD set around the op: in a multi-query service the
+    set-difference approach could free blocks some other in-flight
+    operator had just pinned — local checkpoints are non-recomputable,
+    so that's a hard job failure, not a cache miss. A checkpointed
+    Dataset's analyzed plan is a ``LogicalRDD`` whose ``rdd`` field IS
+    the persisted RDD, so its id keys ``getPersistentRDDs`` directly
+    (``DataFrame.unpersist()`` on a checkpoint frees nothing)."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._rdd_ids: list[int] = []
+        self._frames: list[DataFrame] = []
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """``localCheckpoint(eager=True)``, recording the block's RDD id."""
+        out = df.localCheckpoint(eager=True)
+        try:
+            self._rdd_ids.append(out._jdf.queryExecution().analyzed().rdd().id())
+        except Exception:
+            pass  # tracking is best-effort; worst case the block stays pinned
+        return out
+
+    def persist(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """``persist()`` — unlike a checkpoint it keeps the frame's
+        ``outputPartitioning``, so aggregates on the partition key plan no
+        exchange — materialized now when ``eager``, else by its first
+        consumer."""
+        df = df.persist()
+        self._frames.append(df)
+        if eager:
+            df.count()
+        return df
+
+    def adopt(self, other: "Scratch") -> None:
+        """Take over ``other``'s blocks, to be freed by this scope."""
+        self._rdd_ids += other._rdd_ids
+        self._frames += other._frames
+        other._rdd_ids, other._frames = [], []
+
+    def release(self) -> None:
+        """Free every block pinned or persisted so far."""
+        rdd_ids, self._rdd_ids = self._rdd_ids, []
+        frames, self._frames = self._frames, []
+        _free_intermediates(self.spark, rdd_ids)
+        for df in frames:
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # cleanup must never fail the query
+
+
+@contextmanager
+def scratch(spark: SparkSession):
+    """``with scratch(spark) as s:`` — an op's intermediates
+    (:meth:`Scratch.pin`, :meth:`Scratch.persist`), released when the
+    block exits, also when it raises."""
+    s = Scratch(spark)
+    try:
+        yield s
+    finally:
+        s.release()
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Set the session-global ``spark.sql.shuffle.partitions`` to ``n``
+    for the block and restore it on exit, also when it raises. Iterative
+    ops size it from the data before building their pinned frames: the
+    partitioning baked into those frames, and the task count of every
+    round's shuffles, then match the data rather than the session."""
+    old = spark.conf.get(_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, old)
 
 
 class PropertyGraph:
@@ -117,9 +184,10 @@ class PropertyGraph:
     immutable — every mutation swaps in a new, eagerly pinned *version*
     of the frame it changed (:meth:`_swap`). A superseded version is not
     freed at once, since the statement that replaced it may still read
-    it: :meth:`release` frees it with the statement's scratch pins
-    (:meth:`pin`), and ``CypherSession.execute`` calls that once a
-    statement's rows are collected.
+    it: the graph's statement scope adopts it, :meth:`release` frees it
+    with the statement's own pins (:meth:`pin`), and
+    ``CypherSession.execute`` calls that once a statement's rows are
+    collected.
     """
 
     def __init__(self, spark: SparkSession, nodes: DataFrame | None = None, edges: DataFrame | None = None):
@@ -128,8 +196,8 @@ class PropertyGraph:
         self._edge_sources: dict[str, DataFrame] = {}
         self.nodes = nodes if nodes is not None else spark.createDataFrame([], NODE_SCHEMA)
         self.edges = edges if edges is not None else spark.createDataFrame([], EDGE_SCHEMA)
-        self._version: dict[str, int] = {}  # frame name -> RDD id of its pinned version
-        self._retired: list[int] = []  # pins the running statement may still read
+        self._version: dict[str, Scratch] = {}  # frame name -> scope pinning its version
+        self._pins = Scratch(spark)  # blocks the running statement may still read
 
     # ------------------------------------------------------------------
     # label-sliced sources (query fixed-overhead optimization)
@@ -368,19 +436,19 @@ class PropertyGraph:
     # ------------------------------------------------------------------
     def _swap(self, **frames: DataFrame) -> None:
         """Swap in new versions of ``nodes`` and/or ``edges``, each pinned
-        with one eager ``localCheckpoint`` and its RDD id recorded; the
-        superseded version is retired for :meth:`release`. Unpinned, every
-        read and later write would re-run the mutation chain — twice per
-        SET, whose id set comes from the binding table over the previous
-        version — so plans and job counts grew with every write."""
+        with one eager ``localCheckpoint`` in a scope of its own; the
+        superseded version's scope is handed to the statement scope for
+        :meth:`release`. Unpinned, every read and later write would re-run
+        the mutation chain — twice per SET, whose id set comes from the
+        binding table over the previous version — so plans and job counts
+        grew with every write."""
         for name, df in frames.items():
-            tracked: list = []
-            pinned = _tracked_checkpoint(df, tracked)
+            version = Scratch(self.spark)
+            pinned = version.pin(df)
             old = self._version.pop(name, None)
             if old is not None:
-                self._retired.append(old)
-            if tracked:
-                self._version[name] = tracked[0]
+                self._pins.adopt(old)
+            self._version[name] = version
             setattr(self, name, pinned)
 
     def cache_checkpoint(self) -> None:
@@ -393,15 +461,14 @@ class PropertyGraph:
         """Eagerly pin a frame the running statement reads (an id set, a
         traversal's pairs); :meth:`release` frees it with the retired
         versions."""
-        return _tracked_checkpoint(df, self._retired)
+        return self._pins.pin(df)
 
     def release(self) -> None:
         """Free the retired versions and the statement pins. Call it once
         nothing reads them any more: after a statement's rows are
         collected (``CypherSession.execute`` does). A frame taken from
         ``nodes``/``edges`` before a write is one of them."""
-        _free_intermediates(self.spark, self._retired)
-        self._retired = []
+        self._pins.release()
 
     def forget_pins(self) -> None:
         """Stop tracking the current versions and the retired pins without
@@ -409,7 +476,7 @@ class PropertyGraph:
         (``CypherSession.execute_df``), so they stay pinned for the
         session's life."""
         self._version = {}
-        self._retired = []
+        self._pins = Scratch(self.spark)
 
     # ------------------------------------------------------------------
     # persistence (reference S5/S6: snapshot load/save, versioned)

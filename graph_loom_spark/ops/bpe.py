@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_loom_spark.graph import scratch, shuffle_partitions
+
 EOW = "</w>"
 
 
@@ -72,15 +74,11 @@ def bpe_train(
     """
     import pandas as pd
 
-    from graph_loom_spark.graph import _free_intermediates, _tracked_checkpoint
-
     spark = documents.sparkSession
-    tracked: list = []
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        toks = F.split(
-            F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-        )
+    toks = F.split(
+        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
+    )
+    with scratch(spark) as s:
         words = (
             documents.select(F.explode(toks).alias("__w"))
             .filter(F.col("__w") != "")
@@ -91,96 +89,92 @@ def bpe_train(
                 "__f",
             )
         )
-        words = _tracked_checkpoint(words, tracked)
+        words = s.pin(words)
         # Per-round shuffles operate on the distinct-word table, which is
         # tiny relative to the session default partitioning on small corpora
         # — size them from the data (same lever as kmeans; ~50 symbols/word
-        # upper bound on the pair explode). Restored in the finally below, so
-        # a failing round leaks neither the conf nor the pinned word tables.
+        # upper bound on the pair explode).
         n_words = words.count()
         parts = int(max(4, (n_words * 50) // 1_000_000))
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        # ALSO shrink the word table's own partitioning: it inherits the
-        # session layout from the setup aggregate, and every per-round Arrow
-        # rewrite stage otherwise schedules one task per (mostly empty)
-        # partition — the dominant cost on small vocabularies.
-        words = _tracked_checkpoint(words.repartition(parts), tracked)
+        with shuffle_partitions(spark, parts):
+            # ALSO shrink the word table's own partitioning: it inherits the
+            # session layout from the setup aggregate, and every per-round Arrow
+            # rewrite stage otherwise schedules one task per (mostly empty)
+            # partition — the dominant cost on small vocabularies.
+            words = s.pin(words.repartition(parts))
 
-        merges: list[tuple[str, str]] = []
-        # Checkpoint the word table every 4th rewrite, not every rewrite:
-        # the in-between rounds re-run at most 3 Arrow rewrite stages over
-        # the (tiny relative to the corpus) word table, far cheaper than a
-        # materialization job per round.
-        rounds_since_ckpt = 0
-        while len(merges) < num_merges:
-            # guard fully-merged single-symbol words: sequence(0, -1) would
-            # DESCEND and element_at(-1) would read from the array end
-            pairs = words.select(
-                F.explode(
-                    F.when(
-                        F.size("__sym") >= 2,
-                        F.transform(
-                            F.sequence(F.lit(0), F.size("__sym") - 2),
-                            lambda i: F.struct(
-                                F.element_at("__sym", i + 1).alias("l"),
-                                F.element_at("__sym", i + 2).alias("r"),
+            merges: list[tuple[str, str]] = []
+            # Checkpoint the word table every 4th rewrite, not every rewrite:
+            # the in-between rounds re-run at most 3 Arrow rewrite stages over
+            # the (tiny relative to the corpus) word table, far cheaper than a
+            # materialization job per round.
+            rounds_since_ckpt = 0
+            while len(merges) < num_merges:
+                # guard fully-merged single-symbol words: sequence(0, -1) would
+                # DESCEND and element_at(-1) would read from the array end
+                pairs = words.select(
+                    F.explode(
+                        F.when(
+                            F.size("__sym") >= 2,
+                            F.transform(
+                                F.sequence(F.lit(0), F.size("__sym") - 2),
+                                lambda i: F.struct(
+                                    F.element_at("__sym", i + 1).alias("l"),
+                                    F.element_at("__sym", i + 2).alias("r"),
+                                ),
                             ),
-                        ),
-                    ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-                ).alias("__p"),
-                "__f",
-            )
-            top = (
-                pairs.groupBy("__p")
-                .agg(F.sum("__f").alias("__c"))
-                .orderBy(F.col("__c").desc(), F.col("__p.l").asc(), F.col("__p.r").asc())
-                .limit(max(1, 8 * batch_size))
-                .collect()
-            )
-            used: set = set()
-            batch: list[tuple[str, str]] = []
-            for row in top:
-                if row["__c"] < 2 or len(batch) >= batch_size:
+                        ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
+                    ).alias("__p"),
+                    "__f",
+                )
+                top = (
+                    pairs.groupBy("__p")
+                    .agg(F.sum("__f").alias("__c"))
+                    .orderBy(F.col("__c").desc(), F.col("__p.l").asc(), F.col("__p.r").asc())
+                    .limit(max(1, 8 * batch_size))
+                    .collect()
+                )
+                used: set = set()
+                batch: list[tuple[str, str]] = []
+                for row in top:
+                    if row["__c"] < 2 or len(batch) >= batch_size:
+                        break
+                    if len(merges) + len(batch) >= num_merges:
+                        break
+                    l, r = row["__p"]["l"], row["__p"]["r"]
+                    if l in used or r in used:
+                        continue
+                    batch.append((l, r))
+                    used.update((l, r))
+                if not batch:
                     break
-                if len(merges) + len(batch) >= num_merges:
-                    break
-                l, r = row["__p"]["l"], row["__p"]["r"]
-                if l in used or r in used:
-                    continue
-                batch.append((l, r))
-                used.update((l, r))
-            if not batch:
-                break
-            merges.extend(batch)
+                merges.extend(batch)
 
-            def _apply(batches, _b=tuple(batch)):
-                for pdf in batches:
-                    pdf = pdf.copy()
-                    out = []
-                    for s_ in pdf["__sym"]:
-                        sym = list(s_)
-                        for _l, _r in _b:
-                            sym = _py_apply_merge(sym, _l, _r, _l + _r)
-                        out.append(sym)
-                    pdf["__sym"] = out
-                    yield pdf
+                def _apply(batches, _b=tuple(batch)):
+                    for pdf in batches:
+                        pdf = pdf.copy()
+                        out = []
+                        for s_ in pdf["__sym"]:
+                            sym = list(s_)
+                            for _l, _r in _b:
+                                sym = _py_apply_merge(sym, _l, _r, _l + _r)
+                            out.append(sym)
+                        pdf["__sym"] = out
+                        yield pdf
 
-            words = words.mapInPandas(_apply, "__sym array<string>, __f long")
-            rounds_since_ckpt += 1
-            if rounds_since_ckpt >= 4:
-                words = _tracked_checkpoint(words, tracked)
-                rounds_since_ckpt = 0
+                words = words.mapInPandas(_apply, "__sym array<string>, __f long")
+                rounds_since_ckpt += 1
+                if rounds_since_ckpt >= 4:
+                    words = s.pin(words)
+                    rounds_since_ckpt = 0
 
-        result = spark.createDataFrame(
-            [
-                (i, l, r, l + r)
-                for i, (l, r) in enumerate(merges)
-            ],
-            "rank long, left string, right string, merged string",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        _free_intermediates(spark, tracked)
+            result = spark.createDataFrame(
+                [
+                    (i, l, r, l + r)
+                    for i, (l, r) in enumerate(merges)
+                ],
+                "rank long, left string, right string, merged string",
+            )
     return result
 
 

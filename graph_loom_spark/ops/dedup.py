@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_loom_spark.graph import scratch
 from graph_loom_spark.ops import spread
 
 # 31-bit Mersenne prime: a,b < 2^31 and h mod p < 2^31, so a*h+b < 2^62
@@ -440,7 +441,9 @@ def simhash_near_pairs(
     Ownership (VERDICT r13 ask #6): the result is eagerly materialized
     and the op's internal banded cache is unpersisted before returning —
     the only pinned block a call leaves behind is the returned frame
-    itself (caller-owned; ``df.rdd.unpersist()`` frees it)."""
+    itself, a ``localCheckpoint`` the caller frees through its analyzed
+    plan's RDD (``df.unpersist()`` and ``df.rdd.unpersist()`` leave it
+    pinned; see :class:`~graph_loom_spark.graph.Scratch`)."""
     width = bits // 4
     mask = (1 << width) - 1
     chunks = [
@@ -474,27 +477,24 @@ def simhash_near_pairs(
             .filter(F.col("__bdf") <= max_band_df)
             .drop("__bdf")
         )
-    banded = banded.persist()
-    left = banded.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "chunk", "cv")
-    right = banded.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "chunk", "cv")
-    cand = (
-        left.join(right, ["chunk", "cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    result = (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .localCheckpoint(eager=True)
-    )
-    try:
-        banded.unpersist()
-    except Exception:
-        pass  # cleanup must never fail the query
-    return result
+    with scratch(sim.sparkSession) as s:
+        # the self-join below materializes the cache
+        banded = s.persist(banded, eager=False)
+        left = banded.select(F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), "chunk", "cv")
+        right = banded.select(F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"), "chunk", "cv")
+        cand = (
+            left.join(right, ["chunk", "cv"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", "sh_a", "sh_b")
+            .distinct()
+        )
+        ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+        return (
+            cand.withColumn("hamming", ham)
+            .filter(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming")
+            .localCheckpoint(eager=True)
+        )
 
 
 def ngram_jaccard_pairs(
@@ -518,92 +518,83 @@ def ngram_jaccard_pairs(
     one df-count agg, one df join, one per-doc sort agg, then the
     prefix-only self-equi-join (AQE skew-join splits any residual hot
     shingle)."""
-    from graph_loom_spark.graph import _free_intermediates, _tracked_checkpoint
-
-    tracked: list = []
-    prefix = None
-    sh = spread(documents).select(
-        F.col(id_col).alias("id"), _shingles(F.col(text_col), n).alias("sh")
-    )
-    if candidate_pairs is None:
-        # reused by index + both sig joins; tracked so the op frees it
-        # after materializing its result (VERDICT r13 ask #6)
-        sh = _tracked_checkpoint(sh, tracked)
-        ex = sh.select("id", F.explode("sh").alias("g"))
-        dfreq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-        # rarest-first global order (df, g) — deterministic total order;
-        # prefix length |sh| - ceil(t*|sh|) + 1 per the prefix-filtering
-        # lemma (overlap ≥ ceil(t*|x|) forces a collision in the prefix)
-        plen = F.greatest(
-            F.lit(1),
-            (F.size("sg") - F.ceil(F.lit(float(threshold)) * F.size("sg")) + 1).cast(
-                "int"
-            ),
+    with scratch(documents.sparkSession) as s:
+        sh = spread(documents).select(
+            F.col(id_col).alias("id"), _shingles(F.col(text_col), n).alias("sh")
         )
-        prefix = (
-            ex.join(dfreq, "g")
-            .groupBy("id")
-            .agg(F.sort_array(F.collect_list(F.struct("df", "g"))).alias("sg"))
-            .select(
-                "id",
-                F.size("sg").alias("nsh"),
-                F.transform(F.slice("sg", 1, plen), lambda s: s["g"]).alias("pg"),
+        if candidate_pairs is None:
+            # reused by index + both sig joins; pinned in the scope so the op
+            # frees it after materializing its result (VERDICT r13 ask #6)
+            sh = s.pin(sh)
+            ex = sh.select("id", F.explode("sh").alias("g"))
+            dfreq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+            # rarest-first global order (df, g) — deterministic total order;
+            # prefix length |sh| - ceil(t*|sh|) + 1 per the prefix-filtering
+            # lemma (overlap ≥ ceil(t*|x|) forces a collision in the prefix)
+            plen = F.greatest(
+                F.lit(1),
+                (F.size("sg") - F.ceil(F.lit(float(threshold)) * F.size("sg")) + 1).cast(
+                    "int"
+                ),
             )
-            .select("id", "nsh", F.explode("pg").alias("g"))
-            # r13-opt: both sides of the prefix self-join read this frame
-            # — unmaterialized, the df join + rarest-first sort-collect
-            # aggregate ran twice per call. One shuffle onto the join
-            # key, sorted, then the join runs exchange-free from cache
-            # (the exact_dup_spans gram-stream lever).
-            .repartition(F.col("g"))
-            .sortWithinPartitions("g")
-            .persist()
-        )
-        t = F.lit(float(threshold))
-        cand = (
-            prefix.select(F.col("id").alias("id_a"), F.col("nsh").alias("na"), "g")
-            .join(
-                prefix.select(F.col("id").alias("id_b"), F.col("nsh").alias("nb"), "g"),
-                "g",
+            prefix = s.persist(
+                ex.join(dfreq, "g")
+                .groupBy("id")
+                .agg(F.sort_array(F.collect_list(F.struct("df", "g"))).alias("sg"))
+                .select(
+                    "id",
+                    F.size("sg").alias("nsh"),
+                    F.transform(F.slice("sg", 1, plen), lambda e: e["g"]).alias("pg"),
+                )
+                .select("id", "nsh", F.explode("pg").alias("g"))
+                # r13-opt: both sides of the prefix self-join read this frame
+                # — unmaterialized, the df join + rarest-first sort-collect
+                # aggregate ran twice per call. One shuffle onto the join
+                # key, sorted, then the join runs exchange-free from cache
+                # (the exact_dup_spans gram-stream lever).
+                .repartition(F.col("g"))
+                .sortWithinPartitions("g"),
+                eager=False,  # the self-join materializes the cache
             )
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.col("na") >= t * F.col("nb"))
-                & (F.col("nb") >= t * F.col("na"))
+            t = F.lit(float(threshold))
+            cand = (
+                prefix.select(F.col("id").alias("id_a"), F.col("nsh").alias("na"), "g")
+                .join(
+                    prefix.select(F.col("id").alias("id_b"), F.col("nsh").alias("nb"), "g"),
+                    "g",
+                )
+                .filter(
+                    (F.col("id_a") < F.col("id_b"))
+                    & (F.col("na") >= t * F.col("nb"))
+                    & (F.col("nb") >= t * F.col("na"))
+                )
+                .select("id_a", "id_b")
+                .distinct()
             )
-            .select("id_a", "id_b")
-            .distinct()
+            pairs = (
+                cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+                .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+            )
+        else:
+            pairs = (
+                candidate_pairs.select("id_a", "id_b")
+                .join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+                .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+            )
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size(F.array_union("sh_a", "sh_b"))
+        jac = inter.cast("double") / union
+        out = pairs.withColumn("jaccard", jac).filter(F.col("jaccard") >= threshold).select(
+            "id_a", "id_b", "jaccard"
         )
-        pairs = (
-            cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-            .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        )
-    else:
-        pairs = (
-            candidate_pairs.select("id_a", "id_b")
-            .join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-            .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = inter.cast("double") / union
-    out = pairs.withColumn("jaccard", jac).filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
-    if candidate_pairs is not None:
-        return out  # no op-internal pins on this path
-    # Ownership (VERDICT r13 ask #6 / ADVICE r13 #1): materialize the
-    # (bounded, near-dup-pair-sized) result eagerly, then free the
-    # op-internal pins — the shingle checkpoint and the prefix cache —
-    # so a caller looping over corpora does not accumulate dead blocks.
-    # The returned checkpoint is the caller's to release.
-    result = out.localCheckpoint(eager=True)
-    try:
-        prefix.unpersist()
-    except Exception:
-        pass  # cleanup must never fail the query
-    _free_intermediates(documents.sparkSession, tracked)
-    return result
+        if candidate_pairs is not None:
+            return out  # no op-internal pins on this path
+        # Ownership (VERDICT r13 ask #6 / ADVICE r13 #1): materialize the
+        # (bounded, near-dup-pair-sized) result eagerly; the scope then frees
+        # the op-internal pins — the shingle checkpoint and the prefix cache —
+        # so a caller looping over corpora does not accumulate dead blocks.
+        # The returned checkpoint is the caller's to release.
+        return out.localCheckpoint(eager=True)
 
 
 def containment_pairs(
@@ -961,44 +952,39 @@ def winnow_overlap_pairs(
     pairs uncapped → ~3 s / bounded pairs at max_fp_df=10. ``None``
     disables the cap.
     """
-    from graph_loom_spark.graph import _free_intermediates, _tracked_checkpoint
     from graph_loom_spark.ops.text import winnow_fingerprints
 
-    spark = documents.sparkSession
-    tracked: list = []
-    # pin the fingerprint frame: the df-cap semi-join plus both sides of
-    # the pair join would otherwise re-run the winnow UDF lineage 4×;
-    # callers that already computed fingerprints (e.g. the entry layer's
-    # per-sf memo shared with the docs_winnow query) pass them in
-    if fps is None:
-        fps = _tracked_checkpoint(
-            winnow_fingerprints(
-                documents.select(
-                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    with scratch(documents.sparkSession) as s:
+        # pin the fingerprint frame: the df-cap semi-join plus both sides of
+        # the pair join would otherwise re-run the winnow UDF lineage 4×;
+        # callers that already computed fingerprints (e.g. the entry layer's
+        # per-sf memo shared with the docs_winnow query) pass them in
+        if fps is None:
+            fps = s.pin(
+                winnow_fingerprints(
+                    documents.select(
+                        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+                    )
                 )
-            ),
-            tracked,
+            )
+        if max_fp_df is not None:
+            keep = (
+                fps.groupBy("fp")
+                .agg(F.count(F.lit(1)).alias("__df"))
+                .filter(F.col("__df") <= max_fp_df)
+                .select("fp")
+            )
+            fps = fps.join(keep, "fp", "left_semi")
+        a = fps.select(F.col("doc_id").alias("id_a"), "fp")
+        b = fps.select(F.col("doc_id").alias("id_b"), "fp")
+        return (
+            a.join(b, "fp")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fps"))
+            .filter(F.col("shared_fps") >= min_shared)
+            .localCheckpoint(eager=True)
         )
-    if max_fp_df is not None:
-        keep = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_fp_df)
-            .select("fp")
-        )
-        fps = fps.join(keep, "fp", "left_semi")
-    a = fps.select(F.col("doc_id").alias("id_a"), "fp")
-    b = fps.select(F.col("doc_id").alias("id_b"), "fp")
-    result = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-        .localCheckpoint(eager=True)
-    )
-    _free_intermediates(spark, tracked)
-    return result
 
 
 def dup_ngram_coverage(
@@ -1191,47 +1177,46 @@ def exact_dup_spans(
         # the cap path is already hash-partitioned on gram by the df
         # window; only the uncapped path still needs the one exchange
         grams = grams.repartition(F.col("gram"))
-    # persisted (NOT localCheckpoint — a checkpoint's LogicalRDD drops
-    # outputPartitioning/ordering and the join would re-shuffle+re-sort
-    # both sides); released by this op after the result materializes
-    gp = grams.sortWithinPartitions("gram").persist()
-    a = gp.select(F.col("__id").alias("id_a"), F.col("pos").alias("pa"), "gram")
-    b = gp.select(F.col("__id").alias("id_b"), F.col("pos").alias("pb"), "gram")
-    m = (
-        a.join(b, "gram")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "pa", "pb", (F.col("pa") - F.col("pb")).alias("__diag"))
-    )
-    if pr is not None:
-        m = m.join(pr, ["id_a", "id_b"], "left_semi")
-    w = Window.partitionBy("id_a", "id_b", "__diag").orderBy("pa")
-    spans = (
-        m.withColumn("__isl", F.col("pa") - F.row_number().over(w))
-        .groupBy("id_a", "id_b", "__diag", "__isl")
-        .agg(
-            F.min("pa").alias("start_a"),
-            F.min("pb").alias("start_b"),
-            F.max("pa").alias("__max_pa"),
+    with scratch(documents.sparkSession) as s:
+        # persisted (NOT localCheckpoint — a checkpoint's LogicalRDD drops
+        # outputPartitioning/ordering and the join would re-shuffle+re-sort
+        # both sides); the seed join materializes it, and the scope releases
+        # it after the result materializes
+        gp = s.persist(grams.sortWithinPartitions("gram"), eager=False)
+        a = gp.select(F.col("__id").alias("id_a"), F.col("pos").alias("pa"), "gram")
+        b = gp.select(F.col("__id").alias("id_b"), F.col("pos").alias("pb"), "gram")
+        m = (
+            a.join(b, "gram")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", "pa", "pb", (F.col("pa") - F.col("pb")).alias("__diag"))
         )
-        .select(
-            "id_a",
-            "id_b",
-            F.col("start_a").cast("bigint").alias("start_a"),
-            F.col("start_b").cast("bigint").alias("start_b"),
-            (F.col("__max_pa") - F.col("start_a") + g).cast("bigint").alias("span_len"),
+        if pr is not None:
+            m = m.join(pr, ["id_a", "id_b"], "left_semi")
+        w = Window.partitionBy("id_a", "id_b", "__diag").orderBy("pa")
+        spans = (
+            m.withColumn("__isl", F.col("pa") - F.row_number().over(w))
+            .groupBy("id_a", "id_b", "__diag", "__isl")
+            .agg(
+                F.min("pa").alias("start_a"),
+                F.min("pb").alias("start_b"),
+                F.max("pa").alias("__max_pa"),
+            )
+            .select(
+                "id_a",
+                "id_b",
+                F.col("start_a").cast("bigint").alias("start_a"),
+                F.col("start_b").cast("bigint").alias("start_b"),
+                (F.col("__max_pa") - F.col("start_a") + g).cast("bigint").alias("span_len"),
+            )
         )
-    )
-    # Ownership (VERDICT r13 ask #6 / ADVICE r13 #1): materialize the
-    # span set eagerly and release the gram-stream cache inside the op —
-    # the only block a call leaves pinned is the returned frame itself
-    # (caller-owned; ``df.rdd.unpersist()`` frees it). Callers composing
-    # further (coverage, removal) consume the spans, not the grams.
-    result = spans.localCheckpoint(eager=True)
-    try:
-        gp.unpersist()
-    except Exception:
-        pass  # cleanup must never fail the query
-    return result
+        # Ownership (VERDICT r13 ask #6 / ADVICE r13 #1): materialize the
+        # span set eagerly and release the gram-stream cache inside the op —
+        # the only block a call leaves pinned is the returned frame itself,
+        # a checkpoint the caller frees through its analyzed plan's RDD
+        # (``df.unpersist()`` and ``df.rdd.unpersist()`` leave it pinned).
+        # Callers composing further (coverage, removal) consume the spans,
+        # not the grams.
+        return spans.localCheckpoint(eager=True)
 
 
 def exact_span_coverage(

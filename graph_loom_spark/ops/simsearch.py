@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graph_loom_spark.graph import scratch, shuffle_partitions
 from graph_loom_spark.ops import spread
 
 
@@ -547,8 +548,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1 << 20,
-    parts: int | None = None,
-    prequantized: bool = False,
 ):
     """Fully distributed Euclidean k-means (Lloyd's): returns
     ``(assigned, centroids)`` — the ``(vec_id, cluster)`` frame plus the
@@ -591,29 +590,28 @@ def kmeans_fit(
     import numpy as np
     import pandas as pd
 
-    from graph_loom_spark.graph import _free_intermediates, _tracked_checkpoint
-
     spark = embeddings.sparkSession
-    tracked: list = []
-    manage_conf = parts is None  # else the caller owns the conf (below)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # prequantized: the caller already lives on the int64 grid (e.g.
-        # ivfpq_fit's exact residuals) — quantizing again would floor a
-        # float round-trip of values the grid already owns
-        q = (
-            F.col(vec_col)
-            if prequantized
-            else F.transform(
-                F.col(vec_col),
-                lambda x: F.floor(
-                    x.cast("double") * F.lit(float(scale)) + F.lit(0.5)
-                ).cast("long"),
-            )
-        )
-        X = _tracked_checkpoint(
-            spread(embeddings.select(id_col, q.alias("__q"))), tracked
-        )
+    q = F.transform(
+        F.col(vec_col),
+        lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)).cast("long"),
+    )
+
+    def _assign(centroids: np.ndarray):
+        cn = (centroids.astype(np.int64) ** 2).sum(axis=1)
+
+        def _cell(v):
+            M = np.asarray(v.tolist(), dtype=np.int64)
+            if M.size == 0:
+                return pd.Series([], dtype="int32")
+            # exact int64 distance algebra: |x|^2 - 2 x·c + |c|^2
+            d2 = (M**2).sum(axis=1)[:, None] - 2 * (M @ centroids.T) + cn[None, :]
+            return pd.Series(np.argmin(d2, axis=1).astype("int32"))
+
+        _cell.__annotations__ = {"v": pd.Series, "return": pd.Series}
+        return F.pandas_udf(_cell, "int")
+
+    with scratch(spark) as s:
+        X = s.pin(spread(embeddings.select(id_col, q.alias("__q"))))
         init_rows = X.orderBy(id_col).limit(k).collect()
         if len(init_rows) < k:
             raise ValueError(f"k={k} exceeds row count {len(init_rows)}")
@@ -623,58 +621,34 @@ def kmeans_fit(
         # stream is n·dim longs and the reduce side is k·dim rows, so on
         # small inputs the session default (e.g. 32) means iters×32 near-empty
         # reduce tasks whose scheduling dominates the whole fit (measured
-        # ~10.8 s → ~5 s at sf0.1, 2k×64). Same save/restore lever as LPA;
-        # at cluster scale the n·dim term takes over and sizes it up.
-        # ``parts`` provided → the CALLER owns the session-conf set/restore
-        # (pq_fit sets it once outside its fit threads so no thread ever
-        # mutates shared session state) and this function is conf-read-only.
-        if manage_conf:
-            n_rows = X.count()
-            parts = int(max(8, (n_rows * dim) // 2_000_000))
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-
-        def _assign(centroids: np.ndarray):
-            cn = (centroids.astype(np.int64) ** 2).sum(axis=1)
-
-            def _cell(v):
-                M = np.asarray(v.tolist(), dtype=np.int64)
-                if M.size == 0:
-                    return pd.Series([], dtype="int32")
-                # exact int64 distance algebra: |x|^2 - 2 x·c + |c|^2
-                d2 = (M**2).sum(axis=1)[:, None] - 2 * (M @ centroids.T) + cn[None, :]
-                return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
-            _cell.__annotations__ = {"v": pd.Series, "return": pd.Series}
-            return F.pandas_udf(_cell, "int")
-
-        assigned = None
-        C_assign = C
-        for _ in range(iters):
-            C_assign = C  # the centroids the returned assignment was made with
-            assigned = X.select(
-                F.col(id_col), F.col("__q"), _assign(C)(F.col("__q")).alias("cluster")
-            )
-            upd = (
-                assigned.select(
-                    "cluster", F.posexplode(F.col("__q")).alias("pos", "val")
+        # ~10.8 s → ~5 s at sf0.1, 2k×64). Same lever as LPA; at cluster
+        # scale the n·dim term takes over and sizes it up.
+        n_rows = X.count()
+        with shuffle_partitions(spark, int(max(8, (n_rows * dim) // 2_000_000))):
+            assigned = None
+            C_assign = C
+            for _ in range(iters):
+                C_assign = C  # the centroids the returned assignment was made with
+                assigned = X.select(
+                    F.col(id_col), F.col("__q"), _assign(C)(F.col("__q")).alias("cluster")
                 )
-                .groupBy("cluster", "pos")
-                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            nxt = C.copy()  # empty clusters keep their previous centroid
-            for row in upd:
-                # Python floor division — the SQL oracle mirrors it with
-                # floor(s/n) (exact: |s| < 2^53)
-                nxt[row["cluster"], row["pos"]] = int(row["s"]) // int(row["n"])
-            if np.array_equal(nxt, C):
-                break
-            C = nxt
-        result = assigned.select(id_col, "cluster").localCheckpoint(eager=True)
-    finally:  # a failing fit leaks neither the conf nor the pinned projection
-        if manage_conf:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        _free_intermediates(spark, tracked)
+                upd = (
+                    assigned.select(
+                        "cluster", F.posexplode(F.col("__q")).alias("pos", "val")
+                    )
+                    .groupBy("cluster", "pos")
+                    .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+                    .collect()
+                )
+                nxt = C.copy()  # empty clusters keep their previous centroid
+                for row in upd:
+                    # Python floor division — the SQL oracle mirrors it with
+                    # floor(s/n) (exact: |s| < 2^53)
+                    nxt[row["cluster"], row["pos"]] = int(row["s"]) // int(row["n"])
+                if np.array_equal(nxt, C):
+                    break
+                C = nxt
+            result = assigned.select(id_col, "cluster").localCheckpoint(eager=True)
     return result, C_assign
 
 
@@ -1072,8 +1046,6 @@ def pq_fit(
     import numpy as np
     import pandas as pd
 
-    from graph_loom_spark.graph import _free_intermediates, _tracked_checkpoint
-
     head = embeddings.select(vec_col).head()
     if head is None:
         raise ValueError("pq_fit: empty embeddings")
@@ -1086,9 +1058,6 @@ def pq_fit(
     # the fused update shuffle carries n·dim longs (all m subspaces in
     # one pass — same total bytes the m per-slice shuffles carried)
     parts = int(max(8, (n_rows * dim) // 2_000_000))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    tracked: list = []
     q = (
         F.col(vec_col)
         if prequantized
@@ -1099,10 +1068,8 @@ def pq_fit(
             ).cast("long"),
         )
     )
-    try:
-        X = _tracked_checkpoint(
-            spread(embeddings.select(F.col(id_col), q.alias("__q"))), tracked
-        )
+    with shuffle_partitions(spark, parts), scratch(spark) as s:
+        X = s.pin(spread(embeddings.select(F.col(id_col), q.alias("__q"))))
         init_rows = X.orderBy(id_col).limit(k).collect()
         if len(init_rows) < k:
             raise ValueError(f"k={k} exceeds row count {len(init_rows)}")
@@ -1158,9 +1125,6 @@ def pq_fit(
             F.col(id_col),
             *[F.element_at("__codes", j + 1).alias(f"code_{j}") for j in range(m)],
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    _free_intermediates(spark, tracked)
     books = list(C_assign)
     # Observability for driver-vs-judge divergence hunts (VERDICT r6 #1):
     # a stable digest of the fitted codebooks, printed to stderr so any
@@ -2422,9 +2386,8 @@ def ivfpq_fit(
     ``assigned``).
 
     Scale shape: the residual projection is one broadcast join of the
-    k×dim centroid matrix onto a narrow scan; the m sub-fits are the
-    measured :func:`pq_fit` concurrent-job pattern over slim int
-    arrays.
+    k×dim centroid matrix onto a narrow scan, pinned for the one fused
+    :func:`pq_fit` over its slim int arrays and freed when it returns.
     """
     spark = embeddings.sparkSession
     cent = spark.createDataFrame(
@@ -2440,23 +2403,23 @@ def ivfpq_fit(
             "long"
         ),
     )
-    res = (
-        embeddings.select(F.col(id_col), q.alias("__q"))
-        .join(assigned.select(id_col, F.col("cluster").alias("cell")), id_col)
-        .join(F.broadcast(cent), "cell")
-        .select(
-            F.col(id_col),
-            F.zip_with(
-                F.col("__q"), F.col("__c"), lambda a, b: a - b
-            ).alias("residual"),
+    with scratch(spark) as s:
+        # materialize ONCE: the fit scans this frame several times (its
+        # quantized checkpoint, init rows, row count), so an unmaterialized
+        # plan re-runs the residual join each time (measured 14.0 s → the
+        # fit is the whole emb_ivfpq_topk bench line). Freed when the fit
+        # returns; the fit holds its own checkpoints.
+        res = s.pin(
+            embeddings.select(F.col(id_col), q.alias("__q"))
+            .join(assigned.select(id_col, F.col("cluster").alias("cell")), id_col)
+            .join(F.broadcast(cent), "cell")
+            .select(
+                F.col(id_col),
+                F.zip_with(
+                    F.col("__q"), F.col("__c"), lambda a, b: a - b
+                ).alias("residual"),
+            )
         )
-        # materialize ONCE: each of the m concurrent sub-fits checkpoints
-        # its slice of this frame, so an unmaterialized plan re-runs the
-        # residual join m times (measured 14.0 s → the fit is the whole
-        # emb_ivfpq_topk bench line)
-        .localCheckpoint(eager=True)
-    )
-    try:
         return pq_fit(
             res,
             m=m,
@@ -2468,11 +2431,6 @@ def ivfpq_fit(
             prequantized=True,
             track_digest=False,
         )
-    finally:
-        try:  # the sub-fits hold their own checkpoints; free this one
-            res.unpersist()
-        except Exception:
-            pass
 
 
 def ivfpq_topk(

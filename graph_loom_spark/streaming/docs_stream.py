@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graph_loom_spark.graph import scratch
+
 DOCS_RAW_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), True),
@@ -148,7 +150,6 @@ def _minhash_batch_processor(
     exposed so tests can drive it directly with explicit batch ids
     (including re-delivering the same batch to assert replay
     idempotency)."""
-    from graph_loom_spark.graph import _free_intermediates, _tracked_checkpoint
     from graph_loom_spark.ops.dedup import minhash_lsh_pairs, minhash_signatures
 
     if num_perm % bands != 0:
@@ -178,14 +179,15 @@ def _minhash_batch_processor(
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        tracked: list = []
-        try:
-            batch_df = _tracked_checkpoint(batch_df, tracked)
-            sigs = _tracked_checkpoint(
+        # the scope frees the two per-trigger checkpoints on every exit — a
+        # long-running stream otherwise pins two dead blocks per micro-batch
+        # forever
+        with scratch(spark) as s:
+            batch_df = s.pin(batch_df)
+            sigs = s.pin(
                 minhash_signatures(
                     batch_df, text_col=text_col, id_col=id_col, num_perm=num_perm
-                ),
-                tracked,
+                )
             )
             # --- vs the prior index, excluding this batch's own
             # partition (a failed earlier attempt of the SAME batch may
@@ -238,10 +240,6 @@ def _minhash_batch_processor(
             sigs.withColumnRenamed(id_col, "__old_id").write.mode("overwrite").parquet(
                 f"{index_dir}/__batch_id={int(batch_id)}"
             )
-        finally:
-            # free the two per-trigger checkpoint blocks — a long-running
-            # stream otherwise pins two dead blocks per micro-batch forever
-            _free_intermediates(spark, tracked)
 
     return _process
 

@@ -2,10 +2,11 @@
 (VERDICT r13 ask #3): the returned DataFrame of an iterative operator is
 an 8-line ``Scan ExistingRDD`` stub — the per-round plan the optimization
 claims are about is only visible on the frames as they are HANDED TO
-``_tracked_checkpoint`` (pre-checkpoint). This script wraps
-``_tracked_checkpoint`` (and, optionally, ``DataFrame.localCheckpoint``)
-during one real entry-query run and writes ``explain("formatted")`` of
-every captured call, labeled by call index, to one file.
+``Scratch.pin`` (pre-checkpoint), the one pin every op and graph write
+goes through. This script wraps ``Scratch.pin`` (and, optionally,
+``DataFrame.localCheckpoint``) during one real entry-query run and writes
+``explain("formatted")`` of every captured call, labeled by call index,
+to one file.
 
 Usage:
     python scripts/dump_iteration_plans.py QUERY_NAME [--sf DIR]
@@ -56,8 +57,7 @@ spark = get_spark(
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as entry  # noqa: E402
-from graph_loom_spark import analytics  # noqa: E402
-from graph_loom_spark import graph as graph_mod  # noqa: E402
+from graph_loom_spark.graph import Scratch  # noqa: E402
 
 captured: list[str] = []
 
@@ -68,27 +68,18 @@ def _fmt(df) -> str:
     )
 
 
-_orig_tracked = graph_mod._tracked_checkpoint
+_orig_pin = Scratch.pin
 
 
-def _spy_tracked(df, tracked):
+def _spy_pin(self, df):
     try:
         captured.append(_fmt(df))
     except Exception as e:  # capture must never change the run
         captured.append(f"<capture failed: {e}>")
-    return _orig_tracked(df, tracked)
+    return _orig_pin(self, df)
 
 
-# patch every binding: the graph module (covers in-function imports in
-# ops/*), analytics' module-level import, and the cypher compiler's
-graph_mod._tracked_checkpoint = _spy_tracked
-analytics._tracked_checkpoint = _spy_tracked
-try:
-    from graph_loom_spark.cypher import compiler as _cyp
-
-    _cyp._tracked_checkpoint = _spy_tracked
-except Exception:
-    pass
+Scratch.pin = _spy_pin
 
 if RAW_CKPT:
     # some operators call df.localCheckpoint(eager=True) directly (memo
@@ -116,7 +107,7 @@ path = os.path.join(OUT, f"{NAME}_ckpt_plans_{SUFFIX}.txt")
 with open(path, "w") as fh:
     fh.write(
         f"# pre-checkpoint plans captured during one real `{NAME}` run at "
-        f"{SF_DIR} — one section per _tracked_checkpoint call, in call "
+        f"{SF_DIR} — one section per Scratch.pin call, in call "
         "order (setup frames first, then one per iteration/round).\n"
     )
     for i, plan in enumerate(captured):

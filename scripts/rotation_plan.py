@@ -60,26 +60,8 @@ def latest_green_rounds(repo: str) -> dict[str, int]:
 
 def memo_groups(entry_mod) -> dict[str, int]:
     """name -> group id; entries sharing any memo cache share a group
-    (connected components over shared cache objects)."""
-    mm = entry_mod._memo_map()
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        parent[find(a)] = find(b)
-
-    for name, caches in mm.items():
-        for c in caches:
-            union(("n", name), ("c", id(c)))
-    groups: dict[str, int] = {}
-    for name in mm:
-        groups[name] = id(find(("n", name)))
-    return groups
+    (``_memo_families``)."""
+    return {n: gid for gid, names in enumerate(entry_mod._memo_families()) for n in names}
 
 
 def plan(entry_mod, repo: str) -> tuple[list[str], list[str], list[str]]:

@@ -1,11 +1,16 @@
 """An op that fails mid-loop must leave the session as it found it: its
 ``spark.sql.shuffle.partitions`` override restored and none of its
-intermediate checkpoints still pinned."""
+intermediate checkpoints still pinned. An op that succeeds leaves only
+the result it returns pinned."""
 
 from __future__ import annotations
 
 import pytest
 
+from graph_loom_spark import analytics
+from graph_loom_spark.cypher import compiler
+from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph
+from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.ops import bpe as ops_bpe
 from graph_loom_spark.ops import simsearch as sim
 
@@ -58,3 +63,64 @@ def test_kmeans_fit_failure_restores_conf_and_frees_checkpoints(spark, monkeypat
         "posexplode",  # the per-iteration centroid update
         lambda: sim.kmeans_fit(emb, k=4, iters=3),
     )
+
+
+def _ring(spark) -> PropertyGraph:
+    """Six nodes on a directed ring with one chord: every node has in- and
+    out-edges, and a 3-hop walk needs the var-length hop loop."""
+    ids = [f"n{i}" for i in range(6)]
+    nodes = spark.createDataFrame([(i, "V", {"name": i}) for i in ids], NODE_SCHEMA)
+    pairs = [(ids[i], ids[(i + 1) % 6]) for i in range(6)] + [(ids[0], ids[3])]
+    edges = spark.createDataFrame(
+        [(f"e{j}", a, b, "E", {}) for j, (a, b) in enumerate(pairs)], EDGE_SCHEMA
+    )
+    return PropertyGraph(spark, nodes, edges)
+
+
+# op -> (module whose ``F`` holds the step, a function only the op's loop
+# calls, the call)
+_LOOP_FAILURES = {
+    "pagerank": (analytics, "first", lambda spark, g: analytics.pagerank(g)),
+    "connected_components": (
+        analytics, "least", lambda spark, g: analytics.connected_components(g)
+    ),
+    "hits": (analytics, "sum", lambda spark, g: analytics.hits(g)),
+    "weighted_label_propagation": (
+        analytics, "first", lambda spark, g: analytics.weighted_label_propagation(g)
+    ),
+    "pq_fit": (
+        sim,
+        "posexplode",  # the fused per-iteration codebook update
+        lambda spark, g: sim.pq_fit(
+            spark.read.parquet(f"{SF_DIR}/embeddings.parquet"), m=4, k=4, iters=3
+        ),
+    ),
+    "cypher_var_length": (
+        compiler,
+        "broadcast",  # the per-hop frontier probe
+        lambda spark, g: CypherSession(g).execute(
+            'MATCH (a:V {name:"n0"})-[:E*1..3]->(b:V) RETURN b.name'
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOOP_FAILURES))
+def test_failure_restores_conf_and_frees_checkpoints(spark, monkeypatch, op):
+    module, step, call = _LOOP_FAILURES[op]
+    graph = _ring(spark)
+    _assert_failure_cleans_up(spark, monkeypatch, module, step, lambda: call(spark, graph))
+
+
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_ivfpq_fit_leaves_only_its_codes_pinned(spark):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    assigned, C = sim.kmeans_fit(emb, k=4, iters=2)
+    before = _persisted(spark)
+    codes, _ = sim.ivfpq_fit(emb, assigned, C, m=4, k=4, iters=2)
+    # the residual checkpoint the fit reads must be freed as well, and
+    # ``DataFrame.unpersist()`` leaves a checkpoint pinned
+    assert _persisted(spark) - before == {_rdd_id(codes)}

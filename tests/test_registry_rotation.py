@@ -155,3 +155,30 @@ def test_window_order_is_exactly_the_driver_prefix():
 
     assert len(entry._WINDOW_ORDER) == WINDOW
     assert list(entry.queries().keys())[:WINDOW] == entry._WINDOW_ORDER
+
+
+def test_memo_groups_give_each_memo_family_one_id():
+    """The planner pulls a consumer's producers in by group id, so every
+    query sharing a memo store, directly or through another query, must
+    get the same id (the families are recomputed here by plain set
+    merging over ``_memo_map()``)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "rotation_plan", os.path.join(REPO, "scripts", "rotation_plan.py")
+    )
+    rp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rp)
+    import __spark_entry__ as entry
+
+    families: list[tuple[set, set]] = []  # (names, store ids)
+    for name, stores in entry._memo_map().items():
+        names, ids = {name}, {id(s) for s in stores}
+        for fam in [f for f in families if f[1] & ids]:
+            names |= fam[0]
+            ids |= fam[1]
+            families.remove(fam)
+        families.append((names, ids))
+    groups = rp.memo_groups(entry)
+    assert all(len({groups[n] for n in names}) == 1 for names, _ in families)
+    assert len(set(groups.values())) == len(families)
