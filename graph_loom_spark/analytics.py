@@ -29,11 +29,14 @@ doubles per iteration. Skewed hub nodes are handled by AQE skew-join.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_loom_spark.graph import PropertyGraph, scratch, shuffle_partitions
+from graph_loom_spark.graph import (
+    BROADCAST_ROWS_MAX, PropertyGraph, broadcast_if_small, partitions_for, scratch, shuffle_partitions,
+)
 
 
 def degrees(graph: PropertyGraph) -> DataFrame:
@@ -143,9 +146,7 @@ def similarity_weights(graph: PropertyGraph) -> DataFrame:
     )
 
 
-def weighted_label_propagation(
-    graph: PropertyGraph, max_iter: int = 8, broadcast_nodes_max: int = 5_000_000
-) -> DataFrame:
+def weighted_label_propagation(graph: PropertyGraph, max_iter: int = 8) -> DataFrame:
     """Weighted LPA (frontend.rs:509-588): returns ``(id, community)``.
 
     Synchronous rounds: each node adopts argmax_c Σ w(u←v) over
@@ -176,15 +177,12 @@ def weighted_label_propagation(
     # cores ran rounds ~3× slower); the data-sized term takes over at
     # cluster scale
     n_nodes_total = graph.nodes.count()
-    parts = int(
-        max(
-            spark.sparkContext.defaultParallelism,
-            (n_nodes_total + 2 * graph.edges.count()) // 500_000,
-        )
+    parts = partitions_for(
+        n_nodes_total + 2 * graph.edges.count(), floor=spark.sparkContext.defaultParallelism
     )
     with shuffle_partitions(spark, parts), scratch(spark) as s:
         idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
-        if n_nodes_total <= broadcast_nodes_max:
+        if n_nodes_total <= BROADCAST_ROWS_MAX:
             # broadcast path: comm ships to the join as a broadcast, so
             # partitioning weights on the join key v buys NOTHING — but
             # partitioning on u lets BOTH per-round aggregations
@@ -213,16 +211,14 @@ def weighted_label_propagation(
             )
         )
         # The (iid, community) frame is 16 bytes/node. While it fits an
-        # executor broadcast (≤ broadcast_nodes_max nodes ≈ 80 MB), hint
+        # executor broadcast (≤ BROADCAST_ROWS_MAX nodes ≈ 80 MB), hint
         # it explicitly on the per-round score join (and the probe
         # joins): AQE does eventually convert it to broadcast, but only
         # after paying the comm-side exchange stages — measured
         # 7.6-8.7 s vs 2.0-2.8 s per round at sf0.1. Past the threshold
         # (cluster-scale |V|) the rounds fall back to the plain
         # co-shuffled joins.
-        bcast = (
-            F.broadcast if n_nodes_total <= broadcast_nodes_max else (lambda df: df)
-        )
+        bcast = broadcast_if_small(n_nodes_total)
         # Nodes with NO incoming weights rows never appear in a round's
         # argmax, so they keep their initial self-community forever.
         # Computing that set ONCE lets each round build the next
@@ -626,9 +622,7 @@ def _layout_step(
     )
 
 
-def connected_components(
-    graph: PropertyGraph, max_iter: int = 30, broadcast_nodes_max: int = 5_000_000
-) -> DataFrame:
+def connected_components(graph: PropertyGraph, max_iter: int = 30) -> DataFrame:
     """Undirected connected components (the reference's BFS flood,
     frontend.rs:3044-3063, generalized to all components): returns
     ``(id, component)`` where component is the smallest node id in the
@@ -669,13 +663,13 @@ def connected_components(
     # which every later level inherits) match the data, not the session
     n_edges = 2 * graph.edges.count()
     n_nodes = graph.nodes.count()
-    parts = int(max(8, (n_nodes + n_edges) // 500_000))
+    parts = partitions_for(n_nodes + n_edges)
     with shuffle_partitions(spark, parts), scratch(spark) as s:
         sadj = _directed_adjacency(graph.edges)
         adj_hashed = sadj.select(
             F.xxhash64("u").alias("u"), F.xxhash64("v").alias("v")
         ).repartition(parts, "u")
-        if n_nodes <= broadcast_nodes_max:
+        if n_nodes <= BROADCAST_ROWS_MAX:
             # persist (NOT localCheckpoint — that drops
             # outputPartitioning): level 0's groupBy(u) — the single
             # biggest shuffle of the whole contraction, 2|E| rows —
@@ -692,7 +686,7 @@ def connected_components(
         # broadcast, every level's two rebuild joins can skip the m-side
         # exchanges (same measured lever as the LPA comm broadcast); at
         # cluster scale the plain co-shuffled joins remain.
-        bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
+        bcast = broadcast_if_small(n_nodes)
         for _ in range(max_iter):
             m = s.pin(
                 cur.groupBy("u")
@@ -1127,13 +1121,25 @@ def avg_neighbor_degree(
     )
 
 
+def _edge_idmap(edges_df: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(id, n)`` for every endpoint of a plain ``(src, dst)`` edge list:
+    the distinct ids and their xxhash64 surrogates. The surrogates hash
+    the STRING form so int and string id columns get the same treatment;
+    ``id`` keeps the original type for the join back."""
+    return (
+        edges_df.select(F.col(src).alias("id"))
+        .unionAll(edges_df.select(F.col(dst).alias("id")))
+        .distinct()
+        .select("id", F.xxhash64(F.col("id").cast("string")).alias("n"))
+    )
+
+
 def bfs_distances(
     edges_df: DataFrame,
     source=None,
     max_depth: int = 12,
     src: str = "src",
     dst: str = "dst",
-    broadcast_frontier_max: int = 5_000_000,
 ) -> DataFrame:
     """Single-source BFS shortest-path distances over an undirected
     simple graph given as a plain ``(src, dst)`` edge list: returns
@@ -1147,7 +1153,7 @@ def bfs_distances(
     current frontier, a distinct, and an anti-join against the visited
     set. Total work is O(|E| · levels-touched) worst case but each edge
     is effectively expanded once per endpoint; the frontier is
-    broadcast-hinted while it fits (``broadcast_frontier_max``) so the
+    broadcast-hinted while it fits (:data:`~graph_loom_spark.graph.BROADCAST_ROWS_MAX`) so the
     big adjacency side never re-shuffles — at 100 TB the adjacency is
     partitioned once and every level is a broadcast probe into it.
     The per-level ``count()`` doubles as the termination check and the
@@ -1166,12 +1172,7 @@ def bfs_distances(
         edges_df = s.pin(edges_df.select(src, dst))
         sc_ = F.col(src).cast("string")
         dc_ = F.col(dst).cast("string")
-        idmap = s.pin(
-            edges_df.select(F.col(src).alias("id"))
-            .unionAll(edges_df.select(F.col(dst).alias("id")))
-            .distinct()
-            .select("id", F.xxhash64(F.col("id").cast("string")).alias("n"))
-        )
+        idmap = s.pin(_edge_idmap(edges_df, src, dst))
         e0 = edges_df.select(F.xxhash64(sc_).alias("a"), F.xxhash64(dc_).alias("b")).filter(
             F.col("a") != F.col("b")
         )
@@ -1201,18 +1202,14 @@ def bfs_distances(
         depth = 0
         while n_frontier > 0 and depth < max_depth:
             depth += 1
-            bcast = (
-                F.broadcast if n_frontier <= broadcast_frontier_max else (lambda df: df)
-            )
+            bcast = broadcast_if_small(n_frontier)
             # the visited set is bounded by |V|; while it fits the same
             # broadcast budget, hint it so the dedup anti-join is map-side
             # too — otherwise every level pays an O(|visited|) shuffle that
             # grows toward O(|V|) at the deep levels (AQE can't see the
             # size of a union of checkpoints). Past the budget both sides
             # fall back to the co-shuffled anti-join.
-            vcast = (
-                F.broadcast if n_visited <= broadcast_frontier_max else (lambda df: df)
-            )
+            vcast = broadcast_if_small(n_visited)
             new = s.pin(
                 adj.join(bcast(frontier.select(F.col("n").alias("u"))), "u")
                 .select(F.col("v").alias("n"))
@@ -1237,195 +1234,222 @@ def bfs_distances(
         )
 
 
+# Fixed-point grids: pagerank and PPR ranks are longs in units of 1e-12,
+# HITS scores in units of 1e-9 (the SQL oracles replay both grids).
+_RANK_SCALE = 10**12
+_HITS_SCALE = 10**9
+
+
+@contextmanager
+def _surrogate_ids(graph: PropertyGraph):
+    """The prologue of the rank ops (:func:`_rank_iteration`,
+    :func:`hits`): pin the ``(id, iid)`` xxhash64 surrogate map, count
+    |V| and |E|, and widen the shuffle to :func:`partitions_for` of
+    |V|+|E| BEFORE any pinned edge frame is built, so the partitioning
+    baked into those frames matches the data. Yields ``(s, idmap,
+    n_nodes, edges_h)``: the op's scratch scope, the pinned map, |V| and
+    the lazy surrogate edge list ``(u, v)``.
+
+    r14-opt (the connected_components lever, VERDICT r13 ask #1): at
+    sf0.1 these ops were fixed-cost-bound — the 8-core bench BEAT the
+    32-core one — because each of the ~3 jobs per iteration scheduled
+    session-partition-count near-empty tasks.
+    """
+    spark = graph.nodes.sparkSession
+    with scratch(spark) as s:
+        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
+        n_nodes = idmap.count()
+        with shuffle_partitions(spark, partitions_for(n_nodes + graph.edges.count())):
+            edges_h = graph.edges.select(F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v"))
+            yield s, idmap, n_nodes, edges_h
+
+
+def _rank_iteration(
+    graph: PropertyGraph, iters: int, damping: float,
+    seeds: DataFrame | None = None, pre_aggregate_edges: bool = False,
+) -> DataFrame:
+    """The power iteration behind :func:`pagerank` (``seeds=None``: every
+    node teleports) and :func:`personalized_pagerank` (the teleport and
+    the dangling mass go to the ``seeds`` node set only); returns
+    ``(id, rank)``. With T the teleport set (all N nodes, or the seeds)::
+
+        r ← (1−d)·1[v∈T]/|T| + d·(Σ_{u→v} r_u/outdeg_u + 1[v∈T]·dm/|T|)
+
+    **Fixed-point integer arithmetic**: ranks are longs in units of
+    1e-12, per-edge contributions are integer divisions, and damping is
+    applied as the rational ``round(damping·100)/100``. Integer sums
+    are associative, so the result is bit-identical across engines,
+    partitionings, AQE decisions, and reruns — the determinism a 100 TB
+    nightly job needs for diffable outputs (float PageRank changes in
+    the 15th digit whenever the reduction order moves), and what lets
+    an ANSI-SQL oracle replay the algorithm exactly. Each node drops at
+    most ``outdeg·1e-12`` of mass per round to floor division — far
+    below any ranking-relevant difference. The returned ``rank`` is the
+    exact double ``r·1e-12`` (r < 2^53).
+
+    Scale shape: the per-iteration work is one equi-join of the rank
+    frame with the (pre-partitioned, persisted) out-degree-annotated
+    edge list plus one partial-aggregable groupBy on dst — both on
+    8-byte xxhash64 surrogates; the dangling mass is a 1-row aggregate
+    broadcast into the update expression, so a seeded iteration costs
+    what a uniform one does. Lineage is checkpointed per round.
+    """
+    dn = int(round(damping * 100))  # damping at 2-decimal precision
+    with _surrogate_ids(graph) as (s, idmap, n_nodes, edges_h):
+        # the rank frame is 16 bytes/node: hinted as a broadcast on the
+        # contrib join against the big pinned edge frame while it fits
+        # (same lever and threshold as weighted_label_propagation)
+        bcast = broadcast_if_small(n_nodes)
+        if seeds is None:
+            n_tele = n_nodes
+        else:
+            seed_nodes = graph.nodes.join(seeds.select("id"), "id", "left_semi")
+            src = s.pin(seed_nodes.select(F.xxhash64("id").alias("nid")))
+            n_tele = src.count()
+            if n_tele == 0:
+                raise ValueError("personalized_pagerank: empty source set")
+        # r13-opt: on a MULTIGRAPH (the web host graph: corpus-sized link
+        # records over a small host×host pair set) collapsing parallel
+        # edges to (u, v, multiplicity) BEFORE the loop means the one
+        # corpus-sized pass is the partial-agg groupBy and every iteration
+        # joins only the distinct pair set. Bit-exact: each parallel edge
+        # contributes the identical integer ``r div od``, so k of them sum
+        # to ``k * (r div od)``, and od = Σ multiplicities is the same
+        # count. Opt-in because on a simple graph (the tpch projection:
+        # 100% unique pairs) the extra aggregation buys nothing.
+        if pre_aggregate_edges:
+            # checkpoint the collapsed pair set: outdeg below and the
+            # ed build would otherwise each re-run the corpus-sized
+            # multiplicity groupBy (r14-opt, guide §1.2)
+            ew = s.pin(edges_h.groupBy("u", "v").agg(F.count(F.lit(1)).alias("__k")))
+            outdeg = ew.groupBy("u").agg(F.sum("__k").alias("od"))
+            contrib_c = F.expr("__k * (r div od)").alias("c")
+        else:
+            ew = edges_h
+            outdeg = edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od"))
+            contrib_c = F.expr("r div od").alias("c")
+        # r14-opt: checkpoint the out-degree frame (≤ |V| slim rows) —
+        # it feeds THREE setup consumers (the ed join, the ed dangling
+        # flag probe, the ranks flag probe), which each re-executed the
+        # |E|-row degree aggregate when it was left lazy
+        outdeg = s.pin(outdeg)
+        # per-node static flags: __d (dangling: no out-edges) and, seeded,
+        # __s (seed); the uniform start rank rides the same frame, so it
+        # is the first rank frame, while the seeded one derives it below
+        stat = idmap.select(F.col("iid").alias("nid"))
+        if seeds is None:
+            flags, head = ["__d"], ["r"]
+            stat = stat.select("nid", F.lit(_RANK_SCALE // n_nodes).cast("long").alias("r"))
+        else:
+            flags, head = ["__s", "__d"], [F.coalesce("__s", F.lit(0)).alias("__s")]
+            stat = stat.join(bcast(src.withColumn("__s", F.lit(1))), "nid", "left")
+        stat = s.pin(
+            stat.join(
+                bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))), "nid", "left"
+            ).select("nid", *head, F.coalesce("__o", F.lit(1)).alias("__d"))
+        )
+        # persist (NOT localCheckpoint — that drops outputPartitioning)
+        # partitioned by the CONTRIBUTION-AGG key v: the rank side of the
+        # per-iteration join is broadcast, so join-key partitioning buys
+        # nothing, while HashPartitioning(v) lets every iteration's
+        # groupBy(v) reuse the layout — zero exchanges per contrib pass
+        # (same lever as weighted_label_propagation's weights frame).
+        # The destination's static flags are functionally dependent on v,
+        # so they ride the pinned frame (one size-gated join at build
+        # time) instead of a per-iteration |V|-row broadcast join against
+        # the aggregated contribs (r13-opt, the LPA cstr lever; r14-opt
+        # added the dangling flag): each iteration's dangling-mass
+        # aggregate then scans the previous rank checkpoint directly.
+        ed = ew.join(outdeg, "u")
+        if seeds is None:
+            ranks = stat
+            vflags = outdeg.select(F.col("u").alias("v"), F.lit(0).alias("__dv0"))
+            ed = (
+                ed.join(bcast(vflags), "v", "left")
+                .withColumn("__dv", F.coalesce(F.col("__dv0"), F.lit(1)))
+                .drop("__dv0")
+            )
+        else:
+            start = (F.col("__s") * F.lit(_RANK_SCALE // n_tele)).cast("long").alias("r")
+            ranks = s.pin(stat.select("nid", start, "__d"))
+            vflags = stat.select(
+                F.col("nid").alias("v"), F.col("__s").alias("__sv"), F.col("__d").alias("__dv")
+            )
+            ed = ed.join(bcast(vflags), "v")
+        ed = s.persist(ed.repartition(F.col("v")))
+        # Nodes with NO in-edges never receive contributions, so their
+        # update is the closed form every iteration. Computing that static
+        # set ONCE (distinct v reuses the persisted edge frame's
+        # v-partitioning — exchange-free) lets each iteration build the
+        # next rank frame as contrib ∪ noin instead of left-joining the
+        # full previous frame against a |V|-row broadcast of contrib —
+        # one fewer |V|-row broadcast build and one fewer |V|-row join
+        # scan per iteration (same measured lever as the LPA round
+        # restructure: 8 LPA rounds 15.0 s → 12.5 s at sf0.1).
+        has_in = bcast(ed.select(F.col("v").alias("nid")).distinct())
+        noin = s.pin(stat.select("nid", *flags).join(has_in, "nid", "left_anti"))
+        # the teleport and dangling terms reach only the seeds (__s = 1)
+        tele = "" if seeds is None else "__s * "
+        base = ((100 - dn) * _RANK_SCALE) // (100 * n_tele)
+        update_expr = F.expr(
+            f"{tele}cast({base} as bigint) + "
+            f"({dn} * (coalesce(__in, cast(0 as bigint)) + {tele}(__dm div {n_tele})))"
+            " div 100"
+        ).alias("r")
+        for _ in range(iters):
+            contrib = (
+                ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
+                .select(F.col("v").alias("nid"), contrib_c, *[f + "v" for f in flags])
+                .groupBy("nid")
+                # first() is safe: the flags are functionally dependent on nid
+                .agg(F.sum("c").alias("__in"), *[F.first(f + "v").alias(f) for f in flags])
+            )
+            # dangling mass folded into the plan as a broadcast 1-row
+            # aggregate (same pattern as the layout COM broadcast) — a
+            # driver-side collect here cost an extra action + job per
+            # iteration for a single long; the __d flag riding the rank
+            # frame makes it join-free (r14-opt).
+            dmass_df = ranks.agg(
+                F.coalesce(F.sum(F.when(F.col("__d") == 1, F.col("r"))), F.lit(0).cast("long"))
+                .alias("__dm")
+            )
+            ranks = s.pin(
+                contrib.crossJoin(F.broadcast(dmass_df))
+                .select("nid", update_expr, "__d")
+                .unionByName(
+                    noin.withColumn("__in", F.lit(None).cast("long"))
+                    .crossJoin(F.broadcast(dmass_df))
+                    .select("nid", update_expr, "__d")
+                )
+            )
+        return (
+            ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
+            .select("id", (F.col("r").cast("double") / F.lit(float(_RANK_SCALE))).alias("rank"))
+            .localCheckpoint(eager=True)
+        )
+
+
 def pagerank(
-    graph: PropertyGraph,
-    iters: int = 5,
-    damping: float = 0.85,
-    broadcast_nodes_max: int = 5_000_000,
-    scale: int = 10**12,
-    pre_aggregate_edges: bool = False,
+    graph: PropertyGraph, iters: int = 5, damping: float = 0.85, pre_aggregate_edges: bool = False
 ) -> DataFrame:
     """Directed PageRank, fixed ``iters`` power iterations: returns
     ``(id, rank)`` with ranks summing to ~1.
 
     r ← (1−d)/N + d·(Σ_{u→v} r_u/outdeg_u + dangling_mass/N), the
     standard formulation with dangling-node mass redistributed
-    uniformly — computed in **fixed-point integer arithmetic**: ranks
-    are ``scale``-denominated longs (micro-units of 1/scale, default
-    1e-12), per-edge contributions are integer divisions, and damping
-    is applied as the rational ``round(damping·100)/100``. Integer sums
-    are associative, so the result is bit-identical across engines,
-    partitionings, AQE decisions, and reruns — the determinism a 100 TB
-    nightly job needs for diffable outputs (float PageRank changes in
-    the 15th digit whenever the reduction order moves), and what lets
-    an ANSI-SQL oracle replay the algorithm exactly. Each node drops at
-    most ``outdeg/scale`` of mass per round to floor division —
-    ~1e-12-scale, far below any ranking-relevant difference. The
-    returned ``rank`` is the exact double ``r/scale`` (r < 2^53).
+    uniformly — computed in fixed-point integer arithmetic on a 1e-12
+    grid, bit-identical across engines and reruns. The arithmetic and
+    the scale shape are :func:`_rank_iteration`'s.
 
-    Scale shape: the per-iteration work is one equi-join of the rank
-    frame with the (pre-partitioned, checkpointed) out-degree-annotated
-    edge list plus one partial-aggregable groupBy on dst — both on
-    8-byte xxhash64 surrogates; the dangling mass is a 1-row aggregate
-    broadcast into the update expression. Lineage is checkpointed per
-    round; intermediates are freed before returning (string ids join
-    back once at the end).
+    ``pre_aggregate_edges=True`` collapses parallel edges to
+    multiplicities before the loop (bit-exact; pays off on a multigraph
+    such as a web host graph).
     """
-    spark = graph.nodes.sparkSession
-    dn = int(round(damping * 100))  # damping at 2-decimal precision
-    # r14-opt: size the iterative shuffle partitions from the DATA, not
-    # the session (the connected_components lever, VERDICT r13 ask #1):
-    # at sf0.1 the whole block is fixed-cost-bound — the 8-core bench
-    # BEAT the 32-core bench and every scaling ratio sat at/below 1 —
-    # because each of the ~3 jobs per iteration schedules
-    # session-partition-count near-empty tasks. Data-sized partitions
-    # (~500k rows each, floor 8) cut the per-iteration task count at
-    # small relative scale while growing with |V|+|E| on a cluster. Set
-    # BEFORE building the pinned edge frame so the partitioning baked
-    # into it matches the data.
-    with scratch(spark) as s:
-        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
-        n_nodes = idmap.count()
-        n_edges = graph.edges.count()
-        parts = int(max(8, (n_nodes + n_edges) // 500_000))
-        with shuffle_partitions(spark, parts):
-            edges_h = graph.edges.select(
-                F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
-            )
-            # r13-opt: on a MULTIGRAPH (the web host graph: corpus-sized link
-            # records over a small host×host pair set) collapsing parallel
-            # edges to (u, v, multiplicity) BEFORE the loop means the one
-            # corpus-sized pass is the partial-agg groupBy and every iteration
-            # joins only the distinct pair set. Bit-exact: each parallel edge
-            # contributes the identical integer ``r div od``, so k of them sum
-            # to ``k * (r div od)``, and od = Σ multiplicities is the same
-            # count. Opt-in because on a simple graph (the tpch projection:
-            # 100% unique pairs) the extra aggregation buys nothing.
-            # The rank frame is 16 bytes/node — while it fits an executor
-            # broadcast, hint it on the contrib join against the big pinned
-            # edge frame. Same lever and threshold as
-            # weighted_label_propagation: AQE would convert it eventually but
-            # only after paying the exchange stages on the data-sized side
-            # every iteration.
-            bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-            if pre_aggregate_edges:
-                # checkpoint the collapsed pair set: outdeg below and the
-                # ed build would otherwise each re-run the corpus-sized
-                # multiplicity groupBy (r14-opt, guide §1.2)
-                ew = s.pin(edges_h.groupBy("u", "v").agg(F.count(F.lit(1)).alias("__k")))
-                outdeg = ew.groupBy("u").agg(F.sum("__k").alias("od"))
-                contrib_c = F.expr("__k * (r div od)").alias("c")
-            else:
-                ew = edges_h
-                outdeg = edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od"))
-                contrib_c = F.expr("r div od").alias("c")
-            # r14-opt: checkpoint the out-degree frame (≤ |V| slim rows) —
-            # it feeds THREE setup consumers (the ed join, the ed dangling
-            # flag probe, the ranks flag probe), which each re-executed the
-            # |E|-row degree aggregate when it was left lazy
-            outdeg = s.pin(outdeg)
-            # persist (NOT localCheckpoint — that drops outputPartitioning)
-            # partitioned by the CONTRIBUTION-AGG key v: the rank side of the
-            # per-iteration join is broadcast, so join-key partitioning buys
-            # nothing, while HashPartitioning(v) lets every iteration's
-            # groupBy(v) reuse the layout — zero exchanges per contrib pass
-            # (same lever as weighted_label_propagation's weights frame).
-            # r14-opt: the destination's DANGLING flag (v has no out-edges)
-            # rides the pinned frame — one size-gated join at build time —
-            # exactly like PPR's seed flag, so each iteration's dangling-mass
-            # aggregate scans the previous rank checkpoint directly instead
-            # of joining it against a fresh broadcast of the dangling set
-            # (one fewer broadcast build + |V|-row probe per iteration).
-            ed = s.persist(
-                ew.join(outdeg, "u")
-                .join(
-                    bcast(outdeg.select(F.col("u").alias("v"), F.lit(0).alias("__dv0"))),
-                    "v",
-                    "left",
-                )
-                .withColumn("__dv", F.coalesce(F.col("__dv0"), F.lit(1)))
-                .drop("__dv0")
-                .repartition(F.col("v"))
-            )
-            # ranks carries the node's own dangling flag (__d, functionally
-            # dependent on nid): the per-iteration dangling mass becomes a
-            # single partial aggregate over this checkpointed frame
-            ranks = s.pin(
-                idmap.select(
-                    F.col("iid").alias("nid"),
-                    F.lit(scale // n_nodes).cast("long").alias("r"),
-                )
-                .join(
-                    bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))),
-                    "nid",
-                    "left",
-                )
-                .select("nid", "r", F.coalesce(F.col("__o"), F.lit(1)).alias("__d"))
-            )
-            # Nodes with NO in-edges never receive contributions, so their
-            # update is the closed form base + d·(dm/N) every iteration.
-            # Computing that static set ONCE (distinct v reuses the persisted
-            # edge frame's v-partitioning — exchange-free) lets each iteration
-            # build the next rank frame as contrib ∪ noin instead of
-            # left-joining the full previous frame against a |V|-row broadcast
-            # of contrib — one fewer |V|-row broadcast build and one fewer
-            # |V|-row join scan per iteration (same measured lever as the LPA
-            # round restructure: 8 LPA rounds 15.0 s → 12.5 s at sf0.1).
-            noin = s.pin(
-                ranks.select("nid", "__d").join(
-                    bcast(ed.select(F.col("v").alias("nid")).distinct()),
-                    "nid",
-                    "left_anti",
-                )
-            )
-            base = ((100 - dn) * scale) // (100 * n_nodes)
-            update_expr = F.expr(
-                f"cast({base} as bigint) + "
-                f"({dn} * (coalesce(__in, cast(0 as bigint)) + __dm div {n_nodes}))"
-                " div 100"
-            ).alias("r")
-            for _ in range(iters):
-                contrib = (
-                    ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
-                    .select(F.col("v").alias("nid"), contrib_c, "__dv")
-                    .groupBy("nid")
-                    # first() is safe: __dv is functionally dependent on nid
-                    .agg(F.sum("c").alias("__in"), F.first("__dv").alias("__d"))
-                )
-                # dangling mass folded into the plan as a broadcast 1-row
-                # aggregate (same pattern as the layout COM broadcast) — a
-                # driver-side collect here cost an extra action + job per
-                # iteration for a single long; the __d flag riding the rank
-                # frame makes it join-free (r14-opt).
-                dmass_df = ranks.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("__d") == 1, F.col("r"))),
-                        F.lit(0).cast("long"),
-                    ).alias("__dm")
-                )
-                ranks = s.pin(
-                    contrib.crossJoin(F.broadcast(dmass_df))
-                    .select("nid", update_expr, "__d")
-                    .unionByName(
-                        noin.withColumn("__in", F.lit(None).cast("long"))
-                        .crossJoin(F.broadcast(dmass_df))
-                        .select("nid", update_expr, "__d")
-                    )
-                )
-            return (
-                ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
-                .select("id", (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"))
-                .localCheckpoint(eager=True)
-            )
+    return _rank_iteration(graph, iters, damping, pre_aggregate_edges=pre_aggregate_edges)
 
 
 def personalized_pagerank(
-    graph: PropertyGraph,
-    sources: DataFrame,
-    iters: int = 5,
-    damping: float = 0.85,
-    broadcast_nodes_max: int = 5_000_000,
-    scale: int = 10**12,
+    graph: PropertyGraph, sources: DataFrame, iters: int = 5, damping: float = 0.85
 ) -> DataFrame:
     """Personalized PageRank: random walks restart into the ``sources``
     node set (one ``id`` column) instead of uniformly — the
@@ -1435,236 +1459,93 @@ def personalized_pagerank(
 
     r ← (1−d)·1[v∈S]/|S| + d·(Σ_{u→v} r_u/outdeg_u + 1[v∈S]·dm/|S|)
     — both the teleport and the dangling redistribution go to the seed
-    set (the standard PPR formulation). Same fixed-point integer
-    arithmetic and scale levers as :func:`pagerank` (scale-denominated
-    longs, floor divisions, rational damping, v-partitioned persisted
-    edge frame, broadcast rank frame below ``broadcast_nodes_max``,
-    per-round checkpoints, dangling mass as a broadcast 1-row
-    aggregate); the destination's seed flag rides the pinned edge frame
-    (one size-gated broadcast join at build time, r13-opt), so an
-    iteration costs exactly what the uniform variant's does.
+    set (the standard PPR formulation). The fixed-point arithmetic and
+    the scale shape are :func:`_rank_iteration`'s; with every node as a
+    seed the ranks equal :func:`pagerank`'s bit for bit. Raises
+    ``ValueError`` when no source id is a node.
     """
-    spark = graph.nodes.sparkSession
-    dn = int(round(damping * 100))
-    # r14-opt: data-sized iterative shuffle partitions, set before the
-    # pinned frames are built — see :func:`pagerank` for the measured
-    # anti-scaling rationale.
-    with scratch(spark) as s:
-        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
-        n_nodes = idmap.count()
-        n_edges = graph.edges.count()
-        parts = int(max(8, (n_nodes + n_edges) // 500_000))
-        with shuffle_partitions(spark, parts):
-            src = s.pin(
-                graph.nodes.join(sources.select("id"), "id", "left_semi").select(
-                    F.xxhash64("id").alias("nid")
-                )
-            )
-            n_src = src.count()
-            if n_src == 0:
-                raise ValueError("personalized_pagerank: empty source set")
-            edges_h = graph.edges.select(
-                F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
-            )
-            # r14-opt: checkpointed — feeds the stat flag probe AND the ed
-            # join, which each re-executed the |E|-row aggregate when lazy
-            outdeg = s.pin(edges_h.groupBy("u").agg(F.count(F.lit(1)).alias("od")))
-            bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-            # static per-node seed flag + dangling flag + teleport base; all
-            # mass starts on S. __d (no out-edges) rides the frames exactly
-            # like __s, so the per-iteration dangling-mass aggregate scans
-            # the previous rank checkpoint join-free (r14-opt — the same
-            # lever as pagerank's).
-            base = ((100 - dn) * scale) // (100 * n_src)
-            stat = s.pin(
-                idmap.select(F.col("iid").alias("nid"))
-                .join(bcast(src.withColumn("__s", F.lit(1))), "nid", "left")
-                .join(
-                    bcast(outdeg.select(F.col("u").alias("nid"), F.lit(0).alias("__o"))),
-                    "nid",
-                    "left",
-                )
-                .select(
-                    "nid",
-                    F.coalesce("__s", F.lit(0)).alias("__s"),
-                    F.coalesce("__o", F.lit(1)).alias("__d"),
-                )
-            )
-            # r13-opt: the destination's seed flag is functionally dependent
-            # on v, so it rides the pinned edge frame (one size-gated join at
-            # build time) instead of a per-iteration |V|-row broadcast join
-            # against the aggregated contribs — one fewer broadcast build +
-            # |V|-row probe scan per iteration (the LPA cstr lever; measured
-            # the same way: the stat broadcast was the only per-round cost
-            # PPR paid over uniform pagerank). r14-opt: __dv rides the same
-            # build join.
-            ed = s.persist(
-                edges_h.join(outdeg, "u")
-                .join(
-                    bcast(
-                        stat.select(
-                            F.col("nid").alias("v"),
-                            F.col("__s").alias("__sv"),
-                            F.col("__d").alias("__dv"),
-                        )
-                    ),
-                    "v",
-                )
-                .repartition(F.col("v"))
-            )
-            ranks = s.pin(
-                stat.select(
-                    "nid",
-                    (F.col("__s") * F.lit(scale // n_src)).cast("long").alias("r"),
-                    "__d",
-                )
-            )
-            noin = s.pin(
-                stat.join(
-                    bcast(ed.select(F.col("v").alias("nid")).distinct()), "nid", "left_anti"
-                )
-            )
-            update_expr = F.expr(
-                f"__s * cast({base} as bigint) + "
-                f"({dn} * (coalesce(__in, cast(0 as bigint)) + __s * (__dm div {n_src})))"
-                " div 100"
-            ).alias("r")
-            for _ in range(iters):
-                contrib = (
-                    ed.join(bcast(ranks.select(F.col("nid").alias("u"), "r")), "u")
-                    .select(
-                        F.col("v").alias("nid"),
-                        F.expr("r div od").alias("c"),
-                        F.col("__sv"),
-                        F.col("__dv"),
-                    )
-                    .groupBy("nid")
-                    # first() is safe: __sv/__dv are functionally dependent on nid
-                    .agg(
-                        F.sum("c").alias("__in"),
-                        F.first("__sv").alias("__s"),
-                        F.first("__dv").alias("__d"),
-                    )
-                )
-                dmass_df = ranks.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("__d") == 1, F.col("r"))),
-                        F.lit(0).cast("long"),
-                    ).alias("__dm")
-                )
-                ranks = s.pin(
-                    contrib.crossJoin(F.broadcast(dmass_df))
-                    .select("nid", update_expr, "__d")
-                    .unionByName(
-                        noin.withColumn("__in", F.lit(None).cast("long"))
-                        .crossJoin(F.broadcast(dmass_df))
-                        .select("nid", update_expr, "__d")
-                    )
-                )
-            return (
-                ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
-                .select("id", (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"))
-                .localCheckpoint(eager=True)
-            )
+    return _rank_iteration(graph, iters, damping, seeds=sources)
 
 
-def hits(
-    graph: PropertyGraph,
-    iters: int = 3,
-    broadcast_nodes_max: int = 5_000_000,
-    scale: int = 10**9,
-) -> DataFrame:
+def hits(graph: PropertyGraph, iters: int = 3) -> DataFrame:
     """HITS hubs & authorities (Kleinberg, JACM 1999), fixed ``iters``
     mutual-reinforcement iterations: returns ``(id, hub, authority)``.
 
-    Fixed-point integer arithmetic with L∞ (max) normalization — per
-    iteration, from ``h₀ = scale`` everywhere::
+    Fixed-point integer arithmetic with L∞ (max) normalization on a
+    ``S = 1e9`` grid — per iteration, from ``h₀ = S`` everywhere::
 
-        a_raw(v) = Σ_{u→v} h(u);   a = a_raw div max(1, amax div scale)
-        h_raw(u) = Σ_{u→v} a(v);   h = h_raw div max(1, hmax div scale)
+        a_raw(v) = Σ_{u→v} h(u);   a = a_raw div max(1, amax div S)
+        h_raw(u) = Σ_{u→v} a(v);   h = h_raw div max(1, hmax div S)
 
     The truncating integer normalizer keeps every score an int64
-    (values stay ≤ ~2·scale, sums need in-degree·2·scale < 2⁶³ — at the
-    default 1e-9 grid that holds to ~10⁹-degree hubs) and, unlike the
+    (values stay ≤ ~2·S, sums need in-degree·2·S < 2⁶³ — on the 1e-9
+    grid that holds to ~10⁹-degree hubs) and, unlike the
     textbook L2 norm, is exactly replayable by any engine: integer sums
     are order-independent, so results are bit-identical across
     partitionings/AQE/reruns and an ANSI-SQL oracle replays every
     iteration. Normalization choice does not affect the ranking HITS
     converges to — only the (arbitrary) scale of the scores.
 
-    Scale shape (same levers as :func:`pagerank`): the edge list is
+    Scale shape (same levers as :func:`_rank_iteration`): the edge list is
     hashed to 8-byte surrogates and pinned TWICE — persisted partitioned
     on ``v`` for the authority pass and on ``u`` for the hub pass — so
     with the score frames broadcast (size-gated, co-shuffle fallback
-    past ``broadcast_nodes_max``) both per-iteration aggregations reuse
-    their layout: zero exchanges per pass. Each normalizer is a 1-row
+    past :data:`~graph_loom_spark.graph.BROADCAST_ROWS_MAX`) both
+    per-iteration aggregations reuse their layout: zero exchanges per pass. Each normalizer is a 1-row
     aggregate broadcast into the update projection (never a driver
     collect); lineage is checkpointed per iteration; string ids join
     back once at the end.
     """
-    spark = graph.nodes.sparkSession
-    # r14-opt: data-sized iterative shuffle partitions (see pagerank)
-    with scratch(spark) as s:
-        idmap = s.pin(graph.nodes.select("id", F.xxhash64("id").alias("iid")))
-        n_nodes = idmap.count()
-        n_edges = graph.edges.count()
-        parts = int(max(8, (n_nodes + n_edges) // 500_000))
-        with shuffle_partitions(spark, parts):
-            edges_h = graph.edges.select(
-                F.xxhash64("src").alias("u"), F.xxhash64("dst").alias("v")
-            )
-            ed_v = s.persist(edges_h.repartition(F.col("v")))
-            ed_u = s.persist(edges_h.repartition(F.col("u")))
-            bcast = F.broadcast if n_nodes <= broadcast_nodes_max else (lambda df: df)
-            h = s.pin(
-                idmap.select(F.col("iid").alias("nid"), F.lit(scale).cast("long").alias("r"))
-            )
-            a = None
+    with _surrogate_ids(graph) as (s, idmap, n_nodes, edges_h):
+        ed_v = s.persist(edges_h.repartition(F.col("v")))
+        ed_u = s.persist(edges_h.repartition(F.col("u")))
+        bcast = broadcast_if_small(n_nodes)
+        h = s.pin(
+            idmap.select(F.col("iid").alias("nid"), F.lit(_HITS_SCALE).cast("long").alias("r"))
+        )
+        a = None
 
-            def _norm_pass(ed, score, join_key, group_key):
-                # r14-opt: checkpoint the RAW sums, not the normalized frame.
-                # The normalizer ``mx`` is an aggregate OVER ``raw``, so with
-                # the checkpoint on the normalized side the join+groupBy
-                # subtree executed TWICE per pass — once building the mx
-                # broadcast, once for the checkpoint materialization (the
-                # plans are not identical subtrees, so ReuseExchange cannot
-                # dedupe them). Pinning raw makes mx and the normalized
-                # projection two cheap scans of the same in-memory frame;
-                # the projection stays lazy (its only consumer per pass is
-                # the next pass's broadcast build / the final result join).
-                raw = s.pin(
-                    ed.join(
-                        bcast(score.select(F.col("nid").alias(join_key), "r")), join_key
-                    )
-                    .groupBy(group_key)
-                    .agg(F.sum("r").alias("s"))
-                )
-                # integer `div`, not `/`: past 2^53 the double quotient can
-                # truncate to a different normalizer than the oracle's `//`
-                mx = raw.agg(
-                    F.expr(
-                        f"greatest(coalesce(max(s), 0L) div {scale}L, 1L)"
-                    ).alias("__mx")
-                )
-                return raw.crossJoin(F.broadcast(mx)).select(
-                    F.col(group_key).alias("nid"), F.expr("s div __mx").alias("r")
-                )
-
-            for _ in range(iters):
-                # authority pass: contributions flow along u→v, grouped on v
-                a = _norm_pass(ed_v, h, "u", "v")
-                # hub pass: contributions flow back v→u, grouped on u
-                h = _norm_pass(ed_u, a, "v", "u")
-            return (
-                idmap.join(h.select(F.col("nid").alias("iid"), F.col("r").alias("__h")), "iid", "left")
-                .join(a.select(F.col("nid").alias("iid"), F.col("r").alias("__a")), "iid", "left")
-                .select(
-                    "id",
-                    (F.coalesce("__h", F.lit(0)).cast("double") / F.lit(float(scale))).alias("hub"),
-                    (F.coalesce("__a", F.lit(0)).cast("double") / F.lit(float(scale))).alias("authority"),
-                )
-                .localCheckpoint(eager=True)
+        def _norm_pass(ed, score, join_key, group_key):
+            # r14-opt: checkpoint the RAW sums, not the normalized frame.
+            # The normalizer ``mx`` is an aggregate OVER ``raw``, so with
+            # the checkpoint on the normalized side the join+groupBy
+            # subtree executed TWICE per pass — once building the mx
+            # broadcast, once for the checkpoint materialization (the
+            # plans are not identical subtrees, so ReuseExchange cannot
+            # dedupe them). Pinning raw makes mx and the normalized
+            # projection two cheap scans of the same in-memory frame;
+            # the projection stays lazy (its only consumer per pass is
+            # the next pass's broadcast build / the final result join).
+            raw = s.pin(
+                ed.join(bcast(score.select(F.col("nid").alias(join_key), "r")), join_key)
+                .groupBy(group_key)
+                .agg(F.sum("r").alias("s"))
             )
+            # integer `div`, not `/`: past 2^53 the double quotient can
+            # truncate to a different normalizer than the oracle's `//`
+            mx = raw.agg(
+                F.expr(f"greatest(coalesce(max(s), 0L) div {_HITS_SCALE}L, 1L)").alias("__mx")
+            )
+            return raw.crossJoin(F.broadcast(mx)).select(
+                F.col(group_key).alias("nid"), F.expr("s div __mx").alias("r")
+            )
+
+        for _ in range(iters):
+            # authority pass: contributions flow along u→v, grouped on v
+            a = _norm_pass(ed_v, h, "u", "v")
+            # hub pass: contributions flow back v→u, grouped on u
+            h = _norm_pass(ed_u, a, "v", "u")
+        scale = F.lit(float(_HITS_SCALE))
+        return (
+            idmap.join(h.select(F.col("nid").alias("iid"), F.col("r").alias("__h")), "iid", "left")
+            .join(a.select(F.col("nid").alias("iid"), F.col("r").alias("__a")), "iid", "left")
+            .select(
+                "id",
+                (F.coalesce("__h", F.lit(0)).cast("double") / scale).alias("hub"),
+                (F.coalesce("__a", F.lit(0)).cast("double") / scale).alias("authority"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def weighted_sssp(
@@ -1675,7 +1556,6 @@ def weighted_sssp(
     dst: str = "dst",
     weight_col: str | None = None,
     weight_mod: int = 9,
-    broadcast_edge_max: int = 5_000_000,
 ) -> DataFrame:
     """Bounded-hop weighted single-source shortest paths: ``rounds``
     synchronous Bellman-Ford relaxations over an undirected ``(src,
@@ -1690,13 +1570,13 @@ def weighted_sssp(
     get the SAME weight, and a SQL oracle re-derives it bit-for-bit
     (weights are exact int64, min is exact, so every round replays).
 
-    Scale shape (the :func:`pagerank` levers): the symmetric weighted
+    Scale shape (the :func:`_rank_iteration` levers): the symmetric weighted
     adjacency is built once, persisted partitioned on the join key
     ``u`` so every relaxation's equi-join probes a stationary layout;
     the delta frontier joins broadcast while the symmetric adjacency
-    stays under ``broadcast_edge_max`` rows (2·|E| — an edge-count
-    gate named for what it measures; the frontier actually broadcast
-    is bounded above by it, same proxy the other iterative ops use),
+    stays under :data:`~graph_loom_spark.graph.BROADCAST_ROWS_MAX` rows
+    (2·|E| — an edge-count gate; the frontier actually broadcast is
+    bounded above by it, same proxy the other iterative ops use),
     co-shuffled beyond it; each round is ONE partial-aggregable ``groupBy(n).min``
     over |dist| + |candidates| rows; lineage checkpoints per round and
     an empty-delta probe EVERY round exits as soon as no distance
@@ -1730,8 +1610,7 @@ def weighted_sssp(
         # broadcast gate on the (already materialized) symmetric edge count:
         # |dist| ≤ |nodes| ≤ |adj| rows, so this bounds every broadcast below
         # without paying a distinct-count pass over the adjacency
-        n_bound = adj.count()
-        bcast = F.broadcast if n_bound <= broadcast_edge_max else (lambda df: df)
+        bcast = broadcast_if_small(adj.count())
         dist = s.pin(
             adj.sparkSession.createDataFrame(
                 [(source, 0)], f"n {'string' if isinstance(source, str) else 'long'}, d long"
@@ -1807,14 +1686,7 @@ def kcore(
     sc = F.col(src).cast("string")
     dc = F.col(dst).cast("string")
     with scratch(edges_df.sparkSession) as s:
-        # surrogates hash the STRING form so int and string id columns get
-        # the same treatment; the output keeps the original id type
-        idmap0 = s.pin(
-            edges_df.select(F.col(src).alias("id"))
-            .unionAll(edges_df.select(F.col(dst).alias("id")))
-            .distinct()
-            .select("id", F.xxhash64(F.col("id").cast("string")).alias("n"))
-        )
+        idmap0 = s.pin(_edge_idmap(edges_df, src, dst))
         e = (
             edges_df.select(
                 F.xxhash64(sc).alias("a"), F.xxhash64(dc).alias("b")
@@ -1843,7 +1715,7 @@ def kcore(
             n_removed = removed.count()
             if n_removed == 0:
                 break
-            rm = F.broadcast if n_removed <= 5_000_000 else (lambda df: df)
+            rm = broadcast_if_small(n_removed)
             edges = s.pin(
                 edges.join(rm(removed.select(F.col("n").alias("u"))), "u", "left_anti")
                 .join(rm(removed.select(F.col("n").alias("v"))), "v", "left_anti")

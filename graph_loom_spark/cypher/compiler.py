@@ -42,7 +42,7 @@ from graph_loom_spark.cypher import ast
 from graph_loom_spark.cypher.ast import CypherError
 from graph_loom_spark.cypher.coerce import compare_expr, numeric_first_sort_cols
 from graph_loom_spark.cypher.parser import parse, resolve_param, trim_quotes
-from graph_loom_spark.graph import DEFAULT_LABEL, PropertyGraph, scratch, shuffle_partitions
+from graph_loom_spark.graph import DEFAULT_LABEL, PropertyGraph, partitions_for, scratch, shuffle_partitions
 from graph_loom_spark.ids import assign_uuid7_ids
 
 RESULT_SCHEMA = T.StructType(
@@ -340,8 +340,7 @@ class CypherExecutor:
                 # hop loop = several shuffle stages per hop on modest frames;
                 # size partitions from the data so task scheduling doesn't
                 # dominate (same lever as connected_components)
-                parts = int(max(8, adj.count() // 500_000))
-                with shuffle_partitions(spark, parts):
+                with shuffle_partitions(spark, partitions_for(adj.count())):
                     frontier = s.pin(sh.select("__start", F.col("__start").alias("__node")))
                     n_frontier = frontier.count()
                     seen = frontier

@@ -177,6 +177,30 @@ def shuffle_partitions(spark: SparkSession, n: int):
         spark.conf.set(_SHUFFLE_PARTITIONS, old)
 
 
+def partitions_for(n_rows: int, floor: int = 8) -> int:
+    """The shuffle width an iterative op widens to (:func:`shuffle_partitions`):
+    ~500k rows per partition, at least ``floor``. Their loops run several
+    shuffle stages per round on modest frames, so task scheduling, not
+    data, dominates when the width is oversized (measured in
+    ``analytics.connected_components``); at cluster scale the width grows
+    with the data."""
+    return int(max(floor, n_rows // 500_000))
+
+
+BROADCAST_ROWS_MAX = 5_000_000
+"""Largest per-node (or per-frontier) frame an op hints as a broadcast:
+a few long columns, ~80 MB at this size, which fits an executor
+broadcast. Past it the op falls back to co-shuffled joins."""
+
+
+def broadcast_if_small(n_rows: int):
+    """``F.broadcast`` while a frame of ``n_rows`` fits
+    :data:`BROADCAST_ROWS_MAX`, else the identity. The explicit hint
+    matters because AQE converts such a join to broadcast only after
+    paying the exchange stages on the data-sized side."""
+    return F.broadcast if n_rows <= BROADCAST_ROWS_MAX else (lambda df: df)
+
+
 class PropertyGraph:
     """A property graph backed by two DataFrames.
 

@@ -16,6 +16,11 @@ pruning once persisted with ``.write.partitionBy("label")``.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -105,17 +110,31 @@ def _with_lineitem_seq(li: DataFrame) -> DataFrame:
 # parquet scan — predicate pushdown and column pruning still reach the
 # raw columns (unlike materializing the unioned MapType node/edge
 # frames, which would hide them behind a map). At cluster scale the
-# path would live on shared storage; a session tempdir is the local
-# equivalent.
+# path would live on shared storage; one temp dir per process, removed
+# at interpreter exit, is the local equivalent.
 _LSEQ_CACHE: dict[str, str] = {}
+_LSEQ_DIR: list[str] = []  # this process's temp dir, once made
+
+
+def _lseq_dir() -> str:
+    """The process's directory for the materialized tables: made on first
+    use and removed by :func:`_remove_lseq_dir` at interpreter exit."""
+    if not _LSEQ_DIR:
+        _LSEQ_DIR.append(tempfile.mkdtemp(prefix="gls_liseq_"))
+        atexit.register(_remove_lseq_dir)
+    return _LSEQ_DIR[0]
+
+
+def _remove_lseq_dir() -> None:
+    if _LSEQ_DIR:
+        shutil.rmtree(_LSEQ_DIR.pop(), ignore_errors=True)
+        _LSEQ_CACHE.clear()
 
 
 def _lineitem_with_seq_cached(spark: SparkSession, sf_dir: str, li: DataFrame) -> DataFrame:
-    import tempfile
-
     path = _LSEQ_CACHE.get(sf_dir)
     if path is None:
-        path = tempfile.mkdtemp(prefix="gls_liseq_") + "/lineitem_seq.parquet"
+        path = os.path.join(_lseq_dir(), f"{len(_LSEQ_CACHE)}", "lineitem_seq.parquet")
         _with_lineitem_seq(li).write.mode("overwrite").parquet(path)
         _LSEQ_CACHE[sf_dir] = path
     return spark.read.parquet(path)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_loom_spark.graph import scratch, shuffle_partitions
+from graph_loom_spark.graph import BROADCAST_ROWS_MAX, scratch, shuffle_partitions
 
 EOW = "</w>"
 
@@ -216,7 +216,7 @@ def bpe_token_counts(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab_max: int = 5_000_000,
+    broadcast_vocab_max: int = BROADCAST_ROWS_MAX,
 ) -> DataFrame:
     """X124 — per-document token counts under a TRAINED merge list,
     amortized over the distinct-word table: encode each distinct word

@@ -3,7 +3,10 @@ queries() entry AND its oracle_sql() on the same sf dir, compare
 row-count + column names + order-insensitive exact values.
 
 Usage:
-    python scripts/check_oracle.py [SF_DIR] [name1,name2,...] [--json OUT]
+    python scripts/check_oracle.py [SF_DIR] [name1,name2,... | name1 name2 ...] [--json OUT]
+
+The checkout checked is the one this script lives in (its library and
+its ``__spark_entry__.py``), so a second checkout's copy checks itself.
 
 With ``--json OUT`` the per-entry results (status hash_pass/rows_only/
 fail + wall seconds) are written as a replay artifact — the per-round
@@ -18,13 +21,15 @@ from __future__ import annotations
 import importlib.util
 import json
 import math
+import os
 import struct
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from graph_loom_spark.io.tpch_graph import TABLES  # noqa: E402
 from graph_loom_spark.session import get_spark  # noqa: E402
 
@@ -35,7 +40,7 @@ if "--json" in argv:
     JSON_OUT = argv[i + 1]
     del argv[i : i + 2]
 SF_DIR = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
-ONLY = argv[1].split(",") if len(argv) > 1 else None
+ONLY = ",".join(argv[1:]).split(",") if len(argv) > 1 else None
 
 
 def values_equal(x, y) -> bool:
@@ -75,7 +80,7 @@ def norm_rows(cols, rows):
 
 
 def main():
-    spec = importlib.util.spec_from_file_location("entrymod", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entrymod", os.path.join(REPO, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
 

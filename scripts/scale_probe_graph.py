@@ -4,7 +4,7 @@ PageRank / LPA / triangles / BFS on the sf0.1 property-graph projection
 (7.9M nodes, 20M edges — TEN disjoint copies with prefixed ids), and
 report wall-clock scaling factors.
 
-The 10× graph crosses ``broadcast_nodes_max`` (5M), so the big run
+The 10× graph crosses ``graph.BROADCAST_ROWS_MAX`` (5M), so the big run
 exercises the CLUSTER-SCALE fallback paths — co-shuffled joins instead
 of broadcast rank/community frames — i.e. exactly the plan shape a
 1000-executor job on a 100 TB corpus would run. A near-linear factor

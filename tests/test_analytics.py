@@ -349,6 +349,19 @@ def test_link_prediction_matches_python_replay_random_graphs(spark):
         assert got == expect, f"seed {seed}: {got} != {expect}"
 
 
+def test_personalized_pagerank_with_every_node_seeded_is_pagerank(spark):
+    """Uniform PageRank is PPR whose seed set is every node: the two
+    paths of the shared rank iteration agree bit for bit, on a graph with
+    a dangling node (d), a no-inlink node (e) and a self-loop."""
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "c"), ("b", "b")]
+    nodes = spark.createDataFrame([(n,) for n in "abcde"], "id string")
+    g = PropertyGraph(spark, nodes=nodes, edges=spark.createDataFrame(edges, "src string, dst string"))
+    for damping in (0.85, 0.7):
+        pr = {r["id"]: r["rank"] for r in analytics.pagerank(g, iters=4, damping=damping).collect()}
+        ppr = analytics.personalized_pagerank(g, nodes, iters=4, damping=damping)
+        assert pr == {r["id"]: r["rank"] for r in ppr.collect()}
+
+
 def test_pagerank_pre_aggregated_multigraph_is_bit_identical(spark):
     """r13-opt: ``pre_aggregate_edges=True`` collapses parallel edges to
     (u, v, multiplicity) before the iteration loop — on a multigraph

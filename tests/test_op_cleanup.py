@@ -81,6 +81,19 @@ def _ring(spark) -> PropertyGraph:
 # calls, the call)
 _LOOP_FAILURES = {
     "pagerank": (analytics, "first", lambda spark, g: analytics.pagerank(g)),
+    "personalized_pagerank": (
+        analytics,
+        "first",  # the per-iteration contrib aggregate
+        lambda spark, g: analytics.personalized_pagerank(g, g.nodes.limit(2)),
+    ),
+    "bfs_distances": (
+        analytics, "broadcast", lambda spark, g: analytics.bfs_distances(g.edges)
+    ),
+    "weighted_sssp": (
+        analytics, "when", lambda spark, g: analytics.weighted_sssp(g.edges)
+    ),
+    # at k=3 the first round peels the four degree-2 ring nodes
+    "kcore": (analytics, "broadcast", lambda spark, g: analytics.kcore(g.edges, k=3)),
     "connected_components": (
         analytics, "least", lambda spark, g: analytics.connected_components(g)
     ),

@@ -404,6 +404,56 @@ def test_hits_pass_is_exchange_free_over_persisted_edges(spark):
         ep.unpersist()
 
 
+def _outside_cached(plan: str) -> list[str]:
+    """The plan's lines minus every ``InMemoryRelation``'s subtree (the
+    cached frame's own build plan, deeper-indented under it)."""
+    kept, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        kept.append(line)
+    return kept
+
+
+@pytest.mark.parametrize("seeded", [False, True], ids=["pagerank", "personalized_pagerank"])
+def test_rank_iteration_pins_plan_no_hash_exchange(spark, monkeypatch, seeded):
+    # the plans of the rank op's own per-iteration pins, captured as they
+    # are handed to Scratch.pin (as scripts/dump_iteration_plans.py does):
+    # the contrib aggregate reuses the persisted edge frame's
+    # v-partitioning, so outside that cached frame only broadcasts and the
+    # 1-row dangling-mass aggregate's SinglePartition exchange remain
+    from graph_loom_spark import analytics
+    from graph_loom_spark.graph import PropertyGraph, Scratch
+
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "d"), ("e", "c")]
+    g = PropertyGraph(
+        spark,
+        nodes=spark.createDataFrame([(n,) for n in "abcde"], "id string"),
+        edges=spark.createDataFrame(edges, "src string, dst string"),
+    )
+    plans = []
+    pin = Scratch.pin
+
+    def spy(self, df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return pin(self, df)
+
+    monkeypatch.setattr(Scratch, "pin", spy)
+    iters = 3
+    if seeded:
+        analytics.personalized_pagerank(g, g.nodes.filter("id = 'a'"), iters=iters).collect()
+    else:
+        analytics.pagerank(g, iters=iters).collect()
+    for plan in plans[-iters:]:
+        assert "InMemoryRelation" in plan
+        exchanges = [ln for ln in _outside_cached(plan) if "Exchange" in ln]
+        assert exchanges, plan
+        for ln in exchanges:
+            assert "BroadcastExchange" in ln or "Exchange SinglePartition" in ln, plan
+
+
 def test_token_budget_has_single_boundary_window_no_global_sort(spark):
     # two-phase selection: whole buckets are plain filters; exactly ONE
     # window (the boundary bucket) appears in the plan, and the only
