@@ -2125,7 +2125,7 @@ def _write_pq_diag(sf_dir, books, out) -> None:
     takes) and record the oracle's rows AND dtypes next to the
     engine's. Root cause found r9: duckdb ``list_sum`` yields HUGEINT →
     ``fetchdf`` float64 vs the engine's int64; fixed with an outer
-    CAST in ``_pq_oracle`` and guarded by ``scripts/check_dtypes.py``.
+    CAST in ``_pq_oracle`` and guarded by ``scripts/check_oracle.py --dtypes``.
     Best-effort: any failure (read-only checkout, missing duckdb, sf
     too big) must not affect the query."""
     import json
@@ -5415,7 +5415,7 @@ def _normalize_signed_zero(sql: str) -> str:
     merely end in "round". Every rounded oracle expression here is
     DOUBLE-typed (the dtype gate pins that), so ``+ 0.0`` never
     changes a column's type. Proven by ``tests/test_signed_zero.py``
-    and swept at runtime by ``scripts/check_zeros.py``.
+    and swept at runtime by ``scripts/check_oracle.py --zeros``.
     """
     low = sql.lower()
     out: list[str] = []
@@ -7593,7 +7593,7 @@ def _oracle_sql_raw() -> dict[str, str]:
         ),
         # X144 — k_nn(k) on the same co-purchase edge CTE: class means
         # collapse to integer sums (every class-k node has exactly k
-        # neighbors); HUGEINT sum CAST to BIGINT (check_dtypes lesson)
+        # neighbors); HUGEINT sum CAST to BIGINT (``check_oracle.py --dtypes`` lesson)
         "graph_knn_degree": (
             "WITH ps AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p "
             "FROM lineitem WHERE l_orderkey % 4 = 0), "
@@ -7612,7 +7612,7 @@ def _oracle_sql_raw() -> dict[str, str]:
         # unoriented wedges at the common neighbor (carrying its degree),
         # one grouped pass computing BOTH integer scores, NOT EXISTS
         # dropping existing edges, integer-division micropoints. The
-        # HUGEINT sum is CAST to BIGINT (check_dtypes lesson).
+        # HUGEINT sum is CAST to BIGINT (``check_oracle.py --dtypes`` lesson).
         "graph_link_jaccard": (
             "WITH ps AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p "
             "FROM lineitem WHERE l_orderkey % 4 = 0), "

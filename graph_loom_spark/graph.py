@@ -14,9 +14,22 @@ Scale notes: at 100 TB these are Parquet/Delta tables partitioned by
 mutations are bulk set-operations (anti-joins / unions / map expressions)
 that run fully on executors — no driver-side row loops.
 
+Each write materializes the frame it changed as the graph's new
+*version*, in one of two tiers (:meth:`PropertyGraph._swap`):
+
+- **local** — a small frame's rows are collected into a driver-JVM
+  ``LocalRelation``: no block to pin or free, exact size statistics,
+  and reads and writes plan against rows already on the driver;
+- **pinned** — past the cap, an eager ``localCheckpoint`` on the
+  executors.
+
+The cap is ``spark.sql.autoBroadcastJoinThreshold`` ÷ the schema's
+``defaultSize`` (:func:`local_cap`): a frame the planner would
+broadcast anyway. A threshold of ``-1`` turns the local tier off.
+
 Invariants enforced (reference parity):
 - edge endpoints must exist (graph.rs:51-66) — ``add_edges`` validates
-  with a join-count check;
+  with one left-join count;
 - deleting a node cascades to incident edges (graph.rs:145-162);
 - a plain (non-detach) delete of a node with incident edges is an error
   (cypher_spec.rs:1235-1240: "use DETACH DELETE").
@@ -28,6 +41,7 @@ import os
 import time
 from collections.abc import Iterable
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,6 +201,68 @@ def partitions_for(n_rows: int, floor: int = 8) -> int:
     return int(max(floor, n_rows // 500_000))
 
 
+def local_cap(df: DataFrame) -> int:
+    """Most rows of ``df`` the driver holds as a ``LocalRelation``:
+    ``spark.sql.autoBroadcastJoinThreshold`` ÷ the schema's per-row
+    ``defaultSize``; -1 when the threshold is -1 (tier off)."""
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold < 0:
+        return -1
+    return min(threshold // max(1, df._jdf.schema().defaultSize()), 2**31 - 2)
+
+
+def hold_local(df: DataFrame) -> DataFrame | None:
+    """``df`` as a ``LocalRelation`` over its rows, collected in the
+    driver JVM (they never cross py4j), or None when it has more than
+    :func:`local_cap` rows. One task reads at most cap + 1 rows (a
+    plain ``limit`` collect scans the partitions in growing rounds, a
+    job each), so a frame past the cap costs one bounded probe."""
+    cap = local_cap(df)
+    if cap < 0:
+        return None
+    rows = df._jdf.coalesce(1).limit(cap + 1).collectAsList()
+    if rows.size() > cap:
+        return None
+    spark = df.sparkSession
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, df._jdf.schema()), spark)
+
+
+def _literal_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-known rows as literal projections over a one-row
+    ``LocalRelation``, which Catalyst folds into ``LocalRelation``s:
+    reading them runs no Python worker, unlike a Python-list
+    ``createDataFrame`` (~0.3 s a job on ``local[2]``)."""
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    one = DataFrame(
+        jspark.createDataFrame(
+            jvm.java.util.Collections.singletonList(jvm.org.apache.spark.sql.Row.empty()),
+            jvm.org.apache.spark.sql.types.StructType(),
+        ),
+        spark,
+    )
+
+    def lit(value, field: T.StructField) -> Column:
+        if isinstance(field.dataType, T.MapType):
+            col = F.create_map(*[F.lit(x) for kv in value.items() for x in kv])
+        else:
+            col = F.lit(value)
+        return col.cast(field.dataType).alias(field.name)
+
+    frames = [one.select(*[lit(v, f) for v, f in zip(row, schema.fields)]) for row in rows]
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _empty_local(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    jspark = spark._jsparkSession
+    return DataFrame(jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())), spark)
+
+
+def local_rows(df: DataFrame) -> int | None:
+    """The row count of a frame held by :func:`hold_local`, else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.data().size() if plan.nodeName() == "LocalRelation" else None
+
+
 BROADCAST_ROWS_MAX = 5_000_000
 """Largest per-node (or per-frontier) frame an op hints as a broadcast:
 a few long columns, ~80 MB at this size, which fits an executor
@@ -205,11 +281,15 @@ class PropertyGraph:
     """A property graph backed by two DataFrames.
 
     The object is a mutable *handle*; the DataFrames themselves are
-    immutable — every mutation swaps in a new, eagerly pinned *version*
-    of the frame it changed (:meth:`_swap`). A superseded version is not
-    freed at once, since the statement that replaced it may still read
-    it: the graph's statement scope adopts it, :meth:`release` frees it
-    with the statement's own pins (:meth:`pin`), and
+    immutable — every mutation swaps in a new, materialized *version*
+    of the frame it changed (:meth:`_swap`): held on the driver as a
+    ``LocalRelation`` while it fits :func:`local_cap` and its previous
+    version was held too (an empty graph starts so;
+    :meth:`cache_checkpoint` re-tries), else pinned with
+    ``localCheckpoint``. A superseded pinned version is not freed at
+    once, since the statement that replaced it may still read it: the
+    graph's statement scope adopts it, :meth:`release` frees it with
+    the statement's own pins (:meth:`pin`), and
     ``CypherSession.execute`` calls that once a statement's rows are
     collected.
     """
@@ -218,10 +298,12 @@ class PropertyGraph:
         self.spark = spark
         self._node_sources: dict[str, DataFrame] = {}
         self._edge_sources: dict[str, DataFrame] = {}
-        self.nodes = nodes if nodes is not None else spark.createDataFrame([], NODE_SCHEMA)
-        self.edges = edges if edges is not None else spark.createDataFrame([], EDGE_SCHEMA)
         self._version: dict[str, Scratch] = {}  # frame name -> scope pinning its version
+        # frame names whose version is a LocalRelation; an empty frame is one
+        self._local = {name for name, df in (("nodes", nodes), ("edges", edges)) if df is None}
         self._pins = Scratch(spark)  # blocks the running statement may still read
+        self.nodes = nodes if nodes is not None else _empty_local(spark, NODE_SCHEMA)
+        self.edges = edges if edges is not None else _empty_local(spark, EDGE_SCHEMA)
 
     # ------------------------------------------------------------------
     # label-sliced sources (query fixed-overhead optimization)
@@ -310,7 +392,8 @@ class PropertyGraph:
         if not rows:
             return []
         ids = uuid7_batch(len(rows))
-        df = self.spark.createDataFrame(
+        df = _literal_frame(
+            self.spark,
             [(i, lbl or DEFAULT_LABEL, dict(props or {})) for i, (lbl, props) in zip(ids, rows)],
             NODE_SCHEMA,
         )
@@ -327,7 +410,7 @@ class PropertyGraph:
     ) -> list[str]:
         """Append edges from (src, dst, label, properties) tuples.
 
-        Endpoint existence is validated with a single join-count check
+        Endpoint existence is validated with one left-join count
         (reference rejects edges whose endpoints don't exist,
         graph.rs:51-66).
         """
@@ -335,7 +418,8 @@ class PropertyGraph:
         if not rows:
             return []
         ids = uuid7_batch(len(rows))
-        df = self.spark.createDataFrame(
+        df = _literal_frame(
+            self.spark,
             [(i, s, d, lbl or DEFAULT_LABEL, dict(props or {})) for i, (s, d, lbl, props) in zip(ids, rows)],
             EDGE_SCHEMA,
         )
@@ -345,16 +429,20 @@ class PropertyGraph:
     def add_edges_df(self, df: DataFrame, check_endpoints: bool = True) -> None:
         df = df.select(*EDGE_SCHEMA.fieldNames())
         if check_endpoints:
-            node_ids = self.nodes.select("id")
-            n = df.count()
-            ok = (
-                df.join(node_ids.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(node_ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .count()
+            # one action: left-join each endpoint to the node ids and count
+            # the rows with a miss (node ids are unique: no row fans out)
+            def found(end: str) -> DataFrame:
+                return self.nodes.select(F.col("id").alias(end), F.lit(True).alias(f"_{end}"))
+
+            dangling = (
+                df.join(found("src"), "src", "left")
+                .join(found("dst"), "dst", "left")
+                .agg(F.count(F.when(F.col("_src").isNull() | F.col("_dst").isNull(), 1)))
+                .first()[0]
             )
-            if ok != n:
+            if dangling:
                 raise GraphConsistencyError(
-                    f"add_edges: {n - ok} edge(s) reference nonexistent endpoint node(s)"
+                    f"add_edges: {dangling} edge(s) reference nonexistent endpoint node(s)"
                 )
         self._swap(edges=self.edges.unionByName(df))
 
@@ -458,34 +546,51 @@ class PropertyGraph:
     # ------------------------------------------------------------------
     # lineage control
     # ------------------------------------------------------------------
+    @staticmethod
+    def _hold(df: DataFrame, scope: Scratch, local: bool) -> tuple[DataFrame, bool]:
+        """Materialize ``df``: held on the driver by :func:`hold_local`
+        when ``local`` and it fits the cap, else pinned in ``scope``.
+        Returns the frame and whether it is held locally."""
+        held = hold_local(df) if local else None
+        return (held, True) if held is not None else (scope.pin(df), False)
+
     def _swap(self, **frames: DataFrame) -> None:
-        """Swap in new versions of ``nodes`` and/or ``edges``, each pinned
-        with one eager ``localCheckpoint`` in a scope of its own; the
-        superseded version's scope is handed to the statement scope for
-        :meth:`release`. Unpinned, every read and later write would re-run
-        the mutation chain — twice per SET, whose id set comes from the
-        binding table over the previous version — so plans and job counts
-        grew with every write."""
+        """Swap in new versions of ``nodes`` and/or ``edges``. Each is
+        materialized once (:meth:`_hold`): on the local tier while the
+        frame's current version is local and the new one fits the cap,
+        else pinned in a scope of its own, so a graph that outgrows the
+        cap re-runs that one write's plan and stays pinned. A superseded
+        version's scope is handed to the statement scope for
+        :meth:`release`. Unmaterialized, every read and later write would
+        re-run the mutation chain — twice per SET, whose id set comes from
+        the binding table over the previous version — so plans and job
+        counts grew with every write."""
         for name, df in frames.items():
             version = Scratch(self.spark)
-            pinned = version.pin(df)
+            held, local = self._hold(df, version, name in self._local)
+            if not local:
+                self._local.discard(name)
             old = self._version.pop(name, None)
             if old is not None:
                 self._pins.adopt(old)
             self._version[name] = version
-            setattr(self, name, pinned)
+            setattr(self, name, held)
 
     def cache_checkpoint(self) -> None:
-        """Pin the current ``nodes`` and ``edges`` as the graph's versions
-        (e.g. after a bulk load, so the first statements read a one-node
-        plan)."""
+        """Materialize the current ``nodes`` and ``edges`` as the graph's
+        versions, trying the local tier for both (e.g. after a bulk load,
+        so the first statements read a one-node plan; or to bring a
+        graph that shrank back under the cap)."""
+        self._local = {"nodes", "edges"}
         self._swap(nodes=self.nodes, edges=self.edges)
 
     def pin(self, df: DataFrame) -> DataFrame:
-        """Eagerly pin a frame the running statement reads (an id set, a
-        traversal's pairs); :meth:`release` frees it with the retired
-        versions."""
-        return self._pins.pin(df)
+        """Materialize a frame the running statement reads (an id set, a
+        traversal's pairs, a binding table to mint ids for): held on the
+        driver while both graph versions are local and it fits the cap,
+        else eagerly pinned, to be freed by :meth:`release` with the
+        retired versions."""
+        return self._hold(df, self._pins, self._local >= {"nodes", "edges"})[0]
 
     def release(self) -> None:
         """Free the retired versions and the statement pins. Call it once

@@ -21,7 +21,7 @@ import random
 import threading
 import time
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 _lock = threading.Lock()
@@ -69,17 +69,25 @@ def _local_checkpoint(df):
 
 
 def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
-    """Mint one monotonic UUIDv7 per row, fully distributed.
+    """Mint one monotonic UUIDv7 per row.
 
-    Returns ``(df_with_id_col, row_count)``; the result is eagerly
-    pinned so the ids are stable across re-evaluation. ``pin`` makes
-    both of its checkpoints (input and result); pass a graph's
-    :meth:`PropertyGraph.pin` to free them with the statement.
+    Returns ``(df_with_id_col, row_count)``; the ids are stable across
+    re-evaluation. ``pin`` materializes the input (and, on the
+    distributed path, the result); pass a graph's
+    :meth:`PropertyGraph.pin` to free its blocks with the statement.
 
-    Replaces the round-1 ``row_number() OVER (ORDER BY lit(1))`` shape,
-    whose unpartitioned window funnels every row through ONE task — fine
-    for reference-sized mutations, a wall when a MATCH..MERGE binds
-    millions of pairs. Here every partition numbers itself:
+    **Driver path.** When the pinned input came back as a driver-held
+    ``LocalRelation`` (a small graph's statement pin), its row count is
+    known without a job: the ids are minted on the driver — the slot
+    block ``uuid7_batch(n)`` would format — and attached in the
+    relation's row order. The one Spark job is the pin's collect.
+
+    **Distributed path** (the default ``pin``, and a pinned-tier
+    graph). It replaces the round-1 ``row_number() OVER (ORDER BY
+    lit(1))`` shape, whose unpartitioned window funnels every row
+    through ONE task — fine for reference-sized mutations, a wall when
+    a MATCH..MERGE binds millions of pairs. Here every partition
+    numbers itself:
 
     1. checkpoint the input with ``pin`` — fixes partition contents/order so
        ``spark_partition_id`` is stable across the two passes;
@@ -94,14 +102,22 @@ def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
     The within-pid window does shuffle on pid, but that is a *parallel*
     exchange (as many reducers as partitions), not a single-task funnel.
     """
-    from pyspark.sql import Window  # local import: avoid cycle at module load
+    from graph_loom_spark.graph import local_rows  # graph imports this module
 
     pinned = pin(df)
-    counts = pinned.groupBy(F.spark_partition_id().alias("__pid")).count().collect()
-    n = int(sum(r["count"] for r in counts))
+    n = local_rows(pinned)
+    counts = None
+    if n is None:
+        counts = pinned.groupBy(F.spark_partition_id().alias("__pid")).count().collect()
+        n = int(sum(r["count"] for r in counts))
     if n == 0:
         return pinned.withColumn(id_col, F.lit(None).cast("string")), 0
     start_slot = reserve_slots(n)
+    if counts is None:
+        # one partition over the relation's fixed row order: a row's
+        # monotonically_increasing_id is its ordinal 0..n-1
+        ordinal = F.monotonically_increasing_id()
+        return pinned.coalesce(1).withColumn(id_col, uuid7_expr(ordinal, start_slot)), n
     offsets, acc = [], 0
     for r in sorted(counts, key=lambda r: r["__pid"]):
         offsets.append((int(r["__pid"]), acc))

@@ -158,6 +158,9 @@ class QueryServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"  # required for WS upgrade
+            # _reply writes the headers and the body separately; with Nagle
+            # on, delayed ACK holds each keep-alive reply back ~40 ms
+            disable_nagle_algorithm = True
 
             def log_message(self, *a):  # quiet
                 pass

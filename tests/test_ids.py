@@ -48,3 +48,30 @@ def test_minhash_bands_must_divide_signature(spark):
     )
     with pytest.raises(ValueError, match="must divide"):
         minhash_lsh_pairs(sigs, bands=2)  # probed num_perm=5, 2 ∤ 5
+
+
+def test_small_input_pinned_local_mints_on_the_driver(spark):
+    """A graph on the local tier pins a small binding table as a driver
+    ``LocalRelation``: the ids come from one slot block reserved on the
+    driver, and the mint's only Spark job is the pin's collect."""
+    from graph_loom_spark.graph import PropertyGraph, local_rows
+
+    sc = spark.sparkContext
+    pin = PropertyGraph.empty(spark).pin
+    df = spark.range(0, 50, 1, 4).select(F.col("id").alias("n"))
+    before = uuid7()
+    sc.setJobGroup("gls-test-local-mint", "local mint")
+    try:
+        out, n = assign_uuid7_ids(df, "uid", pin=pin)
+    finally:
+        sc.setJobGroup("", "")
+    after = uuid7()
+    assert len(sc.statusTracker().getJobIdsForGroup("gls-test-local-mint")) <= 1
+    assert n == 50
+    rows = out.collect()
+    assert sorted(r["n"] for r in rows) == list(range(50))
+    ids = [r["uid"] for r in rows]
+    assert len(set(ids)) == 50
+    assert before < min(ids) and max(ids) < after
+    assert [r["uid"] for r in out.collect()] == ids  # stable across re-evaluation
+    assert local_rows(pin(df)) == 50

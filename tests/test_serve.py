@@ -123,3 +123,36 @@ def test_autosave_on_mutation_and_idle(spark, tmp_path):
     finally:
         qs.stop_autosave()
         httpd.shutdown()
+
+
+def test_keep_alive_replies_are_not_held_back():
+    """Headers and body leave in two writes; with Nagle on, the body
+    waits for the client's delayed ACK (~40 ms) on every keep-alive
+    reply. A stub session keeps Spark out of the timing."""
+    import http.client
+    import statistics
+    import time
+
+    from graph_loom_spark.result import QueryOutcome
+
+    class Stub:
+        def execute(self, query, params=None):
+            return QueryOutcome()
+
+    qs = QueryServer(Stub(), timeout_s=10)
+    httpd = qs.serve(port=0)
+    conn = http.client.HTTPConnection("127.0.0.1", httpd.server_address[1], timeout=10)
+    try:
+        body = json.dumps({"query": "MATCH (n) RETURN n", "log": False})
+        times = []
+        for _ in range(50):
+            t0 = time.perf_counter()
+            conn.request("POST", "/api/query", body, {"Content-Type": "application/json"})
+            resp = conn.getresponse()
+            assert resp.status == 200 and json.loads(resp.read())["rows"] == []
+            times.append(time.perf_counter() - t0)
+    finally:
+        conn.close()
+        httpd.shutdown()
+        httpd.server_close()
+    assert statistics.median(times) < 0.010, times

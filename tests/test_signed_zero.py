@@ -9,7 +9,7 @@ entire class.  These tests pin all three seams:
 * the ``oracle_sql()`` normalizer rewrites every ``round(...)`` to
   ``(round(...) + 0.0)`` (paren-balanced, nested-call safe);
 * DuckDB really produces ``-0.0`` raw and ``+0.0`` normalized (so the
-  runtime sweep in ``scripts/check_zeros.py`` is not vacuous);
+  runtime sweep ``scripts/check_oracle.py --zeros`` is not vacuous);
 * Spark's ``round()`` really produces ``+0.0``;
 * the hardened ``check_oracle.py`` comparator now FAILS on a planted
   ``-0.0`` vs ``+0.0`` pair (byte-level float compare).
@@ -86,7 +86,7 @@ def test_duckdb_round_signed_zero_behavior():
     raw = con.execute("SELECT round(-6.9e-10, 6)").fetchone()[0]
     assert raw == 0.0 and math.copysign(1.0, raw) < 0, (
         f"DuckDB round() stopped emitting -0.0 ({raw!r}) — the class may be "
-        "dead upstream; re-audit scripts/check_zeros.py"
+        "dead upstream; re-audit scripts/check_oracle.py --zeros"
     )
     m = _entry()
     fixed = con.execute(
