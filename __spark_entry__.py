@@ -2561,6 +2561,8 @@ def _q_web_host_rank(spark, sf_dir):
     fits a single executor's broadcast while the only corpus-sized
     passes are the parse and two partial-agg rollups. No cartesian; the
     quality pass is the X156 extract + integer gate."""
+    from graph_loom_spark.graph import PropertyGraph, local_frame
+
     hm = _host_map(spark, sf_dir)
     links = _web_links(spark, sf_dir)
     edges = (
@@ -2576,11 +2578,9 @@ def _q_web_host_rank(spark, sf_dir):
     )
     nodes = (
         hm.select(F.col("host").alias("id"))
-        .union(spark.createDataFrame([("www.hub.example",)], "id string"))
+        .union(local_frame(spark, [("www.hub.example",)], "id string"))
         .distinct()
     )
-    from graph_loom_spark.graph import PropertyGraph
-
     ranks = analytics.pagerank(
         PropertyGraph(spark, nodes=nodes, edges=edges),
         iters=5,
@@ -3088,9 +3088,8 @@ def _q_graph_export_roundtrip(spark, sf_dir):
 #: scripted per r12 ask #1): never-green entries first, then the green
 #: entries whose NEWEST green driver row is OLDEST, computed AND
 #: APPLIED by ``python scripts/rotation_plan.py --apply`` (the FIRST
-#: commit of every round — the staleness test goes red the moment the
-#: driver delivers the prior round's CORRECTNESS file). Enforced by
-#: ``tests/test_registry_rotation.py::test_window_slack_holds_stalest_greens``.
+#: commit of every round). Checked by ``python scripts/rotation_plan.py
+#: --check`` whenever a CORRECTNESS file is delivered.
 #: Hand adjustment after every --apply (ADVICE r13 #4): keep
 #: ``emb_cosine_topk`` AHEAD of every other _cosine_exact consumer
 #: (emb_ann_eval and the other recall evals), so the exact-cosine
@@ -3152,7 +3151,7 @@ _WINDOW_ORDER = [
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the driver's correctness pass checks a bounded
     # 50-entry PREFIX of this registry, so the window must be ROTATED
-    # EVERY ROUND (tests/test_registry_rotation.py enforces it):
+    # EVERY ROUND (``scripts/rotation_plan.py --check`` flags a stale one):
     # never-green entries first, then the stalest-green entries
     # (_WINDOW_ORDER — the r12 staleness policy), with the catalog
     # literal below keeping memo producers directly before their

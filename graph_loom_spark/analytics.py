@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_loom_spark.graph import (
-    BROADCAST_ROWS_MAX, PropertyGraph, broadcast_if_small, partitions_for, scratch, shuffle_partitions,
+    BROADCAST_ROWS_MAX, PropertyGraph, broadcast_if_small, local_frame, partitions_for, scratch,
+    shuffle_partitions,
 )
 
 
@@ -1612,8 +1613,8 @@ def weighted_sssp(
         # without paying a distinct-count pass over the adjacency
         bcast = broadcast_if_small(adj.count())
         dist = s.pin(
-            adj.sparkSession.createDataFrame(
-                [(source, 0)], f"n {'string' if isinstance(source, str) else 'long'}, d long"
+            local_frame(
+                adj.sparkSession, [(source, 0)], f"n {'string' if isinstance(source, str) else 'long'}, d long"
             )
         )
         # Delta relaxation (the standard distributed-SSSP refinement): only

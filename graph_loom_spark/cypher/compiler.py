@@ -30,6 +30,7 @@ branches. Semantic quirks reproduced on purpose (oracle parity):
 
 from __future__ import annotations
 
+import operator
 import time
 from functools import reduce
 
@@ -42,7 +43,9 @@ from graph_loom_spark.cypher import ast
 from graph_loom_spark.cypher.ast import CypherError
 from graph_loom_spark.cypher.coerce import compare_expr, numeric_first_sort_cols
 from graph_loom_spark.cypher.parser import parse, resolve_param, trim_quotes
-from graph_loom_spark.graph import DEFAULT_LABEL, PropertyGraph, partitions_for, scratch, shuffle_partitions
+from graph_loom_spark.graph import (
+    DEFAULT_LABEL, PropertyGraph, local_frame, partitions_for, scratch, shuffle_partitions,
+)
 from graph_loom_spark.ids import assign_uuid7_ids
 
 RESULT_SCHEMA = T.StructType(
@@ -158,7 +161,7 @@ class CypherExecutor:
         return self._dump_bindings(b)
 
     def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+        return local_frame(self.spark, [], RESULT_SCHEMA)
 
     # ---------------------------------------------------------- matching
     def _nodes_matching(self, np: ast.NodePattern, params: dict[str, str] | None) -> DataFrame:
@@ -731,8 +734,8 @@ class CypherExecutor:
             return
         typ = p.rel.typ or DEFAULT_LABEL
         props = {k: resolve_param(v, params) for k, v in p.rel.props.items()}
-        # distributed id mint: no single-partition window (ids.py), ids
-        # pinned (checkpoint) before the double use below
+        # distributed id mint (ids.py): the ids are stable across
+        # re-evaluation, so the double use below reads the same ids
         df, n = assign_uuid7_ids(b.df, "__eid", pin=self.graph.pin)
         if n == 0:
             return
@@ -898,19 +901,13 @@ class CypherExecutor:
             self.graph._remove_property(kind, ids, prop)
 
 
+_COMPARE = {
+    "<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge, "=": operator.eq, "<>": operator.ne,
+}
+
+
 def compare_cols(lhs: Column, rhs: Column, op: str) -> Column:
     """UUIDv7 hex strings compare identically to their u128 values, so the
     reference's id() numeric compare is plain string comparison here."""
-    if op == "<":
-        return lhs < rhs
-    if op == "<=":
-        return lhs <= rhs
-    if op == ">":
-        return lhs > rhs
-    if op == ">=":
-        return lhs >= rhs
-    if op == "=":
-        return lhs == rhs
-    if op == "<>":
-        return lhs != rhs
-    return F.lit(True)
+    cmp = _COMPARE.get(op)
+    return cmp(lhs, rhs) if cmp is not None else F.lit(True)

@@ -27,6 +27,11 @@ The cap is ``spark.sql.autoBroadcastJoinThreshold`` ÷ the schema's
 ``defaultSize`` (:func:`local_cap`): a frame the planner would
 broadcast anyway. A threshold of ``-1`` turns the local tier off.
 
+Rows the driver holds enter a plan as a ``LocalRelation`` through one of
+two constructors: :func:`hold_local` for rows already in the JVM (a
+collected version), :func:`local_frame` for rows in Python (a CREATE's
+literals, the empty graph, an op's seed or offsets).
+
 Invariants enforced (reference parity):
 - edge endpoints must exist (graph.rs:51-66) — ``add_edges`` validates
   with one left-join count;
@@ -41,11 +46,12 @@ import os
 import time
 from collections.abc import Iterable
 from contextlib import contextmanager
-from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from graph_loom_spark.ids import uuid7_batch
 
@@ -216,7 +222,10 @@ def hold_local(df: DataFrame) -> DataFrame | None:
     driver JVM (they never cross py4j), or None when it has more than
     :func:`local_cap` rows. One task reads at most cap + 1 rows (a
     plain ``limit`` collect scans the partitions in growing rounds, a
-    job each), so a frame past the cap costs one bounded probe."""
+    job each), so a frame past the cap costs one bounded probe.
+
+    The constructor for rows already in the JVM; rows held in Python
+    enter through :func:`local_frame`."""
     cap = local_cap(df)
     if cap < 0:
         return None
@@ -227,34 +236,23 @@ def hold_local(df: DataFrame) -> DataFrame | None:
     return DataFrame(spark._jsparkSession.createDataFrame(rows, df._jdf.schema()), spark)
 
 
-def _literal_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """Driver-known rows as literal projections over a one-row
-    ``LocalRelation``, which Catalyst folds into ``LocalRelation``s:
-    reading them runs no Python worker, unlike a Python-list
-    ``createDataFrame`` (~0.3 s a job on ``local[2]``)."""
-    jvm, jspark = spark._jvm, spark._jsparkSession
-    one = DataFrame(
-        jspark.createDataFrame(
-            jvm.java.util.Collections.singletonList(jvm.org.apache.spark.sql.Row.empty()),
-            jvm.org.apache.spark.sql.types.StructType(),
-        ),
-        spark,
-    )
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str) -> DataFrame:
+    """Rows held in Python (a CREATE's literal rows, a seed id, per-bucket
+    offsets, centroids) as a frame with exactly ``schema`` (a
+    ``StructType`` or a DDL string), nullability included.
 
-    def lit(value, field: T.StructField) -> Column:
-        if isinstance(field.dataType, T.MapType):
-            col = F.create_map(*[F.lit(x) for kv in value.items() for x in kv])
-        else:
-            col = F.lit(value)
-        return col.cast(field.dataType).alias(field.name)
-
-    frames = [one.select(*[lit(v, f) for v, f in zip(row, schema.fields)]) for row in rows]
-    return reduce(DataFrame.unionByName, frames)
-
-
-def _empty_local(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    jspark = spark._jsparkSession
-    return DataFrame(jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())), spark)
+    The rows travel as one Arrow table, typed by ``schema`` (a mistyped
+    value raises), which Spark holds as a ``LocalRelation`` under
+    ``spark.sql.execution.arrow.localRelationThreshold``: reading it
+    runs no Spark job, where a Python-list ``createDataFrame`` is an
+    RDD that starts a Python worker on every read. The constructor for
+    rows in Python; rows already in the JVM enter through
+    :func:`hold_local`."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist([dict(zip(names, row)) for row in rows], schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def local_rows(df: DataFrame) -> int | None:
@@ -302,8 +300,8 @@ class PropertyGraph:
         # frame names whose version is a LocalRelation; an empty frame is one
         self._local = {name for name, df in (("nodes", nodes), ("edges", edges)) if df is None}
         self._pins = Scratch(spark)  # blocks the running statement may still read
-        self.nodes = nodes if nodes is not None else _empty_local(spark, NODE_SCHEMA)
-        self.edges = edges if edges is not None else _empty_local(spark, EDGE_SCHEMA)
+        self.nodes = nodes if nodes is not None else local_frame(spark, [], NODE_SCHEMA)
+        self.edges = edges if edges is not None else local_frame(spark, [], EDGE_SCHEMA)
 
     # ------------------------------------------------------------------
     # label-sliced sources (query fixed-overhead optimization)
@@ -392,7 +390,7 @@ class PropertyGraph:
         if not rows:
             return []
         ids = uuid7_batch(len(rows))
-        df = _literal_frame(
+        df = local_frame(
             self.spark,
             [(i, lbl or DEFAULT_LABEL, dict(props or {})) for i, (lbl, props) in zip(ids, rows)],
             NODE_SCHEMA,
@@ -418,7 +416,7 @@ class PropertyGraph:
         if not rows:
             return []
         ids = uuid7_batch(len(rows))
-        df = _literal_frame(
+        df = local_frame(
             self.spark,
             [(i, s, d, lbl or DEFAULT_LABEL, dict(props or {})) for i, (s, d, lbl, props) in zip(ids, rows)],
             EDGE_SCHEMA,

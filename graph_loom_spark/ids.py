@@ -20,8 +20,9 @@ import os
 import random
 import threading
 import time
+from itertools import accumulate
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _lock = threading.Lock()
@@ -72,35 +73,20 @@ def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
     """Mint one monotonic UUIDv7 per row.
 
     Returns ``(df_with_id_col, row_count)``; the ids are stable across
-    re-evaluation. ``pin`` materializes the input (and, on the
-    distributed path, the result); pass a graph's
+    re-evaluation. ``pin`` materializes the input; pass a graph's
     :meth:`PropertyGraph.pin` to free its blocks with the statement.
 
-    **Driver path.** When the pinned input came back as a driver-held
-    ``LocalRelation`` (a small graph's statement pin), its row count is
-    known without a job: the ids are minted on the driver — the slot
-    block ``uuid7_batch(n)`` would format — and attached in the
-    relation's row order. The one Spark job is the pin's collect.
-
-    **Distributed path** (the default ``pin``, and a pinned-tier
-    graph). It replaces the round-1 ``row_number() OVER (ORDER BY
-    lit(1))`` shape, whose unpartitioned window funnels every row
-    through ONE task — fine for reference-sized mutations, a wall when
-    a MATCH..MERGE binds millions of pairs. Here every partition
-    numbers itself:
-
-    1. checkpoint the input with ``pin`` — fixes partition contents/order so
-       ``spark_partition_id`` is stable across the two passes;
-    2. collect per-partition counts (one tiny row per partition) and
-       cumulative-sum them on the driver into per-partition offsets;
-    3. reserve ONE contiguous slot block for the whole batch (ids stay
-       globally monotonic vs every other batch from this process);
-    4. ordinal = offset[pid] + row_number within pid (ordered by a
-       pre-materialized ``monotonically_increasing_id`` — evaluated in
-       the same projection as the pid so both see the pinned partitions).
-
-    The within-pid window does shuffle on pid, but that is a *parallel*
-    exchange (as many reducers as partitions), not a single-task funnel.
+    The ids come from one projection over the pinned input, which fixes
+    each partition's rows and their order: a row's ordinal is its
+    partition's offset (the running sum of the per-partition counts, an
+    array literal indexed by ``spark_partition_id``) plus its index
+    within the partition (the low 33 bits of
+    ``monotonically_increasing_id``), and its id is that slot of one
+    block reserved for the batch, so ids stay globally monotonic
+    against every other batch from this process. No window, no
+    exchange, no single-task funnel. A driver-held ``LocalRelation``
+    (a small graph's statement pin) knows its row count without a job
+    and is read as one partition, offsets ``[0]``.
     """
     from graph_loom_spark.graph import local_rows  # graph imports this module
 
@@ -108,35 +94,18 @@ def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
     n = local_rows(pinned)
     counts = None
     if n is None:
-        counts = pinned.groupBy(F.spark_partition_id().alias("__pid")).count().collect()
-        n = int(sum(r["count"] for r in counts))
+        counts = dict(pinned.groupBy(F.spark_partition_id()).count().collect())
+        n = sum(counts.values())
     if n == 0:
         return pinned.withColumn(id_col, F.lit(None).cast("string")), 0
-    start_slot = reserve_slots(n)
     if counts is None:
-        # one partition over the relation's fixed row order: a row's
-        # monotonically_increasing_id is its ordinal 0..n-1
-        ordinal = F.monotonically_increasing_id()
-        return pinned.coalesce(1).withColumn(id_col, uuid7_expr(ordinal, start_slot)), n
-    offsets, acc = [], 0
-    for r in sorted(counts, key=lambda r: r["__pid"]):
-        offsets.append((int(r["__pid"]), acc))
-        acc += int(r["count"])
-    spark = pinned.sparkSession
-    off_df = spark.createDataFrame(offsets, schema="__pid int, __off long")
-    tagged = pinned.select(
-        "*",
-        F.spark_partition_id().alias("__pid"),
-        F.monotonically_increasing_id().alias("__mid"),
+        pinned, offsets = pinned.coalesce(1), [0]
+    else:
+        offsets = list(accumulate((counts.get(p, 0) for p in range(max(counts))), initial=0))
+    ordinal = F.lit(offsets)[F.spark_partition_id()] + F.monotonically_increasing_id().bitwiseAND(
+        F.lit((1 << 33) - 1)
     )
-    w = Window.partitionBy("__pid").orderBy("__mid")
-    out = pin(
-        tagged.withColumn("__rn", F.row_number().over(w).cast("long") - 1)
-        .join(F.broadcast(off_df), "__pid")
-        .withColumn(id_col, uuid7_expr(F.col("__off") + F.col("__rn"), start_slot))
-        .drop("__pid", "__mid", "__rn", "__off")
-    )
-    return out, n
+    return pinned.withColumn(id_col, uuid7_expr(ordinal, reserve_slots(n))), n
 
 
 def uuid7_expr(ordinal: Column, start_slot: int) -> Column:

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graph_loom_spark.graph import local_frame
+
 CORRUPT_COL = "_corrupt"
 
 DOCUMENTS_SCHEMA = T.StructType(
@@ -259,9 +261,7 @@ def quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     both halves then written out (the cache is dropped by the caller's
     session teardown, or explicitly via ``df.unpersist()``)."""
     if CORRUPT_COL not in df.columns:
-        return df, df.sparkSession.createDataFrame(
-            [], T.StructType([T.StructField(CORRUPT_COL, T.StringType())])
-        )
+        return df, local_frame(df.sparkSession, [], f"{CORRUPT_COL} string")
     df = df.cache()
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)

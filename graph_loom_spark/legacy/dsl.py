@@ -22,7 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_loom_spark.cypher.ast import CypherError
-from graph_loom_spark.graph import GraphConsistencyError, PropertyGraph
+from graph_loom_spark.cypher.compiler import compare_cols
+from graph_loom_spark.graph import GraphConsistencyError, PropertyGraph, local_frame
 from graph_loom_spark.ids import assign_uuid7_ids
 from graph_loom_spark.result import ResultRow
 
@@ -273,14 +274,14 @@ def exec_match_rel(graph: PropertyGraph, rest: str) -> LegacyResult:
 
 def exec_delete_node(graph: PropertyGraph, rest: str) -> int:
     nid = _parse_uuid(rest)
-    ids = graph.spark.createDataFrame([(nid,)], "id string")
+    ids = local_frame(graph.spark, [(nid,)], "id string")
     removed, _ = graph.delete_nodes_by_ids(ids, detach=True)  # primitive cascades
     return removed
 
 
 def exec_delete_rel(graph: PropertyGraph, rest: str) -> int:
     rid = _parse_uuid(rest)
-    ids = graph.spark.createDataFrame([(rid,)], "id string")
+    ids = local_frame(graph.spark, [(rid,)], "id string")
     return graph.delete_edges_by_ids(ids)
 
 
@@ -298,17 +299,6 @@ def _parse_var_label(p: str) -> tuple[str, str]:
     if not var:
         raise CypherError("variable name required in node pattern")
     return var, label
-
-
-def _str_cmp(lhs: Column, rhs: Column, op: str) -> Column:
-    return {
-        "<": lhs < rhs,
-        "<=": lhs <= rhs,
-        ">": lhs > rhs,
-        ">=": lhs >= rhs,
-        "=": lhs == rhs,
-        "<>": lhs != rhs,
-    }[op]
 
 
 def exec_cypher_match_merge(graph: PropertyGraph, stmt: str) -> LegacyResult:
@@ -421,7 +411,7 @@ def exec_cypher_match_merge(graph: PropertyGraph, stmt: str) -> LegacyResult:
             lc, rc = F.col("__b"), F.col("__a")
         else:
             raise CypherError("WHERE references unknown variables")
-        pairs = pairs.filter(_str_cmp(lc, rc, op))
+        pairs = pairs.filter(compare_cols(lc, rc, op))
     if left_var == var_a and right_var == var_b:
         sel = pairs.select(F.col("__a").alias("src"), F.col("__b").alias("dst"))
     elif left_var == var_b and right_var == var_a:

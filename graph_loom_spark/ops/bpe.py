@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_loom_spark.graph import BROADCAST_ROWS_MAX, scratch, shuffle_partitions
+from graph_loom_spark.graph import BROADCAST_ROWS_MAX, local_frame, scratch, shuffle_partitions
 
 EOW = "</w>"
 
@@ -168,11 +168,9 @@ def bpe_train(
                     words = s.pin(words)
                     rounds_since_ckpt = 0
 
-            result = spark.createDataFrame(
-                [
-                    (i, l, r, l + r)
-                    for i, (l, r) in enumerate(merges)
-                ],
+            result = local_frame(
+                spark,
+                [(i, l, r, l + r) for i, (l, r) in enumerate(merges)],
                 "rank long, left string, right string, merged string",
             )
     return result

@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graph_loom_spark.graph import local_frame
+
 # Eager internal checkpoints published for harness pinning (ADVICE r10
 # #3): ops like rfm_segments localCheckpoint an intermediate that the
 # RETURNED frame still reads from — a block-sweeping harness (bench's
@@ -543,9 +545,7 @@ def rfm_segments(
     for k, b, t in sorted((r["__k"], int(r["__b"]), int(r["__t"])) for r in sums):
         offsets.append((k, b, cum.get(k, 0)))
         cum[k] = cum.get(k, 0) + t
-    off = F.broadcast(
-        u.sparkSession.createDataFrame(offsets, "__k string, __b long, __off long")
-    )
+    off = F.broadcast(local_frame(u.sparkSession, offsets, "__k string, __b long, __off long"))
     w = Window.partitionBy("__k", "__b").orderBy("__v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from graph_loom_spark.graph import scratch, shuffle_partitions
+from graph_loom_spark.graph import local_frame, scratch, shuffle_partitions
 from graph_loom_spark.ops import spread
 
 
@@ -179,7 +179,7 @@ def ann_topk(
         if multi_probe:
             for i in range(bits):
                 probes.append((int(r["table"]), int(r["bucket"]) ^ (1 << i)))
-    probe_df = spark.createDataFrame(sorted(set(probes)), "table int, bucket long")
+    probe_df = local_frame(spark, sorted(set(probes)), "table int, bucket long")
     pvec = bucketed.filter(F.col(id_col) == probe_id).select(
         F.col(vec_col).alias("__p")
     ).limit(1)
@@ -407,9 +407,8 @@ def cosine_near_pairs_blocked(
     assigned = ivf_assign(embeddings, C, id_col=id_col, vec_col=vec_col).localCheckpoint(
         eager=True
     )
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
-        schema="cell int, __c array<double>",
+    cent_df = local_frame(
+        spark, [(i, [float(x) for x in C[i]]) for i in range(len(C))], "cell int, __c array<double>"
     )
     # member→centroid angle; centroids are unit-norm so cos = dot/|v|
     memcos = _dot(F.col(vec_col), F.col("__c")) / _norm(F.col(vec_col))
@@ -433,7 +432,7 @@ def cosine_near_pairs_blocked(
         for j in radii
         if ang[i][j] - radii[i] - radii[j] <= max_angle + 1e-9
     ]
-    pair_df = spark.createDataFrame(admissible, schema="cell_a int, cell_b int")
+    pair_df = local_frame(spark, admissible, "cell_a int, cell_b int")
     # norms computed ONCE per row (n higher-order exprs), so the
     # per-pair verify below is a single interpreted dot product plus a
     # scalar divide — higher-order array expressions are interpreted,
@@ -751,9 +750,8 @@ def kmeans_outliers(
     """
     spark = embeddings.sparkSession
     k = len(centroids)
-    cent_df = spark.createDataFrame(
-        [(int(i), [int(x) for x in centroids[i]]) for i in range(k)],
-        "cluster int, cv array<bigint>",
+    cent_df = local_frame(
+        spark, [(int(i), [int(x) for x in centroids[i]]) for i in range(k)], "cluster int, cv array<bigint>"
     )
     q = F.transform(
         F.col(vec_col),
@@ -2390,11 +2388,9 @@ def ivfpq_fit(
     :func:`pq_fit` over its slim int arrays and freed when it returns.
     """
     spark = embeddings.sparkSession
-    cent = spark.createDataFrame(
-        [
-            (i, [int(x) for x in coarse_centroids[i]])
-            for i in range(len(coarse_centroids))
-        ],
+    cent = local_frame(
+        spark,
+        [(i, [int(x) for x in coarse_centroids[i]]) for i in range(len(coarse_centroids))],
         "cell int, __c array<bigint>",
     )
     q = F.transform(

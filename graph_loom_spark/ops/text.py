@@ -15,6 +15,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graph_loom_spark.graph import local_frame
 from graph_loom_spark.ops import spread
 
 _TOKEN_RE = r"\S+"
@@ -1595,9 +1596,7 @@ def source_cap(
         items = [(str(s), int(c)) for s, c in max_per_source.items() if int(c) >= 1]
         if not items:
             raise ValueError("source_cap: no source has a cap >= 1")
-        caps_df = documents.sparkSession.createDataFrame(
-            items, f"{source_col} string, __cap int"
-        )
+        caps_df = local_frame(documents.sparkSession, items, f"{source_col} string, __cap int")
         # inner join: un-capped sources are dropped before the window
         capped = counts.join(
             F.broadcast(caps_df.withColumn(source_col, F.col(source_col).cast(
@@ -2424,9 +2423,7 @@ def _grouped_cprev(
     for b, t in sorted((int(r["__b"]), int(r["__t"])) for r in sums):
         offsets.append((b, cum))
         cum += t
-    off = F.broadcast(
-        g.sparkSession.createDataFrame(offsets, "__b long, __off long")
-    )
+    off = F.broadcast(local_frame(g.sparkSession, offsets, "__b long, __off long"))
     w = Window.partitionBy("__b").orderBy(score_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

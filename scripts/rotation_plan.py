@@ -17,13 +17,17 @@ Prints the computed window as an ordered list:
 Use it when rotating ``queries()`` for a new round:
     python scripts/rotation_plan.py            # print the plan
     python scripts/rotation_plan.py --apply    # rewrite _WINDOW_ORDER in place
+    python scripts/rotation_plan.py --check    # exit 1 if the window is stale
 ``--apply`` rewrites the ``_WINDOW_ORDER = [...]`` literal in
 ``__spark_entry__.py`` with the computed window, so rotation is a
 one-command round-open step (VERDICT r12 ask #1: rotation must be the
-FIRST commit of every round — the staleness test goes red the moment
-the driver delivers the previous round's CORRECTNESS file).
+FIRST commit of every round).
+``--check`` prints each finding of :func:`check` and exits 1 on any:
+run it whenever a CORRECTNESS file is delivered. It lives here, not in
+the test suite, because those files arrive from outside the code, so a
+test reading them could turn red with no code change.
 Internal adjacency may still be adjusted by hand for memo grouping —
-the rotation test allows a tolerance for exactly that.
+the staleness check allows a tolerance for exactly that.
 """
 
 from __future__ import annotations
@@ -118,6 +122,34 @@ def plan(entry_mod, repo: str) -> tuple[list[str], list[str], list[str]]:
     return window, pending, must
 
 
+def check(entry_mod, repo: str) -> list[str]:
+    """The current ``queries()`` order against the CORRECTNESS files in
+    ``repo``; returns one message per finding (none: the window is
+    current).
+
+    - Every never-green entry must sit inside the ``WINDOW``-entry
+      checked prefix (the r6 invariant), so the next correctness pass
+      covers exactly the entries that need a row.
+    - The strictly-stalest greens (the must set of :func:`plan`) must
+      sit inside it too (the r11 staleness policy)."""
+    keys = list(entry_mod.queries().keys())
+    _, pending, must = plan(entry_mod, repo)
+    findings = []
+    if len(pending) > WINDOW:
+        findings.append(
+            f"{len(pending)} entries lack a green CORRECTNESS row but the checked "
+            f"window is only {WINDOW}: {pending}"
+        )
+    for label, names in (("never-green", pending), ("stalest-green", must)):
+        outside = [k for k in names if keys.index(k) >= WINDOW]
+        if outside:
+            findings.append(
+                f"{len(outside)} {label} entries sit outside the {WINDOW}-entry "
+                f"checked window; run --apply: {outside}"
+            )
+    return findings
+
+
 def apply_window(repo: str, window: list[str]) -> None:
     """Rewrite the ``_WINDOW_ORDER = [...]`` literal in
     ``__spark_entry__.py`` with *window* (one quoted name per line,
@@ -145,6 +177,12 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry
 
+    if "--check" in sys.argv[1:]:
+        findings = check(entry, repo)
+        for f in findings:
+            print(f"FINDING: {f}")
+        print(f"# {len(findings)} finding(s)")
+        raise SystemExit(1 if findings else 0)
     window, pending, must = plan(entry, repo)
     latest = latest_green_rounds(repo)
     print(f"# window ({len(window)}): pending={len(pending)} "

@@ -1,24 +1,19 @@
-"""Rotation invariant for the entry registry (VERDICT r6 ask #2).
+"""Invariants of the entry registry that a code change can break.
 
 The driver's correctness pass hash-checks only a bounded PREFIX of
-``queries()`` (50 entries in every round so far).  The registry has
-outgrown that window twice (r5: 84 entries, r6: 120), each time leaving
-a block of entries with no driver row in any round.  This test makes
-the rotation a scripted invariant instead of a per-round chore: every
-registry key that has never come back green from the driver (union of
-all ``CORRECTNESS_r*.json`` in the repo root) MUST sit inside the
-checked window, so the next driver pass covers exactly the entries that
-need a row.
-
-"Green" for an entry means a driver row with no error and a true value
-hash, OR a clean rows-only row for entries that deliberately publish no
-oracle SQL (``err == 'no_oracle'`` with a non-null spark row count —
-the driver's weaker check for non-SQL-expressible ops).
+``queries()`` (50 entries in every round so far), so the registry order
+is rotated each round by ``scripts/rotation_plan.py``. Whether the
+window is current depends on the ``CORRECTNESS_r*.json`` files
+delivered after each round, which arrive from outside the code: that
+check is ``scripts/rotation_plan.py --check``, run when such a file is
+delivered, and is tested here only on synthetic files. The tests below
+read committed code and artifacts alone.
 """
 
 from __future__ import annotations
 
 import glob
+import importlib.util
 import json
 import os
 
@@ -32,34 +27,13 @@ def _registry_keys() -> list[str]:
     return list(entry.queries().keys())
 
 
-def _driver_green() -> set[str]:
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        with open(path) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            if row.get("err") is None and row.get("hash_match") is True:
-                green.add(name)
-            elif row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                green.add(name)
-    return green
-
-
-def test_unverified_entries_inside_driver_window():
-    keys = _registry_keys()
-    green = _driver_green()
-    pending = [k for k in keys if k not in green]
-    assert len(pending) <= WINDOW, (
-        f"{len(pending)} entries lack a green driver row but the checked "
-        f"window is only {WINDOW} — the registry grew faster than driver "
-        f"coverage; split rounds or shrink the pending set: {pending}"
+def _rotation_plan():
+    spec = importlib.util.spec_from_file_location(
+        "rotation_plan", os.path.join(REPO, "scripts", "rotation_plan.py")
     )
-    stragglers = [k for k in pending if keys.index(k) >= WINDOW]
-    assert not stragglers, (
-        "registry entries with NO green driver row in any CORRECTNESS file "
-        f"sit outside the driver's {WINDOW}-entry window — rotate them to "
-        f"the front of queries(): {stragglers}"
-    )
+    rp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rp)
+    return rp
 
 
 def test_registry_has_no_duplicate_keys():
@@ -113,39 +87,6 @@ def test_oracle_replay_summary_matches_entries():
     )
 
 
-def test_window_slack_holds_stalest_greens():
-    """(VERDICT r11 ask #4) Staleness policy: after the never-green
-    entries, the window's remaining slots must hold the green entries
-    whose NEWEST green driver row is OLDEST — so r5-era greens cycle
-    back under the driver on a schedule instead of by accident. A
-    TOLERANCE of slots is left to judgment (memo-group partners pulled
-    in for bench attribution, changed-code re-verification), but the
-    strictly-stalest set computed by scripts/rotation_plan.py must be
-    inside the window."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "rotation_plan", os.path.join(REPO, "scripts", "rotation_plan.py")
-    )
-    rp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rp)
-    import __spark_entry__ as entry
-
-    keys = _registry_keys()
-    latest = rp.latest_green_rounds(REPO)
-    pending = [k for k in keys if k not in latest]
-    slack = rp.WINDOW - len(pending)
-    greens = sorted((k for k in keys if k in latest), key=lambda k: (latest[k], k))
-    must = greens[: max(0, slack - rp.TOLERANCE)]
-    stragglers = [k for k in must if keys.index(k) >= rp.WINDOW]
-    assert not stragglers, (
-        f"{len(stragglers)} of the {len(must)} stalest-green entries sit "
-        f"outside the {rp.WINDOW}-entry driver window — regenerate the "
-        f"rotation (python scripts/rotation_plan.py) and update "
-        f"_WINDOW_ORDER: {stragglers}"
-    )
-
-
 def test_window_order_is_exactly_the_driver_prefix():
     """_WINDOW_ORDER documents 'the driver window' — it must therefore
     be exactly WINDOW entries and exactly the queries() prefix, or
@@ -162,13 +103,7 @@ def test_memo_groups_give_each_memo_family_one_id():
     query sharing a memo store, directly or through another query, must
     get the same id (the families are recomputed here by plain set
     merging over ``_memo_map()``)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "rotation_plan", os.path.join(REPO, "scripts", "rotation_plan.py")
-    )
-    rp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rp)
+    rp = _rotation_plan()
     import __spark_entry__ as entry
 
     families: list[tuple[set, set]] = []  # (names, store ids)
@@ -182,3 +117,33 @@ def test_memo_groups_give_each_memo_family_one_id():
     groups = rp.memo_groups(entry)
     assert all(len({groups[n] for n in names}) == 1 for names, _ in families)
     assert len(set(groups.values())) == len(families)
+
+
+def test_rotation_check_flags_a_stale_window(tmp_path):
+    """``rotation_plan.py --check`` on synthetic CORRECTNESS files: the
+    window passes while it holds the never-green and the stalest-green
+    entries, and each kind of staleness is a finding."""
+    rp = _rotation_plan()
+    import __spark_entry__ as entry
+
+    keys = _registry_keys()
+
+    def deliver(repo, rnd: int, names) -> None:
+        rows = {n: {"err": None, "hash_match": True} for n in names}
+        (repo / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+    # the window entries are the stalest greens: current
+    deliver(tmp_path, 1, keys)
+    deliver(tmp_path, 2, keys[WINDOW:])
+    assert rp.check(entry, str(tmp_path)) == []
+    # a newer round greens the window: the stalest now sit outside it
+    deliver(tmp_path, 3, keys[:WINDOW])
+    findings = rp.check(entry, str(tmp_path))
+    assert len(findings) == 1 and "stalest-green" in findings[0]
+    # an entry past the window with no green row at all
+    fresh = tmp_path / "never"
+    fresh.mkdir()
+    deliver(fresh, 1, keys[:-1])
+    deliver(fresh, 2, keys[WINDOW:-1])
+    findings = rp.check(entry, str(fresh))
+    assert len(findings) == 1 and "never-green" in findings[0] and keys[-1] in findings[0]
