@@ -1791,7 +1791,7 @@ def _lsh_index(spark, sf_dir) -> DataFrame:
 
 def _q_emb_ann_lsh(spark, sf_dir):
     """LSH-bucketed approximate top-k — approximate, rows-only check."""
-    return ops_sim.ann_topk(_lsh_index(spark, sf_dir), probe_id=7, k=10, pinned=True)
+    return ops_sim.ann_topk(_lsh_index(spark, sf_dir), probe_id=7, k=10)
 
 
 def _q_emb_ann_eval(spark, sf_dir):
@@ -4229,11 +4229,19 @@ def _hits_oracle(iters: int = 3, S: int = 10**9) -> str:
     )
 
 
+def _grid_sql(lo: int, hi: int) -> str:
+    """DuckDB replay of the fixed-point grid (``ops.simsearch._grid``)
+    over ``embedding[lo..hi]``."""
+    return (
+        f"[CAST(floor(CAST(embedding[i] AS DOUBLE) * {float(ops_sim.GRID)} + 0.5) AS BIGINT) "
+        f"for i in generate_series({lo}, {hi})]"
+    )
+
+
 def _kmeans_sql_parts(
     k: int = 8,
     iters: int = 10,
     dim: int = 64,
-    scale: int = 1 << 20,
     prefix: str = "",
     off: int = 0,
     src: str | None = None,
@@ -4246,15 +4254,12 @@ def _kmeans_sql_parts(
     slices the fit to coordinates off+1..off+dim (a PQ subspace).
     ``src`` names a CTE already holding PRE-QUANTIZED int64 vectors
     ``(vec_id, v)`` — the fit then slices that instead of quantizing
-    the embeddings table (mirrors pq_fit(prequantized=True), used
-    by the IVFADC residual sub-fits)."""
+    the embeddings table (mirrors ivfpq_fit, which runs the Lloyd loop
+    on its grid residuals)."""
     if src is not None:
         qexpr = f"v[{off + 1}:{off + dim}]"
     else:
-        qexpr = (
-            f"[CAST(floor(CAST(embedding[i] AS DOUBLE) * {float(scale)} + 0.5) AS BIGINT) "
-            f"for i in generate_series({off + 1}, {off + dim})]"
-        )
+        qexpr = _grid_sql(off + 1, off + dim)
     dist = (
         "list_sum([(x.v[i]-c.v[i])*(x.v[i]-c.v[i]) "
         f"for i in generate_series(1, {dim})])"
@@ -4295,15 +4300,15 @@ def _kmeans_sql_parts(
     return parts, f"{x}a{iters}", f"{x}c{iters - 1}"
 
 
-def _kmeans_oracle(k: int = 8, iters: int = 10, dim: int = 64, scale: int = 1 << 20) -> str:
+def _kmeans_oracle(k: int = 8, iters: int = 10, dim: int = 64) -> str:
     """SQL replay of the fixed-point Lloyd's in ops.simsearch.kmeans:
-    quantize coordinates to scale-denominated longs, exact integer
+    quantize coordinates to the grid, exact integer
     distances with (distance, cluster) row_number tie-break, integer
     sum + floor-division centroid means, empty clusters keep their
     previous centroid. Unrolled per iteration; AS MATERIALIZED because
     each round references its predecessor repeatedly. Output is the
     kmeans_summary shape (cluster, size, min_id)."""
-    parts, assign, _ = _kmeans_sql_parts(k, iters, dim, scale)
+    parts, assign, _ = _kmeans_sql_parts(k, iters, dim)
     return (
         "WITH " + ", ".join(parts)
         + " SELECT cluster, CAST(count(*) AS BIGINT) AS size, min(vec_id) AS min_id "
@@ -4317,7 +4322,7 @@ def _cluster_sample_oracle(n: int = 20) -> str:
     by the NAIVE per-cluster window — rank by
     md5('csample:cluster:vec_id') with vec_id tie-break, keep n.
     source_cap's two-phase skew guard selects exactly these rows."""
-    parts, assign, _ = _kmeans_sql_parts(8, 10, 64, 1 << 20)
+    parts, assign, _ = _kmeans_sql_parts(8, 10, 64)
     return (
         "WITH " + ", ".join(parts)
         + ", r AS (SELECT vec_id, cluster, row_number() OVER ("
@@ -4334,7 +4339,7 @@ def _outliers_oracle(top_n: int = 25) -> str:
     generator as the kmeans oracle), exact int64 squared distance of
     each quantized vector to its FINAL-ASSIGNMENT centroid, top-n by
     (qdist DESC, vec_id)."""
-    parts, assign, cents = _kmeans_sql_parts(8, 10, 64, 1 << 20)
+    parts, assign, cents = _kmeans_sql_parts(8, 10, 64)
     dist = (
         "list_sum([(x.v[i]-c.v[i])*(x.v[i]-c.v[i]) "
         "for i in generate_series(1, 64)])"
@@ -4357,7 +4362,6 @@ def _pq_oracle(
     dim: int = 64,
     probe: int = 7,
     topk: int = 10,
-    scale: int = 1 << 20,
 ) -> str:
     """SQL replay of PQ/ADC search: m prefixed fixed-point subspace
     k-means fits (same generator as the kmeans oracle, sliced via
@@ -4369,19 +4373,14 @@ def _pq_oracle(
     parts: list = []
     assigns, cents = [], []
     for j in range(m):
-        p, a, c = _kmeans_sql_parts(
-            k, iters, sub, scale, prefix=f"s{j}", off=j * sub
-        )
+        p, a, c = _kmeans_sql_parts(k, iters, sub, prefix=f"s{j}", off=j * sub)
         parts += p
         assigns.append(a)
         cents.append(c)
     for j in range(m):
-        qsub = (
-            f"[CAST(floor(CAST(embedding[i] AS DOUBLE) * {float(scale)} + 0.5) AS BIGINT) "
-            f"for i in generate_series({j * sub + 1}, {(j + 1) * sub})]"
-        )
         parts.append(
-            f"pq{j} AS (SELECT {qsub} AS v FROM embeddings WHERE vec_id = {probe})"
+            f"pq{j} AS (SELECT {_grid_sql(j * sub + 1, (j + 1) * sub)} AS v "
+            f"FROM embeddings WHERE vec_id = {probe})"
         )
         parts.append(
             f"dt{j} AS MATERIALIZED (SELECT c.cluster, "
@@ -4981,21 +4980,18 @@ def _ivfpq_oracle(
 
 
 def _pca_power_oracle(
-    iters: int = 100, dim: int = 64, scale: int = 1 << 20
+    iters: int = 100, dim: int = 64
 ) -> str:
     """X123 — SQL replay of the fixed-point power iteration: the exact
     integer second-moment matrix (HUGEINT sums of int64 products), then
-    ``iters`` unrolled iterations ``w = C·v``, ``v ← (w·scale) // max|w|``
+    ``iters`` unrolled iterations ``w = C·v``, ``v ← (w·GRID) // max|w|``
     in HUGEINT (DuckDB ``//`` truncates toward zero — the engine's
     driver-side loop uses the matching trunc-div on Python ints), and
     the final int64 projection. Every quantity exact, so the scores
     hash-match bit-for-bit."""
-    qexpr = (
-        f"[CAST(floor(CAST(embedding[i] AS DOUBLE) * {float(scale)} + 0.5) "
-        f"AS BIGINT) for i in generate_series(1, {dim})]"
-    )
+    scale = ops_sim.GRID
     parts = [
-        f"qv AS MATERIALIZED (SELECT vec_id, {qexpr} AS v FROM embeddings)",
+        f"qv AS MATERIALIZED (SELECT vec_id, {_grid_sql(1, dim)} AS v FROM embeddings)",
         "cov AS MATERIALIZED (SELECT a.i, b.j, "
         "CAST(sum(q.v[a.i] * q.v[b.j]) AS HUGEINT) AS s "
         f"FROM qv q, (SELECT unnest(generate_series(1, {dim})) AS i) a, "
@@ -6055,7 +6051,7 @@ def _oracle_sql_raw() -> dict[str, str]:
         # oracle; all-integer mins/maxes/sums, integer-ratio avg.
         "emb_norm_stats": (
             "WITH q AS (SELECT list_sum([y * y for y in "
-            "[CAST(floor(x * 1048576.0 + 0.5) AS BIGINT) "
+            f"[CAST(floor(x * {float(ops_sim.GRID)} + 0.5) AS BIGINT) "
             "for x in CAST(embedding AS DOUBLE[])]]) AS qn FROM embeddings) "
             "SELECT CAST(count(*) AS BIGINT) AS n_vectors, "
             "CAST(sum(CASE WHEN qn = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero, "

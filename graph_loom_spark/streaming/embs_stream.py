@@ -41,7 +41,6 @@ def stream_cluster_assign(
     centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """Online nearest-centroid assignment against a frozen codebook —
     a stateless Arrow-batched projection (no watermark, no state store;
@@ -52,9 +51,7 @@ def stream_cluster_assign(
     """
     from graph_loom_spark.ops.simsearch import assign_to_centroids
 
-    return assign_to_centroids(
-        embs, centroids, id_col=id_col, vec_col=vec_col, scale=scale
-    )
+    return assign_to_centroids(embs, centroids, id_col=id_col, vec_col=vec_col)
 
 
 def stream_cluster_counts(
@@ -62,7 +59,6 @@ def stream_cluster_counts(
     centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1 << 20,
 ) -> DataFrame:
     """Running per-cluster ingestion totals over the online assignment —
     the live twin of the cluster-level curation views
@@ -75,25 +71,13 @@ def stream_cluster_counts(
     sum is the drift monitor: a cluster whose incoming norm mass shifts
     signals the frozen codebook needs a re-fit.
     """
-    from graph_loom_spark.ops.simsearch import assign_to_centroids
+    from graph_loom_spark.ops.simsearch import assign_to_centroids, grid_sqnorm
 
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
-    qnorm = F.aggregate(
-        F.transform(q, lambda v: v * v),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     assigned = assign_to_centroids(
-        embs.withColumn("__qn", qnorm),
+        embs.withColumn("__qn", grid_sqnorm(F.col(vec_col))),
         centroids,
         id_col=id_col,
         vec_col=vec_col,
-        scale=scale,
         keep_cols=["__qn"],
     )
     return assigned.groupBy("cluster").agg(

@@ -22,6 +22,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from graph_loom_spark import analytics
+from graph_loom_spark.graph import scratch
 from graph_loom_spark.io.tpch_graph import build_graph
 from graph_loom_spark.ops import dedup as ops_dedup
 from graph_loom_spark.ops import simsearch as sim
@@ -319,8 +320,9 @@ def test_ann_lsh_recall(spark):
     # 0.25-0.35 (p≈0.6 per hyperplane), so at n=500 use 16 buckets/table;
     # expected recall with 4 tables + Hamming-1 probing ≈ 0.92/neighbor.
     # Hyperplanes are seed-fixed → the outcome is deterministic.
-    bk = sim.rp_lsh_buckets(emb, dim=64, bits=4, tables=4)
-    approx = {r["vec_id"] for r in sim.ann_topk(bk, probe_id=7, k=10, bits=4).collect()}
+    with scratch(spark) as s:
+        bk = s.pin(sim.rp_lsh_buckets(emb, dim=64, bits=4, tables=4))
+        approx = {r["vec_id"] for r in sim.ann_topk(bk, probe_id=7, k=10, bits=4).collect()}
     assert len(approx) == 10
     assert len(exact & approx) >= 6
 
@@ -331,13 +333,15 @@ def test_ann_lsh_recall(spark):
 def _py_kmeans_int(X, k, iters, scale=1 << 20):
     """Pure integer replay of the fixed-point Lloyd's in sim.kmeans:
     quantize, exact int64 distances, floor-division centroid means,
-    lowest-index tie-break, early stop at the centroid fixpoint."""
+    lowest-index tie-break, early stop at the centroid fixpoint.
+    Returns the final assignment and the centroids it was made with."""
     import numpy as np
 
     V = np.floor(X * scale + 0.5).astype(np.int64)
     C = V[:k].copy()
-    assign = None
+    assign, C_assign = None, C
     for _ in range(iters):
+        C_assign = C
         d2 = (V**2).sum(1)[:, None] - 2 * (V @ C.T) + (C**2).sum(1)[None, :]
         assign = np.argmin(d2, axis=1)
         nxt = C.copy()
@@ -348,14 +352,15 @@ def _py_kmeans_int(X, k, iters, scale=1 << 20):
         if np.array_equal(nxt, C):
             break
         C = nxt
-    return assign
+    return assign, C_assign
 
 
 def test_kmeans_matches_integer_reference(spark):
     """Distributed fixed-point Lloyd's ≡ a single-machine integer replay
     of the identical algorithm (same quantization, same deterministic
     init, same floor-division means, same lowest-index tie-break) on
-    the sf0.001 embeddings — exact, no float tolerance."""
+    the sf0.001 embeddings — exact, no float tolerance: the assignment
+    and the centroid matrix kmeans_fit returns with it."""
     import numpy as np
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -365,14 +370,13 @@ def test_kmeans_matches_integer_reference(spark):
     ids = np.asarray([t[0] for t in rows])
     X = np.asarray([t[1] for t in rows], dtype=np.float64)
     k, iters = 6, 8
-    assign = _py_kmeans_int(X, k, iters)
+    assign, cents = _py_kmeans_int(X, k, iters)
     expected = dict(zip(ids.tolist(), assign.tolist()))
 
-    got = {
-        r["vec_id"]: r["cluster"]
-        for r in sim.kmeans(emb, k=k, iters=iters).collect()
-    }
+    assigned, got_cents = sim.kmeans_fit(emb, k=k, iters=iters)
+    got = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
     assert got == expected
+    assert np.array_equal(np.asarray(got_cents), cents)
 
 
 def test_kmeans_outliers_matches_numpy(spark):
@@ -459,7 +463,7 @@ def test_semdedup_matches_numpy_reference(spark):
     ids = np.asarray([t[0] for t in rows])
     X = np.asarray([t[1] for t in rows], dtype=np.float64)
     k, iters, thr = 6, 8, 0.3
-    assign = _py_kmeans_int(X, k, iters)
+    assign, _ = _py_kmeans_int(X, k, iters)
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     expected = {}
     for i, vid in enumerate(ids.tolist()):

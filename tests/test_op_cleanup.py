@@ -9,7 +9,7 @@ import pytest
 
 from graph_loom_spark import analytics
 from graph_loom_spark.cypher import compiler
-from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph
+from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph, scratch
 from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.ops import bpe as ops_bpe
 from graph_loom_spark.ops import simsearch as sim
@@ -137,3 +137,14 @@ def test_ivfpq_fit_leaves_only_its_codes_pinned(spark):
     # the residual checkpoint the fit reads must be freed as well, and
     # ``DataFrame.unpersist()`` leaves a checkpoint pinned
     assert _persisted(spark) - before == {_rdd_id(codes)}
+
+
+def test_ann_topk_over_a_pinned_index_pins_nothing(spark):
+    """The caller owns the LSH index: a query over it pins no block of
+    its own, which nothing would ever free."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    with scratch(spark) as s:
+        index = s.pin(sim.rp_lsh_buckets(emb, dim=64, bits=4, tables=4))
+        before = _persisted(spark)
+        assert sim.ann_topk(index, probe_id=7, k=10, bits=4).count() == 10
+        assert _persisted(spark) == before

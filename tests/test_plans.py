@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 
 import pytest
 
@@ -752,3 +753,34 @@ def test_nb_classifier_trained_weight_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, plan[:3000]
     assert "CartesianProduct" not in plan
+
+
+def test_ann_lsh_is_posting_list_join_broadcast_probe_take_ordered(spark):
+    """ANN-LSH candidates are a broadcast equi-join on (table, bucket)
+    against the probe's bucket list — a posting-list lookup, never a
+    scan-side shuffle join; the probe vector reaches the candidates
+    through a broadcast nested loop over one row, and the top-k is a
+    TakeOrdered."""
+    plan = _plan(spark, "emb_ann_lsh")
+    assert re.search(r"BroadcastHashJoin \[table#\d+, bucket#\d+L\]", plan)
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "TakeOrderedAndProject" in plan
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_cosine_topk_is_one_scan_against_broadcast_probe(spark):
+    """Exact cosine top-k: one corpus scan scored against the broadcast
+    probe row into a TakeOrdered. No keyed shuffle: the one exchange
+    allowed is ``spread``'s round-robin widening of a scan narrower than
+    the cores (there is none on two cores at sf0.01)."""
+    from graph_loom_spark.ops import simsearch as sim
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    df = sim.cosine_topk(emb, probe_id=7, k=10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "TakeOrderedAndProject" in plan
+    assert set(re.findall(r"\bExchange (\w+)", plan)) <= {"RoundRobinPartitioning"}
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan

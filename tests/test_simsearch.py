@@ -3,9 +3,13 @@ brute-force top-k (extension surface — SURVEY §7.1 M9)."""
 
 from __future__ import annotations
 
+import os
+import re
+
 from graph_loom_spark.ops import simsearch as sim
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_ivf_topk_recall(spark):
@@ -859,17 +863,17 @@ def test_hubness_skew_planted(spark):
 
 
 def test_pq_fit_fused_matches_per_subspace_kmeans(spark):
-    """r14-opt: pq_fit's fused all-subspace Lloyd loop must be
-    bit-identical to m independent per-subspace kmeans_fit runs (the
-    previous pq_fit construction) — same codes, same codebooks, same
-    digest. Pins the equivalence argument: slicing commutes with the
-    elementwise quantization, per-subspace arithmetic is unchanged, and
-    a converged subspace's extra fused iterations are identities."""
+    """pq_fit's fused all-subspace Lloyd loop must be bit-identical to m
+    independent kmeans_fit runs, one per subspace slice — same codes,
+    same codebooks, same digest. Pins the equivalence argument: slicing
+    commutes with the elementwise quantization, per-subspace arithmetic
+    is unchanged, and a converged subspace's extra fused iterations are
+    identities."""
     from pyspark.sql import functions as F
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     m, k, iters = 4, 8, 3
-    codes, books = sim.pq_fit(emb, m=m, k=k, iters=iters, track_digest=False)
+    codes, books = sim.pq_fit(emb, m=m, k=k, iters=iters)
     dim = len(emb.select("embedding").head()[0])
     sub = dim // m
     ref_codes = None
@@ -888,3 +892,33 @@ def test_pq_fit_fused_matches_per_subspace_kmeans(spark):
     assert {tuple(r) for r in codes.collect()} == {
         tuple(r) for r in ref_codes.collect()
     }
+
+
+# each fixed-point mechanism the oracles replay, as it is spelled in code
+_WRITTEN_ONCE = {
+    "grid quantizer (Spark)": re.compile(
+        r'F\.floor\(\s*\w+\.cast\("double"\)\s*\*\s*F\.lit\(float\(\w+\)\)\s*\+\s*F\.lit\(0\.5\)\s*\)'
+    ),
+    "grid quantizer (numpy)": re.compile(r"np\.floor\([^\n]*\*\s*\w+\s*\+\s*0\.5\)"),
+    "nearest-centroid kernel": re.compile(
+        r"\*\*\s*2\)\.sum\(axis=1\)\[:,\s*None\]\s*-\s*2\s*\*\s*\("
+    ),
+}
+
+
+def test_fixed_point_mechanisms_written_once():
+    """The grid quantizer and the int64 nearest-centroid kernel each
+    appear once in the library (``simsearch._grid``/``_grid_probe`` and
+    ``_nearest``): a second copy can drift from the rules the oracles
+    replay."""
+    found = {name: [] for name in _WRITTEN_ONCE}
+    for root, _, files in os.walk(os.path.join(REPO, "graph_loom_spark")):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                text = fh.read()
+            for name, pattern in _WRITTEN_ONCE.items():
+                found[name] += [os.path.relpath(path, REPO)] * len(pattern.findall(text))
+    assert {name: len(sites) for name, sites in found.items()} == dict.fromkeys(found, 1), found
