@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_loom_spark import analytics
+from graph_loom_spark.graph import scratch
 from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.io.tpch_graph import build_graph
 from graph_loom_spark.ops import bpe as ops_bpe
@@ -1707,10 +1708,10 @@ def _minhash_sigs(spark, sf_dir) -> DataFrame:
 @_memo
 def _minhash_pairs(spark, sf_dir) -> DataFrame:
     # deterministic (md5 mode) and reused by docs_minhash_clusters —
-    # same memo rule as _jaccard_pairs
+    # same memo rule as _jaccard_pairs; the op returns an eager checkpoint
     return ops_dedup.minhash_lsh_pairs(
         _minhash_sigs(spark, sf_dir), threshold=0.3, band_hash="md5"
-    ).localCheckpoint(eager=True)
+    )
 
 
 def _q_docs_minhash_pairs(spark, sf_dir):
@@ -2217,10 +2218,10 @@ def _pq_index(spark, sf_dir):
             f"got={got} — refitting once",
             file=sys.stderr,
         )
-        try:  # free the diverged fit's checkpoint blocks
-            codes.unpersist()
-        except Exception:
-            pass
+        # free the diverged fit's codes block through its RDD id:
+        # DataFrame.unpersist() frees nothing on a checkpoint
+        with scratch(spark) as s:
+            s.own(codes)
         codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
         got = ops_sim.pq_codebooks_md5(books)
         print(

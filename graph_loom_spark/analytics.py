@@ -38,6 +38,7 @@ from graph_loom_spark.graph import (
     BROADCAST_ROWS_MAX, PropertyGraph, broadcast_if_small, local_frame, partitions_for, scratch,
     shuffle_partitions,
 )
+from graph_loom_spark.ops import md5_lane
 
 
 def degrees(graph: PropertyGraph) -> DataFrame:
@@ -1590,12 +1591,8 @@ def weighted_sssp(
     with scratch(edges_df.sparkSession) as s:
         ed = s.pin(edges_df.select(*cols))
         if weight_col is None:
-            lo = F.least(F.col(src), F.col(dst)).cast("string")
-            hi = F.greatest(F.col(src), F.col(dst)).cast("string")
-            lane = F.conv(
-                F.substring(F.md5(F.concat_ws("|", lo, hi)), 1, 8), 16, 10
-            ).cast("long")
-            w = (lane % F.lit(weight_mod)) + F.lit(1)
+            lo, hi = f"cast(least({src}, {dst}) as string)", f"cast(greatest({src}, {dst}) as string)"
+            w = F.expr(md5_lane(f"concat_ws('|', {lo}, {hi})", mod=weight_mod)) + F.lit(1)
         else:
             w = F.col(weight_col).cast("long")
         half = ed.select(F.col(src).alias("u"), F.col(dst).alias("v"), w.alias("w"))

@@ -134,12 +134,16 @@ class Scratch:
 
     def pin(self, df: DataFrame) -> DataFrame:
         """``localCheckpoint(eager=True)``, recording the block's RDD id."""
-        out = df.localCheckpoint(eager=True)
+        return self.own(df.localCheckpoint(eager=True))
+
+    def own(self, df: DataFrame) -> DataFrame:
+        """Record the RDD id of ``df``, a checkpoint some op returned, so
+        this scope frees it too."""
         try:
-            self._rdd_ids.append(out._jdf.queryExecution().analyzed().rdd().id())
+            self._rdd_ids.append(df._jdf.queryExecution().analyzed().rdd().id())
         except Exception:
             pass  # tracking is best-effort; worst case the block stays pinned
-        return out
+        return df
 
     def persist(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """``persist()`` — unlike a checkpoint it keeps the frame's

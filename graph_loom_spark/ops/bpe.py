@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_loom_spark.graph import BROADCAST_ROWS_MAX, local_frame, scratch, shuffle_partitions
+from graph_loom_spark.ops import norm_tokens
 
 EOW = "</w>"
 
@@ -75,9 +76,7 @@ def bpe_train(
     import pandas as pd
 
     spark = documents.sparkSession
-    toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
+    toks = F.expr(norm_tokens(text_col))
     with scratch(spark) as s:
         words = (
             documents.select(F.explode(toks).alias("__w"))
@@ -251,12 +250,7 @@ def bpe_token_counts(
 
     # coalesce: a NULL text must behave like "" (n_bpe_tokens = 0, row
     # kept), matching bpe_encode_stats' `(t or "")`
-    toks = F.split(
-        F.regexp_replace(
-            F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))), r"\s+", " "
-        ),
-        " ",
-    )
+    toks = F.expr(norm_tokens(f"coalesce({text_col}, '')"))
     # the "" token (empty/whitespace-only doc) is deliberately KEPT in
     # occ — it is that doc's only row and carries its id to the output
     occ = (

@@ -18,7 +18,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_loom_spark.graph import scratch
-from graph_loom_spark.ops import spread
+from graph_loom_spark.ops import (
+    lsh_bands,
+    md5_lane,
+    ngrams,
+    norm_text,
+    norm_tokens,
+    rarest_first_prefix,
+    spread,
+)
 
 # 31-bit Mersenne prime: a,b < 2^31 and h mod p < 2^31, so a*h+b < 2^62
 # never overflows a long even with ANSI arithmetic checks enabled.
@@ -48,16 +56,6 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> D
     )
 
 
-def _shingles(text_col, n: int = 3):
-    """Word n-gram shingle hash array (distinct), all JVM expressions."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " "), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, n))),
-    )
-    return F.array_distinct(grams)
-
-
 def minhash_signatures(
     documents: DataFrame,
     text_col: str = "text",
@@ -80,7 +78,7 @@ def minhash_signatures(
     rng = random.Random(seed)
     documents = spread(documents)  # shingle+hash fan-out is CPU-bound
     ex = documents.select(
-        F.col(id_col), F.explode(_shingles(F.col(text_col), shingle_n)).alias("__h")
+        F.col(id_col), F.explode(F.expr(ngrams(norm_tokens(text_col), shingle_n))).alias("__h")
     ).select(F.col(id_col), F.pmod(F.col("__h"), F.lit(_MERSENNE)).alias("__hm"))
     aggs = []
     for i in range(num_perm):
@@ -124,20 +122,13 @@ def minhash_signatures_md5(
     when only recall does. Same shape otherwise: explode →
     ``num_perm`` min-aggregates with map-side partial combine.
     """
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - shingle_n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, shingle_n)),
-        )
-    )
+    grams = F.expr(ngrams(norm_tokens(text_col), shingle_n, "concat_ws(' ', {})"))
     documents = spread(documents)  # md5 fan-out is CPU-bound
     ex = documents.select(F.col(id_col), F.explode(grams).alias("__g"))
-    dig = F.md5(F.col("__g"))
     ex = ex.select(
         F.col(id_col),
-        F.conv(F.substring(dig, 1, 8), 16, 10).cast("long").alias("__h1"),
-        F.conv(F.substring(dig, 9, 8), 16, 10).cast("long").alias("__h2"),
+        F.expr(md5_lane("__g")).alias("__h1"),
+        F.expr(md5_lane("__g", 9)).alias("__h2"),
     )
     aggs = [
         F.min((F.col("__h1") + F.lit(i) * F.col("__h2")) % F.lit(2147483647)).alias(
@@ -176,63 +167,56 @@ def minhash_lsh_pairs(
     shuffle) or "md5" over the '|'-joined slice — engine-independent, so
     an external SQL engine banding the same signatures derives the
     IDENTICAL candidate set (the oracle path; collisions 2^-128 instead
-    of 2^-32, and est-filter semantics are unchanged either way)."""
-    # materialize signatures once: banding + both estimate joins reuse
-    # them, and recomputing shingles×permutations 3x dominates otherwise
-    sig = signatures.select(F.col(id_col).alias("id"), "signature").localCheckpoint(eager=True)
-    if num_perm is None:
-        # Probe the real signature length off the checkpointed data (one
-        # cheap action on already-materialized blocks) instead of
-        # trusting a hardcoded default.
-        row = sig.select(F.size("signature").alias("n")).first()
-        num_perm = int(row["n"]) if row is not None else bands
-    if num_perm % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
-    rows_per_band = num_perm // bands
+    of 2^-32, and est-filter semantics are unchanged either way).
 
-    def _bh(bi):
-        sl = F.slice("signature", bi * rows_per_band + 1, rows_per_band)
-        if band_hash == "md5":
-            return F.md5(F.concat_ws("|", F.transform(sl, lambda x: x.cast("string"))))
-        return F.hash(sl).cast("string")
-
-    banded = sig.select(
-        "id",
-        "signature",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(bi).alias("band"), _bh(bi).alias("bh"))
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", "signature", "b.band", "b.bh")
-    left = banded.select(F.col("id").alias("id_a"), "band", "bh")
-    right = banded.select(F.col("id").alias("id_b"), "band", "bh")
-    # dedupe candidate ids FIRST (ids only — dragging the 32-slot
-    # signature arrays through the distinct shuffle dominated runtime),
-    # then join the signatures back for the estimate.
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sigs = sig.select(F.col("id"), F.col("signature"))
-    cand = (
-        cand.join(sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a")), "id_a")
-        .join(sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b")), "id_b")
-    )
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        / F.size(F.col("sig_a"))
-    )
-    return (
-        cand.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    Ownership: the result is materialized eagerly and the signature
+    checkpoint freed before returning; the only block a call leaves
+    pinned is the returned frame itself (see :func:`simhash_near_pairs`)."""
+    if band_hash == "md5":
+        bh = lambda sl: F.md5(F.concat_ws("|", F.transform(sl, lambda x: x.cast("string"))))  # noqa: E731
+    else:
+        bh = lambda sl: F.hash(sl).cast("string")  # noqa: E731
+    with scratch(signatures.sparkSession) as s:
+        # materialize signatures once: banding + both estimate joins reuse
+        # them, and recomputing shingles×permutations 3x dominates otherwise
+        sig = s.pin(signatures.select(F.col(id_col).alias("id"), "signature"))
+        if num_perm is None:
+            # Probe the real signature length off the checkpointed data (one
+            # cheap action on already-materialized blocks) instead of
+            # trusting a hardcoded default.
+            row = sig.select(F.size("signature").alias("n")).first()
+            num_perm = int(row["n"]) if row is not None else bands
+        if num_perm % bands != 0:
+            raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
+        banded = sig.select(
+            "id", "signature", F.explode(lsh_bands("signature", bands, num_perm // bands, bh)).alias("b")
+        ).select("id", "signature", "b.band", "b.bh")
+        left = banded.select(F.col("id").alias("id_a"), "band", "bh")
+        right = banded.select(F.col("id").alias("id_b"), "band", "bh")
+        # dedupe candidate ids FIRST (ids only — dragging the 32-slot
+        # signature arrays through the distinct shuffle dominated runtime),
+        # then join the signatures back for the estimate.
+        cand = (
+            left.join(right, ["band", "bh"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        sigs = sig.select(F.col("id"), F.col("signature"))
+        cand = (
+            cand.join(sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a")), "id_a")
+            .join(sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b")), "id_b")
+        )
+        est = (
+            F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
+            / F.size(F.col("sig_a"))
+        )
+        return (
+            cand.withColumn("est_jaccard", est)
+            .filter(F.col("est_jaccard") >= threshold)
+            .select("id_a", "id_b", "est_jaccard")
+            .localCheckpoint(eager=True)
+        )
 
 
 def minhash_dedup_against(
@@ -272,25 +256,9 @@ def minhash_dedup_against(
     ).select(F.col(id_col).alias("__iid"), F.col("signature").alias("__is"))
 
     def _banded(sig, idc, sc):
+        bh = lambda sl: F.md5(F.concat_ws("|", sl))  # noqa: E731
         return sig.select(
-            idc,
-            sc,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.md5(
-                                F.concat_ws(
-                                    "|",
-                                    F.slice(sc, bi * rows_per_band + 1, rows_per_band),
-                                )
-                            ).alias("bh"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("b"),
+            idc, sc, F.explode(lsh_bands(sc, bands, rows_per_band, bh)).alias("b")
         ).select(idc, sc, "b.band", "b.bh")
 
     est = (
@@ -344,9 +312,7 @@ def simhash(documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     (The naive per-bit form with 64 ``F.aggregate`` folds over the
     token array is even worse: it inlines tokenize+hash 64 times —
     codegen blowup.)"""
-    toks = F.array_distinct(
-        F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    )
+    toks = F.array_distinct(F.expr(norm_tokens(text_col)))
     documents = spread(documents)  # tokenize+hash fan-out is CPU-bound
     ex = documents.select(F.col(id_col), F.explode(toks).alias("__t")).select(
         F.col(id_col), F.xxhash64(F.col("__t")).alias("__h")
@@ -365,13 +331,10 @@ def simhash_md5(documents: DataFrame, text_col: str = "text", id_col: str = "doc
     ``simhash_near_pairs(..., bits=60)``. Same scale shape as the
     xxhash64 form; md5 costs more CPU per token — use this mode when
     cross-engine auditability matters."""
-    toks = F.array_distinct(
-        F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    )
+    toks = F.array_distinct(F.expr(norm_tokens(text_col)))
     documents = spread(documents)
     ex = documents.select(F.col(id_col), F.explode(toks).alias("__t")).select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5("__t"), 1, 15), 16, 10).cast("long").alias("__h"),
+        F.col(id_col), F.expr(md5_lane("__t", width=15)).alias("__h")
     )
     return _simhash_from_hashed(ex, id_col, n_bits=60)
 
@@ -508,9 +471,8 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard over candidate pairs. With no explicit
     ``candidate_pairs``, candidates come from a PREFIX-FILTERED inverted
     shingle index (AllPairs / PPJoin, Bayardo et al. WWW'07; Xiao et al.
-    WWW'08): order each document's shingles rarest-first by global
-    document frequency and index only the first
-    ``|sh| - ceil(t*|sh|) + 1`` of them — any pair with Jaccard ≥ t must
+    WWW'08; the rarest-first prefix index of :mod:`graph_loom_spark.ops`)
+    — any pair with Jaccard ≥ t must
     collide inside both prefixes, so the pruning is LOSSLESS while the
     frequent shingles (the quadratic blowup of a plain inverted index)
     are never joined. A symmetric length filter (``t*|b| ≤ |a|``) prunes
@@ -520,33 +482,14 @@ def ngram_jaccard_pairs(
     shingle)."""
     with scratch(documents.sparkSession) as s:
         sh = spread(documents).select(
-            F.col(id_col).alias("id"), _shingles(F.col(text_col), n).alias("sh")
+            F.col(id_col).alias("id"), F.expr(ngrams(norm_tokens(text_col), n)).alias("sh")
         )
         if candidate_pairs is None:
             # reused by index + both sig joins; pinned in the scope so the op
             # frees it after materializing its result (VERDICT r13 ask #6)
             sh = s.pin(sh)
-            ex = sh.select("id", F.explode("sh").alias("g"))
-            dfreq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-            # rarest-first global order (df, g) — deterministic total order;
-            # prefix length |sh| - ceil(t*|sh|) + 1 per the prefix-filtering
-            # lemma (overlap ≥ ceil(t*|x|) forces a collision in the prefix)
-            plen = F.greatest(
-                F.lit(1),
-                (F.size("sg") - F.ceil(F.lit(float(threshold)) * F.size("sg")) + 1).cast(
-                    "int"
-                ),
-            )
             prefix = s.persist(
-                ex.join(dfreq, "g")
-                .groupBy("id")
-                .agg(F.sort_array(F.collect_list(F.struct("df", "g"))).alias("sg"))
-                .select(
-                    "id",
-                    F.size("sg").alias("nsh"),
-                    F.transform(F.slice("sg", 1, plen), lambda e: e["g"]).alias("pg"),
-                )
-                .select("id", "nsh", F.explode("pg").alias("g"))
+                rarest_first_prefix(sh.select("id", F.explode("sh").alias("g")), threshold)
                 # r13-opt: both sides of the prefix self-join read this frame
                 # — unmaterialized, the df join + rarest-first sort-collect
                 # aggregate ran twice per call. One shuffle onto the join
@@ -622,44 +565,38 @@ def containment_pairs(
     prunes containers that are too small before the verify join. Same
     shuffles as :func:`ngram_jaccard_pairs`: df-count agg, per-doc sort
     agg, prefix×index equi-join, two array joins for the exact verify.
+    Like :func:`ngram_jaccard_pairs`, the result is materialized eagerly
+    and the only block a call leaves pinned is the returned frame.
     """
-    sh = spread(documents).select(
-        F.col(id_col).alias("id"), _shingles(F.col(text_col), n).alias("sh")
-    )
-    sh = sh.localCheckpoint(eager=True)  # reused by index + both verify joins
-    ex = sh.select("id", F.size("sh").alias("nsh"), F.explode("sh").alias("g"))
-    dfreq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    t = F.lit(float(threshold))
-    plen = F.greatest(F.lit(1), (F.size("sg") - F.ceil(t * F.size("sg")) + 1).cast("int"))
-    prefix = (
-        ex.join(dfreq, "g")
-        .groupBy("id", "nsh")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "g"))).alias("sg"))
-        .select(
-            "id",
-            "nsh",
-            F.explode(F.transform(F.slice("sg", 1, plen), lambda s: s["g"])).alias("g"),
+    with scratch(documents.sparkSession) as s:
+        sh = s.pin(  # reused by index + both verify joins
+            spread(documents).select(
+                F.col(id_col).alias("id"), F.expr(ngrams(norm_tokens(text_col), n)).alias("sh")
+            )
         )
-    )
-    cand = (
-        prefix.select(F.col("id").alias("id_a"), F.col("nsh").alias("na"), "g")
-        .join(ex.select(F.col("id").alias("id_b"), F.col("nsh").alias("nb"), "g"), "g")
-        .filter(
-            (F.col("id_a") != F.col("id_b"))
-            & (F.col("nb") >= F.ceil(t * F.col("na")).cast("bigint"))
+        ex = sh.select("id", F.size("sh").alias("nsh"), F.explode("sh").alias("g"))
+        t = F.lit(float(threshold))
+        cand = (
+            rarest_first_prefix(ex.select("id", "g"), threshold)
+            .select(F.col("id").alias("id_a"), F.col("nsh").alias("na"), "g")
+            .join(ex.select(F.col("id").alias("id_b"), F.col("nsh").alias("nb"), "g"), "g")
+            .filter(
+                (F.col("id_a") != F.col("id_b"))
+                & (F.col("nb") >= F.ceil(t * F.col("na")).cast("bigint"))
+            )
+            .select("id_a", "id_b")
+            .distinct()
         )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    pairs = cand.join(
-        sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    cont = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size("sh_a")
-    return (
-        pairs.withColumn("containment", cont)
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    )
+        pairs = cand.join(
+            sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
+        ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        cont = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size("sh_a")
+        return (
+            pairs.withColumn("containment", cont)
+            .filter(F.col("containment") >= threshold)
+            .select("id_a", "id_b", "containment")
+            .localCheckpoint(eager=True)
+        )
 
 
 def pair_confusion(pred: DataFrame, truth: DataFrame) -> DataFrame:
@@ -987,6 +924,19 @@ def winnow_overlap_pairs(
         )
 
 
+def _gram_positions(documents: DataFrame, text_col: str, n: int, id_col: str):
+    """``(base, grams)``: per document its normalized tokens ``__toks``
+    and their count ``__nt``, and the positional stream of its hashed
+    word ``n``-grams ``(id, __pos, __g)``."""
+    toks = F.expr(norm_tokens(text_col))
+    base = documents.select(F.col(id_col), toks.alias("__toks"), F.size(toks).alias("__nt"))
+    grams = base.select(
+        id_col,
+        F.posexplode(F.expr(ngrams("__toks", n, positions="__nt"))).alias("__pos", "__g"),
+    )
+    return base, grams
+
+
 def dup_ngram_coverage(
     documents: DataFrame, text_col: str = "text", n: int = 5, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1010,23 +960,7 @@ def dup_ngram_coverage(
     result equals string-gram coverage barring xxhash64 collisions
     (~|grams|²/2⁶⁴) — same argument as ngram_jaccard.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    toks = F.split(norm, " ")
-    base = documents.select(
-        F.col(id_col), toks.alias("__toks"), F.size(toks).alias("__nt")
-    )
-    grams = base.select(
-        id_col,
-        F.posexplode(
-            F.when(
-                F.col("__nt") >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.col("__nt") - n),
-                    lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("__pos", "__g"),
-    )
+    base, grams = _gram_positions(documents, text_col, n, id_col)
     dup = (
         grams.groupBy("__g")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -1116,8 +1050,7 @@ def exact_dup_spans(
     g = int(min_len)
     if g < 2:
         raise ValueError("min_len must be >= 2")
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    d = documents.select(F.col(id_col).alias("__id"), norm.alias("__t")).filter(
+    d = documents.select(F.col(id_col).alias("__id"), F.expr(norm_text(text_col)).alias("__t")).filter(
         F.length("__t") >= g
     )
     # explode positions first, substring in the same codegen stage: the
@@ -1246,7 +1179,6 @@ def exact_span_coverage(
         spans = exact_dup_spans(
             documents, min_len=min_len, text_col=text_col, id_col=id_col
         )
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     sides = spans.select(
         F.col("id_a").alias("__id"), F.col("start_a").alias("__s"), "span_len"
     ).unionAll(
@@ -1266,7 +1198,7 @@ def exact_span_coverage(
     )
     return (
         documents.select(
-            F.col(id_col), F.length(norm).cast("bigint").alias("n_chars")
+            F.col(id_col), F.length(F.expr(norm_text(text_col))).cast("bigint").alias("n_chars")
         )
         .join(covered.withColumnRenamed("__id", id_col), id_col, "left")
         .select(
@@ -1298,9 +1230,9 @@ def doc_novelty(
     feed whose novelty trend decays toward 0 has stopped contributing).
     Returns ``(doc_id, n_grams, n_novel, novelty_micro)`` for EVERY
     document, ``novelty_micro = n_novel·10⁶ div n_grams`` — all-integer,
-    SQL-replayable. Shingles use the exact :func:`_shingles` convention
-    (lowercase, whitespace-normalized word ``n``-grams, distinct per
-    doc), so the numbers compose with the Jaccard/containment family.
+    SQL-replayable. Shingles are the shingle set of
+    :mod:`graph_loom_spark.ops`, so the numbers compose with the
+    Jaccard/containment family.
 
     Scale shape: one explode + one partial-agg ``groupBy(gram)`` min
     (the inverted-index build every dedup op here already pays), one
@@ -1310,7 +1242,7 @@ def doc_novelty(
     like a count.
     """
     base = spread(documents).select(
-        F.col(id_col), F.explode(_shingles(F.col(text_col), n)).alias("__g")
+        F.col(id_col), F.explode(F.expr(ngrams(norm_tokens(text_col), n))).alias("__g")
     )
     first = base.groupBy("__g").agg(F.min(id_col).alias("__first"))
     per = (
@@ -1405,23 +1337,7 @@ def remove_dup_ngram_spans(
     """
     from pyspark.sql.window import Window
 
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    toks = F.split(norm, " ")
-    base = documents.select(
-        F.col(id_col), toks.alias("__toks"), F.size(toks).alias("__nt")
-    )
-    grams = base.select(
-        id_col,
-        F.posexplode(
-            F.when(
-                F.col("__nt") >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.col("__nt") - n),
-                    lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("__pos", "__g"),
-    )
+    base, grams = _gram_positions(documents, text_col, n, id_col)
     w = Window.partitionBy("__g").orderBy(F.col(id_col).asc(), F.col("__pos").asc())
     later = (
         grams.withColumn("__rk", F.row_number().over(w))
@@ -1483,11 +1399,7 @@ def source_shingle_overlap(
         .distinct()
     )
     if sample_mod > 1:
-        keep = (
-            F.conv(F.substring(F.md5(F.col("g")), 1, 8), 16, 10).cast("long")
-            % sample_mod
-        ) == 0
-        sets = sets.filter(keep)
+        sets = sets.filter(F.expr(md5_lane("g", mod=sample_mod)) == 0)
     sizes = sets.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("sz"))
     pairs = (
         sets.alias("a")

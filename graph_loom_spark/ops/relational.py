@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graph_loom_spark.ops import cms_cells, cms_grid, md5_lane
+
 
 def _dec(c: str) -> F.Column:
     return F.col(c).cast("decimal(18,2)")
@@ -331,7 +333,7 @@ def hll_registers(
     :func:`hll_merge` yesterday's registers with today's instead of
     rescanning history."""
     m = 1 << p
-    h = F.conv(F.substring(F.md5(F.col(value_col)), 1, 15), 16, 10).cast("long")
+    h = F.expr(md5_lane(value_col, width=15))
     idx = h.bitwiseAND(F.lit(m - 1))
     w = F.shiftright(h, p)
     width = 60 - p
@@ -399,8 +401,8 @@ def hash_sampled_percentiles(
     ``(group_cols..., n_sample, p25, p50, p75)`` rounded to 4 digits.
     """
     threshold = (1 << 32) // int(rate_denom)
-    key = F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols]))
-    h = F.conv(F.substring(key, 1, 8), 16, 10).cast("long")
+    key = ", ".join(f"cast({c} as string)" for c in key_cols)
+    h = F.expr(md5_lane(f"concat_ws('|', {key})"))
     sample = df.filter(h < F.lit(threshold))
     pcts = F.percentile(F.col(value_col).cast("double"), F.lit(list(qs)))
     out = sample.groupBy(*group_cols).agg(
@@ -430,8 +432,8 @@ def count_min_estimate(
     across partitions / days by construction (cell-wise sum is
     associative + commutative).
 
-    Hashes are md5-derived (row j buckets value v at
-    ``int(md5('j:'||v)[:8]) mod w``), so the counters AND the
+    Hashes are md5-derived (the count-min cells of
+    :mod:`graph_loom_spark.ops`), so the counters AND the
     estimates are bit-reproducible in any md5-bearing engine — a
     DuckDB oracle replays the grid exactly, unlike engine-native
     sketch types whose hash choices differ.
@@ -443,65 +445,14 @@ def count_min_estimate(
     always >= the true count. Returns ``(value, est)``.
     """
     val = F.col(value_col).cast("string")
-    cells = (
-        df.select(val.alias("__v"))
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            (
-                                F.conv(
-                                    F.substring(
-                                        F.md5(F.concat(F.lit(f"{j}:"), F.col("__v"))),
-                                        1,
-                                        8,
-                                    ),
-                                    16,
-                                    10,
-                                ).cast("long")
-                                % w
-                            ).alias("b"),
-                        )
-                        for j in range(d)
-                    ]
-                )
-            ).alias("__c")
-        )
-        .select("__c.j", "__c.b")
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    cells = cms_grid(df.select(val.alias("__v")), "__v", d, w)
     if probe is None:
         probe = df.select(val.alias("value")).distinct()
     else:
         probe = probe.select(F.col(value_col).cast("string").alias("value")).distinct()
-    probed = probe.select(
-        "value",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        (
-                            F.conv(
-                                F.substring(
-                                    F.md5(F.concat(F.lit(f"{j}:"), F.col("value"))),
-                                    1,
-                                    8,
-                                ),
-                                16,
-                                10,
-                            ).cast("long")
-                            % w
-                        ).alias("b"),
-                    )
-                    for j in range(d)
-                ]
-            )
-        ).alias("__c"),
-    ).select("value", "__c.j", "__c.b")
+    probed = probe.select("value", F.explode(cms_cells("value", d, w)).alias("__c")).select(
+        "value", "__c.j", "__c.b"
+    )
     # the grid is <= d*w rows regardless of input size -> broadcast
     # side; LEFT join because a never-touched cell means count 0 (a
     # probe value absent from df must estimate 0, not disappear)

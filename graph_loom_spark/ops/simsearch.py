@@ -1223,6 +1223,51 @@ def pq_rerank_topk(
     )
 
 
+def _probe_topk(embeddings, probe_filter, k, id_col, vec_col, label_col, candidates, graded):
+    """``(p, top)`` for the labeled probe searches: the broadcast probe
+    frame ``p`` and each probe's ``k`` nearest OTHER vectors by rounded
+    cosine ``__c`` (ties → lower id ``__nid``), numbered ``__rn``.
+    Pairs come from one corpus scan crossed with the broadcast probe
+    ids, or, with ``candidates``, from its ``(probe_id, nbr_id)`` pairs.
+    A ``graded`` search (the retrieval scorecards) carries the probe's
+    label ``__plbl`` and whether the neighbor shares it (``__rel``);
+    otherwise the neighbor's label ``__lbl`` (the kNN vote)."""
+    p = embeddings.filter(probe_filter).select(
+        F.col(id_col).alias("__pid"),
+        *([F.col(label_col).alias("__plbl")] if graded else []),
+        F.col(vec_col).alias("__p"),
+    )
+    cos = _dot(F.col("__v"), F.col("__p")) / (
+        _norm(F.col("__v")) * _norm(F.col("__p"))
+    )
+    nbrs = [
+        F.col(id_col).alias("__nid"),
+        F.col(label_col).alias("__lbl"),
+        F.col(vec_col).alias("__v"),
+    ]
+    if candidates is not None:
+        pid_col, nid_col = candidates.columns[:2]
+        # .distinct(): LSH/IVF candidate generators emit a probe/nbr
+        # pair once per colliding band/cell, and a duplicated pair would
+        # double-count a neighbor AND occupy two row_number top-k slots
+        # (ADVICE r7) — dedup is part of the contract, not the caller's
+        # job. Pair frames are slim (2 ids), so the distinct is a cheap
+        # pre-aggregated shuffle.
+        pairs = candidates.select(
+            F.col(pid_col).alias("__pid"), F.col(nid_col).alias("__nid")
+        ).distinct().join(embeddings.select(*nbrs), "__nid")
+    else:
+        pairs = spread(embeddings).select(*nbrs).crossJoin(F.broadcast(p.select("__pid")))
+    c = F.round(cos, COSINE_DIGITS).alias("__c")
+    if graded:
+        cols = ["__pid", "__plbl", (F.col("__lbl") == F.col("__plbl")).alias("__rel"), c, "__nid"]
+    else:
+        cols = ["__pid", "__nid", "__lbl", c]
+    scored = pairs.join(F.broadcast(p), "__pid").filter(F.col("__nid") != F.col("__pid")).select(*cols)
+    w = Window.partitionBy("__pid").orderBy(F.col("__c").desc(), F.col("__nid"))
+    return p, scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
+
+
 def knn_label(
     embeddings: DataFrame,
     probe_filter,
@@ -1252,52 +1297,9 @@ def knn_label(
     top-k; pinned by pytest). Fully deterministic → the SQL oracle
     replays scoring, ranking, and votes.
     """
-    p = embeddings.filter(probe_filter).select(
-        F.col(id_col).alias("__pid"), F.col(vec_col).alias("__p")
+    _, top = _probe_topk(
+        embeddings, probe_filter, k, id_col, vec_col, label_col, candidates, graded=False
     )
-    cos = _dot(F.col("__v"), F.col("__p")) / (
-        _norm(F.col("__v")) * _norm(F.col("__p"))
-    )
-    if candidates is not None:
-        pid_col, nid_col = candidates.columns[:2]
-        # .distinct(): LSH/IVF candidate generators emit a probe/nbr
-        # pair once per colliding band/cell, and a duplicated pair would
-        # double-count that neighbor's vote AND occupy two row_number
-        # top-k slots (ADVICE r7) — dedup is part of the contract, not
-        # the caller's job. Pair frames are slim (2 ids), so the
-        # distinct is a cheap pre-aggregated shuffle.
-        pairs = candidates.select(
-            F.col(pid_col).alias("__pid"), F.col(nid_col).alias("__nid")
-        ).distinct().join(
-            embeddings.select(
-                F.col(id_col).alias("__nid"),
-                F.col(label_col).alias("__lbl"),
-                F.col(vec_col).alias("__v"),
-            ),
-            "__nid",
-        )
-    else:
-        pairs = (
-            spread(embeddings)
-            .select(
-                F.col(id_col).alias("__nid"),
-                F.col(label_col).alias("__lbl"),
-                F.col(vec_col).alias("__v"),
-            )
-            .crossJoin(F.broadcast(p.select("__pid")))
-        )
-    scored = (
-        pairs.join(F.broadcast(p), "__pid")
-        .filter(F.col("__nid") != F.col("__pid"))
-        .select(
-            "__pid",
-            "__nid",
-            "__lbl",
-            F.round(cos, COSINE_DIGITS).alias("__c"),
-        )
-    )
-    w = Window.partitionBy("__pid").orderBy(F.col("__c").desc(), F.col("__nid"))
-    top = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
     votes = top.groupBy("__pid", "__lbl").agg(F.count(F.lit(1)).alias("__v"))
     # argmax folded into a hash aggregate (min of (-votes, label)
     # structs) — same portable tie-break lever as weighted LPA
@@ -1349,51 +1351,9 @@ def retrieval_label_eval(
     deduped-on-read ``(probe_id, nbr_id)`` frame from LSH/IVF candidate
     generation) to score only those pairs at corpus scale.
     """
-    p = embeddings.filter(probe_filter).select(
-        F.col(id_col).alias("__pid"),
-        F.col(label_col).alias("__plbl"),
-        F.col(vec_col).alias("__p"),
+    p, top = _probe_topk(
+        embeddings, probe_filter, k, id_col, vec_col, label_col, candidates, graded=True
     )
-    cos = _dot(F.col("__v"), F.col("__p")) / (
-        _norm(F.col("__v")) * _norm(F.col("__p"))
-    )
-    if candidates is not None:
-        pid_col, nid_col = candidates.columns[:2]
-        # .distinct() for the same duplicated-collision reason as
-        # knn_label (a doubled pair would occupy two top-k slots)
-        pairs = candidates.select(
-            F.col(pid_col).alias("__pid"), F.col(nid_col).alias("__nid")
-        ).distinct().join(
-            embeddings.select(
-                F.col(id_col).alias("__nid"),
-                F.col(label_col).alias("__lbl"),
-                F.col(vec_col).alias("__v"),
-            ),
-            "__nid",
-        )
-    else:
-        pairs = (
-            spread(embeddings)
-            .select(
-                F.col(id_col).alias("__nid"),
-                F.col(label_col).alias("__lbl"),
-                F.col(vec_col).alias("__v"),
-            )
-            .crossJoin(F.broadcast(p.select("__pid")))
-        )
-    scored = (
-        pairs.join(F.broadcast(p), "__pid")
-        .filter(F.col("__nid") != F.col("__pid"))
-        .select(
-            "__pid",
-            "__plbl",
-            (F.col("__lbl") == F.col("__plbl")).alias("__rel"),
-            F.round(cos, COSINE_DIGITS).alias("__c"),
-            "__nid",
-        )
-    )
-    w = Window.partitionBy("__pid").orderBy(F.col("__c").desc(), F.col("__nid"))
-    top = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
     agg = top.groupBy("__pid").agg(
         F.sum(F.when(F.col("__rel"), 1).otherwise(0)).cast("bigint").alias("__nr"),
         F.min(F.when(F.col("__rel"), F.col("__rn"))).alias("__fr"),
@@ -1685,49 +1645,9 @@ def retrieval_ndcg(
     aggregate; the IDCG closed form evaluates per probe row over a
     ≤ k-element sequence — never a join.
     """
-    p = embeddings.filter(probe_filter).select(
-        F.col(id_col).alias("__pid"),
-        F.col(label_col).alias("__plbl"),
-        F.col(vec_col).alias("__p"),
+    p, top = _probe_topk(
+        embeddings, probe_filter, k, id_col, vec_col, label_col, candidates, graded=True
     )
-    cos = _dot(F.col("__v"), F.col("__p")) / (
-        _norm(F.col("__v")) * _norm(F.col("__p"))
-    )
-    if candidates is not None:
-        pid_col, nid_col = candidates.columns[:2]
-        pairs = candidates.select(
-            F.col(pid_col).alias("__pid"), F.col(nid_col).alias("__nid")
-        ).distinct().join(
-            embeddings.select(
-                F.col(id_col).alias("__nid"),
-                F.col(label_col).alias("__lbl"),
-                F.col(vec_col).alias("__v"),
-            ),
-            "__nid",
-        )
-    else:
-        pairs = (
-            spread(embeddings)
-            .select(
-                F.col(id_col).alias("__nid"),
-                F.col(label_col).alias("__lbl"),
-                F.col(vec_col).alias("__v"),
-            )
-            .crossJoin(F.broadcast(p.select("__pid")))
-        )
-    scored = (
-        pairs.join(F.broadcast(p), "__pid")
-        .filter(F.col("__nid") != F.col("__pid"))
-        .select(
-            "__pid",
-            "__plbl",
-            (F.col("__lbl") == F.col("__plbl")).alias("__rel"),
-            F.round(cos, COSINE_DIGITS).alias("__c"),
-            "__nid",
-        )
-    )
-    w = Window.partitionBy("__pid").orderBy(F.col("__c").desc(), F.col("__nid"))
-    top = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
     # groupBy/join back on __pid ALONE (unique per probe), carrying
     # __plbl from the probe frame: a NULL-labeled probe never matches
     # its own agg row on a (__pid, __plbl) key, discarding its real

@@ -16,7 +16,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_loom_spark.graph import local_frame
-from graph_loom_spark.ops import spread
+from graph_loom_spark.ops import (
+    md5_lane,
+    ngrams,
+    norm_text,
+    norm_tokens,
+    spread,
+    trigram_model,
+    word_features,
+)
 
 _TOKEN_RE = r"\S+"
 
@@ -156,10 +164,10 @@ def tfidf_topk_terms(
 
 
 def fingerprint(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Canonical document fingerprint: md5 of the whitespace-normalized,
-    lowercased text — identical in every engine, unlike xxhash64."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return documents.select("doc_id", F.md5(norm).alias("fingerprint"))
+    """Canonical document fingerprint: md5 of the normalized text (see
+    :mod:`graph_loom_spark.ops`) — identical in every engine, unlike
+    xxhash64."""
+    return documents.select("doc_id", F.md5(F.expr(norm_text(text_col))).alias("fingerprint"))
 
 
 def contamination_flags(
@@ -179,17 +187,9 @@ def contamination_flags(
     of the corpus, no shuffle of document data. Grams are hashed
     (xxhash64) so the join carries 8 bytes, not text.
     """
-    from pyspark.sql import functions as F2
-
     def grams(df, idc):
-        toks = F2.split(
-            F2.regexp_replace(F2.lower(F2.trim(F2.col(text_col))), r"\s+", " "), " "
-        )
-        g = F2.transform(
-            F2.sequence(F2.lit(0), F2.greatest(F2.size(toks) - n, F2.lit(0))),
-            lambda i: F2.xxhash64(F2.concat_ws(" ", F2.slice(toks, i + 1, n))),
-        )
-        return df.select(F2.col(idc).alias(idc), F2.explode(F2.array_distinct(g)).alias("__g"))
+        sh = F.expr(ngrams(norm_tokens(text_col), n))
+        return df.select(F.col(idc).alias(idc), F.explode(sh).alias("__g"))
 
     bench_grams = grams(benchmark, id_col).select("__g").distinct()
     doc_grams = grams(documents, id_col)
@@ -245,8 +245,8 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
     Both are single divisions of exact integers → engine-exact (IEEE 754
     division of integers ≤ 2^53 is correctly rounded everywhere), no
-    rounding needed. Tokenizer matches :func:`fingerprint` /
-    ``ngram_jaccard``: lowercase, trim, collapse whitespace, split ' '.
+    rounding needed. Tokens are the normalized tokens of
+    :mod:`graph_loom_spark.ops`.
 
     Scale shape: the per-doc token/distinct counts are narrow projections
     (no shuffle); the top-bigram count is explode → two partial-aggregable
@@ -254,9 +254,7 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     carries 16-byte keys + counts, never text — then a broadcast-sized
     join back onto the narrow stats. One scan of the corpus.
     """
-    toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
+    toks = F.expr(norm_tokens(text_col))
     base = documents.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
@@ -402,10 +400,9 @@ def gopher_quality(
     in any engine (same argument as :func:`repetition_stats`). Pure
     codegen'd expressions, one narrow scan, no shuffle — the 100 TB
     shape: a quality pass must never cost more than the read itself.
-    Tokenizer matches :func:`fingerprint`: lowercase, trim, collapse
-    whitespace, split on single spaces.
+    Tokens are the normalized tokens of :mod:`graph_loom_spark.ops`.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = F.expr(norm_text(text_col))
     base = documents.select("doc_id", F.col(text_col).alias("__t"), norm.alias("__n"))
     toks = F.split(F.col("__n"), " ")
     n_tok = F.size(toks)
@@ -483,7 +480,7 @@ def winnow_fingerprints(
     import numpy as np
     import pandas as pd
 
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = F.expr(norm_text(text_col))
 
     def _winnow(batches):
         for pdf in batches:
@@ -632,10 +629,7 @@ def chunk_documents(
     offsets with ``sequence``, explode, slice. No shuffle, no UDF;
     at 100 TB this is a map-only pass that parallelizes with the scan.
     """
-    toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
-    base = documents.select(F.col(id_col), toks.alias("__t"))
+    base = documents.select(F.col(id_col), F.expr(norm_tokens(text_col)).alias("__t"))
     starts = F.sequence(
         F.lit(0), F.greatest(F.size("__t") - 1, F.lit(0)), F.lit(stride)
     )
@@ -1337,56 +1331,22 @@ def trigram_logprob(
     scoring re-explodes the corpus once and equi-joins the model frames
     (broadcastable: |model| ≤ alphabet³); one final per-doc aggregate.
     Everything is codegen'd expressions — the "perplexity filter" pass
-    of a 100 TB pipeline at one scan + small joins.
+    of a 100 TB pipeline at one scan + small joins. The model is the
+    char-trigram model of :mod:`graph_loom_spark.ops`, held on the
+    driver, so a call leaves no block pinned.
     """
     # spread: explode/feature chains on a narrow parquet scan would
     # otherwise run single-task (the scan stage owns the whole per-row
     # expression tree); widen BEFORE the projection so the heavy work
     # parallelizes. No-op on already-wide inputs.
     documents = spread(documents)
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    base = documents.select(F.col(id_col), norm.alias("__n")).filter(
+    base = documents.select(F.col(id_col), F.expr(norm_text(text_col)).alias("__n")).filter(
         F.length("__n") >= 3
     )
-    tri = base.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__n") - 2),
-                lambda i: F.substring(F.col("__n"), i, 3),
-            )
-        ).alias("__t"),
-    ).select(id_col, F.col("__t"), F.substring("__t", 1, 2).alias("__b"))
-    # ONE corpus explosion builds the model: bigram-context counts are
-    # the trigram counts summed by 2-char prefix (every 3-char window's
-    # context is its own prefix), and the vocabulary is the distinct
-    # chars of the distinct trigrams (every char of a length-≥3 doc sits
-    # inside at least one window) — both derived from the tiny
-    # (≤ alphabet³)-row tri_counts frame instead of re-exploding the
-    # normalized corpus. Identical integers, two fewer full scans.
-    tri_counts = tri.groupBy("__t").agg(F.count(F.lit(1)).alias("__ct"))
-    tri_counts = tri_counts.localCheckpoint(eager=False)
-    bi_counts = tri_counts.groupBy(
-        F.substring("__t", 1, 2).alias("__b")
-    ).agg(F.sum("__ct").alias("__cb"))
-    v = (
-        tri_counts.select(F.explode(F.split("__t", "")).alias("__c"))
-        .filter(F.col("__c") != "")
-        .agg(F.count_distinct("__c").alias("__v"))
-        .collect()[0]["__v"]
-    )
-    lp = F.log(
-        (F.col("__ct").cast("double") + add_k)
-        / (F.col("__cb").cast("double") + add_k * float(v))
-    )
-    return (
-        tri.join(F.broadcast(tri_counts), "__t")
-        .join(F.broadcast(bi_counts), "__b")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_trigrams"),
-            F.round(F.avg(lp), 6).alias("avg_logprob"),
-        )
+    scored, _, (lp,) = trigram_model(base, add_k, F.count(F.lit(1)).alias("__ct"))
+    return scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_trigrams"),
+        F.round(F.avg(lp), 6).alias("avg_logprob"),
     )
 
 
@@ -1416,50 +1376,25 @@ def moore_lewis_score(
     rather than re-exploding. Scoring joins the broadcast model frame
     back to the corpus trigrams once; everything else is codegen'd
     expressions. Per-model add-k smoothing handles trigrams the other
-    model never saw (count 0 contributes ``ln(k / (cb + k·V))``).
+    model never saw (count 0 contributes ``ln(k / (cb + k·V))``). Like
+    :func:`trigram_logprob`, a call leaves no block pinned.
     """
     # spread: explode/feature chains on a narrow parquet scan would
     # otherwise run single-task (the scan stage owns the whole per-row
     # expression tree); widen BEFORE the projection so the heavy work
     # parallelizes. No-op on already-wide inputs.
     documents = spread(documents)
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     base = documents.select(
         F.col(id_col),
         (F.col(source_col) == in_domain_source).alias("__in"),
-        norm.alias("__n"),
+        F.expr(norm_text(text_col)).alias("__n"),
     ).filter(F.length("__n") >= 3)
-    tri = base.select(
-        id_col,
-        "__in",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__n") - 2),
-                lambda i: F.substring(F.col("__n"), i, 3),
-            )
-        ).alias("__t"),
+    scored, (vi, vo), (lp_in, lp_out) = trigram_model(
+        base,
+        add_k,
+        F.sum(F.when(F.col("__in"), 1).otherwise(0)).alias("__ci"),
+        F.sum(F.when(F.col("__in"), 0).otherwise(1)).alias("__co"),
     )
-    tc = (
-        tri.groupBy("__t")
-        .agg(
-            F.sum(F.when(F.col("__in"), 1).otherwise(0)).alias("__ci"),
-            F.sum(F.when(F.col("__in"), 0).otherwise(1)).alias("__co"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    bc = tc.groupBy(F.substring("__t", 1, 2).alias("__b")).agg(
-        F.sum("__ci").alias("__cbi"), F.sum("__co").alias("__cbo")
-    )
-    # Per-model vocab = distinct chars of the trigrams that model saw;
-    # two scalar aggregates over the tiny model frame.
-    chars = tc.select(
-        "__ci", "__co", F.explode(F.split("__t", "")).alias("__c")
-    ).filter(F.col("__c") != "")
-    vrow = chars.agg(
-        F.count_distinct(F.when(F.col("__ci") > 0, F.col("__c"))).alias("vi"),
-        F.count_distinct(F.when(F.col("__co") > 0, F.col("__c"))).alias("vo"),
-    ).collect()[0]
-    vi, vo = float(vrow["vi"]), float(vrow["vo"])
     if vi == 0.0:
         raise ValueError(
             f"moore_lewis_score: no in-domain text for source "
@@ -1469,24 +1404,10 @@ def moore_lewis_score(
         raise ValueError(
             "moore_lewis_score: no out-of-domain text (general LM is empty)"
         )
-    lp_in = F.log(
-        (F.col("__ci").cast("double") + add_k)
-        / (F.col("__cbi").cast("double") + add_k * vi)
-    )
-    lp_out = F.log(
-        (F.col("__co").cast("double") + add_k)
-        / (F.col("__cbo").cast("double") + add_k * vo)
-    )
-    scored = (
-        tri.withColumn("__b", F.substring("__t", 1, 2))
-        .join(F.broadcast(tc), "__t")
-        .join(F.broadcast(bc), "__b")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_trigrams"),
-            F.round(F.avg(lp_in), 6).alias("avg_lp_in"),
-            F.round(F.avg(lp_out), 6).alias("avg_lp_out"),
-        )
+    scored = scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_trigrams"),
+        F.round(F.avg(lp_in), 6).alias("avg_lp_in"),
+        F.round(F.avg(lp_out), 6).alias("avg_lp_out"),
     )
     return scored.withColumn(
         "ml_score", F.round(F.col("avg_lp_in") - F.col("avg_lp_out"), 6)
@@ -1786,9 +1707,7 @@ def bm25_topk(
     if not query_terms:
         raise ValueError("bm25_topk: empty query_terms")
     qlit = [t.lower() for t in dict.fromkeys(query_terms)]
-    toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
+    toks = F.expr(norm_tokens(text_col))
     base = documents.select(F.col(id_col), toks.alias("__toks")).select(
         id_col, F.size("__toks").alias("__dl"), F.explode("__toks").alias("__t")
     )
@@ -1873,32 +1792,6 @@ def rrf_fuse(
     )
 
 
-def _feats_expr(text_col: str) -> str:
-    """SQL-expression string for the shared hashed-classifier feature
-    list: unigrams (single-space split, the X72 tokenizer) + adjacent
-    bigrams joined by ``_``. One definition feeds the fixed-weight
-    scorer (X72) and the trained NB (X161) so both models literally
-    see the same features."""
-    toks = f"split({text_col}, ' ')"
-    # guard: Spark's sequence(0, -1) DESCENDS (returns [0, -1]), so a
-    # 1-token doc must short-circuit to an empty bigram list
-    bigrams = (
-        f"case when size({toks}) >= 2 then transform(sequence(0, size({toks}) - 2), "
-        f"i -> concat(element_at({toks}, i + 1), '_', element_at({toks}, i + 2))) "
-        f"else cast(array() as array<string>) end"
-    )
-    return f"concat({toks}, {bigrams})"
-
-
-#: md5 bucket id for one feature string — the same 'w:'-prefixed md5
-#: stream X72 derives its weights from, reduced mod n_buckets
-def _bucket_expr(col: str, n_buckets: int) -> str:
-    return (
-        f"cast(conv(substr(md5(concat('w:', {col})), 1, 8), 16, 10) "
-        f"as bigint) % {n_buckets}"
-    )
-
-
 def hashed_linear_score(
     documents: DataFrame,
     text_col: str = "text",
@@ -1929,13 +1822,10 @@ def hashed_linear_score(
     # the evals used to pre-spread around this, now redundant but
     # harmless). No-op on already-wide inputs.
     documents = spread(documents)
-    half = weight_span // 2
-    feats = _feats_expr(text_col)
-    wsum = (
-        f"aggregate({feats}, 0L, (acc, x) -> acc + "
-        f"(cast(conv(substr(md5(concat('w:', x)), 1, 8), 16, 10) as bigint) "
-        f"% {weight_span}) - {half})"
-    )
+    feats = word_features(text_col)
+    # weight of feature x: its 'w'-salted md5 lane mod span, centred on 0
+    weight = f"{md5_lane('x', salt='w', mod=weight_span)} - {weight_span // 2}"
+    wsum = f"aggregate({feats}, 0L, (acc, x) -> acc + {weight})"
     return documents.select(
         "*",
         F.expr(f"size({feats})").cast("int").alias("n_feats"),
@@ -2060,42 +1950,25 @@ def dsir_log_weight(
     doc. Everything else is codegen'd expressions; the md5 bucketing
     makes counts AND ratios engine-independent, so the oracle replays
     the whole pipeline (float noise absorbed by the 1e-6 rounding, same
-    argument as BM25/trigram).
+    argument as BM25/trigram). The bucket frame is held on the driver,
+    so a call leaves no block pinned.
     """
     # spread: explode/feature chains on a narrow parquet scan would
     # otherwise run single-task (the scan stage owns the whole per-row
     # expression tree); widen BEFORE the projection so the heavy work
     # parallelizes. No-op on already-wide inputs.
     documents = spread(documents)
-    toks = f"split({text_col}, ' ')"
-    bigrams = (
-        f"case when size({toks}) >= 2 then transform(sequence(0, size({toks}) - 2), "
-        f"i -> concat(element_at({toks}, i + 1), '_', element_at({toks}, i + 2))) "
-        f"else cast(array() as array<string>) end"
-    )
-    feats = f"concat({toks}, {bigrams})"
     fb = documents.select(
         F.col(id_col),
         (F.col(source_col) == target_source).alias("__t"),
-        F.explode(F.expr(feats)).alias("__f"),
-    ).select(
-        id_col,
-        "__t",
-        F.expr(
-            f"cast(conv(substr(md5(concat('b:', __f)), 1, 8), 16, 10) as bigint) "
-            f"% {n_buckets}"
-        ).alias("__b"),
+        F.explode(F.expr(word_features(text_col))).alias("__f"),
+    ).select(id_col, "__t", F.expr(md5_lane("__f", salt="b", mod=n_buckets)).alias("__b"))
+    counts = fb.groupBy("__b").agg(
+        F.sum(F.when(F.col("__t"), 1).otherwise(0)).alias("__ct"),
+        F.count(F.lit(1)).alias("__cr"),
     )
-    bc = (
-        fb.groupBy("__b")
-        .agg(
-            F.sum(F.when(F.col("__t"), 1).otherwise(0)).alias("__ct"),
-            F.count(F.lit(1)).alias("__cr"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    tot = bc.agg(F.sum("__ct").alias("nt"), F.sum("__cr").alias("nr")).collect()[0]
-    nt, nr = float(tot["nt"] or 0), float(tot["nr"] or 0)
+    rows = counts.collect()  # ≤ n_buckets rows: held on the driver
+    nt, nr = float(sum(r["__ct"] for r in rows)), float(sum(r["__cr"] for r in rows))
     if nt == 0.0:
         raise ValueError(
             f"dsir_log_weight: no target text for source {target_source!r} "
@@ -2104,7 +1977,9 @@ def dsir_log_weight(
     lr = F.log(
         (F.col("__ct").cast("double") + add_k) / (nt + add_k * n_buckets)
     ) - F.log((F.col("__cr").cast("double") + add_k) / (nr + add_k * n_buckets))
-    ratios = bc.select("__b", lr.alias("__lr"))
+    ratios = local_frame(documents.sparkSession, rows, counts.schema).select(
+        "__b", lr.alias("__lr")
+    )
     return (
         fb.join(F.broadcast(ratios), "__b")
         .groupBy(id_col)
@@ -2144,37 +2019,16 @@ def bloom_contamination(
     all set).
     """
     words_n = m_bits // 64
-
-    def _norm_toks(col: str) -> str:
-        return f"split(regexp_replace(lower(trim({col})), '\\\\s+', ' '), ' ')"
-
-    def _grams(col: str) -> str:
-        toks = _norm_toks(col)
-        return (
-            f"array_distinct(transform(sequence(0, greatest(size({toks}) - {n}, 0)), "
-            f"i -> array_join(slice({toks}, i + 1, {n}), ' ')))"
-        )
-
-    def _pos(j: int, g: str) -> str:
-        return (
-            f"(cast(conv(substr(md5(concat('{j}:', {g})), 1, 8), 16, 10) as bigint)"
-            f" % {m_bits})"
-        )
-
-    def _pos_var(jv: str, g: str) -> str:
-        # same md5 input as _pos, with the salt as a bound lambda var:
-        # concat(cast(j as string), ':', g) == concat('<j>:', g)
-        return (
-            f"(cast(conv(substr(md5(concat(cast({jv} as string), ':', {g})), 1, 8), "
-            f"16, 10) as bigint) % {m_bits})"
-        )
+    grams = ngrams(norm_tokens(text_col), n, "array_join({}, ' ')")
 
     # build: benchmark grams -> distinct bit positions (bounded by
     # k * |bench grams| <= m_bits distinct values -> driver-safe)
-    bg = benchmark.select(F.explode(F.expr(_grams(text_col))).alias("g"))
+    bg = benchmark.select(F.explode(F.expr(grams)).alias("g"))
     pos_rows = (
         bg.select(
-            F.explode(F.array(*[F.expr(_pos(j, "g")) for j in range(k)])).alias("p")
+            F.explode(
+                F.array(*[F.expr(md5_lane("g", salt=j, mod=m_bits)) for j in range(k)])
+            ).alias("p")
         )
         .distinct()
         .collect()
@@ -2198,10 +2052,10 @@ def bloom_contamination(
     # positions) evaluates exactly k md5s per gram; the bit test reuses
     # the bound value. Same positions, same bits, identical output.
     js = ", ".join(str(j) for j in range(k))
-    pos_arr = (
-        f"transform(array({js}), "
-        f"j -> {_pos_var('j', 'g')})"
-    )
+    # the salt is the bound lambda var j: concat(cast(j as string), ':', g)
+    # hashes the same bytes as salt=j
+    pos = md5_lane("concat(cast(j as string), ':', g)", mod=m_bits)
+    pos_arr = f"transform(array({js}), j -> {pos})"
     hit = (
         f"forall({pos_arr}, "
         f"p -> ((shiftright(element_at(__w, cast(p / 64 as int) + 1), "
@@ -2212,7 +2066,7 @@ def bloom_contamination(
         .select(
             id_col,
             F.expr(
-                f"aggregate({_grams(text_col)}, 0, "
+                f"aggregate({grams}, 0, "
                 f"(acc, g) -> acc + (case when {hit} then 1 else 0 end))"
             )
             .cast("int")
@@ -2255,9 +2109,7 @@ def length_bucket_stats(
     base = spread(documents).select(F.col(id_col), ntok.alias("__l"))
     qs = [i / n_buckets for i in range(1, n_buckets)]
     threshold = (1 << 32) // int(rate_denom)
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = F.expr(md5_lane(f"cast({id_col} as string)"))
     bounds = (
         base.filter(h < F.lit(threshold))
         .agg(F.percentile(F.col("__l").cast("double"), F.lit(qs)).alias("__p"))
@@ -2318,9 +2170,7 @@ def curriculum_order(
     )
     qs = [i / n_buckets for i in range(1, n_buckets)]
     threshold = (1 << 32) // int(rate_denom)
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    h = F.expr(md5_lane(f"cast({id_col} as string)"))
     bounds = (
         scores.filter(h < F.lit(threshold))
         .agg(F.percentile(F.col("avg_logprob"), F.lit(qs)).alias("__p"))
@@ -2356,9 +2206,8 @@ def lexical_diversity(
     hashed keys, no windows, no per-doc quadratic expressions. Ratios
     are integer/integer doubles rounded to 6 → oracle-exact.
     """
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
     ex = spread(documents).select(
-        F.col(id_col), F.explode(toks).alias("__t")
+        F.col(id_col), F.explode(F.expr(norm_tokens(text_col))).alias("__t")
     )
     per_tok = ex.groupBy(id_col, F.xxhash64("__t").alias("__h")).agg(
         F.count(F.lit(1)).alias("__c")
@@ -2556,10 +2405,10 @@ def nb_weights(
     docs = spread(documents)
     ex = docs.select(
         label.cast("long").alias("__y"),
-        F.explode(F.expr(_feats_expr(text_col))).alias("__x"),
+        F.explode(F.expr(word_features(text_col))).alias("__x"),
     )
     cnt = ex.select(
-        "__y", F.expr(_bucket_expr("__x", B)).alias("__b")
+        "__y", F.expr(md5_lane("__x", salt="w", mod=B)).alias("__b")
     ).groupBy("__b").agg(
         F.sum("__y").alias("c_pos"),
         F.sum(F.lit(1) - F.col("__y")).alias("c_neg"),
@@ -2636,10 +2485,10 @@ def nb_classify(
     pri = weights.agg(F.max("prior_micro").alias("__prior"))
     docex = spread(documents).select(
         F.col(id_col),
-        F.explode(F.expr(_feats_expr(text_col))).alias("__x"),
+        F.explode(F.expr(word_features(text_col))).alias("__x"),
     )
     return (
-        docex.select(id_col, F.expr(_bucket_expr("__x", B)).alias("bucket"))
+        docex.select(id_col, F.expr(md5_lane("__x", salt="w", mod=B)).alias("bucket"))
         .join(F.broadcast(weights.select("bucket", "w_micro")), "bucket", "left")
         .groupBy(id_col)
         .agg(

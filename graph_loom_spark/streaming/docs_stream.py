@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graph_loom_spark.graph import scratch
+from graph_loom_spark.ops import cms_grid, lsh_bands, norm_tokens
+from graph_loom_spark.ops.relational import hll_registers
 
 DOCS_RAW_SCHEMA = T.StructType(
     [
@@ -160,28 +162,16 @@ def _minhash_batch_processor(
         return sig.select(
             F.col(idc),
             "signature",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.hash(
-                                F.slice("signature", bi * rows_per_band + 1, rows_per_band)
-                            ).alias("bh"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("b"),
+            F.explode(lsh_bands("signature", bands, rows_per_band, F.hash)).alias("b"),
         ).select(F.col(idc), "signature", "b.band", "b.bh")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        # the scope frees the two per-trigger checkpoints on every exit — a
-        # long-running stream otherwise pins two dead blocks per micro-batch
-        # forever
+        # the scope frees the per-trigger checkpoints on every exit — the
+        # two it pins and the pair frame minhash_lsh_pairs returns — so a
+        # long-running stream pins no dead block per micro-batch
         with scratch(spark) as s:
             batch_df = s.pin(batch_df)
             sigs = s.pin(
@@ -225,8 +215,10 @@ def _minhash_batch_processor(
                 )
             # --- vs earlier docs in the same batch (arrival precedence)
             intra = (
-                minhash_lsh_pairs(
-                    sigs, id_col=id_col, bands=bands, threshold=threshold, num_perm=num_perm
+                s.own(
+                    minhash_lsh_pairs(
+                        sigs, id_col=id_col, bands=bands, threshold=threshold, num_perm=num_perm
+                    )
                 )
                 .select(F.col("id_b").alias(id_col))
                 .distinct()
@@ -272,9 +264,7 @@ def stream_quality_filter(
     score = (
         len_ok.cast("int") + tok_ok.cast("int") + (alpha_ratio >= 0.5).cast("int")
     )
-    tok_arr = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "
-    )
+    tok_arr = F.expr(norm_tokens("text"))
     dup_frac = F.lit(1.0) - F.size(F.array_distinct(tok_arr)).cast("double") / F.size(
         tok_arr
     )
@@ -342,32 +332,7 @@ def stream_cms_cells(docs: DataFrame, d: int = 4, w: int = 1024) -> DataFrame:
     pytest), and the drained grid can be probed/merged with any batch
     grid built by the same (d, w, md5) construction.
     """
-    tok = docs.select(F.explode(F.split("text", " ")).alias("__v"))
-    cells = tok.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        (
-                            F.conv(
-                                F.substring(
-                                    F.md5(F.concat(F.lit(f"{j}:"), F.col("__v"))),
-                                    1,
-                                    8,
-                                ),
-                                16,
-                                10,
-                            ).cast("long")
-                            % w
-                        ).alias("b"),
-                    )
-                    for j in range(d)
-                ]
-            )
-        ).alias("__c")
-    ).select("__c.j", "__c.b")
-    return cells.groupBy("j", "b").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    return cms_grid(docs.select(F.explode(F.split("text", " ")).alias("__v")), "__v", d, w)
 
 
 def stream_profile(docs: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -426,14 +391,4 @@ def stream_hll_registers(
     batch register frame of the same (p, md5) construction via
     :func:`graph_loom_spark.ops.relational.hll_merge`.
     """
-    m = 1 << p
-    h = F.conv(F.substring(F.md5(F.col(value_col)), 1, 15), 16, 10).cast("long")
-    idx = h.bitwiseAND(F.lit(m - 1))
-    w = F.shiftright(h, p)
-    width = 60 - p
-    rho = F.lit(width + 1) - F.length(F.regexp_replace(F.bin(w), "^0+", ""))
-    return (
-        docs.select(F.col(group_col), idx.alias("reg_idx"), rho.alias("__r"))
-        .groupBy(group_col, "reg_idx")
-        .agg(F.max("__r").alias("reg_max"))
-    )
+    return hll_registers(docs, [group_col], value_col, p)

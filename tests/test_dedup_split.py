@@ -308,8 +308,8 @@ def test_exact_span_coverage_unions_overlaps(spark):
 def test_doc_novelty_planted(spark):
     """X136: doc 1 introduces every gram (novelty 10⁶); doc 2 repeats
     doc 1 verbatim (novelty 0); doc 3 shares a prefix but adds a new
-    tail gram. Short docs still yield one (short) gram — the _shingles
-    convention."""
+    tail gram. Short docs still yield one (short) gram — the shingle-set
+    rule of ``graph_loom_spark.ops``."""
     from graph_loom_spark.ops.dedup import doc_novelty
 
     docs = spark.createDataFrame(

@@ -12,7 +12,9 @@ from graph_loom_spark.cypher import compiler
 from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph, scratch
 from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.ops import bpe as ops_bpe
+from graph_loom_spark.ops import dedup as ops_dedup
 from graph_loom_spark.ops import simsearch as sim
+from graph_loom_spark.ops import text as ops_text
 
 SF_DIR = "/root/testdata/sf0.001"
 CONF = "spark.sql.shuffle.partitions"
@@ -148,3 +150,29 @@ def test_ann_topk_over_a_pinned_index_pins_nothing(spark):
         before = _persisted(spark)
         assert sim.ann_topk(index, probe_id=7, k=10, bits=4).count() == 10
         assert _persisted(spark) == before
+
+
+# corpus ops that pin an index or a model: a call leaves at most its
+# own result pinned (a checkpoint the caller frees)
+_RESULT_ONLY = {
+    "minhash_lsh_pairs": lambda docs: ops_dedup.minhash_lsh_pairs(
+        ops_dedup.minhash_signatures(docs)
+    ),
+    "containment_pairs": lambda docs: ops_dedup.containment_pairs(docs),
+    "trigram_logprob": lambda docs: ops_text.trigram_logprob(docs),
+    "moore_lewis_score": lambda docs: ops_text.moore_lewis_score(docs, in_domain_source="src1"),
+    "dsir_log_weight": lambda docs: ops_text.dsir_log_weight(docs, target_source="src1"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RESULT_ONLY))
+def test_corpus_op_leaves_only_its_result_pinned(spark, op):
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter("doc_id < 12")
+    before = _persisted(spark)
+    out = _RESULT_ONLY[op](docs)
+    out.collect()
+    try:
+        own = {_rdd_id(out)}
+    except Exception:  # a lazy result owns no block
+        own = set()
+    assert _persisted(spark) - before <= own

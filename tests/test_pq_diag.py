@@ -48,6 +48,20 @@ def test_pq_digest_mismatch_refits_once_and_proceeds(spark, entry, capsys):
         entry.reset_memo("emb_pq_topk")
 
 
+def test_pq_refit_frees_the_diverged_codes(spark, entry, monkeypatch):
+    """A digest mismatch refits once and frees the diverged fit's codes
+    block: the memo keeps one codes block pinned, not two."""
+    persisted = lambda: set(dict(spark.sparkContext._jsc.getPersistentRDDs()))  # noqa: E731
+    entry.reset_memo("emb_pq_topk")
+    monkeypatch.setitem(entry._PQ_EXPECTED_MD5, "sf0.001", "0" * 32)
+    try:
+        before = persisted()
+        codes, _ = entry._pq_index(spark, SF_DIR)
+        assert persisted() - before == {codes._jdf.queryExecution().analyzed().rdd().id()}
+    finally:
+        entry.reset_memo("emb_pq_topk")
+
+
 def test_pq_topk_writes_value_level_diag(spark, entry):
     df = entry._q_emb_pq_topk(spark, SF_DIR)
     rows = [[int(r[0]), int(r[1])] for r in df.collect()]

@@ -290,6 +290,25 @@ def test_minhash_dedup_batch_replay_idempotent(spark, tmp_path):
     assert once_out == set(ids) - dropped
 
 
+def test_minhash_batch_processor_frees_its_blocks(spark, tmp_path):
+    """A micro-batch of stream_minhash_dedup frees every block it pins,
+    the pair frame of its intra-batch pass included: three batches add
+    no block to the persisted set (the ContextCleaner may still free
+    blocks of earlier tests meanwhile)."""
+    from pyspark.sql import functions as F
+
+    from graph_loom_spark.streaming.docs_stream import _minhash_batch_processor
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    process = _minhash_batch_processor(
+        str(tmp_path / "index"), str(tmp_path / "out"), threshold=0.3
+    )
+    before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    for b in range(3):
+        process(docs.filter((F.col("doc_id") >= 12 * b) & (F.col("doc_id") < 12 * (b + 1))), b)
+    assert set(dict(spark.sparkContext._jsc.getPersistentRDDs())) - before == set()
+
+
 def test_stream_quality_filter_matches_batch(spark, docs_path):
     """The streaming quality gate is stateless, so a drained stream must
     equal the same expressions applied in batch — row for row, including

@@ -4,6 +4,9 @@ fully-repeated docs)."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
 from graph_loom_spark.ops import text as ops_text
@@ -1391,3 +1394,27 @@ def test_distinct_ngram_ratios_planted(spark):
     assert out[("S", 2)]["distinct_ratio"] == round(2 / 3, 6)
     assert (out[("S", 3)]["total_ngrams"], out[("S", 3)]["unique_ngrams"]) == (2, 2)
     assert all(out[("T", n)]["distinct_ratio"] == 1.0 for n in (1, 2, 3))
+
+
+# the text-hashing rules the corpus oracles replay, as spelled in code
+_TEXT_RULES = {
+    "whitespace normalizer": re.compile(r"lower\(\s*(?:\w+\.)?trim\("),
+    "md5 lane": re.compile(r"conv\(\s*(?:\w+\.)?substr(?:ing)?\("),
+}
+
+
+def test_text_hashing_rules_written_once():
+    """The whitespace normalizer and the md5 lane are each written once
+    in the library, in ``graph_loom_spark/ops/__init__.py``: a second
+    copy can drift from the rule the oracles replay."""
+    lib = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "graph_loom_spark")
+    found = {name: [] for name in _TEXT_RULES}
+    for root, _, files in os.walk(lib):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    text = fh.read()
+                for name, pattern in _TEXT_RULES.items():
+                    found[name] += [os.path.relpath(path, lib)] * len(pattern.findall(text))
+    assert found == dict.fromkeys(found, [os.path.join("ops", "__init__.py")]), found
