@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_loom_spark import analytics
-from graph_loom_spark.graph import scratch
+from graph_loom_spark.graph import keep, root_scope, scratch
 from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.io.tpch_graph import build_graph
 from graph_loom_spark.ops import bpe as ops_bpe
@@ -33,7 +33,8 @@ from graph_loom_spark.ops import warc as ops_warc
 
 #: lazy graph handle per sf_dir — holds no checkpoint, so it is not a memo
 _GRAPH_CACHE: dict[str, object] = {}
-#: builder name -> {sf_dir: value}, one store per ``@_memo`` builder.
+#: builder name -> {sf_dir: (value, the scope owning its blocks)}, one
+#: store per ``@_memo`` builder.
 #: Pinning, reset, warm checks and the query -> memo map all derive from
 #: it, so a new shared frame needs nothing beyond the decorator.
 _MEMOS: dict[str, dict] = {}
@@ -77,16 +78,24 @@ def _frames(value) -> list[DataFrame]:
 
 def _memo(build):
     """Share ``build(spark, sf_dir)``'s deterministic result per sf_dir
-    within the session. The value is rebuilt once any frame in it is no
-    longer persisted; a value holding no frame is never rebuilt."""
+    within the session. The memo is the one owner of blocks pinned for
+    reuse across queries: each value is built in a root scope of its own
+    (``graph.root_scope``), stored beside it, which owns every block the
+    build kept — so a memo built inside a caller's scope outlives that
+    scope, and :func:`reset_memo` frees it. The value is rebuilt (its old
+    scope released) once any frame in it is no longer persisted; a value
+    holding no frame is never rebuilt."""
     store = _MEMOS[build.__name__] = {}
 
     @functools.wraps(build)
     def get(spark: SparkSession, sf_dir: str):
-        value = store.get(sf_dir)
-        if sf_dir not in store or not all(map(_checkpoint_alive, _frames(value))):
-            value = store[sf_dir] = build(spark, sf_dir)
-        return value
+        held = store.get(sf_dir)
+        if held is None or not all(map(_checkpoint_alive, _frames(held[0]))):
+            if held is not None:
+                held[1].release()
+            with root_scope(spark) as owner:
+                held = store[sf_dir] = (build(spark, sf_dir), owner)
+        return held[0]
 
     return get
 
@@ -99,10 +108,7 @@ def _gtopo_frames(spark: SparkSession, sf_dir: str) -> tuple:
     # MapType nodes is the measured anti-pattern _graph's comment
     # documents.
     g = _graph(spark, sf_dir)
-    return (
-        g.nodes.select("id").localCheckpoint(eager=True),
-        g.edges.select("src", "dst").localCheckpoint(eager=True),
-    )
+    return (keep(g.nodes.select("id")), keep(g.edges.select("src", "dst")))
 
 
 def _gtopo(spark: SparkSession, sf_dir: str):
@@ -120,20 +126,10 @@ def _gtopo(spark: SparkSession, sf_dir: str):
 
 
 def pinned_rdd_ids() -> set:
-    """RDD ids backing memoized frames: a block-sweeping harness (see
+    """RDD ids of the blocks the memo scopes own — the only blocks pinned
+    across queries: a block-sweeping harness (see
     bench.py:_drop_persisted_blocks) must skip these."""
-    frames = [f for s in _MEMOS.values() for v in s.values() for f in _frames(v)]
-    # library-internal eager checkpoints (rfm_segments' per-user frame):
-    # the returned frame still reads these blocks, so a sweep between
-    # call and forcing must skip them (ADVICE r10 #3)
-    frames += ops_events._INTERNAL_CKPTS.values()
-    ids = set()
-    for df in frames:
-        try:
-            ids.add(_ckpt_rdd(df).id())
-        except Exception:
-            pass
-    return ids
+    return {rid for store in _MEMOS.values() for _, owner in store.values() for rid in owner.rdd_ids}
 
 
 def reset_caches() -> None:
@@ -147,11 +143,13 @@ def reset_caches() -> None:
 
 
 def reset_memo(name: str) -> None:
-    """Drop the result memo behind one query so a timing harness can
-    re-measure its full computation (a memoized rerun times a cache
-    hit). Queries without a memo are a no-op."""
-    for cache in _memo_map().get(name, []):
-        cache.clear()
+    """Drop the result memo behind one query, freeing its blocks, so a
+    timing harness can re-measure its full computation (a memoized rerun
+    times a cache hit). Queries without a memo are a no-op."""
+    for store in _memo_map().get(name, []):
+        for _, owner in store.values():
+            owner.release()
+        store.clear()
 
 
 def memo_warm(name: str, sf_dir: str) -> bool:
@@ -189,7 +187,9 @@ def _memo_map() -> dict[str, list[dict]]:
     consumer lists its producers' stores too (graph_community_density
     reads the LPA memo): resetting the consumer must drop the producer
     frame, or a per-query-invalidation harness keeps timing a cache
-    hit. Queries reading no memo are absent."""
+    hit. Queries reading no memo are absent: every other block a query
+    pins is its caller's scope's (``graph.Scratch``), never held across
+    queries, so no store outside ``_MEMOS`` needs listing."""
     out = {}
     for name, fn in queries().items():
         seen: set = set()
@@ -197,10 +197,6 @@ def _memo_map() -> dict[str, list[dict]]:
         stores = [s for b, s in _MEMOS.items() if b in seen]
         if stores:
             out[name] = stores
-    # rfm's eager internal checkpoint lives in the library registry, out
-    # of the walk's sight; clearing it here unpins the blocks so the
-    # next sweep frees them
-    out.setdefault("events_rfm", []).append(ops_events._INTERNAL_CKPTS)
     return out
 
 
@@ -626,9 +622,7 @@ def _q_docs_repetition(spark, sf_dir):
 @_memo
 def _winnow_fps(spark, sf_dir) -> DataFrame:
     # deterministic → memo-safe; shared by docs_winnow + docs_winnow_pairs
-    return ops_text.winnow_fingerprints(
-        _t(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=True)
+    return keep(ops_text.winnow_fingerprints(_t(spark, sf_dir, "documents")))
 
 
 def _q_docs_winnow(spark, sf_dir):
@@ -970,12 +964,17 @@ def _dedup_clusters_memo(spark, sf_dir) -> DataFrame:
     # components contraction is the expensive stage that
     # docs_dedup_clusters / docs_leakage_split / docs_dedup_keep_best
     # all consume: cluster ONCE (same memo rule as _jaccard_pairs)
-    return ops_dedup.dedup_clusters(
-        _t(spark, sf_dir, "documents"),
-        n=3,
-        threshold=0.5,
-        pairs=_jaccard_pairs(spark, sf_dir),
-    ).localCheckpoint(eager=True)
+    # own scope: the components result dedup_clusters reads is dead once
+    # the clusters are kept
+    with scratch(spark) as s:
+        return s.keep(
+            ops_dedup.dedup_clusters(
+                _t(spark, sf_dir, "documents"),
+                n=3,
+                threshold=0.5,
+                pairs=_jaccard_pairs(spark, sf_dir),
+            )
+        )
 
 
 def _q_docs_dedup_clusters(spark, sf_dir):
@@ -1154,9 +1153,7 @@ def _cosine_exact(spark, sf_dir) -> DataFrame:
     # ground truth every ANN recall eval (lsh/ivf/pq/ivfpq/bq/index_eval)
     # and the RRF dense leg compare against (r13-opt: previously each of
     # those ~8 consumers re-ran the full corpus-scan exact pass)
-    return ops_sim.cosine_topk(
-        _t(spark, sf_dir, "embeddings"), probe_id=7, k=10
-    ).localCheckpoint(eager=True)
+    return keep(ops_sim.cosine_topk(_t(spark, sf_dir, "embeddings"), probe_id=7, k=10))
 
 
 def _q_emb_cosine_topk(spark, sf_dir):
@@ -1243,9 +1240,7 @@ def _nb_model(spark, sf_dir) -> DataFrame:
     # AUC grade share ONE training pass, the production
     # train-once/score-many shape (the memo rule: producer directly
     # before its consumer in the registry)
-    return ops_text.nb_weights(_t(spark, sf_dir, "documents")).localCheckpoint(
-        eager=True
-    )
+    return keep(ops_text.nb_weights(_t(spark, sf_dir, "documents")))
 
 
 def _q_docs_classifier_trained(spark, sf_dir):
@@ -1307,13 +1302,13 @@ def _q_docs_token_budget(spark, sf_dir):
     # cost 13.6 s at sf0.1 — the materialized scored frame is 24 B/row
     # (id, score, ntok), cheap to pin even at corpus scale (measured
     # 13.6 s → ~1.5 s, identical rows)
-    scored = ops_text.hashed_linear_score(
-        spread(_t(spark, sf_dir, "documents"))
-    ).select(
-        "doc_id",
-        "weight_sum",
-        F.expr("size(regexp_extract_all(text, '\\\\S+', 0))").cast("bigint").alias("ntok"),
-    ).localCheckpoint(eager=True)
+    scored = keep(
+        ops_text.hashed_linear_score(spread(_t(spark, sf_dir, "documents"))).select(
+            "doc_id",
+            "weight_sum",
+            F.expr("size(regexp_extract_all(text, '\\\\S+', 0))").cast("bigint").alias("ntok"),
+        )
+    )
     return ops_text.token_budget_select(scored, budget_tokens=15_000)
 
 
@@ -1601,9 +1596,7 @@ def _q_emb_dup_components_lsh(spark, sf_dir):
 def _bq_sigs(spark, sf_dir) -> DataFrame:
     # checkpointed binary-quantization sign-signature frame shared by the
     # X119 entries emb_bq_topk / emb_bq_rerank / emb_bq_eval
-    return ops_sim.bq_signatures(
-        _t(spark, sf_dir, "embeddings"), dim=64
-    ).localCheckpoint(eager=True)
+    return keep(ops_sim.bq_signatures(_t(spark, sf_dir, "embeddings"), dim=64))
 
 
 def _q_emb_bq_topk(spark, sf_dir):
@@ -1700,9 +1693,7 @@ def _minhash_sigs(spark, sf_dir) -> DataFrame:
     # on its own text, so any subset pipeline (the funnel's post-dedup
     # near-dedup stage) can semi-join these instead of re-paying the
     # md5-per-shingle scan — the dominant minhash cost
-    return ops_dedup.minhash_signatures_md5(
-        _t(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=True)
+    return keep(ops_dedup.minhash_signatures_md5(_t(spark, sf_dir, "documents")))
 
 
 @_memo
@@ -1785,9 +1776,7 @@ def _lsh_index(spark, sf_dir) -> DataFrame:
     # emb_ann_eval in one session. Without this memo, ann_topk
     # localCheckpoints the FULL index per call and emb_ann_eval rebuilds
     # it a second time (the r6 bench regression: 1.76 s → 5.48 s).
-    return ops_sim.rp_lsh_buckets(
-        _t(spark, sf_dir, "embeddings"), dim=64, bits=8
-    ).localCheckpoint(eager=True)
+    return keep(ops_sim.rp_lsh_buckets(_t(spark, sf_dir, "embeddings"), dim=64, bits=8))
 
 
 def _q_emb_ann_lsh(spark, sf_dir):
@@ -1929,16 +1918,9 @@ def _q_docs_pipeline_funnel(spark, sf_dir):
     # branches would otherwise re-execute the shared upstream (quality
     # scan ×3, dedup ×2) once per branch — ids-only checkpoints are a
     # few KB and cut the query ~2×
-    q = (
-        ops_text.quality_score(docs)
-        .filter(F.col("quality_score") >= 2)
-        .select("doc_id")
-        .localCheckpoint(eager=False)
-    )
+    q = keep(ops_text.quality_score(docs).filter(F.col("quality_score") >= 2).select("doc_id"))
     qd = docs.join(q, "doc_id", "left_semi")
-    ex = (
-        ops_dedup.exact_dedup(qd, ["text"]).select("doc_id").localCheckpoint(eager=False)
-    )
+    ex = keep(ops_dedup.exact_dedup(qd, ["text"]).select("doc_id"))
     # a doc's MinHash signature is independent of the rest of the
     # corpus, so the near-dedup stage semi-joins the memoized
     # full-corpus signatures down to the surviving ids instead of
@@ -2045,8 +2027,9 @@ def _ivf_quantizer(spark, sf_dir) -> tuple:
     # iterations) — shared by IVF-flat, the index scoreboard, and the
     # IVFADC residual fit; re-fitting per invocation would only re-pay
     # the Lloyd iterations for an identical (assigned, centroids) result
-    assigned, C = ops_sim.kmeans_fit(_t(spark, sf_dir, "embeddings"), k=16, iters=5)
-    return (assigned.localCheckpoint(eager=True), C)
+    with scratch(spark) as s:  # frees the fit's own result once re-kept
+        assigned, C = ops_sim.kmeans_fit(_t(spark, sf_dir, "embeddings"), k=16, iters=5)
+        return (s.keep(assigned), C)
 
 
 @_memo
@@ -2207,9 +2190,14 @@ def _pq_index(spark, sf_dir):
     import sys
 
     emb = _t(spark, sf_dir, "embeddings")
-    codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
     expected = _PQ_EXPECTED_MD5.get(os.path.basename(sf_dir.rstrip("/")))
-    got = ops_sim.pq_codebooks_md5(books)
+    # the fit's codes land in this nested scope: the memo's scope adopts
+    # them when the digest matches, else the scope's exit frees them
+    with scratch(spark) as s:
+        codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
+        got = ops_sim.pq_codebooks_md5(books)
+        if expected is None or got == expected:
+            s.parent.adopt(s)
     refits = 0
     if expected is not None and got != expected:
         refits = 1
@@ -2218,10 +2206,6 @@ def _pq_index(spark, sf_dir):
             f"got={got} — refitting once",
             file=sys.stderr,
         )
-        # free the diverged fit's codes block through its RDD id:
-        # DataFrame.unpersist() frees nothing on a checkpoint
-        with scratch(spark) as s:
-            s.own(codes)
         codes, books = ops_sim.pq_fit(emb, m=4, k=16, iters=4)
         got = ops_sim.pq_codebooks_md5(books)
         print(
@@ -2529,7 +2513,7 @@ def _web_links(spark, sf_dir) -> DataFrame:
     # — web_host_rank's pagerank materialization reads the edge frame via
     # two branches and the in-link rollup via a third; the memo bounds
     # that to ONE mapInPandas HTML parse (same memo rule as _jaccard_pairs)
-    return ops_html.html_links(_web_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    return keep(ops_html.html_links(_web_docs(spark, sf_dir)))
 
 
 def _host_map(spark, sf_dir) -> DataFrame:
@@ -2671,14 +2655,16 @@ def _warc_docs(spark, sf_dir) -> DataFrame:
     recs = ops_warc.warc_records(
         spark.read.format("binaryFile").load(path)
     ).filter(F.col("warc_type") == "response")
-    return recs.select(
-        F.regexp_extract(F.col("record_id"), "urn:gls:(\\d+)", 1)
-        .cast("bigint")
-        .alias("doc_id"),
-        "target_uri",
-        "http_status",
-        F.col("payload").cast("string").alias("html"),
-    ).localCheckpoint(eager=True)
+    return keep(
+        recs.select(
+            F.regexp_extract(F.col("record_id"), "urn:gls:(\\d+)", 1)
+            .cast("bigint")
+            .alias("doc_id"),
+            "target_uri",
+            "http_status",
+            F.col("payload").cast("string").alias("html"),
+        )
+    )
 
 
 def _q_docs_warc_extract(spark, sf_dir):
@@ -2767,9 +2753,12 @@ def _emb_near_pairs(spark, sf_dir) -> DataFrame:
     # deterministic exact cosine-≥0.4 pair set — shared by emb_near_dup
     # and emb_dup_components (same memo rule as _jaccard_pairs); the
     # blocked join is the expensive part
-    return ops_sim.cosine_near_pairs_blocked(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4
-    ).localCheckpoint(eager=True)
+    # own scope: frees the cell assignment the blocked join keeps for
+    # its lazy result, once the pairs are kept
+    with scratch(spark) as s:
+        return s.keep(
+            ops_sim.cosine_near_pairs_blocked(_t(spark, sf_dir, "embeddings"), threshold=0.4)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -2790,9 +2779,7 @@ def _q_graph_triangles(spark, sf_dir):
 def _tri_counts(spark, sf_dir) -> DataFrame:
     # deterministic exact counts — shared by graph_triangles and
     # graph_clustering (the wedge join is the expensive stage)
-    return analytics.triangle_counts(_cooc_edges(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    return keep(analytics.triangle_counts(_cooc_edges(spark, sf_dir)))
 
 
 def _q_graph_clustering(spark, sf_dir):
@@ -2816,9 +2803,7 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot-group cap, so the capped operator and the cap-free oracle SQL
     # build the identical edge set
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 4 == 0)
-    return ops_dedup.co_occurrence_edges(li, "l_orderkey", "l_partkey").localCheckpoint(
-        eager=True
-    )
+    return keep(ops_dedup.co_occurrence_edges(li, "l_orderkey", "l_partkey"))
 
 
 @_memo
@@ -2826,9 +2811,7 @@ def _link_scores(spark, sf_dir) -> DataFrame:
     # deterministic (exact integer scores) link-prediction candidate
     # frame (X130) — shared by graph_link_jaccard + graph_link_ra (one
     # wedge join, both scores in the same groupBy pass)
-    return analytics.link_prediction_scores(_cooc_edges(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    return keep(analytics.link_prediction_scores(_cooc_edges(spark, sf_dir)))
 
 
 def _q_graph_link_jaccard(spark, sf_dir):

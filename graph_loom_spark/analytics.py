@@ -304,10 +304,9 @@ def weighted_label_propagation(graph: PropertyGraph, max_iter: int = 8) -> DataF
         # intermediate (weights, the per-round comm chain, idmap). The
         # community's string id is already in the frame (cstr); only
         # the node's own surrogate needs mapping back
-        return (
+        return s.keep(
             comm.join(idmap.select(F.col("iid").alias("id"), F.col("id").alias("__sid")), "id")
             .select(F.col("__sid").alias("id"), F.col("cstr").alias("community"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -502,7 +501,7 @@ def force_layout(
                 dt=dt,
             )
             pos = s.pin(pos)
-        return pos.select("id", "x", "y").localCheckpoint(eager=True)
+        return s.keep(pos.select("id", "x", "y"))
 
 
 def _layout_step(
@@ -741,7 +740,7 @@ def connected_components(graph: PropertyGraph, max_iter: int = 30) -> DataFrame:
         # partition window, pinned so the caller's action is a pure scan;
         # the scope then frees the per-level maps/adjacency
         rep = comp.groupBy("__hc").agg(F.min("id").alias("component"))
-        return comp.join(rep, "__hc").select("id", "component").localCheckpoint(eager=True)
+        return s.keep(comp.join(rep, "__hc").select("id", "component"))
 
 
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -1229,10 +1228,9 @@ def bfs_distances(
             visited = visited.unionAll(new)
             n_visited += n_frontier
             frontier = new.select("n")
-        return (
+        return s.keep(
             visited.join(idmap, "n")
             .select("id", F.col("d").cast("bigint").alias("distance"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -1424,10 +1422,9 @@ def _rank_iteration(
                     .select("nid", update_expr, "__d")
                 )
             )
-        return (
+        return s.keep(
             ranks.join(idmap.select(F.col("iid").alias("nid"), "id"), "nid")
             .select("id", (F.col("r").cast("double") / F.lit(float(_RANK_SCALE))).alias("rank"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -1538,7 +1535,7 @@ def hits(graph: PropertyGraph, iters: int = 3) -> DataFrame:
             # hub pass: contributions flow back v→u, grouped on u
             h = _norm_pass(ed_u, a, "v", "u")
         scale = F.lit(float(_HITS_SCALE))
-        return (
+        return s.keep(
             idmap.join(h.select(F.col("nid").alias("iid"), F.col("r").alias("__h")), "iid", "left")
             .join(a.select(F.col("nid").alias("iid"), F.col("r").alias("__a")), "iid", "left")
             .select(
@@ -1546,7 +1543,6 @@ def hits(graph: PropertyGraph, iters: int = 3) -> DataFrame:
                 (F.coalesce("__h", F.lit(0)).cast("double") / scale).alias("hub"),
                 (F.coalesce("__a", F.lit(0)).cast("double") / scale).alias("authority"),
             )
-            .localCheckpoint(eager=True)
         )
 
 
@@ -1653,9 +1649,7 @@ def weighted_sssp(
             dist = nxt.select("n", "d")
             if delta.isEmpty():
                 break
-        return dist.select(F.col("n").alias("id"), F.col("d").alias("dist")).localCheckpoint(
-            eager=True
-        )
+        return s.keep(dist.select(F.col("n").alias("id"), F.col("d").alias("dist")))
 
 
 def kcore(
@@ -1725,8 +1719,7 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("core_degree"))
             .filter(F.col("core_degree") >= k)
         )
-        return (
+        return s.keep(
             core_deg.join(idmap0, "n")
             .select("id", F.col("core_degree").cast("bigint").alias("core_degree"))
-            .localCheckpoint(eager=True)
         )

@@ -46,14 +46,13 @@ import os
 import time
 from collections.abc import Iterable
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-
-from graph_loom_spark.ids import uuid7_batch
 
 NODE_SCHEMA = T.StructType(
     [
@@ -106,8 +105,9 @@ def _free_intermediates(spark, rdd_ids) -> None:
 
 
 class Scratch:
-    """The intermediates one op (or one statement) pins, freed together
-    by :meth:`release`.
+    """The blocks one op (or one statement, or one memo value) pins,
+    freed together by :meth:`release`. Every pinned block has exactly
+    one such owner.
 
     Iterative operators (LPA, components, ranks, var-length BFS)
     ``localCheckpoint`` per round and persist their partitioned edge
@@ -115,8 +115,16 @@ class Scratch:
     so a long-lived service (or a 47-query bench session) accumulates
     gigabytes of dead checkpoint state and every later query pays
     eviction + GC churn (measured: the same LPA run 38 s early-session
-    vs 192 s late). An op keeps only the eagerly checkpointed result it
-    returns; :func:`scratch` releases the rest on every exit path.
+    vs 192 s late).
+
+    The one rule: an op pins its intermediates in its own scope
+    (:meth:`pin`, :meth:`persist`), which :func:`scratch` releases on
+    every exit path, and pins what it hands back with :meth:`keep` (or
+    the module-level :func:`keep`, for a function with no scope of its
+    own), which records the block in the scope its caller has open —
+    freed when that scope exits, or the caller's to free when none is
+    open. Pinning for reuse across queries is the entry layer's memo
+    alone, which builds each value in a :func:`root_scope`.
 
     Exact RDD ids are tracked rather than a diff of the global
     persistent-RDD set around the op: in a multi-query service the
@@ -129,21 +137,23 @@ class Scratch:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._rdd_ids: list[int] = []
+        self.parent: Scratch | None = None  # the scope open when this one was entered
+        self.rdd_ids: list[int] = []
         self._frames: list[DataFrame] = []
 
     def pin(self, df: DataFrame) -> DataFrame:
         """``localCheckpoint(eager=True)``, recording the block's RDD id."""
-        return self.own(df.localCheckpoint(eager=True))
-
-    def own(self, df: DataFrame) -> DataFrame:
-        """Record the RDD id of ``df``, a checkpoint some op returned, so
-        this scope frees it too."""
+        df = df.localCheckpoint(eager=True)
         try:
-            self._rdd_ids.append(df._jdf.queryExecution().analyzed().rdd().id())
+            self.rdd_ids.append(df._jdf.queryExecution().analyzed().rdd().id())
         except Exception:
             pass  # tracking is best-effort; worst case the block stays pinned
         return df
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Pin ``df``, the op's result, in the scope its caller has open
+        (this scope's parent), so this scope's exit leaves it pinned."""
+        return (self.parent or Scratch(self.spark)).pin(df)
 
     def persist(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """``persist()`` — unlike a checkpoint it keeps the frame's
@@ -158,13 +168,13 @@ class Scratch:
 
     def adopt(self, other: "Scratch") -> None:
         """Take over ``other``'s blocks, to be freed by this scope."""
-        self._rdd_ids += other._rdd_ids
+        self.rdd_ids += other.rdd_ids
         self._frames += other._frames
-        other._rdd_ids, other._frames = [], []
+        other.rdd_ids, other._frames = [], []
 
     def release(self) -> None:
         """Free every block pinned or persisted so far."""
-        rdd_ids, self._rdd_ids = self._rdd_ids, []
+        rdd_ids, self.rdd_ids = self.rdd_ids, []
         frames, self._frames = self._frames, []
         _free_intermediates(self.spark, rdd_ids)
         for df in frames:
@@ -174,16 +184,53 @@ class Scratch:
                 pass  # cleanup must never fail the query
 
 
+_OPEN: ContextVar[Scratch | None] = ContextVar("graph_loom_open_scope", default=None)
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """Pin ``df`` for a function with no scope of its own: the block is
+    recorded in the scope open now (the caller's), or is the caller's to
+    free when none is."""
+    return (_OPEN.get() or Scratch(df.sparkSession)).pin(df)
+
+
+@contextmanager
+def _opened(s: Scratch):
+    token = _OPEN.set(s)
+    try:
+        yield s
+    finally:
+        _OPEN.reset(token)
+
+
 @contextmanager
 def scratch(spark: SparkSession):
     """``with scratch(spark) as s:`` — an op's intermediates
     (:meth:`Scratch.pin`, :meth:`Scratch.persist`), released when the
-    block exits, also when it raises."""
+    block exits, also when it raises. Scopes nest: the scope open on
+    entry is this one's parent, where :meth:`Scratch.keep` pins."""
     s = Scratch(spark)
+    s.parent = _OPEN.get()
     try:
-        yield s
+        with _opened(s):
+            yield s
     finally:
         s.release()
+
+
+@contextmanager
+def root_scope(spark: SparkSession):
+    """``with root_scope(spark) as s:`` — a scope with no parent that
+    outlives its block: what the block keeps lands in ``s``, which its
+    holder (the entry layer's memo) releases. Released at once if the
+    block raises."""
+    s = Scratch(spark)
+    try:
+        with _opened(s):
+            yield s
+    except BaseException:
+        s.release()
+        raise
 
 
 @contextmanager
@@ -393,6 +440,8 @@ class PropertyGraph:
         rows = list(rows)
         if not rows:
             return []
+        from graph_loom_spark.ids import uuid7_batch  # ids pins through this module
+
         ids = uuid7_batch(len(rows))
         df = local_frame(
             self.spark,
@@ -419,6 +468,8 @@ class PropertyGraph:
         rows = list(rows)
         if not rows:
             return []
+        from graph_loom_spark.ids import uuid7_batch  # ids pins through this module
+
         ids = uuid7_batch(len(rows))
         df = local_frame(
             self.spark,

@@ -25,6 +25,8 @@ from itertools import accumulate
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from graph_loom_spark.graph import keep, local_rows
+
 _lock = threading.Lock()
 _last_slot = 0
 _TAIL = random.Random(os.getpid() ^ int(time.time() * 1000)).getrandbits(62)
@@ -65,15 +67,12 @@ def uuid7_batch(n: int) -> list[str]:
     return [_format_uuid7(start + i) for i in range(n)]
 
 
-def _local_checkpoint(df):
-    return df.localCheckpoint(eager=True)
-
-
-def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
+def assign_uuid7_ids(df, id_col: str, pin=keep):
     """Mint one monotonic UUIDv7 per row.
 
     Returns ``(df_with_id_col, row_count)``; the ids are stable across
-    re-evaluation. ``pin`` materializes the input; pass a graph's
+    re-evaluation. ``pin`` materializes the input, by default in the
+    caller's open scope (:func:`~graph_loom_spark.graph.keep`); pass a graph's
     :meth:`PropertyGraph.pin` to free its blocks with the statement.
 
     The ids come from one projection over the pinned input, which fixes
@@ -88,8 +87,6 @@ def assign_uuid7_ids(df, id_col: str, pin=_local_checkpoint):
     (a small graph's statement pin) knows its row count without a job
     and is read as one partition, offsets ``[0]``.
     """
-    from graph_loom_spark.graph import local_rows  # graph imports this module
-
     pinned = pin(df)
     n = local_rows(pinned)
     counts = None

@@ -171,7 +171,8 @@ def minhash_lsh_pairs(
 
     Ownership: the result is materialized eagerly and the signature
     checkpoint freed before returning; the only block a call leaves
-    pinned is the returned frame itself (see :func:`simhash_near_pairs`)."""
+    pinned is the returned frame itself, owned by the caller's scope
+    (see :func:`simhash_near_pairs`)."""
     if band_hash == "md5":
         bh = lambda sl: F.md5(F.concat_ws("|", F.transform(sl, lambda x: x.cast("string"))))  # noqa: E731
     else:
@@ -211,11 +212,10 @@ def minhash_lsh_pairs(
             F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
             / F.size(F.col("sig_a"))
         )
-        return (
+        return s.keep(
             cand.withColumn("est_jaccard", est)
             .filter(F.col("est_jaccard") >= threshold)
             .select("id_a", "id_b", "est_jaccard")
-            .localCheckpoint(eager=True)
         )
 
 
@@ -401,12 +401,10 @@ def simhash_near_pairs(
     missed, the standard boilerplate exclusion. ``None`` (default) =
     exact pigeonhole, the oracle path.
 
-    Ownership (VERDICT r13 ask #6): the result is eagerly materialized
-    and the op's internal banded cache is unpersisted before returning —
-    the only pinned block a call leaves behind is the returned frame
-    itself, a ``localCheckpoint`` the caller frees through its analyzed
-    plan's RDD (``df.unpersist()`` and ``df.rdd.unpersist()`` leave it
-    pinned; see :class:`~graph_loom_spark.graph.Scratch`)."""
+    Ownership: the result is eagerly materialized and the op's internal
+    banded cache is unpersisted before returning — the only pinned block
+    a call leaves behind is the returned frame itself, kept in the
+    caller's open scope (:meth:`~graph_loom_spark.graph.Scratch.keep`)."""
     width = bits // 4
     mask = (1 << width) - 1
     chunks = [
@@ -452,11 +450,10 @@ def simhash_near_pairs(
             .distinct()
         )
         ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        return (
+        return s.keep(
             cand.withColumn("hamming", ham)
             .filter(F.col("hamming") <= max_hamming)
             .select("id_a", "id_b", "hamming")
-            .localCheckpoint(eager=True)
         )
 
 
@@ -532,12 +529,11 @@ def ngram_jaccard_pairs(
         )
         if candidate_pairs is not None:
             return out  # no op-internal pins on this path
-        # Ownership (VERDICT r13 ask #6 / ADVICE r13 #1): materialize the
-        # (bounded, near-dup-pair-sized) result eagerly; the scope then frees
-        # the op-internal pins — the shingle checkpoint and the prefix cache —
+        # Ownership: materialize the (bounded, near-dup-pair-sized) result
+        # eagerly in the caller's scope; this scope then frees the
+        # op-internal pins — the shingle checkpoint and the prefix cache —
         # so a caller looping over corpora does not accumulate dead blocks.
-        # The returned checkpoint is the caller's to release.
-        return out.localCheckpoint(eager=True)
+        return s.keep(out)
 
 
 def containment_pairs(
@@ -591,11 +587,10 @@ def containment_pairs(
             sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
         ).join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         cont = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size("sh_a")
-        return (
+        return s.keep(
             pairs.withColumn("containment", cont)
             .filter(F.col("containment") >= threshold)
             .select("id_a", "id_b", "containment")
-            .localCheckpoint(eager=True)
         )
 
 
@@ -914,13 +909,12 @@ def winnow_overlap_pairs(
             fps = fps.join(keep, "fp", "left_semi")
         a = fps.select(F.col("doc_id").alias("id_a"), "fp")
         b = fps.select(F.col("doc_id").alias("id_b"), "fp")
-        return (
+        return s.keep(
             a.join(b, "fp")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fps"))
             .filter(F.col("shared_fps") >= min_shared)
-            .localCheckpoint(eager=True)
         )
 
 
@@ -1142,14 +1136,10 @@ def exact_dup_spans(
                 (F.col("__max_pa") - F.col("start_a") + g).cast("bigint").alias("span_len"),
             )
         )
-        # Ownership (VERDICT r13 ask #6 / ADVICE r13 #1): materialize the
-        # span set eagerly and release the gram-stream cache inside the op —
-        # the only block a call leaves pinned is the returned frame itself,
-        # a checkpoint the caller frees through its analyzed plan's RDD
-        # (``df.unpersist()`` and ``df.rdd.unpersist()`` leave it pinned).
-        # Callers composing further (coverage, removal) consume the spans,
-        # not the grams.
-        return spans.localCheckpoint(eager=True)
+        # Ownership: materialize the span set eagerly in the caller's scope
+        # and release the gram-stream cache inside the op. Callers composing
+        # further (coverage, removal) consume the spans, not the grams.
+        return s.keep(spans)
 
 
 def exact_span_coverage(

@@ -12,42 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from graph_loom_spark.graph import local_frame
-
-# Eager internal checkpoints published for harness pinning (ADVICE r10
-# #3): ops like rfm_segments localCheckpoint an intermediate that the
-# RETURNED frame still reads from — a block-sweeping harness (bench's
-# _drop_persisted_blocks) must treat those blocks as pinned while the
-# frame is live, or forcing the result after a sweep fails outright
-# (local checkpoints are non-recomputable). Keyed by op name; each op
-# unpersists its previous registration, and
-# release_internal_checkpoints() frees everything.
-_INTERNAL_CKPTS: dict[str, DataFrame] = {}
-
-
-def _unpersist_ckpt(df: DataFrame) -> None:
-    try:
-        # the persisted RDD is the LogicalRDD behind the analyzed plan,
-        # NOT df.rdd (which wraps a fresh deserialization step whose
-        # storage level is NONE)
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # old session / already freed — nothing to release
-
-
-def _register_internal_ckpt(name: str, df: DataFrame) -> None:
-    prev = _INTERNAL_CKPTS.pop(name, None)
-    if prev is not None:
-        _unpersist_ckpt(prev)
-    _INTERNAL_CKPTS[name] = df
-
-
-def release_internal_checkpoints() -> None:
-    """Unpersist every registered internal checkpoint. Call when the
-    frames returned by the owning ops are no longer referenced."""
-    for df in _INTERNAL_CKPTS.values():
-        _unpersist_ckpt(df)
-    _INTERNAL_CKPTS.clear()
+from graph_loom_spark.graph import keep, local_frame
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:
@@ -468,12 +433,13 @@ def rfm_segments(
     through one task.
 
     NOTE (eager execution): unlike most ops here this one runs jobs at
-    CALL time — an eager ``localCheckpoint`` + count of the per-user
-    frame (every metric branch re-reads it) and two bounded collects
-    (range row + ≤3·4096 bucket sums). The checkpoint is registered in
-    ``_INTERNAL_CKPTS`` so pinning harnesses keep its blocks alive
-    while the returned frame is (ADVICE r10 #3);
-    :func:`release_internal_checkpoints` frees it.
+    CALL time — an eager checkpoint + count of the per-user frame
+    (every metric branch re-reads it) and two bounded collects (range
+    row + ≤3·4096 bucket sums). The returned frame reads that
+    checkpoint, so it is pinned like any op result
+    (:func:`~graph_loom_spark.graph.keep`): the caller's open scope
+    owns it and frees it on exit; with no scope open it is the
+    caller's to free.
     """
     mx = events.agg(F.max(ts_col).alias("__mx"))
     u = (
@@ -493,13 +459,12 @@ def rfm_segments(
             "monetary_cents",
         )
     )
-    # localCheckpoint BEFORE the metric stage: every branch below
+    # checkpoint BEFORE the metric stage: every branch below
     # re-reads the user frame, and without truncation the raw-event
     # aggregate (and its 1-row corpus-max join) re-plans once per branch
     # — measured 8 duplicated subtrees / 8 event scans for 3 metrics.
     # The frame is |users| rows; the count below materializes it anyway.
-    u = u.localCheckpoint(eager=True)
-    _register_internal_ckpt("rfm_segments", u)
+    u = keep(u)
     n = max(u.count(), 1)  # empty stream → no rows; avoid div-by-zero
     metrics = [("recency_us", "r_q"), ("frequency", "f_q"), ("monetary_cents", "m_q")]
     # All three c_prev frames in ONE melted pass (the X82 range-bucket

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from graph_loom_spark.graph import local_frame, scratch, shuffle_partitions
+from graph_loom_spark.graph import keep, local_frame, scratch, shuffle_partitions
 from graph_loom_spark.ops import spread
 
 #: The fixed-point grid: one unit is 2^-20 (~1e-6, far below embedding noise).
@@ -251,10 +251,12 @@ def _lloyd(frame: DataFrame, q: Column, names: list[str], k: int, iters: int, id
                 if all(np.array_equal(a, b) for a, b in zip(nxt, C)):
                     break
                 C = nxt
-            out = assigned.select(
-                F.col(id_col),
-                *[F.element_at("__codes", j + 1).alias(name) for j, name in enumerate(names)],
-            ).localCheckpoint(eager=True)
+            out = s.keep(
+                assigned.select(
+                    F.col(id_col),
+                    *[F.element_at("__codes", j + 1).alias(name) for j, name in enumerate(names)],
+                )
+            )
     return out, list(C_assign)
 
 
@@ -581,9 +583,8 @@ def cosine_near_pairs_blocked(
     C = ivf_centroids(
         embeddings, n_cells=n_cells, seed=seed, id_col=id_col, vec_col=vec_col
     )
-    assigned = ivf_assign(embeddings, C, id_col=id_col, vec_col=vec_col).localCheckpoint(
-        eager=True
-    )
+    # read by the returned plan, so pinned in the caller's scope
+    assigned = keep(ivf_assign(embeddings, C, id_col=id_col, vec_col=vec_col))
     cent_df = local_frame(
         spark, [(i, [float(x) for x in C[i]]) for i in range(len(C))], "cell int, __c array<double>"
     )

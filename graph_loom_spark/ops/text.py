@@ -15,7 +15,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graph_loom_spark.graph import local_frame
+from graph_loom_spark.graph import keep, local_frame
 from graph_loom_spark.ops import (
     md5_lane,
     ngrams,
@@ -909,18 +909,16 @@ def textrank_keywords(
             )
         ).alias("__p")
     ).select(F.col("__p.a").alias("a"), F.col("__p.b").alias("b"))
-    e = (
-        pairs.select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
+    # r13-opt: pin the VOCABULARY-sized distinct pair set — nodes,
+    # both undirected edge orientations, the out-degree aggregate
+    # and the pinned-edge build below all branch from it, and
+    # unmaterialized each branch re-ran the corpus-sized explode +
+    # distinct (~6 evaluations per call, plan-audited). It is kept in
+    # the caller's scope, beside the pagerank result the return reads.
+    e = keep(
+        pairs.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        # r13-opt: pin the VOCABULARY-sized distinct pair set — nodes,
-        # both undirected edge orientations, the out-degree aggregate
-        # and the pinned-edge build below all branch from it, and
-        # unmaterialized each branch re-ran the corpus-sized explode +
-        # distinct (~6 evaluations per call, plan-audited)
-        .localCheckpoint(eager=True)
     )
     edges = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -2345,10 +2343,8 @@ def score_auc(
     # materialize the distinct-score frame once — _grouped_cprev scans
     # it three times (range agg, bucket sums, final join) and each scan
     # would otherwise re-run the upstream scoring
-    g = (
-        scored.groupBy(score_col)
-        .agg(F.count(F.lit(1)).alias("__n"), F.sum(pos_col).alias("__p"))
-        .localCheckpoint(eager=True)
+    g = keep(
+        scored.groupBy(score_col).agg(F.count(F.lit(1)).alias("__n"), F.sum(pos_col).alias("__p"))
     )
     g2 = _grouped_cprev(g, score_col=score_col)
     agg = g2.agg(
@@ -2541,13 +2537,11 @@ def classifier_calibration(
     # three scans and the 1-row total all read the checkpoint, instead
     # of the md5-per-feature scoring scan running each time (measured
     # 4.9 s → the AUC-comparable single-scan cost)
-    g = (
-        scored.groupBy("weight_sum")
-        .agg(
+    g = keep(
+        scored.groupBy("weight_sum").agg(
             F.count(F.lit(1)).alias("__n"),
             F.sum("__pos").alias("__p"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = g.agg(F.sum("__n").alias("__tot"))
     g2 = _grouped_cprev(g).crossJoin(F.broadcast(tot))

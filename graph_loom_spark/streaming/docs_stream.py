@@ -170,7 +170,7 @@ def _minhash_batch_processor(
         if batch_df.isEmpty():
             return
         # the scope frees the per-trigger checkpoints on every exit — the
-        # two it pins and the pair frame minhash_lsh_pairs returns — so a
+        # two it pins and the pair frame minhash_lsh_pairs keeps in it — so a
         # long-running stream pins no dead block per micro-batch
         with scratch(spark) as s:
             batch_df = s.pin(batch_df)
@@ -215,10 +215,8 @@ def _minhash_batch_processor(
                 )
             # --- vs earlier docs in the same batch (arrival precedence)
             intra = (
-                s.own(
-                    minhash_lsh_pairs(
-                        sigs, id_col=id_col, bands=bands, threshold=threshold, num_perm=num_perm
-                    )
+                minhash_lsh_pairs(
+                    sigs, id_col=id_col, bands=bands, threshold=threshold, num_perm=num_perm
                 )
                 .select(F.col("id_b").alias(id_col))
                 .distinct()

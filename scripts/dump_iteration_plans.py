@@ -1,16 +1,17 @@
-"""Capture REAL iteration-body plans for checkpoint-terminated queries
-(VERDICT r13 ask #3): the returned DataFrame of an iterative operator is
-an 8-line ``Scan ExistingRDD`` stub — the per-round plan the optimization
-claims are about is only visible on the frames as they are HANDED TO
-``Scratch.pin`` (pre-checkpoint), the one pin every op and graph write
-goes through. This script wraps ``Scratch.pin`` (and, optionally,
-``DataFrame.localCheckpoint``) during one real entry-query run and writes
-``explain("formatted")`` of every captured call, labeled by call index,
-to one file.
+"""Capture REAL iteration-body plans for checkpoint-terminated queries:
+the returned DataFrame of an iterative operator is an 8-line
+``Scan ExistingRDD`` stub — the per-round plan the optimization claims
+are about is only visible on the frames as they are HANDED TO
+``Scratch.pin`` (pre-checkpoint). Every checkpoint in the library and
+the entry module goes through it: an op's intermediates, the result it
+keeps (``Scratch.keep``/``graph.keep``), the memo values and every graph
+write. This script wraps ``Scratch.pin`` during one real entry-query run
+and writes ``explain("formatted")`` of every captured call, labeled by
+call index, to one file.
 
 Usage:
     python scripts/dump_iteration_plans.py QUERY_NAME [--sf DIR]
-        [--out plans/r14] [--suffix after] [--raw-ckpt]
+        [--out plans/r14] [--suffix after]
 
 Output: ``<out>/<name>_ckpt_plans_<suffix>.txt`` — headers
 ``=== call N (rows of plan: M) ===`` followed by the formatted plan.
@@ -41,9 +42,6 @@ def _opt(flag, default=None):
 SF_DIR = _opt("--sf", "/root/testdata/sf0.1")
 OUT = _opt("--out", "plans/r14")
 SUFFIX = _opt("--suffix", "after")
-RAW_CKPT = "--raw-ckpt" in argv
-if RAW_CKPT:
-    argv.remove("--raw-ckpt")
 NAME = argv[0]
 
 from graph_loom_spark.session import get_spark  # noqa: E402
@@ -80,22 +78,6 @@ def _spy_pin(self, df):
 
 
 Scratch.pin = _spy_pin
-
-if RAW_CKPT:
-    # some operators call df.localCheckpoint(eager=True) directly (memo
-    # layer, kmeans result) — wrap that too when asked
-    from pyspark.sql import DataFrame
-
-    _orig_lc = DataFrame.localCheckpoint
-
-    def _spy_lc(self, eager=True):
-        try:
-            captured.append(_fmt(self))
-        except Exception as e:
-            captured.append(f"<capture failed: {e}>")
-        return _orig_lc(self, eager=eager)
-
-    DataFrame.localCheckpoint = _spy_lc
 
 qs = entry.queries()
 fn = qs[NAME]

@@ -328,47 +328,27 @@ def test_user_burstiness_planted(spark):
     assert out[4]["burstiness"] is None
 
 
-def test_rfm_internal_checkpoint_is_pinned_and_releasable(spark):
-    """ADVICE r10 #3: rfm_segments' eager localCheckpoint must (a) be
-    registered for harness pinning — entry.pinned_rdd_ids() includes
-    its RDD id, so a block sweep before the consumer forces the frame
-    can't strand it — and (b) survive a sweep-then-force, and (c) be
-    freed by release_internal_checkpoints()."""
+def test_rfm_pin_is_owned_by_the_callers_scope(spark):
+    """rfm_segments' per-user checkpoint, which its result reads, is
+    pinned like any op result: forced inside a caller's scope it gives
+    the rows it gives with no scope open, and the scope's exit frees it."""
     import datetime
-    import importlib.util
-    import os
 
+    from graph_loom_spark.graph import scratch
     from graph_loom_spark.ops import events as ev_ops
 
+    persisted = lambda: set(dict(spark.sparkContext._jsc.getPersistentRDDs()))  # noqa: E731
     t0 = datetime.datetime(2026, 1, 1)
     ev = spark.createDataFrame(
         [(1, t0, 10, "e", 5.0), (2, t0, 20, "e", 7.0)],
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     )
-    df = ev_ops.rfm_segments(ev)
-    assert "rfm_segments" in ev_ops._INTERNAL_CKPTS
-    ck = ev_ops._INTERNAL_CKPTS["rfm_segments"]
-
-    spec = importlib.util.spec_from_file_location(
-        "entry_rfm_pin",
-        os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"),
-    )
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
-    assert entry._ckpt_rdd(ck).id() in entry.pinned_rdd_ids()
-
-    # sweep everything EXCEPT pinned ids (bench's contract), then force
-    sc = spark.sparkContext
-    keep = entry.pinned_rdd_ids()
-    for rid, rdd in sc._jsc.getPersistentRDDs().items():
-        if rid not in keep:
-            rdd.unpersist()
-    assert df.count() == 2  # still recoverable
-
-    ev_ops.release_internal_checkpoints()
-    assert not ev_ops._INTERNAL_CKPTS
-    lvl = entry._ckpt_rdd(ck).getStorageLevel()
-    assert not (lvl.useMemory() or lvl.useDisk())
+    want = sorted(ev_ops.rfm_segments(ev).collect())  # no scope: the caller's to free
+    before = persisted()
+    with scratch(spark) as s:
+        assert sorted(ev_ops.rfm_segments(ev).collect()) == want
+        assert s.rdd_ids and set(s.rdd_ids) <= persisted() - before
+    assert persisted() <= before
 
 
 def test_rfm_matches_python_replay_random(spark):

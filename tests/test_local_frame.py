@@ -91,11 +91,10 @@ def test_add_nodes_builds_one_local_relation(spark, monkeypatch):
     assert "Union" not in plan.toString()
 
 
-def test_no_create_dataframe_outside_graph_module():
-    """Rows held on the driver enter a plan through ``graph.py`` alone
-    (``local_frame``, ``hold_local``): any other ``createDataFrame(`` in
-    the library or the entry module is a second way to do it."""
-    call = re.compile(r"\bcreateDataFrame\(")
+def _calls_outside_graph_module(name: str) -> list[str]:
+    """``file:line`` of every ``name(`` call in the library or the entry
+    module outside ``graph.py``."""
+    call = re.compile(rf"\b{name}\(")
     paths = [os.path.join(REPO, "__spark_entry__.py")]
     for root, _, files in os.walk(os.path.join(REPO, "graph_loom_spark")):
         paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
@@ -109,4 +108,20 @@ def test_no_create_dataframe_outside_graph_module():
                 for i, line in enumerate(fh, 1)
                 if call.search(line)
             ]
+    return offenders
+
+
+def test_no_create_dataframe_outside_graph_module():
+    """Rows held on the driver enter a plan through ``graph.py`` alone
+    (``local_frame``, ``hold_local``): any other ``createDataFrame(`` in
+    the library or the entry module is a second way to do it."""
+    offenders = _calls_outside_graph_module("createDataFrame")
     assert not offenders, f"use graph.local_frame instead: {offenders}"
+
+
+def test_no_checkpoint_call_outside_graph_module():
+    """Every block is pinned through ``graph.py`` (``Scratch.pin``,
+    ``Scratch.keep``, ``keep``), so it has a scope as its owner: any
+    other ``localCheckpoint(`` is a block nothing frees."""
+    offenders = _calls_outside_graph_module("localCheckpoint")
+    assert not offenders, f"pin through a graph.Scratch scope instead: {offenders}"

@@ -1,9 +1,12 @@
 """An op that fails mid-loop must leave the session as it found it: its
 ``spark.sql.shuffle.partitions`` override restored and none of its
 intermediate checkpoints still pinned. An op that succeeds leaves only
-the result it returns pinned."""
+the result it returns pinned, in the scope its caller has open."""
 
 from __future__ import annotations
+
+import importlib.util
+import os
 
 import pytest
 
@@ -13,6 +16,7 @@ from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph, scra
 from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.ops import bpe as ops_bpe
 from graph_loom_spark.ops import dedup as ops_dedup
+from graph_loom_spark.ops import events as ops_events
 from graph_loom_spark.ops import simsearch as sim
 from graph_loom_spark.ops import text as ops_text
 
@@ -176,3 +180,57 @@ def test_corpus_op_leaves_only_its_result_pinned(spark, op):
     except Exception:  # a lazy result owns no block
         own = set()
     assert _persisted(spark) - before <= own
+
+
+# one op of each convention a result pin had before every pinned block
+# got a scope as its owner: op -> (module whose ``F`` holds the step, a
+# function first called after the op's pin, the call)
+_CALLER_SCOPE_FAILURES = {
+    # its per-user frame sat in a private module registry
+    "rfm_segments": (
+        ops_events,
+        "explode",  # the metric melt, after the per-user pin
+        lambda spark, docs: ops_events.rfm_segments(
+            ops_events.load_events(spark, f"{SF_DIR}/events.parquet")
+        ),
+    ),
+    # its pair set was pinned outside any scope; pagerank then fails mid-loop
+    "textrank_keywords": (
+        analytics, "first", lambda spark, docs: ops_text.textrank_keywords(docs)
+    ),
+    # its result was a bare checkpoint; the consumer's components loop fails
+    "containment_pairs": (
+        analytics,
+        "least",
+        lambda spark, docs: ops_dedup.dedup_clusters(
+            docs, pairs=ops_dedup.containment_pairs(docs)
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_CALLER_SCOPE_FAILURES))
+def test_failure_inside_a_caller_scope_frees_every_pin(spark, monkeypatch, op):
+    module, step, call = _CALLER_SCOPE_FAILURES[op]
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter("doc_id < 12")
+
+    def run():
+        with scratch(spark):
+            call(spark, docs)
+
+    _assert_failure_cleans_up(spark, monkeypatch, module, step, run)
+
+
+def test_pipeline_funnel_leaves_only_memo_pins(spark):
+    """The funnel's two id frames and the near-dup pairs are kept in the
+    caller's scope; only the memoized signatures outlive it."""
+    spec = importlib.util.spec_from_file_location(
+        "entry_op_cleanup", os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    entry._minhash_sigs(spark, SF_DIR)
+    before = _persisted(spark)
+    with scratch(spark):
+        entry._q_docs_pipeline_funnel(spark, SF_DIR).collect()
+    assert _persisted(spark) - before <= entry.pinned_rdd_ids()

@@ -447,7 +447,7 @@ def test_rank_iteration_pins_plan_no_hash_exchange(spark, monkeypatch, seeded):
         analytics.personalized_pagerank(g, g.nodes.filter("id = 'a'"), iters=iters).collect()
     else:
         analytics.pagerank(g, iters=iters).collect()
-    for plan in plans[-iters:]:
+    for plan in plans[-iters - 1 : -1]:  # the last pin is the kept result
         assert "InMemoryRelation" in plan
         exchanges = [ln for ln in _outside_cached(plan) if "Exchange" in ln]
         assert exchanges, plan
@@ -476,9 +476,23 @@ def test_token_budget_has_single_boundary_window_no_global_sort(spark):
     assert "Union" in plan  # whole-bucket branch unioned with the boundary
 
 
-def test_containment_and_phash_pairs_have_no_cartesian(spark):
+def test_containment_and_phash_pairs_have_no_cartesian(spark, monkeypatch):
+    # both ops keep their result as an eager checkpoint, whose returned
+    # plan is a scan: check the pair join in the plan handed to Scratch.pin
+    from graph_loom_spark.graph import Scratch
+
+    plans = []
+    pin = Scratch.pin
+
+    def spy(self, df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return pin(self, df)
+
+    monkeypatch.setattr(Scratch, "pin", spy)
     for name in ("docs_containment", "media_phash_pairs"):
-        plan = _plan(spark, name)
+        _plan(spark, name)
+        plan = plans[-1]
+        assert re.search(r"(BroadcastHash|ShuffledHash|SortMerge)Join", plan), name
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
