@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_loom_spark import analytics
-from graph_loom_spark.graph import keep, root_scope, scratch
+from graph_loom_spark.graph import keep, persist, root_scope, scratch
 from graph_loom_spark.interface import CypherSession
 from graph_loom_spark.io.tpch_graph import build_graph
 from graph_loom_spark.ops import bpe as ops_bpe
@@ -127,8 +127,9 @@ def _gtopo(spark: SparkSession, sf_dir: str):
 
 def pinned_rdd_ids() -> set:
     """RDD ids of the blocks the memo scopes own — the only blocks pinned
-    across queries: a block-sweeping harness (see
-    bench.py:_drop_persisted_blocks) must skip these."""
+    across queries. Every other block a query pins is its caller's scope's
+    (``graph.scratch``; ``bench.py`` opens one per entry), so a query run
+    inside a scope leaves no persisted RDD outside this set."""
     return {rid for store in _MEMOS.values() for _, owner in store.values() for rid in owner.rdd_ids}
 
 
@@ -2091,8 +2092,8 @@ def _q_emb_pq_topk(spark, sf_dir):
     # harness's subsequent collect/count execute the ADC scan ONCE
     # (code-review r8: the diag's extra execution landed inside the
     # timed bench slot); the executed plan still pins the TakeOrdered
-    # shape, and the tiny cache is swept by the bench between queries
-    out = ops_sim.pq_topk(emb, codes, books, probe_id=7, k=10).persist()
+    # shape, and the tiny cache belongs to the caller's open scope
+    out = persist(ops_sim.pq_topk(emb, codes, books, probe_id=7, k=10), eager=False)
     _write_pq_diag(sf_dir, books, out)
     return out
 
@@ -3199,12 +3200,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_minhash_clusters": _q_docs_minhash_clusters,
         "docs_dedup_report": _q_docs_dedup_report,
         "docs_leakage_split": _q_docs_leakage_split,
-        # -- r13-opt ordering: every memo family is CONTIGUOUS in bench
-        # -- order so each shared frame (signatures, pair sets, ANN fits,
-        # -- exact-cosine ground truth) is built exactly once per bench
-        # -- run; block restarts land at family boundaries via the
-        # -- session-level guard in bench.py. Pre-r13 per-round window
-        # -- history lives in git (this literal was rewritten whole).
+        # -- every memo family is CONTIGUOUS in registry order, which is
+        # -- bench order; the bench runs one session, so each shared frame
+        # -- (signatures, pair sets, ANN fits, exact-cosine ground truth)
+        # -- is built once per run by the family's first entry. Pre-r13
+        # -- per-round window history lives in git (this literal was
+        # -- rewritten whole).
         # -- dedup family: continues the window's minhash/jaccard
         # -- producers (docs_pipeline_funnel .. docs_leakage_split)
         "docs_minhash_pairs": _q_docs_minhash_pairs,
@@ -3215,8 +3216,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_dedup_keep_best": _q_docs_dedup_keep_best,
         "docs_simhash_pairs": _q_docs_simhash_pairs,
         "docs_dedup_incremental": _q_docs_dedup_incremental,
-        # -- embedding near-dup family (A/B-watched emb_near_dup leads:
-        # -- a cold slot needs no reset, so one pair build serves all)
+        # -- embedding near-dup family (emb_near_dup leads and pays the
+        # -- one pair build the rest read)
         "emb_near_dup": _q_emb_near_dup,
         "emb_dup_components": _q_emb_dup_components,
         "emb_dup_keep_best": _q_emb_dup_keep_best,
@@ -3234,7 +3235,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- ANN index mega-family: one LSH index, one exact-cosine
         # -- ground-truth memo (_cosine_exact), one fit per structure per
         # -- run; each eval leads its fit trio so adjacent entries share
-        # -- a cache and the restart guard keeps the block in one session
+        # -- a cache
         "emb_ann_lsh": _q_emb_ann_lsh,
         "emb_ann_eval": _q_emb_ann_eval,
         "emb_cosine_topk": _q_emb_cosine_topk,
@@ -3263,9 +3264,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_semdedup": _q_emb_semdedup,
         "emb_cluster_sample": _q_emb_cluster_sample,
         "emb_outliers": _q_emb_outliers,
-        # -- remaining entries in their r12 relative order (graph entries
-        # -- here are benched inside the fresh graph-tail session via
-        # -- bench._BENCH_LAST regardless of registry position)
+        # -- remaining entries in their r12 relative order (the bench
+        # -- times every entry, graph entries too, in registry order)
         "graph_export_roundtrip": _q_graph_export_roundtrip,
         "events_gini": _q_events_gini,
         "events_burstiness": _q_events_burstiness,

@@ -194,6 +194,12 @@ def keep(df: DataFrame) -> DataFrame:
     return (_OPEN.get() or Scratch(df.sparkSession)).pin(df)
 
 
+def persist(df: DataFrame, eager: bool = True) -> DataFrame:
+    """:meth:`Scratch.persist` by the :func:`keep` rule: recorded in the
+    scope open now, or the caller's to free when none is."""
+    return (_OPEN.get() or Scratch(df.sparkSession)).persist(df, eager)
+
+
 @contextmanager
 def _opened(s: Scratch):
     token = _OPEN.set(s)
@@ -653,11 +659,14 @@ class PropertyGraph:
         self._pins.release()
 
     def forget_pins(self) -> None:
-        """Stop tracking the current versions and the retired pins without
-        freeing any: a lazy frame that outlives its statement reads them
-        (``CypherSession.execute_df``), so they stay pinned for the
-        session's life."""
-        self._version = {}
+        """Hand the statement pins and the retired versions, unfreed, to
+        the scope open now by the :func:`keep` rule: a lazy frame that
+        outlives its statement reads them (``CypherSession.execute_df``),
+        so that scope's exit frees them, or they are the caller's when
+        none is open. The current versions stay with the graph."""
+        owner = _OPEN.get()
+        if owner is not None:
+            owner.adopt(self._pins)
         self._pins = Scratch(self.spark)
 
     # ------------------------------------------------------------------

@@ -138,8 +138,10 @@ class CypherSession:
         """Run all statements; return the LAST statement's result as an
         uncollected DataFrame (RESULT_SCHEMA). The last statement must
         route to the Cypher engine. Releases nothing: the frame reads the
-        graph's current versions and the statement's pins, so they stay
-        pinned for the session's life (``PropertyGraph.forget_pins``)."""
+        statement's pins, which go to the scope open now (or are the
+        caller's when none is, ``PropertyGraph.forget_pins``), and the
+        graph's current versions, which a later write on the graph
+        retires like any frame taken from ``nodes``/``edges``."""
         trimmed = query.strip()
         stmts = [s.strip() for s in trimmed.split(";") if s.strip()]
         if not stmts:

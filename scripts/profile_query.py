@@ -1,8 +1,8 @@
-"""Solo per-query profiler for the optimization rounds: fresh session,
-bench-identical warmups, then for each named entry capture
-``explain("formatted")`` and time the noop-sink forcing (min of N runs,
-resetting the entry's memo between runs so every run pays the full
-computation — the same rule the bench A/B pass applies).
+"""Solo per-query profiler: one session warmed as the bench warms it,
+then for each named entry capture ``explain("formatted")`` and time it
+as the bench does (its own scratch scope, noop-sink forcing), min of N
+runs, resetting the entry's memo before each run so every run pays the
+full computation.
 
 Usage:
     python scripts/profile_query.py name1,name2 [--sf DIR] [--runs N]
@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -55,30 +54,7 @@ spark.sparkContext.setLogLevel("ERROR")
 import bench  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 
-# bench-identical session warmups so solo numbers are comparable
-spark.range(100_000).selectExpr("sum(id)").collect()
-spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-try:
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-
-    def _warm(v):
-        return v
-
-    import pandas as _pd
-
-    _warm.__annotations__ = {"v": _pd.Series, "return": _pd.Series}
-    spark.range(1000).select(F.pandas_udf(_warm, "long")("id")).count()
-except Exception as e:
-    print(f"warmup warning: {e}", file=sys.stderr)
-try:
-    from graph_loom_spark.io.tpch_graph import build_graph
-
-    build_graph(spark, SF_DIR, cache=False).edges.count()
-except Exception as e:
-    print(f"graph warmup warning: {e}", file=sys.stderr)
-bench._warm_iterative(spark)
-bench._drop_persisted_blocks(spark)
+bench.warm_session(spark, SF_DIR)
 
 qs = entry.queries()
 for name in NAMES:
@@ -89,24 +65,23 @@ for name in NAMES:
     times = []
     for r in range(RUNS):
         if not NO_RESET:
-            try:
-                entry.reset_memo(name)
-            except Exception:
-                pass
+            entry.reset_memo(name)
+        built = []
+
+        def build(spark, sf_dir):
+            built.append(fn(spark, sf_dir))
+            return built[0]
+
         spark.sparkContext.setJobDescription(f"profile:{name}#{r}")
-        t0 = time.time()
-        df = fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        times.append(round(time.time() - t0, 3))
+        times.append(bench.time_entry(spark, build, SF_DIR))
+        spark.sparkContext.setJobDescription(None)
         if PLANS and r == 0:
             os.makedirs(PLANS, exist_ok=True)
             plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+                built[0]._jdf.queryExecution(), "formatted"
             )
             with open(os.path.join(PLANS, f"{name}_{SUFFIX}.txt"), "w") as fh:
                 fh.write(plan)
-        spark.sparkContext.setJobDescription(None)
-        bench._drop_persisted_blocks(spark)
     print(
         json.dumps({"name": name, "runs": times, "min": min(times)}),
         flush=True,

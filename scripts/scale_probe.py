@@ -16,12 +16,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
+from graph_loom_spark.graph import keep
 from graph_loom_spark.session import get_spark
 
 SF01 = "/root/testdata/sf0.01"
@@ -103,8 +104,8 @@ def _token_budget(d) -> int:
             .cast("bigint")
             .alias("ntok"),
         )
-        .localCheckpoint(eager=True)
     )
+    scored = keep(scored)
     budget = int(scored.agg(F.sum("ntok")).first()[0] or 0) // 20
     return ops_text.token_budget_select(scored, budget_tokens=budget).count()
 
@@ -338,26 +339,11 @@ def main() -> None:
     }
     # Entry-level probes (r13): compositions measured through the
     # registry entries themselves — each call takes (spark, sf_dir),
-    # reads the scale's parquet dir, and is forced through the noop
-    # sink (the bench forcing rule: .count() lets Catalyst prune the
-    # expensive columns / eliminate cardinality-preserving joins).
-    # Memos are per-sf_dir, so each scale pays its own builds.
-    import importlib.util
+    # reads the scale's parquet dir, and is timed as the bench times an
+    # entry (bench.time_entry). Memos are per-sf_dir, so each scale pays
+    # its own builds.
+    import __spark_entry__ as _entry
 
-    _espec = importlib.util.spec_from_file_location(
-        "spark_entry_probe",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py"),
-    )
-    _entry = importlib.util.module_from_spec(_espec)
-    _espec.loader.exec_module(_entry)
-    # alias the loaded instance under the canonical name BEFORE anything
-    # imports bench: _drop_persisted_blocks resolves pinned_rdd_ids()
-    # via `import __spark_entry__` — without the alias that import
-    # creates a SECOND instance with empty caches, the sweep unpins the
-    # probe's live memo checkpoints, and the cleanup churn lands inside
-    # the next measured job (nb_trained read 19.3 s with the mismatched
-    # sweep vs 4.5 s aliased — the r13 false 23x)
-    sys.modules["__spark_entry__"] = _entry
     _q = _entry.queries()
     OPS_ENTRY = {
         # ask #5: the two composed HTML entries get their own rows
@@ -374,94 +360,38 @@ def main() -> None:
 
     only = sys.argv[1:]
     scales = [("sf0.01", SF01), ("sf0.1", SF1), ("sf0.1x10", DERIVED)]
-    # lazy: built on first non-entry op, and rebuilt after an entry-op
-    # row restarts the session (old-session checkpoints die with it)
+    bench.warm_session(spark, SF1)
+    # the pre-loaded inputs are pinned outside any scope, so the scope
+    # each measurement runs in leaves them alone; built on the first
+    # non-entry op
     loaded = None
     print(f"{'op':16s} " + " ".join(f"{t:>10s}" for t, _ in scales) + "   x(0.1->10x)")
     for name, fn in OPS.items():
         if only and name not in only:
             continue
         row = []
-        if isinstance(fn, tuple) and fn[0] == "__entry__":
-            # FRESH JVM per entry-op row + min-of-2 with a memo reset
-            # per rep. An aged session reads these rows 3-50x inflated
-            # REGARDLESS of block sweeping or min-of-2 within the same
-            # session (r13 adjudication: nb_trained@10x measured 13.2 s
-            # in a fresh session, 31.5 s immediately after
-            # web_host_rank in the same session, 88 s after a same-JVM
-            # context restart, 2.5 s steady-state — identical verified
-            # broadcast+partial-agg plan). This is the bench's
-            # session-aging disease; the probe takes the bench's cure:
-            # restart_jvm_session (gateway shutdown + JVM kill — a
-            # same-JVM spark.stop() keeps the aged heap and measures
-            # WORSE). The per-rep reset keeps rep 2 honest (a memoized
-            # rerun times a cache hit — the r8 poison rule); rep 1
-            # carries cold-JIT, so the min is ~the warm-session figure.
-            from bench import restart_jvm_session
-
-            spark = restart_jvm_session(
-                spark, app_name="scale-probe", master="local[32]",
-                shuffle_partitions=32,
-            )
-            spark.sparkContext.setLogLevel("ERROR")
-            loaded = None  # old-session checkpoints are dead
-            for tag, path in scales:
-                try:
-                    times = []
-                    for _rep in range(2):
-                        try:
-                            _entry.reset_memo(fn[1])
-                        except Exception:
-                            pass
-                        t0 = time.time()
-                        _q[fn[1]](spark, path).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        times.append(time.time() - t0)
-                    row.append(min(times))
-                except Exception as ex:
-                    print(f"{name}: FAIL at {tag}: {str(ex)[:90]}")
-                    row.append(float("nan"))
-                    break
-            if len(row) == len(scales):
-                factor = row[2] / row[1] if row[1] else float("nan")
-                print(
-                    f"{name:16s} " + " ".join(f"{v:9.2f}s" for v in row) + f"   {factor:6.1f}x",
-                    flush=True,
-                )
-            continue
-        if loaded is None:
-            loaded = {}
-            for tag, path in scales:
-                loaded[tag] = (
+        if not isinstance(fn, tuple) and loaded is None:
+            loaded = {
+                tag: (
                     spark.read.parquet(f"{path}/documents.parquet").localCheckpoint(eager=True),
                     spark.read.parquet(f"{path}/embeddings.parquet").localCheckpoint(eager=True),
                     ops_events.load_events(spark, f"{path}/events.parquet").localCheckpoint(eager=True),
                 )
+                for tag, path in scales
+            }
         for tag, path in scales:
-            # sweep non-pinned blocks between measurements (the bench
-            # rule): without this, checkpoint blocks from earlier ops
-            # accumulate and a late op's line measures block-store
-            # churn, not its plan. Pin the probe's OWN pre-loaded input
-            # checkpoints (r13-opt fix: the sweep previously unpersisted
-            # them and every non-entry row died with
-            # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; only entry-level rows
-            # were probed after the sweep landed, so it went unnoticed).
-            from bench import _drop_persisted_blocks
-
-            own = set()
-            for frames in loaded.values():
-                for fr in frames:
-                    try:
-                        own.add(_entry._ckpt_rdd(fr).id())
-                    except Exception:
-                        pass
-            _drop_persisted_blocks(spark, extra_keep=own)
-            d, e, ev = loaded[tag]
             try:
-                t0 = time.time()
-                fn(d, e, ev)
-                row.append(time.time() - t0)
+                if isinstance(fn, tuple):
+                    # min-of-2 with a memo reset per rep: a memoized
+                    # rerun times a cache hit; rep 1 carries cold JIT
+                    times = []
+                    for _rep in range(2):
+                        _entry.reset_memo(fn[1])
+                        times.append(bench.time_entry(spark, _q[fn[1]], path))
+                    row.append(min(times))
+                else:
+                    d, e, ev = loaded[tag]
+                    row.append(bench.timed(spark, lambda: fn(d, e, ev)))
             except Exception as ex:
                 print(f"{name}: FAIL at {tag}: {str(ex)[:90]}")
                 row.append(float("nan"))

@@ -1,49 +1,44 @@
-"""The driver keeps only the LAST 2000 chars of bench stdout, so the
-final three lines (variance, positional qta, compact summary) must fit
-the window TOGETHER and must reconstruct every per-query timing
-(VERDICT r7 ask #2: r7 lost 71 of 132 timings to the tail cap)."""
+"""A capture that keeps only the LAST 2000 chars of bench stdout must
+hold the final two lines (positional qta, compact summary) whole, and
+they must reconstruct every per-query timing (r7 lost 71 of 132
+timings to the tail cap)."""
 
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 import bench
 
 
-def _fixture(n_queries: int = 140, n_ab: int = 12):
+def _fixture(n_queries: int = 191):
     rng = random.Random(7)
     names = [f"docs_operator_name_{i:03d}" for i in range(n_queries - 32)] + [
         f"graph_iterative_algo_{i:02d}" for i in range(32)
     ]
     timings = {n: round(rng.uniform(0.05, 45.0), 3) for n in names}
     timings[names[3]] = -1.0  # a failed query must round-trip too
-    variance = {
-        n: {
-            "n": 3,
-            "min": round(rng.uniform(1, 20), 3),
-            "max": round(rng.uniform(20, 70), 3),
-        }
-        for n in names[:n_ab]
-    }
-    return timings, variance
+    return timings
 
 
 def test_tail_lines_fit_window_together():
-    timings, variance = _fixture()
-    _, _, vline, qta, compact = bench.build_output_lines(
-        timings, variance, 0.1, "f" * 32
-    )
-    # +3 newlines: the window must carry all three lines WHOLE
-    assert len(vline) + len(qta) + len(compact) + 3 <= bench.TAIL_WINDOW
+    timings = _fixture()
+    result, _, qta, compact = bench.build_output_lines(timings, 0.1, "f" * 32)
+    # +2 newlines: the window must carry both lines WHOLE
+    assert len(qta) + len(compact) + 2 <= bench.TAIL_WINDOW
+    rec = json.loads(result)
+    assert rec["queries"] == timings and rec["forcing"] == "noop_sink"
+    # no family totals serialize as null, keeping history lines uniform
+    assert rec["families"] is None
 
 
 def test_qta_reconstructs_every_timing():
-    timings, variance = _fixture()
-    _, _, _, qta, _ = bench.build_output_lines(timings, variance, 0.1, None)
+    timings = _fixture()
+    _, _, qta, _ = bench.build_output_lines(timings, 0.1, None)
     payload = json.loads(qta)["qta"]
     assert payload["o"] == "alpha"
     assert payload["n"] == len(timings)
@@ -53,9 +48,9 @@ def test_qta_reconstructs_every_timing():
 
 
 def test_compact_line_parses_and_carries_pq_digest():
-    timings, variance = _fixture()
-    _, _, _, _, compact = bench.build_output_lines(
-        timings, variance, 0.1, "3ce9cf8f57671e817f98c0038f176b99"
+    timings = _fixture()
+    _, _, _, compact = bench.build_output_lines(
+        timings, 0.1, "3ce9cf8f57671e817f98c0038f176b99"
     )
     parsed = json.loads(compact)
     assert parsed["metric"] == "total_bench_seconds"
@@ -70,156 +65,10 @@ def test_compact_line_parses_and_carries_pq_digest():
         assert floor >= omitted_max
 
 
-def test_oversized_variance_still_leaves_parseable_final_lines():
-    # pathological watch list: even if variance alone outgrows the
-    # window, qta + compact (the last two lines) must fit by themselves
-    timings, _ = _fixture()
-    variance = {
-        n: {"n": 3, "min": 1.0, "max": 2.0} for n in list(timings)[:60]
-    }
-    _, _, _, qta, compact = bench.build_output_lines(timings, variance, 0.1, None)
-    assert len(qta) + len(compact) + 2 <= bench.TAIL_WINDOW
-
-
-def test_warm_floor_keys_in_result_and_tail_still_fits():
-    """VERDICT r11 ask #1: the aged/warm_floor adjudication must reach
-    the full result line (bench_result.json / BENCH_HISTORY.jsonl)
-    without crowding the three tail-window lines, which stay as-is."""
-    timings, variance = _fixture()
-    flagged = sorted(timings)[:8]
-    aged = {n: timings[n] + 9.0 for n in flagged}
-    warm = {n: max(0.1, timings[n] - 0.5) for n in flagged}
-    result, qt_lines, variance_line, qta, compact = bench.build_output_lines(
-        timings, variance, 0.1, "d" * 32,
-        aged=aged, warm_floor=warm,
-        aging={"block": 45, "block_restarts": 3},
-    )
-    rec = json.loads(result)
-    assert rec["aged"] == aged and rec["warm_floor"] == warm
-    assert rec["aging"] == {"block": 45, "block_restarts": 3}
-    assert rec["forcing"] == "noop_sink"
-    # tail budget unchanged: the three tail lines fit the window
-    assert len(variance_line) + len(qta) + len(compact) + 3 <= bench.TAIL_WINDOW
-    # empty dicts serialize as null, keeping history lines uniform
-    rec2 = json.loads(
-        bench.build_output_lines(timings, variance, 0.1, None)[0]
-    )
-    assert rec2["aged"] is None and rec2["warm_floor"] is None
-    assert rec2["official"] is None
-
-
-def test_official_dict_labels_warm_vs_rebuild():
-    """VERDICT r12 ask #6: the artifact must say, per re-measured
-    query, which side won — a warm number ABOVE the aged line is a
-    memo rebuild the aged slot never paid (source stays "aged"), not
-    a regression; a warm number below is reclaimed aging (source
-    "warm"). The official value always equals the published
-    queries[...] figure."""
-    timings, variance = _fixture()
-    names = sorted(timings)[:2]
-    reclaimed, rebuild = names[0], names[1]
-    aged = {reclaimed: 5.0, rebuild: 15.4}
-    warm = {reclaimed: 1.8, rebuild: 66.7}
-    timings[reclaimed] = 1.8   # min(aged, warm)
-    timings[rebuild] = 15.4
-    rec = json.loads(
-        bench.build_output_lines(
-            timings, variance, 0.1, None, aged=aged, warm_floor=warm
-        )[0]
-    )
-    assert rec["official"][reclaimed] == {"value": 1.8, "source": "warm"}
-    assert rec["official"][rebuild] == {"value": 15.4, "source": "aged"}
-    for k, v in rec["official"].items():
-        assert v["value"] == rec["queries"][k]
-
-
-def test_select_warm_candidates_rules():
-    """Selection: ≥2 s absolute AND >max(1.5×floor, floor+1 s) over the
-    cross-round floor (>3 s when floorless); skip already-warm names;
-    cap at max_n by worst excess."""
-    timings = {
-        "small_fast": 1.9,          # < 2 s — never flagged
-        "at_floor": 5.0,            # == floor — fine
-        "noise_band": 6.9,          # 1.38× floor of 5 — inside band
-        "aged_line": 16.6,          # floor 1.3 — flagged (r11 emb_bq_topk)
-        "new_entry_cheap": 2.5,     # no floor, ≤ 3 s — not flagged
-        "new_entry_heavy": 8.0,     # no floor, > 3 s — flagged
-        "already_graph": 60.0,      # fresh-session min-of-3 exists
-        "failed": -1.0,             # failed runs never re-measured
-    }
-    floors = {"small_fast": 0.1, "at_floor": 5.0, "noise_band": 5.0,
-              "aged_line": 1.3, "already_graph": 20.0, "failed": 1.0}
-    got = bench.select_warm_candidates(
-        timings, floors, already_warm={"already_graph"}
-    )
-    assert got == ["aged_line", "new_entry_heavy"]
-    # worst-excess cap: with max_n=1 only the biggest gap survives
-    assert bench.select_warm_candidates(
-        timings, floors, already_warm={"already_graph"}, max_n=1
-    ) == ["aged_line"]
-
-
-def test_same_memo_group_respects_shared_caches():
-    """Block restarts must never split a memo group (the build cost
-    would move from the producer's line onto a consumer's)."""
-    import __spark_entry__ as entry
-
-    assert bench._same_memo_group(entry, "graph_components", "graph_cc_sizes")
-    assert bench._same_memo_group(entry, "graph_lpa", "graph_community_density")
-    assert not bench._same_memo_group(entry, "docs_quality", "graph_lpa")
-    assert not bench._same_memo_group(entry, "graph_lpa", "graph_components")
-
-
-def test_history_floors_reads_only_noop_forced_runs(tmp_path, monkeypatch):
-    """Pre-r10 count-forced rows are systematically LOW (Catalyst
-    pruned the work) — they must not poison the warm-floor trigger."""
-    import os
-    hist = tmp_path / "BENCH_HISTORY.jsonl"
-    rows = [
-        {"forcing": "noop_sink", "queries": {"q1": 4.0, "q2": 1.0}},
-        {"forcing": "noop_sink", "queries": {"q1": 3.0, "q2": -1.0}},
-        {"queries": {"q1": 0.1}},                       # count-forced: skip
-        {"forcing": "count", "queries": {"q1": 0.2}},   # explicit: skip
-        "not json at all",
-    ]
-    with open(hist, "w") as fh:
-        for r in rows:
-            fh.write((r if isinstance(r, str) else json.dumps(r)) + "\n")
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    floors = bench._history_floors()
-    assert floors == {"q1": 3.0, "q2": 1.0}  # min across noop rows; -1 ignored
-    # sf filter: a smoke run at another scale never sets the floor
-    with open(hist, "a") as fh:
-        fh.write(json.dumps(
-            {"forcing": "noop_sink", "sf": 0.001, "queries": {"q1": 0.01}}
-        ) + "\n")
-        fh.write(json.dumps(
-            {"forcing": "noop_sink", "sf": 0.1, "queries": {"q1": 2.5}}
-        ) + "\n")
-    assert bench._history_floors(sf=0.1) == {"q1": 2.5}
-
-
-def test_select_warm_candidates_floored_excess_outranks_floorless_time():
-    """The max_n cap must never evict a genuinely-aged line in favor of
-    a floorless newcomer whose absolute time merely looks big: floored
-    entries rank by excess and take slots first."""
-    timings = {"aged": 12.0, "newcomer": 8.0}
-    floors = {"aged": 5.0}
-    assert bench.select_warm_candidates(timings, floors, set(), max_n=1) == [
-        "aged"
-    ]
-    # with room for both, the newcomer still gets its first warm floor
-    assert bench.select_warm_candidates(timings, floors, set(), max_n=2) == [
-        "aged", "newcomer"
-    ]
-
-
 def test_family_totals_group_and_skip():
-    """family_totals (VERDICT r13 ask #5): queries sharing any memo cache
-    sum into one family line keyed by the alphabetically-first timed
-    member; single-member and untimed/failed families are skipped."""
+    """family_totals: queries sharing any memo cache sum into one family
+    line keyed by the alphabetically-first timed member; single-member
+    and untimed/failed families are skipped."""
 
     class _Entry:
         @staticmethod
@@ -247,8 +96,7 @@ def test_family_totals_group_and_skip():
 
 def test_family_totals_stable_under_reorder():
     """A bench-order no-op (member lines move, family membership does
-    not) must leave the family totals byte-identical — the adjudication
-    property the VERDICT asked for."""
+    not) must leave the family totals byte-identical."""
 
     class _Entry:
         @staticmethod

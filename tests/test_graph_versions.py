@@ -101,8 +101,9 @@ def test_write_cycles_keep_lineage_flat_and_pins_bounded(spark):
     assert sess.graph.nodes.count() == 4 and sess.graph.edges.count() == 3
     seen = sess.execute('MATCH (p:Person {name:"b"}) RETURN p.seen').rows
     assert [r.info for r in seen] == ["2"]
-    # execute_df releases nothing: its lazy frame (over the BFS pairs pin
-    # and the current node version) still evaluates after a later write
+    # execute_df releases nothing: its lazy frame (over the BFS pairs pin,
+    # the caller's with no scope open, and the local node version) still
+    # evaluates after a later write
     lazy = sess.execute_df(_cycle(0)[3])
     sess.execute('MATCH (p:Person {name:"d"}) SET p.seen = "x"')
     assert sorted(r["info"] for r in lazy.collect()) == ["b", "c"]

@@ -221,16 +221,37 @@ def test_failure_inside_a_caller_scope_frees_every_pin(spark, monkeypatch, op):
     _assert_failure_cleans_up(spark, monkeypatch, module, step, run)
 
 
-def test_pipeline_funnel_leaves_only_memo_pins(spark):
-    """The funnel's two id frames and the near-dup pairs are kept in the
-    caller's scope; only the memoized signatures outlive it."""
+@pytest.fixture(scope="module")
+def entry():
     spec = importlib.util.spec_from_file_location(
         "entry_op_cleanup", os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
     )
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    return m
+
+
+def test_pipeline_funnel_leaves_only_memo_pins(spark, entry):
+    """The funnel's two id frames and the near-dup pairs are kept in the
+    caller's scope; only the memoized signatures outlive it."""
     entry._minhash_sigs(spark, SF_DIR)
     before = _persisted(spark)
     with scratch(spark):
         entry._q_docs_pipeline_funnel(spark, SF_DIR).collect()
     assert _persisted(spark) - before <= entry.pinned_rdd_ids()
+
+
+@pytest.mark.parametrize("name", ["cypher_var_length", "emb_pq_topk"])
+def test_entry_in_a_scope_leaves_only_memo_pins(spark, entry, name):
+    """An entry timed as the bench times it (its own scope, the noop
+    sink) leaves no block but its memos' and no cached plan, cold and
+    warm: the var-length statement's pins and the persisted top-k go to
+    the open scope."""
+    fn = entry.queries()[name]
+    before = _persisted(spark)
+    cached = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    for _ in range(2):  # a warm run, then the checked one
+        with scratch(spark):
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        assert _persisted(spark) - before <= entry.pinned_rdd_ids()
+        assert spark._jsparkSession.sharedState().cacheManager().numCachedEntries() == cached

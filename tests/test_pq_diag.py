@@ -11,13 +11,12 @@ import os
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
+ENTRY_PATH = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"))
 
 
 @pytest.fixture()
 def entry():
-    spec = importlib.util.spec_from_file_location(
-        "entry_under_test", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("entry_under_test", ENTRY_PATH)
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     return m
@@ -65,12 +64,7 @@ def test_pq_refit_frees_the_diverged_codes(spark, entry, monkeypatch):
 def test_pq_topk_writes_value_level_diag(spark, entry):
     df = entry._q_emb_pq_topk(spark, SF_DIR)
     rows = [[int(r[0]), int(r[1])] for r in df.collect()]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath("/root/repo/__spark_entry__.py")),
-        "assets",
-        "diag",
-        "emb_pq_topk_sf0.001.json",
-    )
+    path = os.path.join(os.path.dirname(ENTRY_PATH), "assets", "diag", "emb_pq_topk_sf0.001.json")
     diag = json.load(open(path))
     assert diag["codebooks_md5"] == entry._PQ_EXPECTED_MD5["sf0.001"]
     assert diag["expected_md5"] == entry._PQ_EXPECTED_MD5["sf0.001"]
