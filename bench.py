@@ -285,15 +285,10 @@ def build_output_lines(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    spark = get_spark(
-        app_name="graph-loom-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else None,
-    )
+    spark = get_spark(app_name="graph-loom-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry

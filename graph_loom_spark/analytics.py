@@ -19,6 +19,17 @@ Reference semantics (all in src/gui/frontend.rs):
 - community density: internal undirected edges ÷ max(n·(n-1)/2, 1)
   (frontend.rs:602-616).
 
+Edge-list rules, each written once below and called by every graph op:
+- :func:`_simple_edges`: the canonical undirected simple edge set
+  ``(u, v)`` with u < v — ``least``/``greatest`` endpoints, self-loops
+  dropped, ``distinct``. An op "over an undirected simple graph" runs
+  on it, so its input may be a raw directed/duplicated/looped list.
+- :func:`_endpoint_degree`: ``(id, d)``, the endpoint union plus one
+  ``groupBy`` count. On raw edges parallel edges count (the reference
+  degree); on simple edges it is the simple-graph degree.
+- :func:`_directed_adjacency`: both orientations ``(u, v) ∪ (v, u)``.
+- :func:`_internal_edges`: each community's internal edge count.
+
 Scale design: each LPA round is one shuffle (groupBy node) over an
 edge-partitioned frame; the similarity weights are computed ONCE before
 the loop and cached, so rounds touch only (src, dst, w, community).
@@ -35,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_loom_spark.graph import (
-    BROADCAST_ROWS_MAX, PropertyGraph, broadcast_if_small, local_frame, partitions_for, scratch,
+    BROADCAST_ROWS_MAX, PropertyGraph, Scratch, broadcast_if_small, local_frame, partitions_for, scratch,
     shuffle_partitions,
 )
 from graph_loom_spark.ops import md5_lane
@@ -47,23 +58,44 @@ def degrees(graph: PropertyGraph) -> DataFrame:
     One union + one groupBy (map-side partial count). Equivalent to
     GraphFrames ``degrees`` plus zero-degree rows.
     """
-    ends = graph.edges.select(F.col("src").alias("id")).unionAll(
-        graph.edges.select(F.col("dst").alias("id"))
-    )
-    deg = ends.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
     return (
         graph.nodes.select("id")
-        .join(deg, "id", "left")
-        .select("id", F.coalesce("degree", F.lit(0)).cast("bigint").alias("degree"))
+        .join(_endpoint_degree(graph.edges, "src", "dst"), "id", "left")
+        .select("id", F.coalesce("d", F.lit(0)).cast("bigint").alias("degree"))
     )
 
 
-def _directed_adjacency(edges: DataFrame) -> DataFrame:
+def _simple_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The canonical undirected simple edge set ``(u, v)``, u < v, of a
+    raw edge list: one row per unordered endpoint pair, self-loops
+    dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("u"),
+            F.greatest(F.col(src), F.col(dst)).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _endpoint_degree(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
+    """``(id, d)``: how many of ``edges``' endpoint slots ``src``/``dst``
+    each id fills — one union and one partial-aggregating ``groupBy``."""
+    return (
+        edges.select(F.col(src).alias("id"))
+        .unionAll(edges.select(F.col(dst).alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _directed_adjacency(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Both orientations of every edge: ``(u, v)`` — u's neighbor list is
     the reference's ``neighbors`` map (frontend.rs:513-520); parallel
     edges deliberately kept (they add weight/degree)."""
-    return edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
-        edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
+    return edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
+        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
 
 
@@ -310,6 +342,22 @@ def weighted_label_propagation(graph: PropertyGraph, max_iter: int = 8) -> DataF
         )
 
 
+def _internal_edges(graph: PropertyGraph, communities: DataFrame) -> DataFrame:
+    """``(community, internal_edges)`` over an ``(id, community)``
+    assignment: each edge whose endpoints share a community counted
+    once, by two equi-joins and one ``groupBy``. Communities with no
+    internal edge have no row."""
+    c = communities
+    return (
+        graph.edges.select("src", "dst")
+        .join(c.select(F.col("id").alias("src"), F.col("community").alias("__cs")), "src")
+        .join(c.select(F.col("id").alias("dst"), F.col("community").alias("__cd")), "dst")
+        .filter(F.col("__cs") == F.col("__cd"))
+        .groupBy(F.col("__cs").alias("community"))
+        .agg(F.count(F.lit(1)).alias("internal_edges"))
+    )
+
+
 def community_density(graph: PropertyGraph, communities: DataFrame) -> DataFrame:
     """Per community: member count + internal density
     internal_edges ÷ max(n·(n-1)/2, 1) (frontend.rs:602-616).
@@ -320,14 +368,7 @@ def community_density(graph: PropertyGraph, communities: DataFrame) -> DataFrame
     """
     c = communities
     sizes = c.groupBy("community").agg(F.count(F.lit(1)).alias("n_nodes"))
-    e = (
-        graph.edges.select("src", "dst")
-        .join(c.select(F.col("id").alias("src"), F.col("community").alias("__cs")), "src")
-        .join(c.select(F.col("id").alias("dst"), F.col("community").alias("__cd")), "dst")
-        .filter(F.col("__cs") == F.col("__cd"))
-        .groupBy(F.col("__cs").alias("community"))
-        .agg(F.count(F.lit(1)).alias("internal_edges"))
-    )
+    e = _internal_edges(graph, c)
     possible = F.greatest(
         (F.col("n_nodes") * (F.col("n_nodes") - 1) / 2).cast("double"), F.lit(1.0)
     )
@@ -366,8 +407,9 @@ def modularity(graph: PropertyGraph, communities: DataFrame) -> DataFrame:
 
     Scale shape: degrees are one union + partial-agg groupBy; member
     degree sums one groupBy over the assignment join; internal edges
-    reuse :func:`community_density`'s two equi-joins; ``m`` is one
-    scalar count — no window, no data-sized driver state.
+    are :func:`_internal_edges`, the count :func:`community_density`
+    reports; ``m`` is one scalar count — no window, no data-sized
+    driver state.
     """
     c = communities
     m = graph.edges.count()
@@ -380,14 +422,7 @@ def modularity(graph: PropertyGraph, communities: DataFrame) -> DataFrame:
             F.coalesce(F.sum("degree"), F.lit(0)).cast("bigint").alias("degree_sum")
         )
     )
-    e = (
-        graph.edges.select("src", "dst")
-        .join(c.select(F.col("id").alias("src"), F.col("community").alias("__cs")), "src")
-        .join(c.select(F.col("id").alias("dst"), F.col("community").alias("__cd")), "dst")
-        .filter(F.col("__cs") == F.col("__cd"))
-        .groupBy(F.col("__cs").alias("community"))
-        .agg(F.count(F.lit(1)).alias("internal_edges"))
-    )
+    e = _internal_edges(graph, c)
     ie = F.coalesce("internal_edges", F.lit(0)).cast("bigint")
     d38 = "decimal(38,0)"
     q_num = (
@@ -469,17 +504,11 @@ def force_layout(
     with scratch(spark) as s:
         pos = s.pin(pos)
 
-        deg = (
-            graph.edges.select(F.col("src").alias("id"))
-            .unionAll(graph.edges.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).cast("double").alias("deg"))
-        )
+        deg = F.coalesce("d", F.lit(0)).cast("double")
         # log-degree hub scale (frontend.rs:3167-3169), precomputed once
         hub = s.pin(
-            graph.nodes.select("id").join(deg, "id", "left").select(
-                "id",
-                (1.0 + hub_repulsion_scale * F.log(F.coalesce("deg", F.lit(0.0)) + 1.0)).alias("hub"),
+            graph.nodes.select("id").join(_endpoint_degree(graph.edges, "src", "dst"), "id", "left").select(
+                "id", (1.0 + hub_repulsion_scale * F.log(deg + 1.0)).alias("hub")
             )
         )
 
@@ -758,24 +787,17 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     equi-joins on ids (AQE handles residual skew), nothing is ever
     all-pairs.
 
-    Input edges may be directed/duplicated/self-looped; they are
-    canonicalized (undirected, distinct, loops dropped) first. Exact
-    integer counts → reproducible in ANSI SQL for the oracle.
+    Input edges may be raw: the op runs on their :func:`_simple_edges`
+    set (module docstring). Exact integer counts → reproducible in ANSI
+    SQL for the oracle.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("u").alias("id"))
-        .unionAll(e.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    e = _simple_edges(edges, src, dst)
+    return _triangles(e, _endpoint_degree(e))
+
+
+def _triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """:func:`triangle_counts` over a :func:`_simple_edges` set ``e`` and
+    its :func:`_endpoint_degree` frame ``deg``."""
     # orient by (degree, id), CARRYING the big endpoint's degree so the
     # wedge stage orders its two spokes without re-joining the degree
     # table (saves two joins on the wedge-sized stream — the expensive
@@ -845,29 +867,18 @@ def clustering_coefficients(
     (the expensive part — memoize it when both reports run); the rest is
     one degree aggregate and a co-shuffled left equi-join on the node id
     (the triangle side only carries nodes in ≥1 triangle, always ≤ the
-    degree side). Edges are canonicalized exactly like
-    :func:`triangle_counts`, so both accept raw directed/duplicated
-    lists.
+    degree side). Input edges may be raw: the op runs on their
+    :func:`_simple_edges` set (module docstring), whose degrees also
+    feed the triangle step.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("u").alias("id"))
-        .unionAll(e.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    )
+    e = _simple_edges(edges, src, dst)
+    deg = _endpoint_degree(e)
     if triangles is None:
-        triangles = triangle_counts(e, src="u", dst="v")
+        triangles = _triangles(e, deg)
     d = F.col("degree").cast("double")
     return (
-        deg.join(triangles, "id", "left")
+        deg.select("id", F.col("d").alias("degree"))
+        .join(triangles, "id", "left")
         .select(
             "id",
             "degree",
@@ -927,31 +938,18 @@ def link_prediction_scores(
     1/deg weight anyway, and its quadratic wedge list would dominate
     the job). ``None`` (default) = exact, the oracle path.
 
-    Input edges may be directed/duplicated/self-looped; canonicalized
-    exactly like :func:`triangle_counts`.
+    Input edges may be raw: the op runs on their :func:`_simple_edges`
+    set (module docstring).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+    e = _simple_edges(edges, src, dst)
+    deg = _endpoint_degree(e)
+    adjd = _directed_adjacency(e, "u", "v").join(
+        deg.select(F.col("id").alias("u"), F.col("d").alias("dw")), "u"
     )
-    deg = (
-        e.select(F.col("u").alias("id"))
-        .unionAll(e.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    adj = e.select(F.col("u").alias("w"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("w"), F.col("u").alias("n"))
-    )
-    adjd = adj.join(deg.select(F.col("id").alias("w"), F.col("d").alias("dw")), "w")
     if max_center_degree is not None:
         adjd = adjd.filter(F.col("dw") <= max_center_degree)
-    a1 = adjd.select("w", F.col("n").alias("id_a"), "dw")
-    a2 = adjd.select("w", F.col("n").alias("id_b"))
+    a1 = adjd.select(F.col("u").alias("w"), F.col("v").alias("id_a"), "dw")
+    a2 = adjd.select(F.col("u").alias("w"), F.col("v").alias("id_b"))
     pairs = (
         a1.join(a2, "w")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1008,23 +1006,11 @@ def degree_assortativity(
     Scale shape: canonicalize + one degree aggregate + two narrow
     degree equi-joins (the triangle_counts prologue) into ONE
     partial-agg global aggregate — no window, no driver-side state
-    beyond the 1-row result. Input may be directed/duplicated/looped;
-    canonicalized exactly like :func:`triangle_counts`.
+    beyond the 1-row result. Input edges may be raw: the op runs on
+    their :func:`_simple_edges` set (module docstring).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("u").alias("id"))
-        .unionAll(e.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
+    e = _simple_edges(edges, src, dst)
+    deg = _endpoint_degree(e)
     d38 = "decimal(38,0)"
     ed = e.join(
         deg.select(F.col("id").alias("u"), F.col("d").alias("du")), "u"
@@ -1079,25 +1065,16 @@ def avg_neighbor_degree(
     equi-join carrying the degree, then two partial-agg groupBys
     (node, then degree) — no window, no driver state; output is
     |distinct degrees| rows (≤ max degree, tiny at any scale). Input
-    may be directed/duplicated/looped; canonicalized exactly like
-    :func:`triangle_counts`.
+    edges may be raw: the op runs on their :func:`_simple_edges` set
+    (module docstring).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    both = e.select(F.col("u").alias("id"), F.col("v").alias("nb")).unionAll(
-        e.select(F.col("v").alias("id"), F.col("u").alias("nb"))
-    )
-    deg = both.groupBy("id").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    e = _simple_edges(edges, src, dst)
+    deg = _endpoint_degree(e)
     d38 = "decimal(38,0)"
     per_node = (
-        both.join(deg.select(F.col("id").alias("nb"), F.col("d").alias("dn")), "nb")
-        .groupBy("id")
+        _directed_adjacency(e, "u", "v")
+        .join(deg.select(F.col("id").alias("v"), F.col("d").alias("dn")), "v")
+        .groupBy("u")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("__k"),
             F.sum(F.col("dn").cast(d38)).alias("__s"),
@@ -1147,19 +1124,17 @@ def bfs_distances(
     ``(id, distance)`` for every node within ``max_depth`` hops of
     ``source`` (the source itself at distance 0). ``source=None`` picks
     the smallest node id — a deterministic default for demo/oracle use.
+    An empty edge list or a source that is no endpoint raises
+    ``ValueError``.
 
-    This is the level-synchronous frontier BFS every distributed graph
-    engine runs (Pregel's canonical example): per level, one equi-join
-    of the (pre-partitioned, checkpointed) symmetric adjacency with the
-    current frontier, a distinct, and an anti-join against the visited
-    set. Total work is O(|E| · levels-touched) worst case but each edge
-    is effectively expanded once per endpoint; the frontier is
-    broadcast-hinted while it fits (:data:`~graph_loom_spark.graph.BROADCAST_ROWS_MAX`) so the
-    big adjacency side never re-shuffles — at 100 TB the adjacency is
-    partitioned once and every level is a broadcast probe into it.
-    The per-level ``count()`` doubles as the termination check and the
-    loop driver; lineage is checkpointed per level (visited/frontier
-    are data-sized, never driver-side).
+    The traversal is :func:`_frontier_bfs`, the loop Cypher var-length
+    paths run too, seeded with the one pair ``(source, source)``. Its
+    adjacency is the :func:`_directed_adjacency` of the edge list on
+    xxhash64 surrogates of the ids' string form, deduplicated and pinned
+    partitioned on the probe key, so every level is a broadcast probe
+    into a stationary layout. A self-loop stays in it: it only
+    re-reaches a node the seen set holds. String ids join back once at
+    the end.
 
     Semantics: shortest distance is unique, so the result is
     deterministic and (bounded-depth) expressible as a recursive-CTE
@@ -1171,18 +1146,12 @@ def bfs_distances(
         # upstream edge CONSTRUCTION (e.g. a co-occurrence self-join) would
         # otherwise re-execute per derivation
         edges_df = s.pin(edges_df.select(src, dst))
-        sc_ = F.col(src).cast("string")
-        dc_ = F.col(dst).cast("string")
         idmap = s.pin(_edge_idmap(edges_df, src, dst))
-        e0 = edges_df.select(F.xxhash64(sc_).alias("a"), F.xxhash64(dc_).alias("b")).filter(
-            F.col("a") != F.col("b")
+        hashed = edges_df.select(
+            F.xxhash64(F.col(src).cast("string")).alias("a"),
+            F.xxhash64(F.col(dst).cast("string")).alias("b"),
         )
-        adj = s.pin(
-            e0.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionAll(e0.select(F.col("b").alias("u"), F.col("a").alias("v")))
-            .distinct()
-            .repartition("u")
-        )
+        adj = s.pin(_directed_adjacency(hashed, "a", "b").distinct().repartition("u"))
         if source is None:
             source = edges_df.select(
                 F.least(F.col(src), F.col(dst)).alias("i")
@@ -1196,42 +1165,50 @@ def bfs_distances(
             # an absent source would otherwise return a silently-empty frame
             # (and diverge from a SQL oracle that seeds the CTE with the id)
             raise ValueError(f"bfs_distances: source {source!r} not in the edge list")
-        visited = s.pin(src_h.select("n", F.lit(0).cast("int").alias("d")))
-        frontier = visited.select("n")
-        n_frontier = frontier.count()
-        n_visited = n_frontier
-        depth = 0
-        while n_frontier > 0 and depth < max_depth:
-            depth += 1
-            bcast = broadcast_if_small(n_frontier)
-            # the visited set is bounded by |V|; while it fits the same
-            # broadcast budget, hint it so the dedup anti-join is map-side
-            # too — otherwise every level pays an O(|visited|) shuffle that
-            # grows toward O(|V|) at the deep levels (AQE can't see the
-            # size of a union of checkpoints). Past the budget both sides
-            # fall back to the co-shuffled anti-join.
-            vcast = broadcast_if_small(n_visited)
-            new = s.pin(
-                adj.join(bcast(frontier.select(F.col("n").alias("u"))), "u")
-                .select(F.col("v").alias("n"))
-                .distinct()
-                .join(vcast(visited.select("n")), "n", "left_anti")
-                .select("n", F.lit(depth).cast("int").alias("d"))
-            )
-            n_frontier = new.count()
-            if n_frontier == 0:
-                break
-            # visited stays a plain union of the per-level CHECKPOINTED
-            # frontiers — leaves are materialized, so lineage depth is just
-            # the level count and no extra job is paid per level re-pinning
-            # the union itself
-            visited = visited.unionAll(new)
-            n_visited += n_frontier
-            frontier = new.select("n")
-        return s.keep(
-            visited.join(idmap, "n")
-            .select("id", F.col("d").cast("bigint").alias("distance"))
+        reached = _frontier_bfs(
+            s, adj, src_h.select(F.col("n").alias("start"), F.col("n").alias("node")), max_depth
         )
+        return s.keep(
+            reached.join(idmap.select(F.col("n").alias("node"), "id"), "node")
+            .select("id", F.col("depth").cast("bigint").alias("distance"))
+        )
+
+
+def _frontier_bfs(s: Scratch, adj: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
+    """Level-synchronous frontier BFS from many starts at once: returns
+    ``(start, node, depth)`` for every node reached from a start within
+    ``max_depth`` hops, at its first (shortest) depth, the ``seeds``
+    pairs ``(start, node)`` at depth 0.
+
+    ``adj`` is the pinned ``(u, v)`` adjacency and ``s`` the caller's
+    scope, which owns every level pinned here. A level is one probe of
+    ``adj`` with the previous level, a ``distinct`` on ``(start,
+    node)`` and an anti-join against the pairs reached so far; the
+    previous level (in the probe) and the reached set (in the
+    anti-join) join as broadcasts while their row counts fit
+    :func:`broadcast_if_small`, so the adjacency never re-shuffles. The reached set is the union of the pinned
+    levels: its lineage grows one leaf per level, and no job re-pins
+    it. The loop halts on an empty level, whose count it takes anyway
+    to gate the next broadcast."""
+    level = s.pin(seeds.select("start", "node", F.lit(0).alias("depth")))
+    reached = level
+    n_level = n_reached = level.count()
+    for depth in range(1, max_depth + 1):
+        probe = broadcast_if_small(n_level)(level.select(F.col("node").alias("u"), "start"))
+        seen = broadcast_if_small(n_reached)(reached.select("start", "node"))
+        level = s.pin(
+            adj.join(probe, "u")
+            .select("start", F.col("v").alias("node"))
+            .distinct()
+            .join(seen, ["start", "node"], "left_anti")
+            .select("start", "node", F.lit(depth).alias("depth"))
+        )
+        n_level = level.count()
+        if n_level == 0:
+            break
+        reached = reached.unionAll(level)
+        n_reached += n_level
+    return reached
 
 
 # Fixed-point grids: pagerank and PPR ranks are longs in units of 1e-12,
@@ -1679,15 +1656,9 @@ def kcore(
     dc = F.col(dst).cast("string")
     with scratch(edges_df.sparkSession) as s:
         idmap0 = s.pin(_edge_idmap(edges_df, src, dst))
-        e = (
-            edges_df.select(
-                F.xxhash64(sc).alias("a"), F.xxhash64(dc).alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .distinct()
+        edges = s.pin(
+            _simple_edges(edges_df.select(F.xxhash64(sc).alias("a"), F.xxhash64(dc).alias("b")), "a", "b")
         )
-        edges = s.pin(e)
         # Peel by ANTI-joining the REMOVED set, not semi-joining the keep
         # set: after round 1 the removed frame is the small side (the few
         # nodes that just dropped below k), so both per-round prunes run as
@@ -1697,29 +1668,17 @@ def kcore(
         # on the 20M-edge 10× probe graph: 96.8 s → see SCALE.md. Size-gated:
         # a huge first-round removal falls back to the shuffled anti-join.
         for _ in range(max_iter):
-            deg = (
-                edges.select(F.col("u").alias("n"))
-                .unionAll(edges.select(F.col("v").alias("n")))
-                .groupBy("n")
-                .agg(F.count(F.lit(1)).alias("d"))
-            )
-            removed = deg.filter(F.col("d") < k).select("n")
+            removed = _endpoint_degree(edges).filter(F.col("d") < k).select("id")
             n_removed = removed.count()
             if n_removed == 0:
                 break
             rm = broadcast_if_small(n_removed)
             edges = s.pin(
-                edges.join(rm(removed.select(F.col("n").alias("u"))), "u", "left_anti")
-                .join(rm(removed.select(F.col("n").alias("v"))), "v", "left_anti")
+                edges.join(rm(removed.select(F.col("id").alias("u"))), "u", "left_anti")
+                .join(rm(removed.select(F.col("id").alias("v"))), "v", "left_anti")
             )
-        core_deg = (
-            edges.select(F.col("u").alias("n"))
-            .unionAll(edges.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("core_degree"))
-            .filter(F.col("core_degree") >= k)
-        )
+        core = _endpoint_degree(edges).filter(F.col("d") >= k)
         return s.keep(
-            core_deg.join(idmap0, "n")
-            .select("id", F.col("core_degree").cast("bigint").alias("core_degree"))
+            core.select(F.col("id").alias("n"), "d").join(idmap0, "n")
+            .select("id", F.col("d").cast("bigint").alias("core_degree"))
         )

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from graph_loom_spark.analytics import _frontier_bfs
 from graph_loom_spark.cypher import ast
 from graph_loom_spark.cypher.ast import CypherError
 from graph_loom_spark.cypher.coerce import compare_expr, numeric_first_sort_cols
@@ -302,9 +303,9 @@ class CypherExecutor:
         spark = self.graph.nodes.sparkSession
         with scratch(spark) as s:
             if max_hops <= 2:
-                # Short walks: one fused declarative plan instead of the hop
-                # loop. The loop shape costs 4 driver actions for a 2-hop
-                # walk (per-hop checkpoint + count, plus the final pin); here
+                # Short walks: one fused declarative plan instead of the
+                # frontier BFS, whose loop costs 4 driver actions for a
+                # 2-hop walk (per-hop checkpoint + count, plus the final pin); here
                 # hop-1 = starts⋈adj, hop-2 = hop-1⋈adj, and the per-node
                 # BFS depth falls out of groupBy(start, node).min(depth) over
                 # the depth-tagged union — min over all ≤2-walks IS the
@@ -335,43 +336,26 @@ class CypherExecutor:
                     .agg(F.min("__depth").alias("__depth"))
                 )
             else:
-                # 3+ passes over the edge list: materialize the (src,dst)
-                # pairs once — re-deriving them per hop repeats the upstream
-                # scans — and run the classic frontier loop (the fused-plan
-                # trick is quadratic in plan size past a couple of hops).
-                adj = s.pin(adj)
-                # hop loop = several shuffle stages per hop on modest frames;
+                # 3+ hops: the frontier BFS (the fused-plan trick is
+                # quadratic in plan size past a couple of hops), over the
+                # (src, dst) pairs materialized once — re-deriving them
+                # per hop repeats the upstream scans
+                adj = s.pin(adj.select(F.col("__u").alias("u"), F.col("__v").alias("v")))
                 # size partitions from the data so task scheduling doesn't
-                # dominate (same lever as connected_components)
+                # dominate the per-hop shuffles (same lever as
+                # connected_components)
                 with shuffle_partitions(spark, partitions_for(adj.count())):
-                    frontier = s.pin(sh.select("__start", F.col("__start").alias("__node")))
-                    n_frontier = frontier.count()
-                    seen = frontier
-                    reached = [frontier.withColumn("__depth", F.lit(0))]
-                    for d in range(1, max_hops + 1):
-                        # a small frontier broadcast against the edge list
-                        # means the hop never shuffles the adjacency; big
-                        # frontiers (dense traversals) fall back to a
-                        # shuffled join
-                        fr = F.broadcast(frontier) if n_frontier <= 300_000 else frontier
-                        nxt = s.pin(  # cut 8-deep iterative lineage
-                            fr.join(adj, fr["__node"] == adj["__u"])
-                            .select("__start", F.col("__v").alias("__node"))
-                            .distinct()
-                            .join(seen, ["__start", "__node"], "left_anti")
-                        )
-                        n_frontier = nxt.count()
-                        if n_frontier == 0:
-                            break
-                        reached.append(nxt.withColumn("__depth", F.lit(d)))
-                        seen = s.pin(seen.unionByName(nxt))
-                        frontier = nxt
-                all_reached = reduce(lambda x, y: x.unionByName(y), reached)
+                    seeds = sh.select(F.col("__start").alias("start"), F.col("__start").alias("node"))
+                    all_reached = _frontier_bfs(s, adj, seeds, max_hops).select(
+                        F.col("start").alias("__start"),
+                        F.col("node").alias("__node"),
+                        F.col("depth").alias("__depth"),
+                    )
 
             # pin only the final (start, node) pairs; the scope frees the
-            # ~2/hop BFS checkpoints (frontier/seen/adjacency) they were
-            # built from — the binding table below stays lazy over this one
-            # small frame, which the graph frees with the statement
+            # BFS levels and the adjacency they were built from — the
+            # binding table below stays lazy over this one small frame,
+            # which the graph frees with the statement
             pairs = self.graph.pin(
                 all_reached.filter((F.col("__depth") >= min_hops) & (F.col("__depth") <= max_hops))
                 .join(eh, "__node")

@@ -915,14 +915,8 @@ def textrank_keywords(
     # unmaterialized each branch re-ran the corpus-sized explode +
     # distinct (~6 evaluations per call, plan-audited). It is kept in
     # the caller's scope, beside the pagerank result the return reads.
-    e = keep(
-        pairs.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    edges = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    e = keep(analytics._simple_edges(pairs, "a", "b"))
+    edges = analytics._directed_adjacency(e, "u", "v").toDF("src", "dst")
     nodes = (
         e.select(F.col("u").alias("id"))
         .unionAll(e.select(F.col("v").alias("id")))

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_LIBRARY_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "graph-loom-spark",
@@ -27,12 +29,15 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     ``shuffle_partitions`` defaults to the local core count — the right size
     for local runs; on a real cluster pass ~2-3x total executor cores.
+    The Python workers import from the directory that holds the library
+    package, as the driver does, so a UDF that pickles a library
+    function by reference resolves from any working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 8 if cpus == "*" else int(cpus)
+        shuffle_partitions = (os.cpu_count() or 8) if cpus == "*" else int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -53,6 +58,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _LIBRARY_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -46,12 +46,7 @@ NAME = argv[0]
 
 from graph_loom_spark.session import get_spark  # noqa: E402
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = get_spark(
-    app_name="graph-loom-plandump",
-    master=f"local[{cpus}]",
-    shuffle_partitions=int(cpus) if cpus.isdigit() else None,
-)
+spark = get_spark(app_name="graph-loom-plandump")
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as entry  # noqa: E402

@@ -43,12 +43,7 @@ NAMES = argv[0].split(",") if argv else []
 
 from graph_loom_spark.session import get_spark  # noqa: E402
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = get_spark(
-    app_name="graph-loom-profile",
-    master=f"local[{cpus}]",
-    shuffle_partitions=int(cpus) if cpus.isdigit() else None,
-)
+spark = get_spark(app_name="graph-loom-profile")
 spark.sparkContext.setLogLevel("ERROR")
 
 import bench  # noqa: E402

@@ -189,7 +189,7 @@ def main() -> None:
     from graph_loom_spark.ops import simsearch as ops_sim
     from graph_loom_spark.ops import text as ops_text
 
-    spark = get_spark(app_name="scale-probe", master="local[32]", shuffle_partitions=32)
+    spark = get_spark(app_name="scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     # events.parquet joined the derived corpus in r11 — re-derive if an
     # older derived dir lacks it

@@ -62,9 +62,7 @@ def _derive(spark) -> None:
 
 
 def main() -> None:
-    spark = get_spark(
-        app_name="scale-probe-graph", master="local[32]", shuffle_partitions=32
-    )
+    spark = get_spark(app_name="scale-probe-graph")
     spark.sparkContext.setLogLevel("ERROR")
     if not os.path.exists(f"{DERIVED}/nodes.parquet"):
         print("deriving 10x graph ...", flush=True)

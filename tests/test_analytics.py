@@ -4,6 +4,15 @@ expectations on tiny graphs."""
 
 from __future__ import annotations
 
+import ast
+import inspect
+import itertools
+import random
+import re
+import textwrap
+
+import pytest
+
 from graph_loom_spark import analytics
 from graph_loom_spark.graph import PropertyGraph
 
@@ -301,52 +310,112 @@ def test_avg_neighbor_degree_exact(spark):
     assert s == {1: 3.0, 3: 1.0}
 
 
-def test_link_prediction_matches_python_replay_random_graphs(spark):
-    """X130 vs an exact pure-Python replay on seeded random graphs:
-    same canonicalization, same strictly-smaller pair convention, same
-    integer floors — every candidate pair must match on all three
-    scores (and no adjacent pair may leak through the anti-join)."""
-    import itertools
-    import random
+def _replay_triangles(adj):
+    tri = {}
+    for a, b, c in itertools.combinations(sorted(adj), 3):
+        if b in adj[a] and c in adj[a] and c in adj[b]:
+            for x in (a, b, c):
+                tri[x] = tri.get(x, 0) + 1
+    return tri
 
-    from graph_loom_spark import analytics
 
+def _replay_clustering(adj):
+    tri = _replay_triangles(adj)
+    out = {}
+    for x, nb in adj.items():
+        d, t = len(nb), tri.get(x, 0)
+        out[x] = (d, t, round(2.0 * t / (d * (d - 1)), 6) if d >= 2 else 0.0)
+    return out
+
+
+def _replay_assortativity(adj):
+    pairs = [(a, b) for a in adj for b in adj[a] if a < b]
+    m2 = 2 * len(pairs)
+    sx = sum(len(adj[a]) + len(adj[b]) for a, b in pairs)
+    sxy = sum(2 * len(adj[a]) * len(adj[b]) for a, b in pairs)
+    sxx = sum(len(adj[a]) ** 2 + len(adj[b]) ** 2 for a, b in pairs)
+    num, den = m2 * sxy - sx * sx, m2 * sxx - sx * sx
+    return (len(pairs), 0.0 if den == 0 else round(float(num) / float(den), 6))
+
+
+def _replay_knn(adj):
+    classes = {}
+    for nb in adj.values():
+        n, s = classes.get(len(nb), (0, 0))
+        classes[len(nb)] = (n + 1, s + sum(len(adj[w]) for w in nb))
+    return {k: (n, s, round(float(s) / float(k * n), 6)) for k, (n, s) in classes.items()}
+
+
+def _replay_link_prediction(adj):
+    out = {}
+    for a, b in itertools.combinations(sorted(adj), 2):
+        common = adj[a] & adj[b]
+        if b in adj[a] or not common:
+            continue
+        inter = len(common)
+        union = len(adj[a]) + len(adj[b]) - inter
+        out[(a, b)] = (
+            inter,
+            (inter * 1_000_000) // union,
+            sum(1_000_000_000 // len(adj[w]) for w in common),
+        )
+    return out
+
+
+# op -> (its output as a dict, or one tuple, from raw edges; the replay)
+_SIMPLE_GRAPH_OPS = {
+    "triangle_counts": (
+        lambda df: {r["id"]: r["n_triangles"] for r in analytics.triangle_counts(df).collect()},
+        _replay_triangles,
+    ),
+    "clustering_coefficients": (
+        lambda df: {
+            r["id"]: (r["degree"], r["n_triangles"], r["clustering"])
+            for r in analytics.clustering_coefficients(df).collect()
+        },
+        _replay_clustering,
+    ),
+    "degree_assortativity": (
+        lambda df: tuple(analytics.degree_assortativity(df).collect()[0]),
+        _replay_assortativity,
+    ),
+    "avg_neighbor_degree": (
+        lambda df: {
+            r["degree"]: (r["n_nodes"], r["sum_neighbor_degrees"], r["knn"])
+            for r in analytics.avg_neighbor_degree(df).collect()
+        },
+        _replay_knn,
+    ),
+    "link_prediction_scores": (
+        lambda df: {
+            (r["id_a"], r["id_b"]): (r["n_common"], r["jaccard_micro"], r["ra_nano"])
+            for r in analytics.link_prediction_scores(df).collect()
+        },
+        _replay_link_prediction,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SIMPLE_GRAPH_OPS))
+def test_simple_graph_ops_match_python_replay_on_raw_edges(spark, op):
+    """X130 and its simple-graph siblings vs an exact pure-Python replay
+    on seeded random RAW edge lists — duplicates, reversed pairs and
+    self-loops included, so each op's own canonicalization is under
+    test: same undirected simple graph, same integer floors, same
+    6-digit rounding of one double division."""
+    run, replay = _SIMPLE_GRAPH_OPS[op]
     for seed in (1, 7, 42):
         rng = random.Random(seed)
         n = rng.randint(6, 12)
-        edges = sorted(
-            {
-                (min(a, b), max(a, b))
-                for a, b in (
-                    (rng.randrange(n), rng.randrange(n)) for _ in range(2 * n)
-                )
-                if a != b
-            }
-        )
+        raw = [(rng.randrange(n), rng.randrange(n)) for _ in range(2 * n)]
+        raw += [(b, a) for a, b in raw[: n // 2]] + raw[:3] + [(0, 0)]
         adj = {}
-        for a, b in edges:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        expect = {}
-        for a, b in itertools.combinations(sorted(adj), 2):
-            if b in adj[a]:
-                continue
-            common = adj[a] & adj[b]
-            if not common:
-                continue
-            inter = len(common)
-            union = len(adj[a]) + len(adj[b]) - inter
-            expect[(a, b)] = (
-                inter,
-                (inter * 1_000_000) // union,
-                sum(1_000_000_000 // len(adj[w]) for w in common),
-            )
-        df = spark.createDataFrame(edges, "src int, dst int")
-        got = {
-            (r["id_a"], r["id_b"]): (r["n_common"], r["jaccard_micro"], r["ra_nano"])
-            for r in analytics.link_prediction_scores(df).collect()
-        }
-        assert got == expect, f"seed {seed}: {got} != {expect}"
+        for a, b in raw:
+            if a != b:
+                adj.setdefault(a, set()).add(b)
+                adj.setdefault(b, set()).add(a)
+        got = run(spark.createDataFrame(raw, "src int, dst int"))
+        assert got == replay(adj), f"seed {seed}"
 
 
 def test_personalized_pagerank_with_every_node_seeded_is_pagerank(spark):
@@ -384,3 +453,50 @@ def test_pagerank_pre_aggregated_multigraph_is_bit_identical(spark):
         for r in analytics.pagerank(g, iters=4, pre_aggregate_edges=True).collect()
     }
     assert base == agg
+
+
+# a self-loop filter: the two endpoint columns of an edge list compared
+_SELF_LOOP_FILTER = re.compile(r'\.filter\(\s*F\.col\("(?:u|a|src)"\)\s*!=\s*F\.col\("(?:v|b|dst)"\)')
+
+
+def _functions_matching(module, pattern) -> list[str]:
+    """Names of the functions of ``module`` (methods and nested ones
+    included) whose source matches ``pattern``."""
+    src = inspect.getsource(module)
+    return sorted(
+        node.name
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef) and pattern.search(ast.get_source_segment(src, node))
+    )
+
+
+def test_edge_list_kernels_written_once():
+    """The canonical simple-edge rule drops self-loops in one function,
+    ``analytics._simple_edges``; ``textrank_keywords`` builds its word
+    graph with it and ``_directed_adjacency`` instead of a copy.
+    ``connected_components`` keeps its own filter: it drops the loops of
+    each contracted level, a directed list whose two orientations the
+    next level's minimum needs. The Cypher var-length expansion holds no
+    hop loop and no broadcast threshold: past two hops it runs
+    ``analytics._frontier_bfs``, the loop ``bfs_distances`` runs."""
+    from graph_loom_spark.cypher import compiler
+    from graph_loom_spark.ops import text
+
+    assert _functions_matching(analytics, _SELF_LOOP_FILTER) == [
+        "_simple_edges", "connected_components",
+    ]
+    assert _functions_matching(text, _SELF_LOOP_FILTER) == []
+    textrank = inspect.getsource(text.textrank_keywords)
+    assert "analytics._simple_edges(" in textrank and "analytics._directed_adjacency(" in textrank
+
+    var_length = ast.parse(textwrap.dedent(inspect.getsource(compiler.CypherExecutor._expand_var_length)))
+    assert not [n for n in ast.walk(var_length) if isinstance(n, (ast.For, ast.While))]
+    assert "_frontier_bfs(" in ast.unparse(var_length)
+    compiler_src = inspect.getsource(compiler)
+    assert "broadcast(" not in compiler_src
+    row_counts = [
+        n.value for n in ast.walk(ast.parse(compiler_src))
+        if isinstance(n, ast.Constant) and type(n.value) is int and n.value >= 1000
+    ]
+    assert row_counts == []
+    assert "bfs_distances" in _functions_matching(analytics, re.compile(r"\b_frontier_bfs\("))

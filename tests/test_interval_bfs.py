@@ -120,8 +120,9 @@ def _py_bfs(edges, source):
 
 
 def test_bfs_distances_exact_and_excludes_unreachable(spark):
-    # path 1-2-3-4, cycle 2-5-6-3 (gives 6 two routes), island 8-9
-    edges = [(1, 2), (2, 3), (3, 4), (2, 5), (5, 6), (6, 3), (8, 9)]
+    # path 1-2-3-4, cycle 2-5-6-3 (gives 6 two routes), island 8-9; a
+    # reversed duplicate and self-loops (one at the source) change nothing
+    edges = [(1, 2), (2, 3), (3, 4), (2, 5), (5, 6), (6, 3), (8, 9), (3, 2), (1, 1), (4, 4)]
     e = spark.createDataFrame(edges, "src int, dst int")
     got = {r["id"]: r["distance"] for r in bfs_distances(e, source=1).collect()}
     assert got == _py_bfs(edges, 1)  # island 8-9 absent from both

@@ -4,6 +4,13 @@ mandate the behavior."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
+
+from graph_loom_spark.graph import EDGE_SCHEMA, NODE_SCHEMA, PropertyGraph
+from graph_loom_spark.interface import CypherSession
+
 
 def test_return_multi_item_flattening(session):
     """O5 (cypher_spec.rs:1393-1426): k RETURN items emit up to k separate
@@ -199,3 +206,49 @@ def test_var_length_shortest_depth_only(session):
     out = session.execute('MATCH (s:V {name:"a"})-[:E*1..2]->(t:V) RETURN t')
     names = sorted(r.properties["name"] for r in out.rows)
     assert names == ["b", "c"]  # c once, not twice
+
+
+# a 5-cycle n0..n4 with the chord n1->n3, a self-loop at n2, a parallel
+# n3->n4 and the tail n4->n5->n6: shortest depths from n0 run to 5
+_VAR_LENGTH_EDGES = [
+    ("n0", "n1"), ("n1", "n2"), ("n2", "n3"), ("n3", "n4"), ("n4", "n0"),
+    ("n1", "n3"), ("n2", "n2"), ("n3", "n4"), ("n4", "n5"), ("n5", "n6"),
+]
+
+
+def _shortest_depth_ends(starts, adj, lo, hi):
+    """End names of every (start, end) pair whose BFS depth is in
+    [lo, hi]: the seen-set BFS emits each end once, at its first depth."""
+    ends = Counter()
+    for start in starts:
+        depth, frontier = {start: 0}, {start}
+        for d in range(1, hi + 1):
+            frontier = {v for u in frontier for v in adj.get(u, ()) if v not in depth}
+            depth.update(dict.fromkeys(frontier, d))
+        ends.update(v for v, d in depth.items() if lo <= d <= hi)
+    return ends
+
+
+@pytest.mark.parametrize(
+    "pattern, lo, hi, directed",
+    [("-[:E*1..3]->", 1, 3, True), ("-[:E*2..4]->", 2, 4, True), ("-[:E*]->", 1, 8, True),
+     ("-[:E*1..3]-", 1, 3, False)],
+)
+def test_var_length_rows_match_python_bfs(spark, pattern, lo, hi, directed):
+    """J4 past two hops (the frontier-BFS path): from every start, each
+    end reached within the hop range at its shortest depth, once; ``*``
+    is capped at 8 hops."""
+    names = sorted({n for e in _VAR_LENGTH_EDGES for n in e})
+    nodes = spark.createDataFrame([(n, "V", {"name": n}) for n in names], NODE_SCHEMA)
+    edges = spark.createDataFrame(
+        [(f"e{i}", a, b, "E", {}) for i, (a, b) in enumerate(_VAR_LENGTH_EDGES)], EDGE_SCHEMA
+    )
+    out = CypherSession(PropertyGraph(spark, nodes, edges)).execute(
+        f"MATCH (a:V){pattern}(b:V) RETURN b.name"
+    )
+    adj = {}
+    for a, b in _VAR_LENGTH_EDGES:
+        adj.setdefault(a, set()).add(b)
+        if not directed:
+            adj.setdefault(b, set()).add(a)
+    assert Counter(r.info for r in out.rows) == _shortest_depth_ends(names, adj, lo, hi)
